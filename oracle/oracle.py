@@ -2,9 +2,12 @@
 
 Independent of Spark: re-crawl dedup + heuristics are re-derived here
 with plain Python/pandas (a different code path from the pipeline's
-DataFrame expressions), while the scrub/langid/perplexity cores are
-the SAME pure functions the pipeline's pandas UDF wraps — required for
-byte-identical scrubbed text (SURVEY.md §5.2, §7 hard-part 1).
+DataFrame expressions), and every score comes from the per-document
+reference cores (scrub_text, predict_lang, char_perplexity, py_stats)
+while the pipeline computes them with the batch kernel
+(wtq/rules/batch.py).  Only scrub_text is shared by both sides — the
+one scrub implementation, required for byte-identical scrubbed text
+(SURVEY.md §5.2, §7 hard-part 1).
 """
 
 from __future__ import annotations

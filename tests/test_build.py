@@ -210,3 +210,27 @@ def test_build_classifier_gate_drops_negative_family(spark, pages_path, tmp_path
     written = spark.read.parquet(out_g)
     assert written.filter(F.col("url").contains("nfam")).count() == 0
     assert written.filter(F.col("url").contains("pfam")).count() > 0
+
+
+def test_build_raising_stage_leaks_no_threads(spark, pages_path, tmp_path, monkeypatch):
+    """Failure injection: a stage that raises after the build's driver
+    thread pool has started work must propagate its error and leave no
+    pool thread behind."""
+    import threading
+
+    import pytest
+
+    import wtq.build as build
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("injected stage failure")
+
+    monkeypatch.setattr(build, "run_pipeline", fail)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="injected stage failure"):
+        build_training_set(spark, pages_path, str(tmp_path / "out"))
+    leaked = [
+        t for t in set(threading.enumerate()) - before
+        if t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert not leaked, leaked

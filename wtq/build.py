@@ -120,151 +120,155 @@ def build_training_set(
     from concurrent.futures import ThreadPoolExecutor
 
     _pool = ThreadPoolExecutor(max_workers=4)
-    _fut_input = _pool.submit(
-        lambda: spark.read.parquet(pages_path).select("url").distinct().count()
-    )
-    decided = run_pipeline(
-        spark,
-        pages_path,
-        num_partitions=num_partitions,
-        strip_boilerplate=True,
-        host_gate=True,
-        normalize_urls=normalize_urls,
-    ).decided
-    kept = decided.filter("keep").select("url", "text")
-    # the chain is re-used by several counting/writing consumers below;
-    # materialize once (the CTAS-at-fan-out discipline).  Same for the
-    # dedup and decontamination survivors: without their checkpoints
-    # the lineage counts at the bottom re-executed the LSH + connected-
-    # components chain and the decontamination join a second and third
-    # time (round-4 advisory — measured as the build's dominant
-    # redundant cost at scale).
-    kept = kept.localCheckpoint(eager=True)
-    quality_kept = kept  # pre-gate frame: stage-10 lineage counts this
-
-    # 1b. optional model-based gate (the CCNet/GPT-3 classifier layer):
-    # train closed-form NB log-odds on the caller's labeled seed
-    # (columns: text, y boolean — True = quality reference, False =
-    # raw-crawl negatives) and keep docs scoring above the threshold.
-    # Runs BEFORE the near-dup stage on purpose: scoring is a
-    # zero-shuffle broadcast-map pass (a free rider on the kept scan),
-    # while LSH + connected components is the build's most expensive
-    # stage — gating first shrinks its input.  score_micro is an exact
-    # BIGINT, so the kept set is bit-stable at any parallelism.
-    classifier_count: dict[str, int] = {}
-    if classifier_seed is not None:
-        weights, consts = train_nb_weights(
-            classifier_seed, text_col="text", label_col="y"
+    # a raising stage must not leak the pool's threads: cancel what has
+    # not started and wait for the running count jobs to return
+    try:
+        _fut_input = _pool.submit(
+            lambda: spark.read.parquet(pages_path).select("url").distinct().count()
         )
-        kept = (
-            nb_score(kept, weights, consts, text_col="text", id_cols=("url", "text"))
-            .filter(F.col("score_micro") > classifier_min_micro)
-            .select("url", "text")
-            .localCheckpoint(eager=True)
+        decided = run_pipeline(
+            spark,
+            pages_path,
+            num_partitions=num_partitions,
+            strip_boilerplate=True,
+            host_gate=True,
+            normalize_urls=normalize_urls,
+        ).decided
+        kept = decided.filter("keep").select("url", "text")
+        # the chain is re-used by several counting/writing consumers below;
+        # materialize once (the CTAS-at-fan-out discipline).  Same for the
+        # dedup and decontamination survivors: without their checkpoints
+        # the lineage counts at the bottom re-executed the LSH + connected-
+        # components chain and the decontamination join a second and third
+        # time (round-4 advisory — measured as the build's dominant
+        # redundant cost at scale).
+        kept = kept.localCheckpoint(eager=True)
+        quality_kept = kept  # pre-gate frame: stage-10 lineage counts this
+
+        # 1b. optional model-based gate (the CCNet/GPT-3 classifier layer):
+        # train closed-form NB log-odds on the caller's labeled seed
+        # (columns: text, y boolean — True = quality reference, False =
+        # raw-crawl negatives) and keep docs scoring above the threshold.
+        # Runs BEFORE the near-dup stage on purpose: scoring is a
+        # zero-shuffle broadcast-map pass (a free rider on the kept scan),
+        # while LSH + connected components is the build's most expensive
+        # stage — gating first shrinks its input.  score_micro is an exact
+        # BIGINT, so the kept set is bit-stable at any parallelism.
+        classifier_count: dict[str, int] = {}
+        if classifier_seed is not None:
+            weights, consts = train_nb_weights(
+                classifier_seed, text_col="text", label_col="y"
+            )
+            kept = (
+                nb_score(kept, weights, consts, text_col="text", id_cols=("url", "text"))
+                .filter(F.col("score_micro") > classifier_min_micro)
+                .select("url", "text")
+                .localCheckpoint(eager=True)
+            )
+            classifier_count["15_classifier_kept"] = kept.count()
+
+        # 2. near-dup removal: keep each cluster's min-id representative.
+        # When auditing, the resolution shares ONE materialized bucket
+        # table between pair generation and the occupancy stats (round-6:
+        # the audit previously re-ran exact_representatives + the whole
+        # signature UDF pass a second time — the build's largest redundant
+        # cost; the shared table is ids-only, so the checkpoint is cheap
+        # and the audited cap is by construction the cap the pair stage
+        # enforced).
+        stats = None
+        if lsh_audit:
+            labels, stats = dedup_resolution(
+                kept, "url", "text", bucket_cap=lsh_bucket_cap,
+                with_bucket_stats=True, rebalance=False,
+            )
+        else:
+            labels = dedup_resolution(
+                kept, "url", "text", bucket_cap=lsh_bucket_cap, rebalance=False
+            )
+        non_reps = (
+            labels.filter(F.col("node") != F.col("cluster"))
+            .select(F.col("node").alias("url"))
         )
-        classifier_count["15_classifier_kept"] = kept.count()
+        deduped = kept.join(non_reps, "url", "left_anti").localCheckpoint(eager=True)
 
-    # 2. near-dup removal: keep each cluster's min-id representative.
-    # When auditing, the resolution shares ONE materialized bucket
-    # table between pair generation and the occupancy stats (round-6:
-    # the audit previously re-ran exact_representatives + the whole
-    # signature UDF pass a second time — the build's largest redundant
-    # cost; the shared table is ids-only, so the checkpoint is cheap
-    # and the audited cap is by construction the cap the pair stage
-    # enforced).
-    stats = None
-    if lsh_audit:
-        labels, stats = dedup_resolution(
-            kept, "url", "text", bucket_cap=lsh_bucket_cap,
-            with_bucket_stats=True, rebalance=False,
-        )
-    else:
-        labels = dedup_resolution(
-            kept, "url", "text", bucket_cap=lsh_bucket_cap, rebalance=False
-        )
-    non_reps = (
-        labels.filter(F.col("node") != F.col("cluster"))
-        .select(F.col("node").alias("url"))
-    )
-    deduped = kept.join(non_reps, "url", "left_anti").localCheckpoint(eager=True)
+        # 2b. occupancy audit gauges (see above: measured over the exact-
+        # dedup representative set the pair stage consumed).  The bucket
+        # table is already materialized at this point, so the histogram
+        # aggregation is independent of everything downstream — submit it
+        # from a driver thread (guide §2.6) and collect the row when the
+        # lineage is assembled.
+        _fut_audit = None
+        if lsh_audit:
+            _fut_audit = _pool.submit(
+                lambda: stats.agg(
+                    F.coalesce(
+                        F.sum(F.when(F.col("over_cap"), F.col("n_buckets"))), F.lit(0)
+                    ).alias("n_over"),
+                    F.coalesce(F.max("bucket_size"), F.lit(0)).alias("max_size"),
+                ).collect()[0]
+            )
 
-    # 2b. occupancy audit gauges (see above: measured over the exact-
-    # dedup representative set the pair stage consumed).  The bucket
-    # table is already materialized at this point, so the histogram
-    # aggregation is independent of everything downstream — submit it
-    # from a driver thread (guide §2.6) and collect the row when the
-    # lineage is assembled.
-    _fut_audit = None
-    if lsh_audit:
-        _fut_audit = _pool.submit(
-            lambda: stats.agg(
-                F.coalesce(
-                    F.sum(F.when(F.col("over_cap"), F.col("n_buckets"))), F.lit(0)
-                ).alias("n_over"),
-                F.coalesce(F.max("bucket_size"), F.lit(0)).alias("max_size"),
-            ).collect()[0]
+        # 3. decontamination
+        if benchmark is None:
+            bench_docs = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) == 0)
+            benchmark = C.benchmark_grams(bench_docs, "text")
+            candidates = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) != 0)
+        else:
+            candidates = deduped
+        hits = C.decontaminate(candidates, "url", "text", benchmark=benchmark)
+        clean = candidates.join(hits.select("url"), "url", "left_anti").localCheckpoint(
+            eager=True
         )
 
-    # 3. decontamination
-    if benchmark is None:
-        bench_docs = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) == 0)
-        benchmark = C.benchmark_grams(bench_docs, "text")
-        candidates = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) != 0)
-    else:
-        candidates = deduped
-    hits = C.decontaminate(candidates, "url", "text", benchmark=benchmark)
-    clean = candidates.join(hits.select("url"), "url", "left_anti").localCheckpoint(
-        eager=True
-    )
+        # 4. per-host token budget (host = authority component of the url)
+        hosted = clean.withColumn("host", F.substring_index("url", "/", 3))
+        sampled = C.token_budget_sample(
+            hosted, "url", "text", "host", budget=token_budget
+        ).select("url", "n_tokens")
+        final = clean.join(sampled, "url").localCheckpoint(eager=True)
 
-    # 4. per-host token budget (host = authority component of the url)
-    hosted = clean.withColumn("host", F.substring_index("url", "/", 3))
-    sampled = C.token_budget_sample(
-        hosted, "url", "text", "host", budget=token_budget
-    ).select("url", "n_tokens")
-    final = clean.join(sampled, "url").localCheckpoint(eager=True)
+        # 5. train/val/test split: md5(url) buckets (98/1/1), a pure
+        # function of the url — stable across reruns and cluster sizes.
+        # Leakage: EXACT-duplicate content cannot straddle splits because
+        # the upstream exact-dedup stage collapses identical text to one
+        # survivor regardless of url; near-duplicates above the LSH
+        # threshold are likewise collapsed to one representative.  The
+        # residual risk — near-identical content BELOW the similarity
+        # threshold (or too short to shingle) surviving under different
+        # urls — straddles with probability proportional to the bucket
+        # split, and no split key fixes that (a content hash differs on
+        # near-identical text too); only a tighter dedup threshold does.
+        bucket = _hash_bucket("url", 1000)
+        split = (
+            F.when(bucket < 980, "train").when(bucket < 990, "val").otherwise("test")
+        )
+        final = final.withColumn("split", split)
+        final.write.mode("overwrite").partitionBy("split").parquet(out_dir)
 
-    # 5. train/val/test split: md5(url) buckets (98/1/1), a pure
-    # function of the url — stable across reruns and cluster sizes.
-    # Leakage: EXACT-duplicate content cannot straddle splits because
-    # the upstream exact-dedup stage collapses identical text to one
-    # survivor regardless of url; near-duplicates above the LSH
-    # threshold are likewise collapsed to one representative.  The
-    # residual risk — near-identical content BELOW the similarity
-    # threshold (or too short to shingle) surviving under different
-    # urls — straddles with probability proportional to the bucket
-    # split, and no split key fixes that (a content hash differs on
-    # near-identical text too); only a tighter dedup threshold does.
-    bucket = _hash_bucket("url", 1000)
-    split = (
-        F.when(bucket < 980, "train").when(bucket < 990, "val").otherwise("test")
-    )
-    final = final.withColumn("split", split)
-    final.write.mode("overwrite").partitionBy("split").parquet(out_dir)
-
-    # every stage frame is checkpointed/written at this point, so the
-    # five lineage counts are independent tiny jobs — run them
-    # concurrently (guide §2.6: back-fill, don't serialize)
-    stage_frames = {
-        "10_quality_kept": quality_kept,
-        "20_after_dedup": deduped,
-        "30_after_decontam": clean,
-        "40_after_budget": final,
-        "50_written": spark.read.parquet(out_dir),
-    }
-    count_futs = {k: _pool.submit(df.count) for k, df in stage_frames.items()}
-    counts = {"00_input": _fut_input.result()}
-    counts.update({k: f.result() for k, f in count_futs.items()})
-    counts.update(classifier_count)
-    audit: dict[str, int] = {}
-    if _fut_audit is not None:
-        row = _fut_audit.result()
-        audit = {
-            "60_lsh_over_cap_buckets": row.n_over,
-            "61_lsh_max_bucket_size": row.max_size,
+        # every stage frame is checkpointed/written at this point, so the
+        # five lineage counts are independent tiny jobs — run them
+        # concurrently (guide §2.6: back-fill, don't serialize)
+        stage_frames = {
+            "10_quality_kept": quality_kept,
+            "20_after_dedup": deduped,
+            "30_after_decontam": clean,
+            "40_after_budget": final,
+            "50_written": spark.read.parquet(out_dir),
         }
-    counts.update(audit)
-    _pool.shutdown()
+        count_futs = {k: _pool.submit(df.count) for k, df in stage_frames.items()}
+        counts = {"00_input": _fut_input.result()}
+        counts.update({k: f.result() for k, f in count_futs.items()})
+        counts.update(classifier_count)
+        audit: dict[str, int] = {}
+        if _fut_audit is not None:
+            row = _fut_audit.result()
+            audit = {
+                "60_lsh_over_cap_buckets": row.n_over,
+                "61_lsh_max_bucket_size": row.max_size,
+            }
+        counts.update(audit)
+    finally:
+        _pool.shutdown(cancel_futures=True)
     lineage = spark.createDataFrame(
         sorted(counts.items()), "stage string, n_docs long"
     )

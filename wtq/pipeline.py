@@ -30,23 +30,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from wtq.rules import heuristics as H
-from wtq.rules import registry as R
-from wtq.rules.langid import MARGIN_MIN, predict_lang
-from wtq.rules.perplexity import char_perplexity
-from wtq.rules.scrub import scrub_text
-
-# Every py_stats key, in emission order.  SCORE_SCHEMA, the UDF row
-# assembly, and decide()'s stats dict all derive from this one list —
-# a stat added to py_stats (e.g. the Gopher repetition family) only
-# needs an entry here to flow through to the rule expressions.
-STAT_FIELDS: list[str] = [
-    "n_words", "n_lines", "mean_word_len", "symbol_ratio",
-    "stopword_frac", "bullet_frac", "ellipsis_frac", "rep_line_frac",
-    "top_word_frac", "brace_line_frac", "has_lorem", "dup_para_frac",
-    "top_2gram_frac", "top_3gram_frac", "top_4gram_frac",
-    "dup_5gram_frac", "dup_6gram_frac", "dup_7gram_frac",
-    "dup_8gram_frac", "dup_9gram_frac", "dup_10gram_frac",
-]
+from wtq.rules.batch import score_batch
+from wtq.rules.heuristics import STAT_FIELDS
+from wtq.rules.langid import MARGIN_MIN
 
 SCORE_SCHEMA = T.StructType(
     [
@@ -70,49 +56,17 @@ SCORE_SCHEMA = T.StructType(
 
 @F.pandas_udf(SCORE_SCHEMA)
 def score_udf(texts: pd.Series) -> pd.DataFrame:
-    """Vectorized (Arrow-batched) scrub+score+stats — the whole per-doc
-    computation in ONE Python pass per document (one Arrow round-trip,
-    zero per-row dispatch).  All doc stats are computed here rather
-    than as JVM expressions: the text is already in Python for the
-    regex scrub, so an O(words) dict-lookup pass is ~100× cheaper than
-    re-evaluating interpreted higher-order expressions per output
-    column (measured: 176 → >10k docs/sec).  The same py_stats feeds
-    the independent pandas oracle (oracle/oracle.py), which re-derives
-    keep/drop decisions outside Spark; the rule THRESHOLDS stay
-    JVM-side expressions (wtq.rules.heuristics.fired_rules_expr)."""
-    rows = []
-    for t in texts:
-        sr = scrub_text(t)
-        # one lower (+ split) shared by langid, perplexity and
-        # py_stats.has_lorem (round-6); the public single-argument
-        # calls are value-identical
-        tl = sr.text.lower()
-        lw = tl.split()
-        lang, margin = predict_lang(sr.text, _lwords=lw)
-        ppl = char_perplexity(sr.text, _lwords=lw)
-        st = H.py_stats(sr.text, _ltext=tl)
-        # don't ship unchanged text back across the Arrow boundary
-        # (round-6, guide §4.1 — control what crosses): with zero
-        # scrub edits the scrubbed string IS the input (subn with 0
-        # substitutions returns the original), so return NULL and let
-        # the JVM coalesce with the input column it already holds —
-        # ~80% of the return payload vanishes (measured 12.5→10.3s on
-        # the score stage at sf1.0, value-identical incl. the
-        # null-input case, which ships its '' explicitly).
-        rows.append(
-            (
-                sr.text if (sr.n_edits or t is None) else None,
-                sr.n_email,
-                sr.n_phone,
-                sr.n_ip,
-                sr.n_profanity,
-                lang,
-                margin,
-                ppl,
-            )
-            + tuple(st[f] for f in STAT_FIELDS)
-        )
-    return pd.DataFrame(rows, columns=[f.name for f in SCORE_SCHEMA.fields])
+    """Arrow-batched scrub + langid + perplexity + stats — the whole
+    per-document computation in ONE Python pass per Arrow batch (one
+    round-trip, zero per-row dispatch), computed column-at-a-time by
+    wtq.rules.batch.score_batch.  The text is already in Python for the
+    regex scrub, so the stats are computed here too rather than as JVM
+    expressions; the rule THRESHOLDS stay JVM-side expressions
+    (wtq.rules.heuristics.fired_rules_expr).  `scrubbed` is NULL when
+    scrubbing changed nothing: decide() coalesces it back from the
+    input column, so unchanged text never crosses the Arrow boundary
+    twice."""
+    return score_batch(texts)
 
 
 def dedup_recrawls(pages: DataFrame) -> DataFrame:

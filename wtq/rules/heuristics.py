@@ -7,14 +7,18 @@ CASE-ladder tagging (SURVEY.md §2.7 U3 note: evaluate every rule per
 record in one scan instead of 13 unioned scans, semantically equal to
 proccess_data.sql:505-737 + the :734-736 rollup).  The stat INPUTS to
 the thresholds come from the pipeline's single Arrow score pass
-(wtq/pipeline.py), which calls ``py_stats`` below — the text is
-already in Python for the regex scrub, so the O(words) dict pass is
-far cheaper than re-evaluating interpreted higher-order expressions
-per output column (measured in round 1: 176 → >10k docs/sec).
+(wtq/pipeline.py) — the text is already in Python for the regex
+scrub, so computing the stats there is far cheaper than re-evaluating
+interpreted higher-order expressions per output column (measured in
+round 1: 176 → >10k docs/sec).  That pass runs the batch kernel
+(wtq/rules/batch.py), which reproduces ``py_stats`` below for a whole
+Arrow batch at once.
 
-Oracle side: the differential oracle (oracle/oracle.py) calls the SAME
-``py_stats`` while re-deriving keep/drop decisions independently of
-the Spark plan.  The contract for every stat is documented once here.
+Oracle side: the differential oracle (oracle/oracle.py) calls the
+per-document ``py_stats`` — the reference the batch kernel is tested
+against bit for bit — while re-deriving keep/drop decisions
+independently of the Spark plan.  The contract for every stat is
+documented once here.
 
 Definitions (on the SCRUBBED text):
   words      = non-empty substrings after splitting on whitespace
@@ -55,6 +59,20 @@ from pyspark.sql import functions as F
 
 from wtq.rules import registry as R
 from wtq.rules.lexicon import STOPWORDS
+
+# Every py_stats key, in emission order.  The score schema, the batch
+# kernel's columns (wtq/rules/batch.py) and decide()'s stats dict all
+# derive from this one list — a stat added to py_stats only needs an
+# entry here to flow through to the rule expressions.
+STAT_FIELDS: list[str] = [
+    "n_words", "n_lines", "mean_word_len", "symbol_ratio",
+    "stopword_frac", "bullet_frac", "ellipsis_frac", "rep_line_frac",
+    "top_word_frac", "brace_line_frac", "has_lorem", "dup_para_frac",
+    "top_2gram_frac", "top_3gram_frac", "top_4gram_frac",
+    "dup_5gram_frac", "dup_6gram_frac", "dup_7gram_frac",
+    "dup_8gram_frac", "dup_9gram_frac", "dup_10gram_frac",
+]
+
 
 def fired_rules_expr(
     stats: dict[str, Column],
@@ -256,10 +274,7 @@ def _py_repetition_stats(words: list[str]) -> dict[str, float]:
     return _rep_stats_core(len(words), ids64, wchars, total)
 
 
-def py_stats(text: str, _ltext: "str | None" = None) -> dict[str, float]:
-    """`_ltext` optionally supplies text.lower() (the pipeline's Arrow
-    pass computes it once for langid/perplexity/has_lorem — round-6);
-    value-identical to the single-argument call."""
+def py_stats(text: str) -> dict[str, float]:
     text = text or ""
     words = py_words(text)
     lines = py_lines(text)
@@ -286,7 +301,7 @@ def py_stats(text: str, _ltext: "str | None" = None) -> dict[str, float]:
     # counters (round-6; counts identical to the three genexprs)
     n_bullet = n_ellipsis = n_brace = 0
     for l in lines:
-        if l.startswith(("- ", "* ", "•")):
+        if l.startswith(R.BULLET_PREFIXES):
             n_bullet += 1
         if l.endswith("..."):
             n_ellipsis += 1
@@ -305,9 +320,7 @@ def py_stats(text: str, _ltext: "str | None" = None) -> dict[str, float]:
         "rep_line_frac": py_rep_line_frac(text, _lines=lines),
         "top_word_frac": (top_word / n_words) if words else 0.0,
         "brace_line_frac": n_brace / nl,
-        "has_lorem": 1.0
-        if "lorem ipsum" in (_ltext if _ltext is not None else text.lower())
-        else 0.0,
+        "has_lorem": 1.0 if "lorem ipsum" in text.lower() else 0.0,
         "dup_para_frac": py_dup_para_frac(text),
         **rep,
     }

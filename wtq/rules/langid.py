@@ -8,8 +8,9 @@ whose profiles are derived at import time from the embedded wordlists
 (wtq.rules.lexicon.LANG_WORDS) — deterministic, no downloads
 (SURVEY.md §7 hard-part 5).
 
-Pure-Python scoring core shared by the Spark pandas UDF and the
-oracle, so predictions agree exactly.
+``predict_lang`` is the per-document reference: the oracle calls it,
+and the pipeline's batch kernel (wtq/rules/batch.py) reproduces it
+bit for bit from the same per-word scores (``_word_scores``).
 """
 
 from __future__ import annotations
@@ -20,7 +21,9 @@ from functools import lru_cache
 
 from wtq.rules.lexicon import LANG_WORDS
 
-_CJK_RE = re.compile(r"[一-鿿]")
+# CJK Unified Ideographs (the zh gate)
+CJK_FIRST, CJK_LAST = 0x4E00, 0x9FFF
+_CJK_RE = re.compile(f"[{chr(CJK_FIRST)}-{chr(CJK_LAST)}]")
 
 _LANGS = sorted(LANG_WORDS)  # deterministic order: de, en, es, fr, zh
 
@@ -49,6 +52,16 @@ _LATIN_LEXICON: frozenset = frozenset(
 # (40-200 words): unseen it/pt/nl false-fire ≤ 0.7%, trained-language
 # abstention 0.0% (doc scale) / ≤ 1% (15-35-word snippets).
 LEX_HIT_MIN = 0.25
+
+# The other gates and caps of predict_lang (also read by the batch
+# kernel, wtq/rules/batch.py): text whose CJK share exceeds
+# CJK_SHARE_MIN is zh with margin ZH_MARGIN; at most SAMPLE_WORDS
+# alpha words are scored; a sample under LATIN_SHARE_MIN Latin
+# letters abstains.
+CJK_SHARE_MIN = 0.30
+ZH_MARGIN = 10.0
+SAMPLE_WORDS = 200
+LATIN_SHARE_MIN = 0.5
 
 
 def _bigrams(s: str):
@@ -127,7 +140,8 @@ def _word_scores(w: str) -> tuple[tuple[float, ...], int]:
 # any char outside the Latin blocks (>= U+0250) — one compiled-regex
 # scan replaces the per-char ord() loop (round-6: the Python loop was
 # ~10× the cost of the C scan on the same sample)
-_NON_LATIN_RE = re.compile("[\u0250-\U0010ffff]")
+NON_LATIN_FIRST = 0x0250
+_NON_LATIN_RE = re.compile(f"[{chr(NON_LATIN_FIRST)}-\U0010ffff]")
 
 
 def _latin_fraction(words) -> float:
@@ -147,7 +161,7 @@ def _latin_fraction(words) -> float:
     return latin / letters
 
 
-def predict_lang(text: str, _lwords: "list[str] | None" = None) -> tuple[str, float]:
+def predict_lang(text: str) -> tuple[str, float]:
     """Return (lang, margin). margin = mean-per-bigram log-likelihood
     gap between best and second-best language; 0.0 when undecidable.
 
@@ -162,22 +176,19 @@ def predict_lang(text: str, _lwords: "list[str] | None" = None) -> tuple[str, fl
     (round-4 fix; pinned in test_heldout_eval.py)."""
     if not text:
         return "und", 0.0
-    if _cjk_fraction(text) > 0.30:
-        return "zh", 10.0
+    if _cjk_fraction(text) > CJK_SHARE_MIN:
+        return "zh", ZH_MARGIN
     # Score lowercase words only (strip digits/symbols deterministically).
-    # `_lwords` lets the pipeline's Arrow pass share ONE
-    # text.lower().split() with char_perplexity (round-6; identical
-    # value by construction).
     # cap per-doc work at 200 scored words (cf. st_subdivide cost
     # bound, SURVEY.md §4); islice stops the filter at the cap instead
     # of filtering the whole document first (round-6, value-identical)
     from itertools import islice
 
-    lwords = _lwords if _lwords is not None else text.lower().split()
-    sample = list(islice((w for w in lwords if w.isalpha()), 200))
+    lwords = text.lower().split()
+    sample = list(islice((w for w in lwords if w.isalpha()), SAMPLE_WORDS))
     if not sample:
         return "und", 0.0
-    if _latin_fraction(sample) < 0.5:
+    if _latin_fraction(sample) < LATIN_SHARE_MIN:
         return "und", 0.0
     # Unseen-LANGUAGE abstention (Latin scripts): see LEX_HIT_MIN.
     # Computed over the same capped sample the scorer consumes, like
@@ -195,10 +206,6 @@ def predict_lang(text: str, _lwords: "list[str] | None" = None) -> tuple[str, fl
     ranked = sorted(zip(totals, _LANGS), key=lambda kv: (-kv[0], kv[1]))
     margin = (ranked[0][0] - ranked[1][0]) / nbg
     return ranked[0][1], margin
-
-
-def predict_lang_batch(texts) -> list[tuple[str, float]]:
-    return [predict_lang(t if t is not None else "") for t in texts]
 
 
 # Confidence gate for the L-1 rule: below this margin the prediction is

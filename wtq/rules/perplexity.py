@@ -6,7 +6,9 @@ corpus synthesized from the embedded wordlists — self-contained, no
 network (SURVEY.md §7 hard-part 5).  High perplexity ⇒ gibberish ⇒
 rule P-1.
 
-Pure-Python core shared by the Spark pandas UDF and the oracle.
+``char_perplexity`` is the per-document reference: the oracle calls
+it, and the pipeline's batch kernel (wtq/rules/batch.py) reproduces it
+bit for bit from the same per-word log-likelihoods (``_word_ll``).
 """
 
 from __future__ import annotations
@@ -69,18 +71,19 @@ def _word_ll(w: str) -> tuple[float, int]:
     return out
 
 
-def char_perplexity(
-    text: str, max_words: int = 400, _lwords: "list[str] | None" = None
-) -> float:
+# per-document word cap (see char_perplexity)
+MAX_WORDS = 400
+
+
+def char_perplexity(text: str, max_words: int = MAX_WORDS) -> float:
     """Per-char perplexity under the trigram LM, computed word-by-word
     (each word scored in a space-padded context, totals pooled); 0.0
     for empty text.  Work is capped at max_words per document to keep
     Arrow batches balanced (cost-bounding analog of st_subdivide,
-    SURVEY.md §4).  `_lwords` shares one text.lower().split() with the
-    langid call in the pipeline's Arrow pass (round-6)."""
+    SURVEY.md §4)."""
     if not text:
         return 0.0
-    words = _lwords if _lwords is not None else text.lower().split()
+    words = text.lower().split()
     if not words:
         return 0.0
     # column-wise sequential sums over the capped word list — sum()
@@ -91,7 +94,3 @@ def char_perplexity(
     if n == 0:
         return 0.0
     return math.exp(-sum(lls) / n)
-
-
-def char_perplexity_batch(texts) -> list[float]:
-    return [char_perplexity(t if t is not None else "") for t in texts]

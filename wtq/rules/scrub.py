@@ -6,12 +6,12 @@ matching content from every record, drop nothing here — dropping is
 the rule battery's job.
 
 Byte-identity contract (SURVEY.md §7 hard-part 1): the pure-Python
-core below is the ONLY scrub implementation; the Spark pipeline calls
-it through an Arrow-batched pandas UDF and the oracle calls it
-directly, so scrubbed bytes agree by construction.  Python ``re`` is
-used on both sides — never JVM ``regexp_replace`` — because Java and
-Python regex semantics differ at the margins (POSIX ``\\y`` vs ``\\b``
-note, SURVEY.md §2.2 P9).
+core below is the ONLY scrub implementation; the Spark pipeline's
+batch kernel (wtq/rules/batch.py) calls it once per document and the
+oracle calls it directly, so scrubbed bytes agree by construction.
+Python ``re`` is used on both sides — never JVM ``regexp_replace`` —
+because Java and Python regex semantics differ at the margins (POSIX
+``\\y`` vs ``\\b`` note, SURVEY.md §2.2 P9).
 """
 
 from __future__ import annotations
@@ -85,7 +85,3 @@ def scrub_text(text: str) -> ScrubResult:
         if any(w in lower for w in _PROFANITY_LOWER):  # ASCII: presence ⊇ (?i)\b match
             out, n_prof = PROFANITY_RE.subn(PROFANITY_TOKEN, out)
     return ScrubResult(out, n_email, n_phone, n_ip, n_prof)
-
-
-def scrub_batch(texts) -> list[ScrubResult]:
-    return [scrub_text(t) for t in texts]
