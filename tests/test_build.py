@@ -191,7 +191,7 @@ def test_build_classifier_gate_drops_negative_family(spark, pages_path, tmp_path
     )
 
     out_b = str(tmp_path / "corpus_nogate")
-    base = build_training_set(spark, src, out_b, num_partitions=8, lsh_audit=False)
+    base = build_training_set(spark, src, out_b, num_partitions=8)
     base_written = spark.read.parquet(out_b)
     assert base_written.filter(F.col("url").contains("nfam")).count() > 0
     assert base_written.filter(F.col("url").contains("pfam")).count() > 0
@@ -199,7 +199,7 @@ def test_build_classifier_gate_drops_negative_family(spark, pages_path, tmp_path
 
     out_g = str(tmp_path / "corpus_gated")
     gated = build_training_set(
-        spark, src, out_g, num_partitions=8, lsh_audit=False, classifier_seed=seed
+        spark, src, out_g, num_partitions=8, classifier_seed=seed
     )
     lineage = {r.stage: r.n_docs for r in gated.lineage.collect()}
     assert (

@@ -26,7 +26,7 @@ def test_curation_chain_composes_and_only_removes(spark, pages_path):
     assert 0 < n_kept < n_input
 
     # stage 2: near-dup removal (keep cluster representative = min id)
-    cc = dedup_resolution(kept, "url", "text")
+    cc, _ = dedup_resolution(kept, "url", "text")
     non_reps = cc.filter(F.col("node") != F.col("cluster")).select(
         F.col("node").alias("url")
     )

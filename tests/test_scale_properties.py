@@ -342,7 +342,8 @@ def test_lsh_bucket_cap_degrades_to_star_edges(spark):
     # normal-sized buckets still emit ordinary pairs
     assert any(r.doc1 == 2000 and r.doc2 == 2001 for r in pairs)
     # and the clusters are fully recovered either way
-    cc = {r.cluster for r in D.dedup_resolution(df, "doc_id", "text").collect()}
+    labels, _ = D.dedup_resolution(df, "doc_id", "text")
+    cc = {r.cluster for r in labels.collect()}
     assert cc == {0, 2000}
 
 

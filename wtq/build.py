@@ -20,12 +20,11 @@ ordering everywhere — rerunning yields byte-identical membership).
 
 Scale shape: each stage is the operator documented in SCALE.md; the
 composition adds no new shuffle beyond its stages (the lineage table
-is a union of per-stage counts — driver-sized, never data).  The one
-optional extra pass is the LSH bucket-occupancy audit (`lsh_audit`),
-which re-runs the signature UDF over the exact-dedup representatives
-to record over-cap bucket counts in the lineage — the observability a
-production dedup run wants, priced at one additional narrow pass over
-the post-collapse survivor set."""
+is a union of per-stage counts — driver-sized, never data).  The LSH
+bucket-occupancy audit (over-cap bucket count and max bucket size in
+the lineage — the observability a production dedup run wants) reads
+the dedup stage's own materialized ids-only bucket table, so it adds
+one small aggregation, not a second signature pass."""
 
 from __future__ import annotations
 
@@ -69,7 +68,6 @@ def build_training_set(
     token_budget: int = C.TOKEN_BUDGET,
     benchmark: DataFrame | None = None,
     lsh_bucket_cap: int = LSH_BUCKET_CAP,
-    lsh_audit: bool = True,
     normalize_urls: bool = False,
     classifier_seed: DataFrame | None = None,
     classifier_min_micro: int = 0,
@@ -92,15 +90,13 @@ def build_training_set(
 
     `lsh_bucket_cap` is applied to the dedup stage's pair expansion AND
     to the occupancy audit, so the audit always reports on the cap the
-    pair stage actually enforced.  `lsh_audit=False` skips the audit
-    pass (and its two lineage rows) when the extra signature pass is
-    not worth the observability — e.g. repeated small test builds.
+    pair stage actually enforced.
 
     Returns BuildResult with the split paths and the lineage table;
     splits are written with (url, text, n_tokens) columns.  Lineage has
     two row families: `NN_*` document counts (monotone non-increasing
-    through the stages) and, when `lsh_audit`, `6N_lsh_*` audit gauges
-    (over-cap bucket count and max bucket size — NOT document counts).
+    through the stages) and `6N_lsh_*` audit gauges (over-cap bucket
+    count and max bucket size — NOT document counts).
     """
     # 1. quality filter with both curation passes (+ optional url
     # canonicalization ahead of the re-crawl window — when on, every
@@ -168,23 +164,16 @@ def build_training_set(
             classifier_count["15_classifier_kept"] = kept.count()
 
         # 2. near-dup removal: keep each cluster's min-id representative.
-        # When auditing, the resolution shares ONE materialized bucket
-        # table between pair generation and the occupancy stats (round-6:
-        # the audit previously re-ran exact_representatives + the whole
-        # signature UDF pass a second time — the build's largest redundant
-        # cost; the shared table is ids-only, so the checkpoint is cheap
-        # and the audited cap is by construction the cap the pair stage
+        # The resolution shares ONE materialized bucket table between
+        # pair generation and the occupancy stats (round-6: the audit
+        # used to re-run the exact-dedup collapse + the whole signature
+        # UDF pass a second time — the build's largest redundant cost;
+        # the shared table is ids-only, so the checkpoint is cheap and
+        # the audited cap is by construction the cap the pair stage
         # enforced).
-        stats = None
-        if lsh_audit:
-            labels, stats = dedup_resolution(
-                kept, "url", "text", bucket_cap=lsh_bucket_cap,
-                with_bucket_stats=True, rebalance=False,
-            )
-        else:
-            labels = dedup_resolution(
-                kept, "url", "text", bucket_cap=lsh_bucket_cap, rebalance=False
-            )
+        labels, stats = dedup_resolution(
+            kept, "url", "text", bucket_cap=lsh_bucket_cap, rebalance=False
+        )
         non_reps = (
             labels.filter(F.col("node") != F.col("cluster"))
             .select(F.col("node").alias("url"))
@@ -197,16 +186,14 @@ def build_training_set(
         # aggregation is independent of everything downstream — submit it
         # from a driver thread (guide §2.6) and collect the row when the
         # lineage is assembled.
-        _fut_audit = None
-        if lsh_audit:
-            _fut_audit = _pool.submit(
-                lambda: stats.agg(
-                    F.coalesce(
-                        F.sum(F.when(F.col("over_cap"), F.col("n_buckets"))), F.lit(0)
-                    ).alias("n_over"),
-                    F.coalesce(F.max("bucket_size"), F.lit(0)).alias("max_size"),
-                ).collect()[0]
-            )
+        _fut_audit = _pool.submit(
+            lambda: stats.agg(
+                F.coalesce(
+                    F.sum(F.when(F.col("over_cap"), F.col("n_buckets"))), F.lit(0)
+                ).alias("n_over"),
+                F.coalesce(F.max("bucket_size"), F.lit(0)).alias("max_size"),
+            ).collect()[0]
+        )
 
         # 3. decontamination
         if benchmark is None:
@@ -259,14 +246,9 @@ def build_training_set(
         counts = {"00_input": _fut_input.result()}
         counts.update({k: f.result() for k, f in count_futs.items()})
         counts.update(classifier_count)
-        audit: dict[str, int] = {}
-        if _fut_audit is not None:
-            row = _fut_audit.result()
-            audit = {
-                "60_lsh_over_cap_buckets": row.n_over,
-                "61_lsh_max_bucket_size": row.max_size,
-            }
-        counts.update(audit)
+        row = _fut_audit.result()
+        counts["60_lsh_over_cap_buckets"] = row.n_over
+        counts["61_lsh_max_bucket_size"] = row.max_size
     finally:
         _pool.shutdown(cancel_futures=True)
     lineage = spark.createDataFrame(

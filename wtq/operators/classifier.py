@@ -32,14 +32,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wtq.operators.text import sql_words, words
+
 MICRO = 1_000_000
-
-
-def _tokens(text_col):
-    """Whitespace tokens, empties dropped — the corpus-wide convention
-    (same split as tfidf/top_words, mirrored by ``string_split`` +
-    ``list_filter`` in every oracle)."""
-    return F.filter(F.split(F.coalesce(text_col, F.lit("")), " "), lambda x: x != "")
 
 
 def train_nb_weights(
@@ -64,7 +59,7 @@ def train_nb_weights(
     y = F.col("y")
     tok = labeled.select(
         F.col(label_col).cast("boolean").alias("y"),
-        F.explode(_tokens(F.col(text_col))).alias("t"),
+        F.explode(words(F.coalesce(F.col(text_col), F.lit("")))).alias("t"),
     )
     counts = tok.groupBy("t").agg(
         F.count(F.when(y, True)).alias("c_pos"),
@@ -127,7 +122,7 @@ def nb_score(
             F.array_sort(F.collect_list(F.struct("t", "w_micro")))
         ).alias("wmap")
     )
-    toks = _tokens(F.col(text_col))
+    toks = words(F.coalesce(F.col(text_col), F.lit("")))
     score = F.col("prior_micro") + F.aggregate(
         toks,
         F.lit(0).cast("long"),
@@ -230,7 +225,7 @@ def sql_nb_quality_scores(
     scoring in pure SQL (``seed_sql``/``pos_sql`` are boolean SQL
     expressions over ``table`` selecting the seed slice and the
     positive label)."""
-    toks = f"list_filter(string_split(coalesce({text_col}, ''), ' '), x -> x <> '')"
+    toks = sql_words(f"coalesce({text_col}, '')")
     return f"""
 WITH labeled AS (
   SELECT ({pos_sql}) AS y, {text_col} FROM {table} WHERE ({seed_sql})

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from wtq.operators.text import STOP_WORDS, n_in, sql_n_in, sql_words, words
+
 # ---- shared constants (Spark AND oracle SQL are generated from these) ----
 DECONTAM_K = 13          # n-gram size, the C4/GPT-3 decontamination convention
 BENCH_MOD = 7            # doc_id % BENCH_MOD == 0 → doc seeds the benchmark set
@@ -56,16 +58,10 @@ GATE_STOPWORD_MIN = 0.0575  # host-level stopword fraction below this → drop
                             # doubles would depend on reduction order)
 
 
-def _words(col):
-    """Whitespace tokens, empties removed — mirrors DuckDB
-    list_filter(string_split(text,' '), x -> x <> '')."""
-    return F.filter(F.split(col, " "), lambda x: x != "")
-
-
 def benchmark_grams(bench_df: DataFrame, text_col: str = "text") -> DataFrame:
     """All 13-gram md5 digests of a benchmark corpus — the side input
     `decontaminate` joins against.  Column: g (md5 hex)."""
-    ws = bench_df.select(_words(F.col(text_col)).alias("ws")).filter(
+    ws = bench_df.select(words(F.col(text_col)).alias("ws")).filter(
         F.size("ws") >= DECONTAM_K
     )
     return ws.select(
@@ -107,7 +103,7 @@ def decontaminate(
     bit-identical in both engines.
     """
     ws = df.select(
-        F.col(id_col).alias("doc"), _words(F.col(text_col)).alias("ws")
+        F.col(id_col).alias("doc"), words(F.col(text_col)).alias("ws")
     ).filter(F.size("ws") >= DECONTAM_K)
     if benchmark is None:
         bench = (
@@ -149,7 +145,7 @@ def decontaminate(
 
 SQL_DECONTAMINATE = f"""
 WITH w AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+  SELECT doc_id, {sql_words('text')} AS ws
   FROM documents
 ), w13 AS (
   SELECT * FROM w WHERE len(ws) >= {DECONTAM_K}
@@ -250,7 +246,7 @@ def token_budget_sample(
     d = df.select(
         F.col(id_col).alias("doc"),
         F.col(host_col).alias("host"),
-        F.size(_words(F.col(text_col))).cast("long").alias("n_tokens"),
+        F.size(words(F.col(text_col))).cast("long").alias("n_tokens"),
     )
     w = (
         Window.partitionBy("host")
@@ -272,8 +268,8 @@ def token_budget_sample(
 SQL_TOKEN_BUDGET_SAMPLE = f"""
 SELECT doc_id, source, n_tokens, cum_tokens FROM (
   SELECT doc_id, source,
-         CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT) AS n_tokens,
-         CAST(sum(CAST(len(list_filter(string_split(text, ' '), x -> x <> '')) AS BIGINT)) OVER (
+         CAST(len({sql_words('text')}) AS BIGINT) AS n_tokens,
+         CAST(sum(CAST(len({sql_words('text')}) AS BIGINT)) OVER (
            PARTITION BY source
            ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
@@ -309,21 +305,13 @@ def source_quality_gate(
     Returns (host, n_docs, stopword_frac, gate) — gate in
     ('keep','drop') — one row per host.
     """
-    from wtq.rules.lexicon import STOPWORDS
-
-    # membership via isin → codegen InSet hash lookup: O(1) per word
-    # instead of the interpreted O(|stopwords|) array_contains scan
-    # (round-6: measured 4.3× on the corpus-wide pass, value-identical)
-    stop_list = sorted(STOPWORDS)
     d = df.select(
         F.col(host_col).alias("host"),
-        _words(F.col(text_col)).alias("ws"),
+        words(F.col(text_col)).alias("ws"),
     ).select(
         "host",
         F.size("ws").alias("n_words"),
-        F.size(
-            F.filter("ws", lambda x: F.lower(x).isin(*stop_list))
-        ).alias("n_stop"),
+        n_in(F.col("ws"), STOP_WORDS).alias("n_stop"),
     )
     agg = d.groupBy("host").agg(
         F.count("*").alias("n_docs"),
@@ -460,7 +448,7 @@ BOILERPLATE_CHUNK_WORDS = 10
 
 SQL_STRIP_BOILERPLATE = f"""
 WITH w AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+  SELECT doc_id, {sql_words('text')} AS ws
   FROM documents
 ), chunks AS (
   SELECT doc_id, i AS pos,
@@ -489,13 +477,11 @@ LEFT JOIN rebuilt r USING (doc_id)
 """
 
 
-def _sql_source_quality_gate(stop_sql: str) -> str:
-    return f"""
+SQL_SOURCE_QUALITY_GATE = f"""
 WITH d AS (
   SELECT source,
-         len(list_filter(string_split(text, ' '), x -> x <> '')) AS n_words,
-         len(list_filter(list_filter(string_split(text, ' '), x -> x <> ''),
-                         x -> list_contains([{stop_sql}], lower(x)))) AS n_stop
+         len({sql_words('text')}) AS n_words,
+         {sql_n_in(sql_words('text'), STOP_WORDS)} AS n_stop
   FROM documents
 ), agg AS (
   SELECT source, count(*) AS n_docs,

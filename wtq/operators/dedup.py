@@ -31,6 +31,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from wtq.operators import text as X
+
 # ---- shared constants (Spark AND oracle SQL are generated from these) ----
 MINHASH_P = 2147483647  # 2^31-1 (Mersenne prime): a*h < 2^62 — no int64 overflow
                         # under Spark's ANSI arithmetic or DuckDB BIGINT
@@ -59,14 +61,10 @@ def token_hash(col: Column) -> Column:
     )
 
 
-def words_arr(text: Column) -> Column:
-    return F.filter(F.split(text, " "), lambda w: w != "")
-
-
 def shingles_arr(text: Column, k: int = SHINGLE_K) -> Column:
     """k-word shingles via index-transform over the word array —
     no explode needed until hashing."""
-    w = words_arr(text)
+    w = X.words(text)
     n = F.size(w)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     mk = F.transform(
@@ -166,14 +164,16 @@ def minhash_signatures(
     # single giant input split would serialize it.  Exactly one split
     # per core — over-splitting (4× was measured) doubles wall time at
     # this batch size from per-task Arrow/scheduling overhead.
-    # Round-6: callers whose input is ALREADY split at least core-wide
-    # (the registry rebalance, the build's checkpointed kept set) pass
-    # rebalance=False and skip the exchange — it only re-moved every
-    # text.  The skip is a caller-declared flag, NOT runtime
-    # introspection: df.rdd.getNumPartitions() on an AQE plan that
-    # contains an exchange EXECUTES that exchange stage to finalize
-    # the plan, paying the shuffle twice (measured as a regression
-    # before this flag).
+    # Round-6: a caller whose input is ALREADY split at least core-wide
+    # and materialized (the build's checkpointed kept set) passes
+    # rebalance=False and skips the exchange — it only re-moved every
+    # text.  (Directly above another repartition, as in the registry's
+    # rebalanced reads, Catalyst collapses the two into one exchange.)
+    # The skip is a caller-declared flag, NOT runtime introspection:
+    # df.rdd.getNumPartitions() on an AQE plan that contains an
+    # exchange EXECUTES that exchange stage to finalize the plan,
+    # paying the shuffle twice (measured as a regression before this
+    # flag).
     base = df.select(F.col(id_col), F.col(text_col))
     if rebalance:
         base = base.repartition(
@@ -225,7 +225,6 @@ def minhash_lsh_pairs(
     id_col: str,
     text_col: str,
     bucket_cap: int = LSH_BUCKET_CAP,
-    rebalance: bool = True,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banding: docs sharing ALL row
     minvalues in ≥1 band.  Returns (doc1, doc2, n_shared_bands) with
@@ -243,7 +242,7 @@ def minhash_lsh_pairs(
     # scan (measured: the whole signature pass re-ran serially).
     # Shingle-less docs are dropped at the bucket level instead, where
     # the Generate node blocks pushdown.
-    buckets = _minhash_buckets(df, id_col, text_col, rebalance=rebalance)
+    buckets = _minhash_buckets(df, id_col, text_col)
     # Within-bucket pairs via ONE aggregation + double explode instead
     # of a bucket self-join: a self-join duplicates the whole upstream
     # subtree, so the signature UDF would run TWICE (measured 2× the
@@ -589,45 +588,13 @@ def connected_components(
     return labels.select(F.col("node"), F.col("label").alias("cluster"))
 
 
-def exact_representatives(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """One representative document (min id) per md5 text fingerprint —
-    the exact-dedup-first front half of `dedup_resolution`, exposed so
-    observability consumers (the build lineage's LSH occupancy audit,
-    wtq/build.py) can measure the EXACT document set the LSH stage
-    sees.  Auditing the raw corpus instead would report over-cap
-    buckets that the exact collapse already defused (10⁵ byte-identical
-    pages = ONE doc per band bucket), which misleads production triage.
-
-    Deliberately mirrors (not shares) dedup_resolution's interior: the
-    resolution path checkpoints its fingerprint-group table because two
-    downstream consumers reuse it; this standalone form has one
-    consumer and a checkpoint would just pin memory."""
-    docs = df.select(
-        F.col(id_col),
-        F.col(text_col),
-        F.md5(F.encode(F.col(text_col), "UTF-8")).alias("__fp"),
-    )
-    multi = (
-        docs.groupBy("__fp")
-        .agg(F.min(id_col).alias("__rep"), F.count("*").alias("__n"))
-        .filter(F.col("__n") >= 2)
-        .select("__fp", "__rep")
-    )
-    return (
-        docs.join(multi, "__fp", "left")
-        .filter(F.col("__rep").isNull() | (F.col(id_col) == F.col("__rep")))
-        .select(id_col, text_col)
-    )
-
-
 def dedup_resolution(
     df: DataFrame,
     id_col: str,
     text_col: str,
     bucket_cap: int = LSH_BUCKET_CAP,
-    with_bucket_stats: bool = False,
     rebalance: bool = True,
-):
+) -> tuple[DataFrame, DataFrame]:
     """Per-document cluster assignment (node, cluster) with
     EXACT-DEDUP-FIRST discipline: byte-identical documents are
     collapsed to one representative per md5 fingerprint BEFORE the LSH
@@ -649,11 +616,13 @@ def dedup_resolution(
     silently missed them.  Output covers exactly the docs in a cluster
     of ≥ 2 (pair-connected or fingerprint-connected).
 
-    ``with_bucket_stats=True`` returns ``(labels, stats)`` where
-    ``stats`` is the lsh_bucket_stats occupancy histogram over the
-    SAME representative bucket table the pair stage consumed — the
-    build's audit then costs one materialized ids-only bucket table
-    instead of a second full signature pass (round-6)."""
+    Returns ``(labels, stats)``: ``stats`` is the lsh_bucket_stats
+    occupancy histogram over the SAME representative bucket table the
+    pair stage consumed — the build's audit costs one materialized
+    ids-only bucket table instead of a second full signature pass
+    (round-6).  `rebalance` rides through to minhash_signatures (the
+    build passes False for its already core-wide checkpointed kept
+    set)."""
     docs = df.select(
         F.col(id_col).alias("node"),
         F.col(text_col).alias("__text"),
@@ -689,20 +658,14 @@ def dedup_resolution(
         .filter(F.col("rep").isNull() | (F.col("node") == F.col("rep")))
         .select(F.col("node").alias(id_col), F.col("__text").alias(text_col))
     )
-    stats = None
-    if with_bucket_stats:
-        # ONE signature pass feeds pairing AND the occupancy audit:
-        # the (doc, bucket) table is ids-only (~8 short rows per rep),
-        # so the checkpoint is cheap and both consumers read it
-        buckets = _minhash_buckets(
-            reps, id_col, text_col, rebalance=rebalance
-        ).localCheckpoint(eager=True)
-        pairs = _pairs_from_buckets(buckets, bucket_cap)
-        stats = _bucket_stats_from_buckets(buckets, bucket_cap)
-    else:
-        pairs = minhash_lsh_pairs(
-            reps, id_col, text_col, bucket_cap=bucket_cap, rebalance=rebalance
-        )
+    # ONE signature pass feeds pairing AND the occupancy audit: the
+    # (doc, bucket) table is ids-only (~8 short rows per rep), so the
+    # checkpoint is cheap and both consumers read it
+    buckets = _minhash_buckets(
+        reps, id_col, text_col, rebalance=rebalance
+    ).localCheckpoint(eager=True)
+    pairs = _pairs_from_buckets(buckets, bucket_cap)
+    stats = _bucket_stats_from_buckets(buckets, bucket_cap)
     cc = connected_components(pairs).select(
         F.col("node").alias("rep"), F.col("cluster").alias("cc_cluster")
     )
@@ -723,19 +686,15 @@ def dedup_resolution(
         .filter(F.col("cc_cluster").isNotNull() | (F.col("n_fp") >= 2))
         .select("node", F.coalesce("cc_cluster", "rep").alias("cluster"))
     )
-    if with_bucket_stats:
-        return labels, stats
-    return labels
+    return labels, stats
 
 
-def dedup_clusters(
-    df: DataFrame, id_col: str, text_col: str, rebalance: bool = True
-) -> DataFrame:
+def dedup_clusters(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Near-dup clusters over MinHash-LSH pairs: one row per cluster
     with its representative (min id), member count, and sorted member
     list — the keep-one-representative contract of a dedup pass.
     Exact-dedup-first via dedup_resolution (see its docstring)."""
-    cc = dedup_resolution(df, id_col, text_col, rebalance=rebalance)
+    cc, _ = dedup_resolution(df, id_col, text_col)
     return (
         cc.groupBy("cluster")
         .agg(
@@ -824,9 +783,7 @@ def _simhash_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(_simhash_batch(texts))
 
 
-def simhash(
-    df: DataFrame, id_col: str, text_col: str, rebalance: bool = True
-) -> DataFrame:
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """60-bit multiplicity-weighted shingle SimHash per document.
 
     One Arrow-batched numpy pass — a narrow map, no shuffle at all.
@@ -835,10 +792,10 @@ def simhash(
     rows and was retired from the execution path in round 2; it
     survives verbatim as the DuckDB oracle (sql_simhash), which checks
     this implementation bit-for-bit."""
-    # same caller-declared rebalance flag as minhash_signatures (round-6)
-    base = df.select(F.col(id_col), F.col(text_col))
-    if rebalance:
-        base = base.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    # one split per core, as in minhash_signatures
+    base = df.select(F.col(id_col), F.col(text_col)).repartition(
+        df.sparkSession.sparkContext.defaultParallelism
+    )
     return base.select(F.col(id_col), _simhash_udf(F.col(text_col)).alias("simhash"))
 
 
@@ -846,12 +803,8 @@ def simhash(
 # Oracle SQL builders (DuckDB) — generated from the SAME constants
 # ---------------------------------------------------------------------------
 
-def _sql_words(text: str) -> str:
-    return f"list_filter(string_split({text}, ' '), x -> x <> '')"
-
-
 def _sql_shingles(text: str, k: int = SHINGLE_K) -> str:
-    w = _sql_words(text)
+    w = X.sql_words(text)
     parts = " || ' ' || ".join(f"w[i+{j}]" for j in range(k))
     return (
         f"(SELECT CASE WHEN len(w) >= {k} THEN "
@@ -1025,7 +978,6 @@ def simhash_near_pairs(
     id_col: str,
     text_col: str,
     bucket_cap: int = LSH_BUCKET_CAP,
-    rebalance: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash banding: candidates share one
     SIMHASH_BAND_BITS-bit chunk (6 bands × 10 bits — equi-join, never
@@ -1051,7 +1003,7 @@ def simhash_near_pairs(
     whose ONLY links route through a far-from-min member, cluster
     recall degrades too.  The oracle applies the identical cap and
     star rule."""
-    sig = simhash(df, id_col, text_col, rebalance=rebalance).select(
+    sig = simhash(df, id_col, text_col).select(
         F.col(id_col).alias("doc"), F.col("simhash")
     )
     # NULL signature = "no shingles" (out-of-band: a computable 0 is a

@@ -1,5 +1,6 @@
-"""Text-analysis operators: token counting, quality scoring,
-marker-word language ID, document fingerprinting.
+"""Text-analysis operators: marker-word language ID, token counts +
+quality score + fingerprint, and the word tokenizer and lexicon test
+every word-level operator shares.
 
 These are SQL-expressible (differential-testable against the DuckDB
 oracle) siblings of the pipeline's Arrow-UDF scorers; pytest also
@@ -23,63 +24,65 @@ BPE_TOKEN_RE = "[a-zA-Z0-9]+|[^a-zA-Z0-9 ]"
 
 _MARKER_LANGS = ("en", "fr", "es", "de")
 
+# The stopword lexicon as one sorted literal: Spark's isin list and the
+# oracle's list_contains array are both spelled from it.
+STOP_WORDS = sorted(STOPWORDS)
 
-def words_arr(text: Column) -> Column:
+
+# ---------------------------------------------------------------------------
+# Words and lexicon membership — the ONE definition per engine
+# ---------------------------------------------------------------------------
+# A word is a non-empty run between ASCII spaces (tabs, newlines and
+# NBSP stay inside words); NULL text gives a NULL word array.  A word
+# is in a lexicon when its lower() is.  Callers that want NULL text to
+# read as the empty document coalesce before calling.
+
+def words(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda w: w != "")
 
 
-def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Whitespace tokens + BPE-ish regex tokens per document."""
-    t = F.col(text_col)
-    return df.select(
-        F.col(id_col),
-        F.size(words_arr(t)).alias("ws_tokens"),
-        F.size(F.regexp_extract_all(t, F.lit(BPE_TOKEN_RE), 0)).alias("bpe_tokens"),
+def n_in(words: Column, lexicon: list[str]) -> Column:
+    """Number of `words` whose lower() is in `lexicon` (sorted list).
+    isin → codegen InSet hash lookup (round-6; value-identical to the
+    interpreted array_contains scan, ~4× faster per word)."""
+    return F.size(F.filter(words, lambda w: F.lower(w).isin(*lexicon)))
+
+
+def sql_words(text: str) -> str:
+    return f"list_filter(string_split({text}, ' '), x -> x <> '')"
+
+
+def sql_n_in(words: str, lexicon: list[str]) -> str:
+    """DuckDB twin of `n_in`.  DuckDB lowers U+0130 (İ) to ASCII 'i'
+    where Spark (Java) gives 'i' + U+0307, so 'İS' would count as 'is'
+    here only; spelling İ out as Java's lowercase first makes the two
+    lower()s agree on every word a latin lexicon can match."""
+    lst = ", ".join(f"'{w}'" for w in lexicon)
+    return (
+        f"len(list_filter({words}, x -> list_contains([{lst}], "
+        "lower(replace(x, 'İ', 'i' || chr(775))))))"
     )
 
 
-def _stat_cols(t: Column) -> dict[str, Column]:
-    words = words_arr(t)
-    n = F.size(words)
+def word_stats(t: Column) -> dict[str, Column]:
+    """Per-document word statistics of text column `t`: the inputs of
+    text_metrics' quality score and of the registry's scalar rules."""
+    w = words(t)
+    n = F.size(w)
     nw = F.greatest(n, F.lit(1)).cast("double")
-    # isin → codegen InSet hash lookup (round-6; value-identical to the
-    # interpreted array_contains scan, ~4× faster per word)
-    stop_list = sorted(STOPWORDS)
     return {
         "n_words": n,
-        "mean_word_len": F.aggregate(words, F.lit(0).cast("long"), lambda a, w: a + F.length(w)).cast("double") / nw,
-        "stopword_frac": F.size(F.filter(words, lambda w: F.lower(w).isin(*stop_list))).cast("double") / nw,
+        "mean_word_len": F.aggregate(w, F.lit(0).cast("long"), lambda a, x: a + F.length(x)).cast("double") / nw,
+        "stopword_frac": n_in(w, STOP_WORDS).cast("double") / nw,
         "symbol_frac": (F.length(t) - F.length(F.regexp_replace(t, "[#$%&*+<=>@^_|~]", ""))).cast("double") / nw,
     }
-
-
-def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Composite linear quality score in [0,1]-ish (pure arithmetic —
-    bit-reproducible in any engine)."""
-    s = _stat_cols(F.col(text_col))
-    score = (
-        s["stopword_frac"] * 0.5
-        + (F.lit(1.0) - F.least(s["symbol_frac"], F.lit(1.0))) * 0.3
-        + (F.lit(1.0) - F.least(F.abs(s["mean_word_len"] - 5.0) / 5.0, F.lit(1.0))) * 0.2
-    )
-    return df.select(
-        F.col(id_col),
-        s["n_words"].alias("n_words"),
-        F.round(score, 6).alias("quality_score"),
-    )
 
 
 def lang_markers(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Marker-word language ID: count per-language function words,
     argmax with fixed tie-break order (en,fr,es,de)."""
-    words = words_arr(F.col(text_col))
-
-    def _marker_count(marker_list):
-        return F.size(F.filter(words, lambda w: F.lower(w).isin(*marker_list)))
-
-    counts = {}
-    for lang in _MARKER_LANGS:
-        counts[lang] = _marker_count(sorted(set(LANG_WORDS[lang])))
+    w = words(F.col(text_col))
+    counts = {lang: n_in(w, sorted(set(LANG_WORDS[lang]))) for lang in _MARKER_LANGS}
     best = F.greatest(*[counts[lang] for lang in _MARKER_LANGS])
     pred = F.when(counts["en"] == best, "en")
     for lang in _MARKER_LANGS[1:]:
@@ -94,17 +97,17 @@ def lang_markers(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def text_metrics(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Token counts + composite quality score + content fingerprint in
     ONE scan/projection — the columns a curation run actually wants
-    side by side per document.  Consolidates the former token_counts /
-    quality_score / fingerprints registry demos (50-entry driver cap);
-    the standalone operators remain the public API."""
+    side by side per document.  The score is a linear mix in [0,1]-ish
+    (pure arithmetic — bit-reproducible in any engine); the fingerprint
+    is md5 of the lowercase whitespace-normalized text."""
     t = F.col(text_col)
-    s = _stat_cols(t)
+    s = word_stats(t)
     score = (
         s["stopword_frac"] * 0.5
         + (F.lit(1.0) - F.least(s["symbol_frac"], F.lit(1.0))) * 0.3
         + (F.lit(1.0) - F.least(F.abs(s["mean_word_len"] - 5.0) / 5.0, F.lit(1.0))) * 0.2
     )
-    norm = F.array_join(words_arr(F.lower(t)), " ")
+    norm = F.array_join(words(F.lower(t)), " ")
     return df.select(
         F.col(id_col),
         s["n_words"].alias("ws_tokens"),
@@ -114,62 +117,23 @@ def text_metrics(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def fingerprints(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Deterministic content fingerprint (md5 of lowercase
-    whitespace-normalized text)."""
-    norm = F.array_join(words_arr(F.lower(F.col(text_col))), " ")
-    return df.select(F.col(id_col), F.md5(F.encode(norm, "UTF-8")).alias("fp"))
-
-
 # ---------------------------------------------------------------------------
 # Oracle SQL builders (DuckDB)
 # ---------------------------------------------------------------------------
 
-def _sql_words(text: str) -> str:
-    return f"list_filter(string_split({text}, ' '), x -> x <> '')"
-
-
-def sql_token_counts(table: str, id_col: str, text_col: str) -> str:
-    return f"""
-    SELECT {id_col},
-           CAST(len({_sql_words(text_col)}) AS INT) AS ws_tokens,
-           CAST(len(regexp_extract_all({text_col}, '{BPE_TOKEN_RE}')) AS INT) AS bpe_tokens
-    FROM {table}
-    """
-
-
 def _sql_stats(text_col: str) -> dict[str, str]:
-    stop_list = ", ".join(f"'{w}'" for w in sorted(STOPWORDS))
-    w = _sql_words(text_col)
+    w = sql_words(text_col)
     return {
         "n_words": f"len({w})",
         "mean_word_len": f"CAST(list_sum(list_transform({w}, x -> length(x))) AS DOUBLE) / greatest(len({w}), 1)",
-        "stopword_frac": f"CAST(len(list_filter({w}, x -> list_contains([{stop_list}], lower(x)))) AS DOUBLE) / greatest(len({w}), 1)",
+        "stopword_frac": f"CAST({sql_n_in(w, STOP_WORDS)} AS DOUBLE) / greatest(len({w}), 1)",
         "symbol_frac": f"CAST(length({text_col}) - length(regexp_replace({text_col}, '[#$%&*+<=>@^_|~]', '', 'g')) AS DOUBLE) / greatest(len({w}), 1)",
     }
 
 
-def sql_quality_score(table: str, id_col: str, text_col: str) -> str:
-    s = _sql_stats(text_col)
-    # coalesce(list_sum(...), 0) — DuckDB list_sum of empty list is NULL
-    mean = f"coalesce({s['mean_word_len']}, 0.0)"
-    score = (
-        f"{s['stopword_frac']} * 0.5"
-        f" + (1.0 - least({s['symbol_frac']}, 1.0)) * 0.3"
-        f" + (1.0 - least(abs({mean} - 5.0) / 5.0, 1.0)) * 0.2"
-    )
-    return f"""
-    SELECT {id_col}, CAST({s['n_words']} AS INT) AS n_words, round({score}, 6) AS quality_score
-    FROM {table}
-    """
-
-
 def sql_lang_markers(table: str, id_col: str, text_col: str) -> str:
-    w = _sql_words(text_col)
-    counts = {}
-    for lang in _MARKER_LANGS:
-        lst = ", ".join(f"'{x}'" for x in sorted(set(LANG_WORDS[lang])))
-        counts[lang] = f"len(list_filter({w}, x -> list_contains([{lst}], lower(x))))"
+    w = sql_words(text_col)
+    counts = {lang: sql_n_in(w, sorted(set(LANG_WORDS[lang]))) for lang in _MARKER_LANGS}
     best = "greatest(" + ", ".join(f"c_{l}" for l in _MARKER_LANGS) + ")"
     case = "CASE " + " ".join(
         f"WHEN c_{l} = {best} THEN '{l}'" for l in _MARKER_LANGS
@@ -183,13 +147,14 @@ def sql_lang_markers(table: str, id_col: str, text_col: str) -> str:
 
 def sql_text_metrics(table: str, id_col: str, text_col: str) -> str:
     s = _sql_stats(text_col)
+    # coalesce(list_sum(...), 0) — DuckDB list_sum of empty list is NULL
     mean = f"coalesce({s['mean_word_len']}, 0.0)"
     score = (
         f"{s['stopword_frac']} * 0.5"
         f" + (1.0 - least({s['symbol_frac']}, 1.0)) * 0.3"
         f" + (1.0 - least(abs({mean} - 5.0) / 5.0, 1.0)) * 0.2"
     )
-    w_norm = _sql_words(f"lower({text_col})")
+    w_norm = sql_words(f"lower({text_col})")
     return f"""
     SELECT {id_col},
            CAST({s['n_words']} AS INT) AS ws_tokens,
@@ -197,13 +162,6 @@ def sql_text_metrics(table: str, id_col: str, text_col: str) -> str:
            round({score}, 6) AS quality_score,
            md5(array_to_string({w_norm}, ' ')) AS fp
     FROM {table}
-    """
-
-
-def sql_fingerprints(table: str, id_col: str, text_col: str) -> str:
-    w = _sql_words(f"lower({text_col})")
-    return f"""
-    SELECT {id_col}, md5(array_to_string({w}, ' ')) AS fp FROM {table}
     """
 
 

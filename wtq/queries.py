@@ -22,7 +22,6 @@ from wtq.operators import similarity as S
 from wtq.operators import spatial as G
 from wtq.operators import text as X
 from wtq.rules import registry as R
-from wtq.rules.lexicon import STOPWORDS
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str, rebalance: bool = True) -> DataFrame:
@@ -61,9 +60,6 @@ def _t_keyed(spark: SparkSession, sf_dir: str, name: str, *keys: str) -> DataFra
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     p = spark.sparkContext.defaultParallelism
     return df.repartition(p, *[F.col(k) for k in keys])
-
-
-_STOP_SQL = ", ".join(f"'{w}'" for w in sorted(STOPWORDS))
 
 
 # ---------------------------------------------------------------------------
@@ -663,8 +659,28 @@ GROUP BY word ORDER BY cnt DESC, word LIMIT 20
 # of the pipeline's rule battery)
 # ---------------------------------------------------------------------------
 
-def _doc_words(t):
-    return F.filter(F.split(t, " "), lambda w: w != "")
+def _rule_stats():
+    """(n_words, stopword_frac, mean_word_len) of `documents.text` —
+    the three scalar rule metrics, one definition for rule_metrics and
+    doc_decisions.  NULL text is the empty document (0 words, every
+    rule fires), as in the pipeline's scorer."""
+    s = X.word_stats(F.coalesce(F.col("text"), F.lit("")))
+    return s["n_words"], s["stopword_frac"], s["mean_word_len"]
+
+
+_SQL_WORDS = X.sql_words("coalesce(text, '')")
+_SQL_RULE_STATS = f"""
+WITH s AS (
+  SELECT doc_id,
+         len({_SQL_WORDS}) AS n,
+         CAST({X.sql_n_in(_SQL_WORDS, X.STOP_WORDS)} AS DOUBLE)
+           / greatest(len({_SQL_WORDS}), 1) AS stop_frac,
+         CAST(coalesce(list_sum(list_transform({_SQL_WORDS},
+                                               x -> length(x))), 0) AS DOUBLE)
+           / greatest(len({_SQL_WORDS}), 1) AS mean
+  FROM documents
+)
+"""
 
 
 def q_rule_metrics(spark, sf_dir):
@@ -677,18 +693,7 @@ def q_rule_metrics(spark, sf_dir):
     separate: it is a different physical shape (explode + two-level
     agg), not a scalar projection."""
     d = _t(spark, sf_dir, "documents")
-    words = _doc_words(F.col("text"))
-    n = F.size(words)
-    nw = F.greatest(n, F.lit(1))
-    # isin → codegen InSet hash lookup (round-6; value-identical to the
-    # interpreted array_contains scan, ~4× faster per word)
-    stop_list = sorted(STOPWORDS)
-    stop_frac = F.size(
-        F.filter(words, lambda w: F.lower(w).isin(*stop_list))
-    ).cast("double") / nw
-    mean = F.aggregate(words, F.lit(0).cast("long"), lambda a, w: a + F.length(w)).cast(
-        "double"
-    ) / nw
+    n, stop_frac, mean = _rule_stats()
     return d.select(
         "doc_id",
         n.alias("n_words"),
@@ -700,23 +705,12 @@ def q_rule_metrics(spark, sf_dir):
     )
 
 
-SQL_RULE_METRICS = f"""
-WITH s AS (
-  SELECT doc_id,
-         len(list_filter(string_split(text, ' '), x -> x <> '')) AS n,
-         CAST(len(list_filter(list_filter(string_split(text, ' '), x -> x <> ''),
-                              x -> list_contains([{_STOP_SQL}], lower(x)))) AS DOUBLE)
-           / greatest(len(list_filter(string_split(text, ' '), x -> x <> '')), 1) AS frac,
-         CAST(coalesce(list_sum(list_transform(list_filter(string_split(text, ' '), x -> x <> ''),
-                                               x -> length(x))), 0) AS DOUBLE)
-           / greatest(len(list_filter(string_split(text, ' '), x -> x <> '')), 1) AS mean
-  FROM documents
-)
+SQL_RULE_METRICS = _SQL_RULE_STATS + f"""
 SELECT doc_id,
        CAST(n AS INT) AS n_words,
        (n < {R.MIN_WORDS} OR n > {R.MAX_WORDS}) AS bounds_fired,
-       round(frac, 6) AS stopword_frac,
-       frac < {R.STOPWORD_FRAC_MIN} AS stop_fired,
+       round(stop_frac, 6) AS stopword_frac,
+       stop_frac < {R.STOPWORD_FRAC_MIN} AS stop_fired,
        round(mean, 6) AS mean_word_len,
        (mean < {R.MIN_MEAN_WORD_LEN} OR mean > {R.MAX_MEAN_WORD_LEN}) AS len_fired
 FROM s
@@ -727,7 +721,7 @@ def q_rule_top_word(spark, sf_dir):
     """Per-doc mode via explode + two-level agg (the scalable form of
     the repeated-content rule — A6 pattern per document)."""
     d = _t(spark, sf_dir, "documents")
-    w = d.select("doc_id", F.explode(_doc_words(F.col("text"))).alias("word"))
+    w = d.select("doc_id", F.explode(X.words(F.col("text"))).alias("word"))
     counts = w.groupBy("doc_id", "word").agg(F.count("*").alias("cnt"))
     per_doc = counts.groupBy("doc_id").agg(
         (F.max("cnt").cast("double") / F.sum("cnt")).alias("frac")
@@ -740,7 +734,7 @@ def q_rule_top_word(spark, sf_dir):
 SQL_RULE_TOP_WORD = f"""
 WITH c AS (
   SELECT doc_id, word, count(*) AS cnt
-  FROM (SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS word
+  FROM (SELECT doc_id, unnest({X.sql_words('text')}) AS word
         FROM documents)
   GROUP BY doc_id, word
 ),
@@ -753,12 +747,7 @@ def q_doc_decisions(spark, sf_dir):
     """Single-pass rule battery + err_all rollup on documents (U3 note:
     all CASEs evaluated in one scan, codes joined as one string)."""
     d = _t(spark, sf_dir, "documents")
-    words = _doc_words(F.col("text"))
-    n = F.size(words)
-    nw = F.greatest(n, F.lit(1)).cast("double")
-    stop_list = sorted(STOPWORDS)
-    stop_frac = F.size(F.filter(words, lambda w: F.lower(w).isin(*stop_list))) / nw
-    mean = F.aggregate(words, F.lit(0).cast("long"), lambda a, w: a + F.length(w)) / nw
+    n, stop_frac, mean = _rule_stats()
     codes = F.concat_ws(
         ",",
         F.when(n < R.MIN_WORDS, "Q-1"),
@@ -769,18 +758,7 @@ def q_doc_decisions(spark, sf_dir):
     return d.select("doc_id", codes.alias("codes"), (codes == "").alias("keep"))
 
 
-SQL_DOC_DECISIONS = f"""
-WITH s AS (
-  SELECT doc_id,
-         len(list_filter(string_split(text, ' '), x -> x <> '')) AS n,
-         CAST(len(list_filter(list_filter(string_split(text, ' '), x -> x <> ''),
-                              x -> list_contains([{_STOP_SQL}], lower(x)))) AS DOUBLE)
-           / greatest(len(list_filter(string_split(text, ' '), x -> x <> '')), 1) AS stop_frac,
-         CAST(coalesce(list_sum(list_transform(list_filter(string_split(text, ' '), x -> x <> ''),
-                                               x -> length(x))), 0) AS DOUBLE)
-           / greatest(len(list_filter(string_split(text, ' '), x -> x <> '')), 1) AS mean
-  FROM documents
-)
+SQL_DOC_DECISIONS = _SQL_RULE_STATS + f"""
 SELECT doc_id,
        concat_ws(',',
          CASE WHEN n < {R.MIN_WORDS} THEN 'Q-1' END,
@@ -816,9 +794,7 @@ def q_dedup_exact(spark, sf_dir):
 
 
 def q_dedup_minhash_lsh(spark, sf_dir):
-    return D.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", rebalance=False
-    )
+    return D.minhash_lsh_pairs(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def q_dedup_ngram_jaccard(spark, sf_dir):
@@ -826,9 +802,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
 
 
 def q_simhash(spark, sf_dir):
-    return D.simhash(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", rebalance=False
-    ).select(
+    return D.simhash(_t(spark, sf_dir, "documents"), "doc_id", "text").select(
         F.col("doc_id").alias("doc"), "simhash"
     )
 
@@ -1071,9 +1045,7 @@ def q_ann_ivf_topk(spark, sf_dir):
 def q_simhash_near_pairs(spark, sf_dir):
     """Banded Hamming join over SimHash signatures: candidates share a
     15-bit chunk (equi-join), exact distance via bit_count(xor)."""
-    return D.simhash_near_pairs(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", rebalance=False
-    )
+    return D.simhash_near_pairs(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -1081,9 +1053,7 @@ def q_dedup_clusters(spark, sf_dir):
     duplicates): connected components over the MinHash-LSH pair graph
     via iterative min-label propagation; oracle is a recursive-CTE
     transitive closure — an independent derivation."""
-    return D.dedup_clusters(
-        _t(spark, sf_dir, "documents"), "doc_id", "text", rebalance=False
-    )
+    return D.dedup_clusters(_t(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 _PROFILE_COLS = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
@@ -1121,7 +1091,7 @@ def q_dedup_apply(spark, sf_dir):
     representative member set — the keep-one contract a training-data
     pipeline actually executes."""
     d = _t(spark, sf_dir, "documents")
-    cc = D.dedup_resolution(d, "doc_id", "text", rebalance=False)
+    cc, _ = D.dedup_resolution(d, "doc_id", "text")
     drop = cc.filter(F.col("node") != F.col("cluster")).select(
         F.col("node").alias("doc_id")
     )
@@ -1234,10 +1204,10 @@ def q_tfidf_top_terms(spark, sf_dir):
     )
 
 
-SQL_TFIDF_TOP_TERMS = """
+SQL_TFIDF_TOP_TERMS = f"""
 WITH d AS (SELECT * FROM documents WHERE doc_id < 50),
 tok AS (
-  SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS term
+  SELECT doc_id, unnest({X.sql_words('text')}) AS term
   FROM d
 ),
 tf AS (SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY 1, 2),
@@ -1415,7 +1385,7 @@ def q_strip_boilerplate(spark, sf_dir):
 
     d = _t(spark, sf_dir, "documents")
     n = C.BOILERPLATE_CHUNK_WORDS
-    ws = C._words(F.col("text"))  # the shared tokenization the oracle mirrors
+    ws = X.words(F.col("text"))  # the shared tokenization the oracle mirrors
     chunked = F.when(
         F.size(ws) > 0,
         F.array_join(
@@ -1641,7 +1611,7 @@ from wtq.operators import curation as _C  # noqa: E402
 ORACLE_SQL["decontaminate"] = _C.SQL_DECONTAMINATE
 ORACLE_SQL["incremental_corpus_dedup"] = _C.SQL_INCREMENTAL_CORPUS_DEDUP
 ORACLE_SQL["token_budget_sample"] = _C.SQL_TOKEN_BUDGET_SAMPLE
-ORACLE_SQL["source_quality_gate"] = _C._sql_source_quality_gate(_STOP_SQL)
+ORACLE_SQL["source_quality_gate"] = _C.SQL_SOURCE_QUALITY_GATE
 ORACLE_SQL["strip_boilerplate"] = _C.SQL_STRIP_BOILERPLATE
 
 # ---------------------------------------------------------------------------
