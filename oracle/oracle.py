@@ -17,7 +17,7 @@ import hashlib
 import pandas as pd
 
 from wtq.rules import heuristics as H
-from wtq.rules.langid import MARGIN_MIN, predict_lang
+from wtq.rules.langid import predict_lang
 from wtq.rules.perplexity import char_perplexity
 from wtq.rules.scrub import scrub_text
 
@@ -38,8 +38,10 @@ def oracle_decide(pages: pd.DataFrame) -> pd.DataFrame:
         lang_pred, margin = predict_lang(sr.text)
         ppl = char_perplexity(sr.text)
         stats = H.py_stats(sr.text)
-        mismatch = (lang_pred != r.lang) and (margin >= MARGIN_MIN)
-        fired = H.py_fired_rules(stats, mismatch, ppl, sr.n_profanity)
+        fired = H.py_fired_rules({
+            **stats, "pred_lang": lang_pred, "lang_margin": margin,
+            "lang": r.lang, "ppl": ppl, "n_profanity": sr.n_profanity,
+        })
         rows.append(
             {
                 "url": r.url,

@@ -5,9 +5,24 @@ from __future__ import annotations
 
 from wtq.rules import heuristics as H
 from wtq.rules import registry as R
-from wtq.rules.langid import predict_lang
+from wtq.rules.langid import MARGIN_MIN, predict_lang
 from wtq.rules.perplexity import char_perplexity
 from wtq.rules.scrub import scrub_text
+
+
+# the Gopher repetition family's codes (Rae et al. 2021 Table A1)
+REPETITION_CODES = {f"Q-{i}" for i in range(13, 23)}
+# what the pipeline's score pass emits besides py_stats, and the input
+# column a rule may read
+SCORE_FIELDS = {"pred_lang", "lang_margin", "ppl", "n_profanity", "lang"}
+
+
+def _row(stats, lang_mismatch=False, ppl=0.0, profanity_hits=0):
+    """py_fired_rules' input: the stats plus the score fields."""
+    return {
+        **stats, "pred_lang": "de" if lang_mismatch else "en", "lang": "en",
+        "lang_margin": MARGIN_MIN, "ppl": ppl, "n_profanity": profanity_hits,
+    }
 
 
 def test_registry_codes_unique():
@@ -68,19 +83,19 @@ def test_dup_ngram_frac():
 def test_repetition_rules_fire():
     # dominant 2-gram: 'buy now' repeated 30× (60 words, passes Q-1)
     stats = H.py_stats(" ".join(["buy now"] * 30))
-    fired = H.py_fired_rules(stats, lang_mismatch=False, ppl=0.0, profanity_hits=0)
+    fired = H.py_fired_rules(_row(stats))
     assert {"Q-14", "Q-15", "Q-16", "Q-17", "Q-18", "Q-19", "Q-20", "Q-21", "Q-22"} <= set(fired)
     # duplicated paragraphs
     para = "some unique paragraph text here"
     stats = H.py_stats((para + "\n\n") * 3 + "tail")
-    fired = H.py_fired_rules(stats, lang_mismatch=False, ppl=0.0, profanity_hits=0)
+    fired = H.py_fired_rules(_row(stats))
     assert "Q-13" in fired
     # clean prose fires none of the repetition family
     clean = "the quick brown fox jumps over the lazy dog and then " \
             "walks along the river bank toward a small village market"
     stats = H.py_stats(clean)
-    fired = H.py_fired_rules(stats, lang_mismatch=False, ppl=0.0, profanity_hits=0)
-    assert not set(fired) & {c for c, _, _ in R.REPETITION_RULES}
+    fired = H.py_fired_rules(_row(stats))
+    assert not set(fired) & REPETITION_CODES
 
 
 def test_cascaded_repetition_stats_equal_reference_forms():
@@ -135,15 +150,19 @@ def test_cascaded_repetition_stats_equal_reference_forms_hypothesis():
 
 def test_repetition_rules_in_registry():
     codes = {r.code for r in R.RULES}
-    assert {c for c, _, _ in R.REPETITION_RULES} <= codes
+    assert REPETITION_CODES <= codes
+    # every rule reads only what the score pass emits
+    for r in R.RULES:
+        read = {r.stat, *[x for x in (r.guard or ())[::2] if isinstance(x, str)]}
+        assert read <= set(H.STAT_FIELDS) | SCORE_FIELDS, r
 
 
 def test_fired_rules_thresholds():
     stats = H.py_stats("word " * 5)  # 5 words < MIN_WORDS
-    fired = H.py_fired_rules(stats, lang_mismatch=False, ppl=0.0, profanity_hits=0)
+    fired = H.py_fired_rules(_row(stats))
     assert "Q-1" in fired
     stats = H.py_stats(" ".join(["ok"] * 30))
-    fired = H.py_fired_rules(stats, lang_mismatch=True, ppl=R.PPL_MAX + 1, profanity_hits=2)
+    fired = H.py_fired_rules(_row(stats, lang_mismatch=True, ppl=R.PPL_MAX + 1, profanity_hits=2))
     assert {"L-1", "P-1", "T-1"} <= set(fired)
 
 

@@ -32,7 +32,6 @@ from pyspark.sql import types as T
 from wtq.rules import heuristics as H
 from wtq.rules.batch import score_batch
 from wtq.rules.heuristics import STAT_FIELDS
-from wtq.rules.langid import MARGIN_MIN
 
 SCORE_SCHEMA = T.StructType(
     [
@@ -61,11 +60,11 @@ def score_udf(texts: pd.Series) -> pd.DataFrame:
     round-trip, zero per-row dispatch), computed column-at-a-time by
     wtq.rules.batch.score_batch.  The text is already in Python for the
     regex scrub, so the stats are computed here too rather than as JVM
-    expressions; the rule THRESHOLDS stay JVM-side expressions
-    (wtq.rules.heuristics.fired_rules_expr).  `scrubbed` is NULL when
-    scrubbing changed nothing: decide() coalesces it back from the
-    input column, so unchanged text never crosses the Arrow boundary
-    twice."""
+    expressions; the rules over them are one JVM-side SQL expression
+    rendered from the rule table (wtq.rules.heuristics.fired_rules_expr).
+    `scrubbed` is NULL when scrubbing changed nothing: decide()
+    coalesces it back from the input column, so unchanged text never
+    crosses the Arrow boundary twice."""
     return score_batch(texts)
 
 
@@ -126,20 +125,13 @@ def decide(
     # original text column is still in scope here, so the coalesce
     # reconstructs the identical value without the Arrow round-trip
     scrubbed = F.coalesce(s["scrubbed"], F.col("text"))
-    stats = {k: s[k] for k in STAT_FIELDS}
-    fired = H.fired_rules_expr(
-        stats,
-        lang_mismatch=(s["pred_lang"] != F.col("lang")) & (s["lang_margin"] >= MARGIN_MIN),
-        ppl=s["ppl"],
-        profanity_hits=s["n_profanity"],
-    )
     return (
         scored.select(
             "url",
             "warc_ts",
             "lang",
             scrubbed.alias("text"),
-            stats["n_words"].alias("n_words"),
+            s["n_words"].alias("n_words"),
             s["pred_lang"].alias("pred_lang"),
             F.round(s["ppl"], 4).alias("ppl"),
             s["n_email"].alias("n_email"),
@@ -148,7 +140,7 @@ def decide(
             s["n_profanity"].alias("n_profanity"),
             (s["n_email"] + s["n_phone"] + s["n_ip"] + s["n_profanity"]).alias("n_scrub_edits"),
             F.spark_partition_id().alias("partition_id"),
-            fired.alias("fired_rules"),
+            H.fired_rules_expr("__s.").alias("fired_rules"),
             *[F.col(c) for c in carry_cols],
         )
         .withColumn("keep", F.size("fired_rules") == 0)

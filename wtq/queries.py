@@ -659,28 +659,48 @@ GROUP BY word ORDER BY cnt DESC, word LIMIT 20
 # of the pipeline's rule battery)
 # ---------------------------------------------------------------------------
 
-def _rule_stats():
-    """(n_words, stopword_frac, mean_word_len) of `documents.text` —
-    the three scalar rule metrics, one definition for rule_metrics and
-    doc_decisions.  NULL text is the empty document (0 words, every
-    rule fires), as in the pipeline's scorer."""
+_WORD_STATS = ("n_words", "stopword_frac", "mean_word_len")
+
+
+def _rule_stats(spark, sf_dir):
+    """(doc_id, n_words, stopword_frac, mean_word_len) of
+    `documents.text` — the stats of the word-level rules, under their
+    stat names so the rendered rule SQL reads them on both engines.
+    NULL text is the empty document, as in the pipeline's scorer."""
     s = X.word_stats(F.coalesce(F.col("text"), F.lit("")))
-    return s["n_words"], s["stopword_frac"], s["mean_word_len"]
+    return _t(spark, sf_dir, "documents").select("doc_id", *[s[k].alias(k) for k in _WORD_STATS])
 
 
 _SQL_WORDS = X.sql_words("coalesce(text, '')")
 _SQL_RULE_STATS = f"""
 WITH s AS (
   SELECT doc_id,
-         len({_SQL_WORDS}) AS n,
+         len({_SQL_WORDS}) AS n_words,
          CAST({X.sql_n_in(_SQL_WORDS, X.STOP_WORDS)} AS DOUBLE)
-           / greatest(len({_SQL_WORDS}), 1) AS stop_frac,
+           / greatest(len({_SQL_WORDS}), 1) AS stopword_frac,
          CAST(coalesce(list_sum(list_transform({_SQL_WORDS},
                                                x -> length(x))), 0) AS DOUBLE)
-           / greatest(len({_SQL_WORDS}), 1) AS mean
+           / greatest(len({_SQL_WORDS}), 1) AS mean_word_len
   FROM documents
 )
 """
+
+
+def _fired(*stats: str) -> str:
+    """SQL: whether any rule over `stats` fires."""
+    return " OR ".join(f"({R.rule_pred(r)})" for r in R.rules_over(*stats))
+
+
+# one select list for both engines: Spark selectExpr, DuckDB over `s`
+_RULE_METRICS_COLS = [
+    "doc_id",
+    "CAST(n_words AS INT) AS n_words",
+    f"{_fired('n_words')} AS bounds_fired",
+    "round(stopword_frac, 6) AS stopword_frac",
+    f"{_fired('stopword_frac')} AS stop_fired",
+    "round(mean_word_len, 6) AS mean_word_len",
+    f"{_fired('mean_word_len')} AS len_fired",
+]
 
 
 def q_rule_metrics(spark, sf_dir):
@@ -692,29 +712,16 @@ def q_rule_metrics(spark, sf_dir):
     three (the 50-entry driver registry cap).  rule_top_word stays
     separate: it is a different physical shape (explode + two-level
     agg), not a scalar projection."""
-    d = _t(spark, sf_dir, "documents")
-    n, stop_frac, mean = _rule_stats()
-    return d.select(
-        "doc_id",
-        n.alias("n_words"),
-        ((n < R.MIN_WORDS) | (n > R.MAX_WORDS)).alias("bounds_fired"),
-        F.round(stop_frac, 6).alias("stopword_frac"),
-        (stop_frac < R.STOPWORD_FRAC_MIN).alias("stop_fired"),
-        F.round(mean, 6).alias("mean_word_len"),
-        ((mean < R.MIN_MEAN_WORD_LEN) | (mean > R.MAX_MEAN_WORD_LEN)).alias("len_fired"),
-    )
+    return _rule_stats(spark, sf_dir).selectExpr(*_RULE_METRICS_COLS)
 
 
-SQL_RULE_METRICS = _SQL_RULE_STATS + f"""
-SELECT doc_id,
-       CAST(n AS INT) AS n_words,
-       (n < {R.MIN_WORDS} OR n > {R.MAX_WORDS}) AS bounds_fired,
-       round(stop_frac, 6) AS stopword_frac,
-       stop_frac < {R.STOPWORD_FRAC_MIN} AS stop_fired,
-       round(mean, 6) AS mean_word_len,
-       (mean < {R.MIN_MEAN_WORD_LEN} OR mean > {R.MAX_MEAN_WORD_LEN}) AS len_fired
-FROM s
-"""
+SQL_RULE_METRICS = _SQL_RULE_STATS + f"SELECT {', '.join(_RULE_METRICS_COLS)} FROM s\n"
+
+_TOP_WORD_COLS = [
+    "doc_id",
+    "round(top_word_frac, 6) AS top_word_frac",
+    f"{_fired('top_word_frac')} AS fired",
+]
 
 
 def q_rule_top_word(spark, sf_dir):
@@ -724,11 +731,9 @@ def q_rule_top_word(spark, sf_dir):
     w = d.select("doc_id", F.explode(X.words(F.col("text"))).alias("word"))
     counts = w.groupBy("doc_id", "word").agg(F.count("*").alias("cnt"))
     per_doc = counts.groupBy("doc_id").agg(
-        (F.max("cnt").cast("double") / F.sum("cnt")).alias("frac")
+        (F.max("cnt").cast("double") / F.sum("cnt")).alias("top_word_frac")
     )
-    return per_doc.select(
-        "doc_id", F.round("frac", 6).alias("top_word_frac"), (F.col("frac") > R.TOP_WORD_FRAC_MAX).alias("fired")
-    )
+    return per_doc.selectExpr(*_TOP_WORD_COLS)
 
 
 SQL_RULE_TOP_WORD = f"""
@@ -738,39 +743,25 @@ WITH c AS (
         FROM documents)
   GROUP BY doc_id, word
 ),
-f AS (SELECT doc_id, CAST(max(cnt) AS DOUBLE) / sum(cnt) AS frac FROM c GROUP BY doc_id)
-SELECT doc_id, round(frac, 6) AS top_word_frac, frac > {R.TOP_WORD_FRAC_MAX} AS fired FROM f
+f AS (SELECT doc_id, CAST(max(cnt) AS DOUBLE) / sum(cnt) AS top_word_frac FROM c GROUP BY doc_id)
+SELECT {', '.join(_TOP_WORD_COLS)} FROM f
 """
+
+# the err_all rollup of the word-level rules: codes joined as one string
+_DOC_CODES = f"concat_ws(',', {', '.join(R.rule_sql(r) for r in R.rules_over(*_WORD_STATS))}) AS codes"
 
 
 def q_doc_decisions(spark, sf_dir):
     """Single-pass rule battery + err_all rollup on documents (U3 note:
     all CASEs evaluated in one scan, codes joined as one string)."""
-    d = _t(spark, sf_dir, "documents")
-    n, stop_frac, mean = _rule_stats()
-    codes = F.concat_ws(
-        ",",
-        F.when(n < R.MIN_WORDS, "Q-1"),
-        F.when(n > R.MAX_WORDS, "Q-2"),
-        F.when((mean < R.MIN_MEAN_WORD_LEN) | (mean > R.MAX_MEAN_WORD_LEN), "Q-3"),
-        F.when(stop_frac < R.STOPWORD_FRAC_MIN, "Q-6"),
+    return _rule_stats(spark, sf_dir).selectExpr("doc_id", _DOC_CODES).selectExpr(
+        "doc_id", "codes", "codes = '' AS keep"
     )
-    return d.select("doc_id", codes.alias("codes"), (codes == "").alias("keep"))
 
 
 SQL_DOC_DECISIONS = _SQL_RULE_STATS + f"""
-SELECT doc_id,
-       concat_ws(',',
-         CASE WHEN n < {R.MIN_WORDS} THEN 'Q-1' END,
-         CASE WHEN n > {R.MAX_WORDS} THEN 'Q-2' END,
-         CASE WHEN mean < {R.MIN_MEAN_WORD_LEN} OR mean > {R.MAX_MEAN_WORD_LEN} THEN 'Q-3' END,
-         CASE WHEN stop_frac < {R.STOPWORD_FRAC_MIN} THEN 'Q-6' END) AS codes,
-       (concat_ws(',',
-         CASE WHEN n < {R.MIN_WORDS} THEN 'Q-1' END,
-         CASE WHEN n > {R.MAX_WORDS} THEN 'Q-2' END,
-         CASE WHEN mean < {R.MIN_MEAN_WORD_LEN} OR mean > {R.MAX_MEAN_WORD_LEN} THEN 'Q-3' END,
-         CASE WHEN stop_frac < {R.STOPWORD_FRAC_MIN} THEN 'Q-6' END) = '') AS keep
-FROM s
+SELECT doc_id, codes, codes = '' AS keep
+FROM (SELECT doc_id, {_DOC_CODES} FROM s)
 """
 
 

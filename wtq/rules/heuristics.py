@@ -1,24 +1,24 @@
-"""Gopher/C4-style heuristic quality rules.
+"""Gopher/C4-style heuristic quality rules: the per-document stats and
+the two evaluators of the rule table (wtq/rules/registry.py:RULES).
 
-Spark side: ``fired_rules_expr`` — a pure ``pyspark.sql.functions``
-expression evaluating every rule threshold in ONE pass per record
-(JVM whole-stage-codegen).  This is the analog of the reference's
-CASE-ladder tagging (SURVEY.md §2.7 U3 note: evaluate every rule per
-record in one scan instead of 13 unioned scans, semantically equal to
-proccess_data.sql:505-737 + the :734-736 rollup).  The stat INPUTS to
-the thresholds come from the pipeline's single Arrow score pass
-(wtq/pipeline.py) — the text is already in Python for the regex
-scrub, so computing the stats there is far cheaper than re-evaluating
-interpreted higher-order expressions per output column (measured in
-round 1: 176 → >10k docs/sec).  That pass runs the batch kernel
-(wtq/rules/batch.py), which reproduces ``py_stats`` below for a whole
-Arrow batch at once.
+Spark side: ``fired_rules_expr`` — ONE SQL expression, rendered from
+the table, that evaluates every rule per record (JVM whole-stage
+codegen).  This is the analog of the reference's CASE-ladder tagging
+(SURVEY.md §2.7 U3 note: evaluate every rule per record in one scan
+instead of 13 unioned scans, semantically equal to
+proccess_data.sql:505-737 + the :734-736 rollup).  The stats it reads
+come from the pipeline's single Arrow score pass (wtq/pipeline.py) —
+the text is already in Python for the regex scrub, so computing the
+stats there is far cheaper than re-evaluating interpreted higher-order
+expressions per output column (measured in round 1: 176 → >10k
+docs/sec).  That pass runs the batch kernel (wtq/rules/batch.py), which
+reproduces ``py_stats`` below for a whole Arrow batch at once.
 
 Oracle side: the differential oracle (oracle/oracle.py) calls the
 per-document ``py_stats`` — the reference the batch kernel is tested
-against bit for bit — while re-deriving keep/drop decisions
-independently of the Spark plan.  The contract for every stat is
-documented once here.
+against bit for bit — and ``py_fired_rules``, which evaluates the same
+table in Python, independently of the Spark plan.  The contract for
+every stat is documented once here.
 
 Definitions (on the SCRUBBED text):
   words      = non-empty substrings after splitting on whitespace
@@ -52,6 +52,7 @@ paragraphs split on "\n\n", word n-grams over `words`, gram chars =
 from __future__ import annotations
 
 from collections import Counter
+from collections.abc import Mapping
 
 import numpy as np
 from pyspark.sql import Column
@@ -60,10 +61,10 @@ from pyspark.sql import functions as F
 from wtq.rules import registry as R
 from wtq.rules.lexicon import STOPWORDS
 
-# Every py_stats key, in emission order.  The score schema, the batch
-# kernel's columns (wtq/rules/batch.py) and decide()'s stats dict all
-# derive from this one list — a stat added to py_stats only needs an
-# entry here to flow through to the rule expressions.
+# Every py_stats key, in emission order.  The score schema and the batch
+# kernel's columns (wtq/rules/batch.py) derive from this one list — a
+# stat added to py_stats only needs an entry here to be readable by a
+# rule in registry.RULES.
 STAT_FIELDS: list[str] = [
     "n_words", "n_lines", "mean_word_len", "symbol_ratio",
     "stopword_frac", "bullet_frac", "ellipsis_frac", "rep_line_frac",
@@ -74,40 +75,13 @@ STAT_FIELDS: list[str] = [
 ]
 
 
-def fired_rules_expr(
-    stats: dict[str, Column],
-    lang_mismatch: Column,
-    ppl: Column,
-    profanity_hits: Column,
-) -> Column:
+def fired_rules_expr(ref: str) -> Column:
     """array<string> of fired rule codes, sorted — the err_all analog
-    (proccess_data.sql:814-841) built in ONE pass per record."""
-    checks = [
-        (stats["n_words"] < R.MIN_WORDS, "Q-1"),
-        (stats["n_words"] > R.MAX_WORDS, "Q-2"),
-        (
-            (stats["n_words"] > 0)
-            & (
-                (stats["mean_word_len"] < R.MIN_MEAN_WORD_LEN)
-                | (stats["mean_word_len"] > R.MAX_MEAN_WORD_LEN)
-            ),
-            "Q-3",
-        ),
-        (stats["symbol_ratio"] > R.SYMBOL_WORD_RATIO_MAX, "Q-4"),
-        (stats["stopword_frac"] < R.STOPWORD_FRAC_MIN, "Q-6"),
-        (stats["rep_line_frac"] > R.REP_LINE_FRAC_MAX, "Q-7"),
-        (stats["bullet_frac"] > R.BULLET_LINE_FRAC_MAX, "Q-8"),
-        (stats["ellipsis_frac"] > R.ELLIPSIS_LINE_FRAC_MAX, "Q-9"),
-        (stats["top_word_frac"] > R.TOP_WORD_FRAC_MAX, "Q-10"),
-        (stats["brace_line_frac"] > R.BRACE_LINE_FRAC_MAX, "Q-11"),
-        (stats["has_lorem"] > 0, "Q-12"),
-        *[(stats[field] > thresh, code) for code, field, thresh in R.REPETITION_RULES],
-        (lang_mismatch, "L-1"),
-        (ppl > R.PPL_MAX, "P-1"),
-        (profanity_hits >= R.PROFANITY_MIN_HITS, "T-1"),
-    ]
-    arr = F.array(*[F.when(cond, F.lit(code)) for cond, code in checks])
-    return F.array_sort(F.filter(arr, lambda x: x.isNotNull()))
+    (proccess_data.sql:814-841) built in ONE pass per record: one SQL
+    expression over the stats at `ref` (e.g. ``'__s.'``) and the input
+    ``lang`` column, rendered from registry.RULES."""
+    cases = ", ".join(R.rule_sql(r, ref) for r in R.RULES)
+    return F.expr(f"array_sort(filter(array({cases}), x -> x IS NOT NULL))")
 
 
 # ---------------------------------------------------------------------------
@@ -326,44 +300,7 @@ def py_stats(text: str) -> dict[str, float]:
     }
 
 
-def py_fired_rules(
-    stats: dict[str, float],
-    lang_mismatch: bool,
-    ppl: float,
-    profanity_hits: int,
-) -> list[str]:
-    fired = []
-    if stats["n_words"] < R.MIN_WORDS:
-        fired.append("Q-1")
-    if stats["n_words"] > R.MAX_WORDS:
-        fired.append("Q-2")
-    if stats["n_words"] > 0 and not (
-        R.MIN_MEAN_WORD_LEN <= stats["mean_word_len"] <= R.MAX_MEAN_WORD_LEN
-    ):
-        fired.append("Q-3")
-    if stats["symbol_ratio"] > R.SYMBOL_WORD_RATIO_MAX:
-        fired.append("Q-4")
-    if stats["stopword_frac"] < R.STOPWORD_FRAC_MIN:
-        fired.append("Q-6")
-    if stats["rep_line_frac"] > R.REP_LINE_FRAC_MAX:
-        fired.append("Q-7")
-    if stats["bullet_frac"] > R.BULLET_LINE_FRAC_MAX:
-        fired.append("Q-8")
-    if stats["ellipsis_frac"] > R.ELLIPSIS_LINE_FRAC_MAX:
-        fired.append("Q-9")
-    if stats["top_word_frac"] > R.TOP_WORD_FRAC_MAX:
-        fired.append("Q-10")
-    if stats["brace_line_frac"] > R.BRACE_LINE_FRAC_MAX:
-        fired.append("Q-11")
-    if stats["has_lorem"] > 0:
-        fired.append("Q-12")
-    for code, field, thresh in R.REPETITION_RULES:
-        if stats[field] > thresh:
-            fired.append(code)
-    if lang_mismatch:
-        fired.append("L-1")
-    if ppl > R.PPL_MAX:
-        fired.append("P-1")
-    if profanity_hits >= R.PROFANITY_MIN_HITS:
-        fired.append("T-1")
-    return sorted(fired)
+def py_fired_rules(row: Mapping[str, object]) -> list[str]:
+    """Sorted codes of the rules in registry.RULES that fire on `row`
+    (every stat, score field and input column a rule reads → value)."""
+    return sorted(r.code for r in R.RULES if R.fires(r, row))
