@@ -195,7 +195,7 @@ def test_byte_stuffing_appears_and_decodes():
     br = _BitReader(bytes(bw.out), 0)
     assert br.bits(8) == 0xFF and br.bits(8) == 0xA5
 
-    img = _synth_rgb(5, 32, 32)
+    img = _synth_rgb(6, 32, 32)
     blob = encode_jpeg(img, quality=95)
     body = blob[blob.find(b"\xff\xda") + 2 :]
     assert b"\xff\x00" in body, "probe seed no longer produces stuffing"
@@ -224,3 +224,42 @@ def test_decode_image_dispatches_jpeg():
     out = decode_image(encode_jpeg(img, quality=95))
     assert out.shape == img.shape
     assert np.abs(out.astype(int) - img.astype(int)).mean() < 4.0
+
+
+def test_zigzag_is_the_t81_natural_order():
+    """ZIGZAG[i] is the (row, col) of the i-th coefficient in the
+    entropy stream: T.81 Figure A.6, as libjpeg's jpeg_natural_order
+    lists it (row · 8 + col)."""
+    natural = [
+        0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
+        12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
+        35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
+        58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
+    ]
+    assert [r * 8 + c for r, c in ZIGZAG] == natural
+
+
+def test_non_interleaved_scans_are_rejected():
+    """A frame whose components arrive in separate scans (a gray scan,
+    then a chroma scan) is unsupported: decoding only the first scan
+    would return a gray raster for a color image, so it must raise."""
+    blob = encode_jpeg(_synth_rgb(3, 8, 8)[..., 0], quality=90)
+    sof_at = blob.find(b"\xff\xc0")
+    sof_len = struct.unpack(">H", blob[sof_at + 2 : sof_at + 4])[0]
+    sof = blob[sof_at + 4 : sof_at + 2 + sof_len]
+    # the frame declares Y, Cb, Cr, all on quant table 0
+    sof3 = sof[:5] + bytes([3, 1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0])
+    blob = (
+        blob[:sof_at]
+        + b"\xff\xc0" + struct.pack(">H", 2 + len(sof3)) + sof3
+        + blob[sof_at + 2 + sof_len :]
+    )
+    # the encoder's scan carries Y alone; append a Cb + Cr scan
+    chroma = bytes([2, 2, 0x00, 3, 0x00, 0, 63, 0])
+    blob = (
+        blob[:-2]
+        + b"\xff\xda" + struct.pack(">H", 2 + len(chroma)) + chroma
+        + b"\x00" * 4 + b"\xff\xd9"
+    )
+    with pytest.raises(ValueError, match="non-interleaved"):
+        decode_jpeg(blob)

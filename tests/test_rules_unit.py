@@ -98,48 +98,25 @@ def test_repetition_rules_fire():
     assert not set(fired) & REPETITION_CODES
 
 
-def test_cascaded_repetition_stats_equal_reference_forms():
-    """The interned/cascaded fast path in py_stats must be value-equal
-    to the simple per-n definitions, including on tie-heavy and
-    degenerate inputs."""
-    import random
-
-    rng = random.Random(7)
-    vocab = ["a", "bb", "ccc", "dd", "e", "fff", "gg"]
-    cases = [
-        "",
-        "one",
-        "x y",
-        "a a a a a a",
-        "spam ham spam ham spam ham spam ham spam ham",
-        ("p q r s t u v w " * 4).strip(),  # repeated 8-word block
-    ] + [
-        " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 60)))
-        for _ in range(200)
-    ]
-    for text in cases:
-        words = H.py_words(text)
-        got = H._py_repetition_stats(words)
-        for n in (2, 3, 4):
-            assert got[f"top_{n}gram_frac"] == H.py_top_ngram_frac(words, n), (text, n)
-        for n in range(5, 11):
-            assert got[f"dup_{n}gram_frac"] == H.py_dup_ngram_frac(words, n), (text, n)
-
-
 def test_cascaded_repetition_stats_equal_reference_forms_hypothesis():
-    """Property form of the equivalence: arbitrary word sequences from
-    a small alphabet (maximizing collisions/ties) over varied word
-    lengths."""
+    """The batch kernel's cascaded n-gram stats (subgram early exit,
+    char tie-break) equal the plain per-n definitions on arbitrary word
+    sequences from a small alphabet, which maximizes collisions and
+    ties over varied word lengths."""
+    import pandas as pd
     from hypothesis import given, settings
     from hypothesis import strategies as st
+
+    from wtq.rules.batch import score_batch
 
     @settings(max_examples=300, deadline=None)
     @given(st.lists(st.sampled_from(["a", "bb", "ccc", "d", "ee", "a b"]), max_size=40))
     def check(tokens):
         # "a b" injects a token that SPLITS into two words, covering
         # multi-word interactions of the text round-trip too
-        words = H.py_words(" ".join(tokens))
-        got = H._py_repetition_stats(words)
+        text = " ".join(tokens)
+        got = score_batch(pd.Series([text], dtype=object)).iloc[0]
+        words = H.py_words(scrub_text(text).text)
         for n in (2, 3, 4):
             assert got[f"top_{n}gram_frac"] == H.py_top_ngram_frac(words, n)
         for n in range(5, 11):

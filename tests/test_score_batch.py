@@ -125,6 +125,26 @@ def test_adversarial_cases():
         assert_matches_reference([t])
 
 
+def test_tie_heavy_cases():
+    """Short words from a small vocabulary: many n-grams tie for the top
+    count, and the kernel's subgram early exit and char tie-break must
+    land on the plain definitions' values."""
+    rng = random.Random(7)
+    vocab = ["a", "bb", "ccc", "dd", "e", "fff", "gg"]
+    cases = [
+        "",
+        "one",
+        "x y",
+        "a a a a a a",
+        "spam ham spam ham spam ham spam ham spam ham",
+        ("p q r s t u v w " * 4).strip(),  # repeated 8-word block
+    ] + [
+        " ".join(rng.choice(vocab) for _ in range(rng.randint(2, 60)))
+        for _ in range(200)
+    ]
+    assert_matches_reference(cases)
+
+
 _TOKENS = [
     "the", "of", "and", "le", "la", "der", "die", "el", "y", "data", "query",
     "Lorem", "ipsum", "LOREM", "İPSUM", "lorem ipsum", "ΟΔΟΣ", "οδος", "Σ", "ς",
@@ -159,6 +179,11 @@ def test_adversarial_hypothesis():
         repeated,
         st.text(max_size=80),
         st.text(alphabet="ab Σς\u0301\n\xa0İſ", max_size=40),
+        # a small alphabet of varied word lengths maximizes n-gram
+        # collisions and ties; "a b" splits into two words
+        st.lists(
+            st.sampled_from(["a", "bb", "ccc", "d", "ee", "a b"]), max_size=40
+        ).map(" ".join),
     )
 
     @settings(max_examples=300, deadline=None)

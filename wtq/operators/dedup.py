@@ -51,16 +51,6 @@ PERM_B = [(i * 40503 + 17) % MINHASH_P for i in range(1, N_PERM + 1)]
 # Spark-side building blocks
 # ---------------------------------------------------------------------------
 
-def token_hash(col: Column) -> Column:
-    """60-bit integer hash of a string via md5 hex → mod 2^32-5 prime.
-    `conv(substr(md5(x),1,15),16,10)` is exactly reproducible in the
-    DuckDB oracle as `cast('0x'||substr(md5(x),1,15) as bigint)`."""
-    return (
-        F.conv(F.substring(F.md5(F.encode(col, "UTF-8")), 1, 15), 16, 10).cast("long")
-        % MINHASH_P
-    )
-
-
 def shingles_arr(text: Column, k: int = SHINGLE_K) -> Column:
     """k-word shingles via index-transform over the word array —
     no explode needed until hashing."""
@@ -814,6 +804,8 @@ def _sql_shingles(text: str, k: int = SHINGLE_K) -> str:
 
 
 def sql_token_hash(expr: str) -> str:
+    """md5's first 15 hex digits as an integer, mod MINHASH_P — the
+    minhash token hash."""
     return f"(CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT) % {MINHASH_P})"
 
 

@@ -18,8 +18,8 @@ implementation:
   the round-trip property test (decode(encode(x)) within quantization
   error of x) exercises the full marker/entropy surface;
 * decoder error behavior is the quarantine contract: malformed or
-  unsupported (progressive, arithmetic, 12-bit) input raises
-  ``ValueError``, never returns a wrong raster silently.
+  unsupported (progressive, arithmetic, 12-bit, non-interleaved) input
+  raises ``ValueError``, never returns a wrong raster silently.
 
 Scale shape: the entropy decode is inherently sequential PER IMAGE
 (bit-serial Huffman), so throughput comes from Arrow-batch parallelism
@@ -51,7 +51,7 @@ import numpy as np
 def _zigzag_order() -> list:
     order = sorted(
         ((r, c) for r in range(8) for c in range(8)),
-        key=lambda rc: (rc[0] + rc[1], rc[1] if (rc[0] + rc[1]) % 2 else rc[0]),
+        key=lambda rc: (rc[0] + rc[1], rc[0] if (rc[0] + rc[1]) % 2 else rc[1]),
     )
     return order
 
@@ -451,7 +451,8 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
     (h_i, v_i) sampling factors ≤ 2 (replication upsampling), multiple
     DQT/DHT segments, DRI/RSTn restarts, byte stuffing.  Raises
     ``ValueError`` for progressive (SOF2), arithmetic (SOF9+), 12-bit,
-    or malformed input — the quarantine contract."""
+    non-interleaved (a scan without every frame component), or
+    malformed input — the quarantine contract."""
     if blob[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (missing SOI)")
     pos = 2
@@ -512,6 +513,11 @@ def decode_jpeg(blob: bytes) -> np.ndarray:
             if frame is None:
                 raise ValueError("SOS before SOF")
             ns = seg[0]
+            if ns != len(frame["comps"]):
+                raise ValueError(
+                    f"unsupported non-interleaved scan ({ns} of "
+                    f"{len(frame['comps'])} frame components)"
+                )
             scan = []
             for si in range(ns):
                 cs, tt = seg[1 + 2 * si : 3 + 2 * si]

@@ -91,34 +91,19 @@ def salted_repartition(df: DataFrame, num_partitions: int) -> DataFrame:
     return df.repartition(num_partitions, F.col("url"))
 
 
-def decide(
-    pages: DataFrame,
-    num_partitions: int | None = None,
-    dedup: bool = True,
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Full per-document decision DF.
-
-    Columns: url, warc_ts, lang, text (scrubbed), n_words, pred_lang,
-    ppl, scrub-edit counts, partition_id, fired_rules array<string>
-    (sorted), keep boolean.
-
-    Plan shape (one wide exchange total): parquet scan pruned to
-    (url, warc_ts, text, lang) — the html payload never enters a
-    shuffle — → salted murmur3(url) repartition → window dedup (reuses
-    the exchange: ClusteredDistribution(url) already satisfied) →
-    Arrow score pass → threshold expressions (codegen).
-
-    `carry_cols` are extra input columns (e.g. curation-lineage
-    counters added by a pre-pass) that ride through unchanged into the
-    output projection.
-    """
-    pages = pages.select("url", "warc_ts", "text", "lang", *carry_cols)
+def _deduped(pages: DataFrame, num_partitions: int | None) -> DataFrame:
+    """The scored input: (url, warc_ts, text, lang), optionally
+    murmur3(url)-repartitioned, latest crawl per url."""
+    pages = pages.select("url", "warc_ts", "text", "lang")
     if num_partitions:
         pages = salted_repartition(pages, num_partitions)
-    if dedup:
-        pages = dedup_recrawls(pages)
+    return dedup_recrawls(pages)
 
+
+def _scored(pages: DataFrame, carry_cols: tuple[str, ...] = ()) -> DataFrame:
+    """The decision columns over already-deduped pages; `carry_cols`
+    ride through unchanged into the output projection."""
+    pages = pages.select("url", "warc_ts", "text", "lang", *carry_cols)
     scored = pages.withColumn("__s", score_udf(F.col("text")))
     s = F.col("__s")
     # NULL scrubbed = "no edits" sentinel from score_udf — the
@@ -145,6 +130,22 @@ def decide(
         )
         .withColumn("keep", F.size("fired_rules") == 0)
     )
+
+
+def decide(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """Full per-document decision DF.
+
+    Columns: url, warc_ts, lang, text (scrubbed), n_words, pred_lang,
+    ppl, scrub-edit counts, partition_id, fired_rules array<string>
+    (sorted), keep boolean.
+
+    Plan shape (one wide exchange total): parquet scan pruned to
+    (url, warc_ts, text, lang) — the html payload never enters a
+    shuffle — → salted murmur3(url) repartition → window dedup (reuses
+    the exchange: ClusteredDistribution(url) already satisfied) →
+    Arrow score pass → threshold expressions (codegen).
+    """
+    return _scored(_deduped(pages, num_partitions))
 
 
 def decisions_view(decided: DataFrame) -> DataFrame:
@@ -257,21 +258,16 @@ def run_pipeline(
         from wtq.operators.text import normalize_url_col
 
         pages = pages.withColumn("url", normalize_url_col(F.col("url")))
-    carry: tuple[str, ...] = ()
     if strip_boilerplate:
         from wtq.operators.curation import strip_boilerplate_lines
 
-        base = pages.select("url", "warc_ts", "text", "lang")
-        if num_partitions:
-            base = salted_repartition(base, num_partitions)
-        base = dedup_recrawls(base)
         # two strip consumers (digest pass + rebuild) would otherwise
         # re-execute the scan + window-dedup subtree; materialize once
         # (round-6: measured 18.5s → 13.9s on strip+decide at sf1.0).
         # localCheckpoint, not persist: blocks are freed by the
         # ContextCleaner when the frame is dropped (cf. the
         # order_value_deciles note in wtq/queries.py)
-        base = base.localCheckpoint(eager=True)
+        base = _deduped(pages, num_partitions).localCheckpoint(eager=True)
         # warc_ts/lang ride through the rebuild aggregation as carry
         # columns — no re-join of the page stream against itself
         base = (
@@ -281,9 +277,7 @@ def run_pipeline(
             .withColumnRenamed("clean_text", "text")
             .withColumnRenamed("n_removed", "n_boiler_removed")
         )
-        carry = ("n_boiler_removed",)
-        # repartition/dedup already applied above
-        decided = decide(base, num_partitions=None, dedup=False, carry_cols=carry)
+        decided = _scored(base, carry_cols=("n_boiler_removed",))
     else:
         decided = decide(pages, num_partitions=num_partitions)
 

@@ -27,18 +27,3 @@ def assert_in_plan(df: DataFrame, *needles: str) -> None:
     plan = plan_string(df)
     missing = [n for n in needles if n not in plan]
     assert not missing, f"plan is missing {missing}:\n{plan[:4000]}"
-
-
-def assert_not_in_plan(df: DataFrame, *needles: str) -> None:
-    plan = plan_string(df)
-    present = [n for n in needles if n in plan]
-    assert not present, f"plan unexpectedly contains {present}:\n{plan[:4000]}"
-
-
-def n_exchanges(df: DataFrame) -> int:
-    return count_occurrences(df, "Exchange")
-
-
-def has_pushed_filters(df: DataFrame) -> bool:
-    plan = plan_string(df)
-    return "PushedFilters: [" in plan and "PushedFilters: []" not in plan

@@ -267,11 +267,12 @@ def _line_stats(texts: list[str], out: dict) -> None:
 
 def _repetition(doc, codes, wlen, n_words, total, out: dict) -> np.ndarray:
     """The Gopher n-gram family for every document at once; returns the
-    top single-word count per document.  Same cascade as
-    heuristics._rep_stats_core, batch-wide: the level-n gram at
-    position p is keyed (doc-qualified id of its (n−1)-gram at p) · U +
-    (word code at p+n−1), so grams never merge across documents, and
-    per-level interning is one ``pd.factorize`` over the batch."""
+    top single-word count per document, equal to heuristics'
+    py_top_ngram_frac / py_dup_ngram_frac per n.  Each order is built
+    from the one below, batch-wide: the level-n gram at position p is
+    keyed (doc-qualified id of its (n−1)-gram at p) · U + (word code at
+    p+n−1), so grams never merge across documents, and per-level
+    interning is one ``pd.factorize`` over the batch."""
     n_docs, U = len(n_words), len(wlen)
     for n in (2, 3, 4):
         out[f"top_{n}gram_frac"] = np.zeros(n_docs)
@@ -307,7 +308,7 @@ def _repetition(doc, codes, wlen, n_words, total, out: dict) -> np.ndarray:
         if n <= 4:
             mx = np.zeros(n_docs, np.int64)
             np.maximum.at(mx, gdoc, cnt)
-            # tie-break on chars, as heuristics._rep_stats_core
+            # tie-break on chars, as heuristics.py_top_ngram_frac
             at_mx = cnt == mx[gdoc]
             chars = np.zeros(n_docs, np.int64)
             np.maximum.at(chars, gdoc[at_mx], kch[at_mx])

@@ -18,7 +18,9 @@ Oracle side: the differential oracle (oracle/oracle.py) calls the
 per-document ``py_stats`` — the reference the batch kernel is tested
 against bit for bit — and ``py_fired_rules``, which evaluates the same
 table in Python, independently of the Spark plan.  The contract for
-every stat is documented once here.
+every stat is documented once here, and ``py_stats`` computes each one
+as written: a plain reference, not a second fast path (speed belongs
+in the batch kernel, which the reference checks).
 
 Definitions (on the SCRUBBED text):
   words      = non-empty substrings after splitting on whitespace
@@ -54,7 +56,6 @@ from __future__ import annotations
 from collections import Counter
 from collections.abc import Mapping
 
-import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -96,8 +97,8 @@ def py_lines(text: str) -> list[str]:
     return [l for l in (text or "").split("\n") if l != ""]
 
 
-def py_rep_line_frac(text: str, _lines: "list[str] | None" = None) -> float:
-    lines = _lines if _lines is not None else py_lines(text)
+def py_rep_line_frac(text: str) -> float:
+    lines = py_lines(text)
     if not lines:
         return 0.0
     total = sum(len(l) for l in lines)
@@ -139,9 +140,9 @@ def py_top_ngram_frac(words: list[str], n: int) -> float:
     if len(words) < n or total == 0:
         return 0.0
     c = Counter(tuple(words[i : i + n]) for i in range(len(words) - n + 1))
-    # tie-break on gram char length — the value-determining quantity —
-    # so the answer is independent of gram representation (the
-    # cascaded fast path in _py_repetition_stats counts interned ids)
+    # among equally frequent grams take the longest in chars — the
+    # value-determining quantity, so the answer does not depend on how
+    # a gram is represented (the batch kernel counts interned ids)
     cnt, chars = max((k, sum(len(w) for w in g)) for g, k in c.items())
     if cnt < 2:
         return 0.0
@@ -160,143 +161,31 @@ def py_dup_ngram_frac(words: list[str], n: int) -> float:
     return dup / total
 
 
-def _rep_stats_core(
-    L: int, ids64: "np.ndarray", wchars: "np.ndarray", total: int
-) -> dict[str, float]:
-    """All nine Gopher n-gram stats in one cascaded pass over
-    pre-interned word ids — value-equal to calling py_top_ngram_frac /
-    py_dup_ngram_frac per n (property-tested), but hot-path-shaped
-    (this is the pipeline's Arrow-pass inner loop):
-
-      * each level's grams are built INCREMENTALLY: an n-gram key is
-        (intern id of its (n−1)-gram prefix) · W + (last word id) —
-        one vectorized multiply-add + np.unique per level (round-6:
-        the per-level Python listcomp + Counter became numpy int64
-        arrays; keys stay < L·W ≤ L², machine ints, and np.unique's
-        inverse indices ARE the next level's interning — relabeling
-        preserves the gram equivalence classes and char data, which is
-        all the counts depend on);
-      * gram char lengths accumulate along the same chain (kch indexed
-        by the unique-key array);
-      * the subgram implication (a repeated n-gram contains a repeated
-        (n−1)-gram) exits the cascade at the first repetition-free
-        order, so clean documents cost ONE level.
-
-    All arithmetic is integer until the final division, so the emitted
-    doubles are bit-identical to the dict/Counter form this replaces.
-    """
-    out = {f"top_{n}gram_frac": 0.0 for n in (2, 3, 4)}
-    out.update({f"dup_{n}gram_frac": 0.0 for n in range(5, 11)})
-    if total == 0 or L < 2:
-        return out
-    W = wchars.shape[0]
-    # level state: cur[p] = intern id of the (n-1)-gram at position p;
-    # pch[gid] = its char length.  Level 1 = the words themselves.
-    cur, pch = ids64, wchars
-    for n in range(2, 11):
-        if L < n:
-            break
-        # key of the n-gram at p: prefix gram id · W + last word id
-        keys = cur[: L - n + 1] * W + ids64[n - 1 :]
-        uniq, inv, cnt = np.unique(keys, return_inverse=True, return_counts=True)
-        kch = pch[uniq // W] + wchars[uniq % W]
-        if n <= 4:
-            mx = int(cnt.max())
-            if mx < 2:
-                break  # no repeated n-gram ⇒ none at any higher order
-            # tie-break on chars (value-determining, representation-
-            # independent — matches py_top_ngram_frac)
-            chars = int(kch[cnt == mx].max())
-            out[f"top_{n}gram_frac"] = mx * chars / total
-        else:
-            m = cnt > 1
-            dup = int(((cnt[m] - 1) * kch[m]).sum())
-            if dup == 0:
-                break
-            out[f"dup_{n}gram_frac"] = dup / total
-        if n < 10 and L >= n + 1:
-            # the inverse indices intern this level's grams for the next
-            cur, pch = inv.astype(np.int64, copy=False), kch
-    return out
-
-
-def _intern_words(words: list[str]):
-    """One interning pass shared by the mean/top-word/stopword stats
-    and the repetition cascade: (ids64, wchars, counts) — word ids in
-    document order, per-unique-word char lengths, per-unique-word
-    occurrence counts."""
-    idx: dict[str, int] = {}
-    setd = idx.setdefault
-    ids = [setd(w, len(idx)) for w in words]
-    U = len(idx)
-    ids64 = np.asarray(ids, dtype=np.int64)
-    wchars = np.empty(U, dtype=np.int64)
-    for w, i in idx.items():
-        wchars[i] = len(w)
-    counts = np.bincount(ids64, minlength=U)
-    return idx, ids64, wchars, counts
-
-
-def _py_repetition_stats(words: list[str]) -> dict[str, float]:
-    """Public/test entry: intern then run the shared cascade core."""
-    total = sum(len(w) for w in words)
-    if total == 0 or len(words) < 2:
-        out = {f"top_{n}gram_frac": 0.0 for n in (2, 3, 4)}
-        out.update({f"dup_{n}gram_frac": 0.0 for n in range(5, 11)})
-        return out
-    _, ids64, wchars, _ = _intern_words(words)
-    return _rep_stats_core(len(words), ids64, wchars, total)
-
-
 def py_stats(text: str) -> dict[str, float]:
+    """Every STAT_FIELDS value of one document, each computed straight
+    from its definition above — the plain reference the batch kernel
+    (wtq/rules/batch.py) is diffed against bit for bit."""
     text = text or ""
     words = py_words(text)
     lines = py_lines(text)
     n_words = len(words)
-    n_lines = len(lines)
     nw = max(n_words, 1)
-    nl = max(n_lines, 1)
-    if n_words:
-        # shared interning (round-6): mean/top-word/stopword and the
-        # repetition cascade all read one pass.  Integer sums → the
-        # same divisions → bit-identical to the per-stat loops.
-        idx, ids64, wchars, counts = _intern_words(words)
-        total_chars = int(counts @ wchars)
-        n_stop = 0
-        for w, i in idx.items():
-            if w.lower() in STOPWORDS:
-                n_stop += int(counts[i])
-        top_word = int(counts.max())
-        rep = _rep_stats_core(n_words, ids64, wchars, total_chars)
-    else:
-        total_chars = n_stop = top_word = 0
-        rep = _py_repetition_stats(words)
-    # one fused pass over the (short) line list for the three per-line
-    # counters (round-6; counts identical to the three genexprs)
-    n_bullet = n_ellipsis = n_brace = 0
-    for l in lines:
-        if l.startswith(R.BULLET_PREFIXES):
-            n_bullet += 1
-        if l.endswith("..."):
-            n_ellipsis += 1
-        if "{" in l or "}" in l:
-            n_brace += 1
+    nl = max(len(lines), 1)
     return {
         "n_words": n_words,
-        "n_lines": n_lines,
-        "mean_word_len": (total_chars / n_words) if n_words else 0.0,
-        # str.count per symbol char (C speed) == the per-char scan for
-        # single-char needles
+        "n_lines": len(lines),
+        "mean_word_len": sum(len(w) for w in words) / n_words if n_words else 0.0,
         "symbol_ratio": sum(text.count(c) for c in R.SYMBOLS) / nw,
-        "stopword_frac": n_stop / nw,
-        "bullet_frac": n_bullet / nl,
-        "ellipsis_frac": n_ellipsis / nl,
-        "rep_line_frac": py_rep_line_frac(text, _lines=lines),
-        "top_word_frac": (top_word / n_words) if words else 0.0,
-        "brace_line_frac": n_brace / nl,
+        "stopword_frac": sum(w.lower() in STOPWORDS for w in words) / nw,
+        "bullet_frac": sum(l.startswith(R.BULLET_PREFIXES) for l in lines) / nl,
+        "ellipsis_frac": sum(l.endswith("...") for l in lines) / nl,
+        "rep_line_frac": py_rep_line_frac(text),
+        "top_word_frac": py_top_word_frac(text),
+        "brace_line_frac": sum("{" in l or "}" in l for l in lines) / nl,
         "has_lorem": 1.0 if "lorem ipsum" in text.lower() else 0.0,
         "dup_para_frac": py_dup_para_frac(text),
-        **rep,
+        **{f"top_{n}gram_frac": py_top_ngram_frac(words, n) for n in (2, 3, 4)},
+        **{f"dup_{n}gram_frac": py_dup_ngram_frac(words, n) for n in range(5, 11)},
     }
 
 
