@@ -234,3 +234,24 @@ def test_build_raising_stage_leaks_no_threads(spark, pages_path, tmp_path, monke
         if t.name.startswith("ThreadPoolExecutor")
     ]
     assert not leaked, leaked
+
+
+def test_build_one_class_seed_fails_before_pipeline(spark, pages_path, tmp_path, monkeypatch):
+    """A classifier seed with one class is rejected with a ValueError
+    before the quality filter runs, and the build writes nothing."""
+    import os
+
+    import pytest
+
+    import wtq.build as build
+
+    calls = []
+    monkeypatch.setattr(build, "run_pipeline", lambda *a, **k: calls.append(a))
+    seed = spark.createDataFrame(
+        [("a good page", True), ("another good page", True)], "text string, y boolean"
+    )
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="no negative documents"):
+        build_training_set(spark, pages_path, out, classifier_seed=seed)
+    assert calls == []
+    assert not os.path.exists(out)

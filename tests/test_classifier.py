@@ -112,13 +112,13 @@ def test_scoring_plan_zero_exchange_zero_python(spark):
 
 def test_single_class_seed_rejected(spark):
     """A one-class seed has no log-odds (ln of a ratio with an empty
-    class).  Under ANSI mode (Spark 4 default) the zero-division
-    surfaces as a hard arithmetic error at fit time — pinned here so a
-    bad seed fails loudly instead of silently scoring garbage."""
-    labeled = _labeled(spark).filter("y")
-    w, c = train_nb_weights(labeled)
-    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-        c.collect()
+    class): the fit itself raises a ValueError naming the empty class,
+    instead of returning frames that fail later with a Spark
+    arithmetic error."""
+    with pytest.raises(ValueError, match="no negative documents"):
+        train_nb_weights(_labeled(spark).filter("y"))
+    with pytest.raises(ValueError, match="no positive documents"):
+        train_nb_weights(_labeled(spark).filter("not y"))
 
 
 def test_end_to_end_wrapper_matches_manual_composition(spark):

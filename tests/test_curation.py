@@ -6,12 +6,32 @@ Spark == DuckDB but not that either is right).
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from wtq.operators import curation as C
+from wtq.queries import BENCH_MOD
 
 
 def _docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string, source string")
+
+
+def _decontaminate_split(docs):
+    """The registry demo's split: docs with doc_id % BENCH_MOD == 0
+    are the benchmark, the rest are the corpus."""
+    in_bench = F.col("doc_id") % BENCH_MOD == 0
+    return C.decontaminate(
+        docs.filter(~in_bench), benchmark=C.benchmark_grams(docs.filter(in_bench))
+    )
+
+
+def _dedup_split(docs):
+    """The registry demo's split: even doc_ids are the existing
+    corpus, odd doc_ids the new crawl."""
+    corpus = docs.filter(F.col("doc_id") % 2 == 0).select(F.md5("text"))
+    return C.incremental_corpus_dedup(
+        docs.filter(F.col("doc_id") % 2 == 1), corpus_fingerprints=corpus
+    )
 
 
 WORDS13 = " ".join(f"w{i}" for i in range(13))
@@ -31,14 +51,14 @@ class TestDecontaminate:
         ]
         out = {
             r["doc_id"]: r["n_hits"]
-            for r in C.decontaminate(_docs(spark, rows)).collect()
+            for r in _decontaminate_split(_docs(spark, rows)).collect()
         }
         assert out == {1: 1}
 
     def test_benchmark_docs_never_flagged(self, spark):
         # two benchmark docs sharing a gram must not flag each other
         rows = [(0, WORDS13, "s"), (7, WORDS13 + " t", "s")]
-        assert C.decontaminate(_docs(spark, rows)).count() == 0
+        assert _decontaminate_split(_docs(spark, rows)).count() == 0
 
     def test_multiple_distinct_hits_counted(self, spark):
         g2 = " ".join(f"y{i}" for i in range(13))
@@ -49,15 +69,14 @@ class TestDecontaminate:
         ]
         [(doc, hits)] = [
             (r["doc_id"], r["n_hits"])
-            for r in C.decontaminate(_docs(spark, rows)).collect()
+            for r in _decontaminate_split(_docs(spark, rows)).collect()
         ]
         assert (doc, hits) == (1, 2)
 
 
 class TestExplicitSideInputs:
-    """Production shape: string ids + explicit benchmark / corpus side
-    inputs (the default id-parity splits are the self-contained test
-    configuration only)."""
+    """Production shape: string ids + benchmark / corpus side inputs
+    built from data other than the corpus itself."""
 
     def test_decontaminate_with_explicit_benchmark(self, spark):
         docs = spark.createDataFrame(
@@ -109,12 +128,12 @@ class TestIncrementalCorpusDedup:
             (5, "novel text one", "s"),          # dup within batch → folded
             (7, "novel text two", "s"),          # new, novel → kept
         ]
-        out = C.incremental_corpus_dedup(_docs(spark, rows)).collect()
+        out = _dedup_split(_docs(spark, rows)).collect()
         assert sorted(r["doc_id"] for r in out) == [3, 7]
 
     def test_only_new_batch_emitted(self, spark):
         rows = [(2 * i, f"text {i}", "s") for i in range(5)]  # corpus only
-        assert C.incremental_corpus_dedup(_docs(spark, rows)).count() == 0
+        assert _dedup_split(_docs(spark, rows)).count() == 0
 
 
 class TestTokenBudgetSample:

@@ -65,12 +65,9 @@ def build_training_set(
     pages_path: str,
     out_dir: str,
     num_partitions: int | None = None,
-    token_budget: int = C.TOKEN_BUDGET,
     benchmark: DataFrame | None = None,
     lsh_bucket_cap: int = LSH_BUCKET_CAP,
-    normalize_urls: bool = False,
     classifier_seed: DataFrame | None = None,
-    classifier_min_micro: int = 0,
 ) -> BuildResult:
     """Run the full curation stack and write train/val/test parquet.
 
@@ -83,10 +80,11 @@ def build_training_set(
 
     `classifier_seed`: optional labeled seed (columns `text`,
     `y` boolean) enabling the model-based quality gate between the
-    rule battery and the dedup stage; docs scoring ≤
-    `classifier_min_micro` (micro-log-odds, default 0 = "negatives
-    more likely") are dropped and the lineage gains a
-    `15_classifier_kept` row.
+    rule battery and the dedup stage; docs scoring ≤ 0 micro-log-odds
+    (negatives at least as likely) are dropped and the lineage gains a
+    `15_classifier_kept` row.  The classifier is fitted before any
+    other stage runs, so a seed missing a class raises `ValueError`
+    before the quality filter starts and nothing is written.
 
     `lsh_bucket_cap` is applied to the dedup stage's pair expansion AND
     to the occupancy audit, so the audit always reports on the cap the
@@ -98,17 +96,18 @@ def build_training_set(
     through the stages) and `6N_lsh_*` audit gauges (over-cap bucket
     count and max bucket size — NOT document counts).
     """
-    # 1. quality filter with both curation passes (+ optional url
-    # canonicalization ahead of the re-crawl window — when on, every
-    # downstream url-keyed stage, the split included, keys on the
-    # canonical form).  Round-6: default the pipeline's partition
-    # count to the configured parallelism — the Arrow score stage is
-    # CPU-bound, not byte-bound, so AQE's byte-targeted coalescing of
-    # the url exchange under-parallelizes it (measured ~8% on the
-    # curated chain at sf1.0); build outputs are partitioning-
-    # independent (content-hash membership), so this changes no rows.
+    # 1. quality filter with both curation passes.  Round-6: default
+    # the pipeline's partition count to the configured parallelism —
+    # the Arrow score stage is CPU-bound, not byte-bound, so AQE's
+    # byte-targeted coalescing of the url exchange under-parallelizes
+    # it (measured ~8% on the curated chain at sf1.0); build outputs
+    # are partitioning-independent (content-hash membership), so this
+    # changes no rows.
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
+    # fit first: a bad seed must fail before any pipeline job runs
+    if classifier_seed is not None:
+        weights, consts = train_nb_weights(classifier_seed, text_col="text", label_col="y")
     # the 00_input lineage count (distinct urls of the raw input) is
     # independent of every stage — run it from a driver thread so its
     # scan back-fills executors behind the pipeline's stragglers
@@ -128,7 +127,6 @@ def build_training_set(
             num_partitions=num_partitions,
             strip_boilerplate=True,
             host_gate=True,
-            normalize_urls=normalize_urls,
         ).decided
         kept = decided.filter("keep").select("url", "text")
         # the chain is re-used by several counting/writing consumers below;
@@ -142,7 +140,7 @@ def build_training_set(
         quality_kept = kept  # pre-gate frame: stage-10 lineage counts this
 
         # 1b. optional model-based gate (the CCNet/GPT-3 classifier layer):
-        # train closed-form NB log-odds on the caller's labeled seed
+        # closed-form NB log-odds fitted above on the caller's labeled seed
         # (columns: text, y boolean — True = quality reference, False =
         # raw-crawl negatives) and keep docs scoring above the threshold.
         # Runs BEFORE the near-dup stage on purpose: scoring is a
@@ -152,12 +150,9 @@ def build_training_set(
         # BIGINT, so the kept set is bit-stable at any parallelism.
         classifier_count: dict[str, int] = {}
         if classifier_seed is not None:
-            weights, consts = train_nb_weights(
-                classifier_seed, text_col="text", label_col="y"
-            )
             kept = (
                 nb_score(kept, weights, consts, text_col="text", id_cols=("url", "text"))
-                .filter(F.col("score_micro") > classifier_min_micro)
+                .filter(F.col("score_micro") > 0)
                 .select("url", "text")
                 .localCheckpoint(eager=True)
             )
@@ -209,9 +204,9 @@ def build_training_set(
 
         # 4. per-host token budget (host = authority component of the url)
         hosted = clean.withColumn("host", F.substring_index("url", "/", 3))
-        sampled = C.token_budget_sample(
-            hosted, "url", "text", "host", budget=token_budget
-        ).select("url", "n_tokens")
+        sampled = C.token_budget_sample(hosted, "url", "text", "host").select(
+            "url", "n_tokens"
+        )
         final = clean.join(sampled, "url").localCheckpoint(eager=True)
 
         # 5. train/val/test split: md5(url) buckets (98/1/1), a pure

@@ -9,8 +9,10 @@ closed-form multinomial Naive Bayes log-odds:
 
 * **training** is nothing but aggregations over the labeled seed
   (per-token class counts, class token totals, vocabulary size, class
-  priors) — no iterative optimizer, so the whole fit is two shuffles
-  over a seed that is tiny relative to the corpus being scored;
+  priors) — no iterative optimizer, so the whole fit is one
+  class-count aggregate (a one-class seed is rejected there) and two
+  shuffles over a seed that is tiny relative to the corpus being
+  scored;
 * **scoring** is a ZERO-SHUFFLE map-side pass: the vocab-sized weight
   table is folded into a one-row map column, broadcast onto the
   document stream, and each document's score is a higher-order
@@ -54,11 +56,24 @@ def train_nb_weights(
       round(1e6 · ln(N_pos/N_neg)).
 
     Both classes must be non-empty (ln of a zero ratio is undefined —
-    a seed with one class is not a training set).
+    a seed with one class is not a training set): the class document
+    counts are read with one aggregate before anything else is built,
+    and a seed missing a class raises ``ValueError`` naming it.
     """
+    label = F.col(label_col).cast("boolean")
+    n_pos, n_neg = labeled.agg(
+        F.count(F.when(label, True)), F.count(F.when(~label, True))
+    ).first()
+    for n, cls, value in ((n_pos, "positive", "true"), (n_neg, "negative", "false")):
+        if n == 0:
+            raise ValueError(
+                f"train_nb_weights: the seed has no {cls} documents "
+                f"({label_col} = {value}); both classes are required "
+                f"(got {n_pos} positive, {n_neg} negative)"
+            )
     y = F.col("y")
     tok = labeled.select(
-        F.col(label_col).cast("boolean").alias("y"),
+        label.alias("y"),
         F.explode(words(F.coalesce(F.col(text_col), F.lit("")))).alias("t"),
     )
     counts = tok.groupBy("t").agg(
@@ -69,10 +84,6 @@ def train_nb_weights(
         F.count(F.when(y, True)).alias("t_pos"),
         F.count(F.when(~y, True)).alias("t_neg"),
         F.countDistinct("t").alias("v"),
-    )
-    doc_totals = labeled.agg(
-        F.count(F.when(F.col(label_col).cast("boolean"), True)).alias("n_pos"),
-        F.count(F.when(~F.col(label_col).cast("boolean"), True)).alias("n_neg"),
     )
 
     def _w(c_pos, c_neg):
@@ -89,14 +100,9 @@ def train_nb_weights(
     weights = counts.crossJoin(F.broadcast(totals)).select(
         "t", _w(F.col("c_pos"), F.col("c_neg")).alias("w_micro")
     )
-    consts = (
-        totals.crossJoin(doc_totals)
-        .select(
-            _w(F.lit(0), F.lit(0)).alias("w0_micro"),
-            F.round(F.log(F.col("n_pos") / F.col("n_neg")) * MICRO)
-            .cast("long")
-            .alias("prior_micro"),
-        )
+    consts = totals.select(
+        _w(F.lit(0), F.lit(0)).alias("w0_micro"),
+        F.round(F.log(F.lit(n_pos) / F.lit(n_neg)) * MICRO).cast("long").alias("prior_micro"),
     )
     return weights, consts
 

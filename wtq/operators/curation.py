@@ -34,18 +34,13 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from wtq.operators.text import STOP_WORDS, n_in, sql_n_in, sql_words, words
 
 # ---- shared constants (Spark AND oracle SQL are generated from these) ----
 DECONTAM_K = 13          # n-gram size, the C4/GPT-3 decontamination convention
-BENCH_MOD = 7            # doc_id % BENCH_MOD == 0 → doc seeds the benchmark set
-                         # (7, not 97: with the fixture's 500-doc tables a
-                         # sparser split made the self-contained query
-                         # VACUOUS at sf0.01 — 0 contaminated rows — and a
-                         # 0-row driver correctness row proves nothing)
 TOKEN_BUDGET = 600       # per-host token budget (non-vacuous at test SFs:
                          # hosts carry ~1.1-1.7k tokens, so roughly half are cut)
 GATE_MIN_DOCS = 3        # hosts with fewer docs than this are kept (no evidence)
@@ -58,42 +53,38 @@ GATE_STOPWORD_MIN = 0.0575  # host-level stopword fraction below this → drop
                             # doubles would depend on reduction order)
 
 
+def _gram_digests(ws: Column) -> Column:
+    """md5 of every 13-word window of the word array `ws`, in order —
+    the one gram digest both the benchmark side and the corpus side
+    of `decontaminate` use (`ws` must hold ≥ DECONTAM_K words)."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size(ws) - (DECONTAM_K - 1)),
+        lambda i: F.md5(F.array_join(F.slice(ws, i, DECONTAM_K), " ")),
+    )
+
+
 def benchmark_grams(bench_df: DataFrame, text_col: str = "text") -> DataFrame:
     """All 13-gram md5 digests of a benchmark corpus — the side input
     `decontaminate` joins against.  Column: g (md5 hex)."""
     ws = bench_df.select(words(F.col(text_col)).alias("ws")).filter(
         F.size("ws") >= DECONTAM_K
     )
-    return ws.select(
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("ws") - (DECONTAM_K - 1)),
-                lambda i: F.md5(F.array_join(F.slice("ws", i, DECONTAM_K), " ")),
-            )
-        ).alias("g")
-    ).distinct()
+    return ws.select(F.explode(_gram_digests(F.col("ws"))).alias("g")).distinct()
 
 
 def decontaminate(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    benchmark: DataFrame | None = None,
+    *,
+    benchmark: DataFrame,
 ) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any
     13-gram with the benchmark set (the C4/GPT-3 n-gram-overlap
     protocol).
 
     `benchmark` is a 1-column DataFrame of gram digests (build one
-    from benchmark texts with `benchmark_grams`).  When None, a
-    self-contained split is used per the no-external-data rule: EVERY
-    13-gram of each doc with numeric id % BENCH_MOD == 0 plays the
-    role of held-out eval material (the full-document protocol of the
-    GPT-3 appendix, not just a leading question), and those docs are
-    excluded from the output (a benchmark doc cannot contaminate
-    itself).  All-grams membership keeps the query non-vacuous on the
-    fixture: near-duplicate pages share mid-document windows, which a
-    first-gram-only benchmark missed entirely at sf0.01.
+    from benchmark texts with `benchmark_grams`).
 
     Returns (doc_id, n_hits): contaminated docs and how many distinct
     benchmark grams they contain.
@@ -102,77 +93,29 @@ def decontaminate(
     payload is 16 bytes instead of a 13-word string, and md5 is
     bit-identical in both engines.
     """
+    if len(benchmark.columns) != 1:
+        raise ValueError(
+            "decontaminate: `benchmark` must be a 1-column DataFrame of "
+            f"gram digests (got columns {benchmark.columns}); build one "
+            "with benchmark_grams(), or select the digest column first"
+        )
     ws = df.select(
         F.col(id_col).alias("doc"), words(F.col(text_col)).alias("ws")
     ).filter(F.size("ws") >= DECONTAM_K)
-    if benchmark is None:
-        bench = (
-            ws.filter(F.col("doc") % BENCH_MOD == 0)
-            .select(
-                F.explode(
-                    F.transform(
-                        F.sequence(F.lit(1), F.size("ws") - (DECONTAM_K - 1)),
-                        lambda i: F.md5(F.array_join(F.slice("ws", i, DECONTAM_K), " ")),
-                    )
-                ).alias("g")
-            )
-            .distinct()
-        )
-        ws = ws.filter(F.col("doc") % BENCH_MOD != 0)
-    else:
-        if len(benchmark.columns) != 1:
-            raise ValueError(
-                "decontaminate: `benchmark` must be a 1-column DataFrame of "
-                f"gram digests (got columns {benchmark.columns}); build one "
-                "with benchmark_grams(), or select the digest column first"
-            )
-        bench = benchmark.toDF("g")
-    grams = ws.select(
-        "doc",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(1), F.size("ws") - (DECONTAM_K - 1)),
-                lambda i: F.md5(F.array_join(F.slice("ws", i, DECONTAM_K), " ")),
-            )
-        ).alias("g"),
-    )
+    grams = ws.select("doc", F.explode(_gram_digests(F.col("ws"))).alias("g"))
     return (
-        grams.join(F.broadcast(bench), "g")
+        grams.join(F.broadcast(benchmark.toDF("g")), "g")
         .groupBy(F.col("doc").alias(id_col))
         .agg(F.count_distinct("g").alias("n_hits"))
     )
-
-
-SQL_DECONTAMINATE = f"""
-WITH w AS (
-  SELECT doc_id, {sql_words('text')} AS ws
-  FROM documents
-), w13 AS (
-  SELECT * FROM w WHERE len(ws) >= {DECONTAM_K}
-), bench AS (
-  SELECT DISTINCT md5(array_to_string(ws[i:i+{DECONTAM_K - 1}], ' ')) AS g
-  FROM w13, LATERAL (
-    SELECT unnest(generate_series(1, len(ws) - {DECONTAM_K - 1})) AS i
-  ) b
-  WHERE doc_id % {BENCH_MOD} = 0
-), grams AS (
-  SELECT doc_id, md5(array_to_string(ws[i:i+{DECONTAM_K - 1}], ' ')) AS g
-  FROM w13, LATERAL (
-    SELECT unnest(generate_series(1, len(ws) - {DECONTAM_K - 1})) AS i
-  ) s
-  WHERE doc_id % {BENCH_MOD} <> 0
-)
-SELECT doc_id, count(DISTINCT g) AS n_hits
-FROM grams JOIN bench USING (g)
-GROUP BY doc_id
-"""
 
 
 def incremental_corpus_dedup(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    corpus_fingerprints: DataFrame | None = None,
+    *,
+    corpus_fingerprints: DataFrame,
 ) -> DataFrame:
     """Incremental crawl-vs-corpus dedup: the batch every recurring
     crawl runs — drop new documents whose content fingerprint already
@@ -182,9 +125,7 @@ def incremental_corpus_dedup(
     `corpus_fingerprints` is a 1-column DataFrame of md5 fingerprints
     (in production: the persisted fingerprint table of all prior
     snapshots, bucketed by fingerprint so this anti join is
-    storage-partitioned).  When None, a self-contained split is used:
-    numeric id parity partitions the input into "existing corpus"
-    (even) and "new crawl" (odd).
+    storage-partitioned).
 
     Returns (fingerprint, doc_id): one surviving representative per
     novel fingerprint — min(id) under the id column's NATURAL
@@ -194,30 +135,12 @@ def incremental_corpus_dedup(
     Left-anti is the J7 pattern (proccess_data.sql:422-423 "already
     reported" filter).
     """
-    fp = lambda c: F.md5(F.col(c))  # noqa: E731
-    d = df.select(F.col(id_col).alias("doc"), fp(text_col).alias("fingerprint"))
-    if corpus_fingerprints is None:
-        corpus = d.filter(F.col("doc") % 2 == 0).select("fingerprint").distinct()
-        new = d.filter(F.col("doc") % 2 == 1)
-    else:
-        corpus = corpus_fingerprints.toDF("fingerprint")
-        new = d
+    d = df.select(F.col(id_col).alias("doc"), F.md5(F.col(text_col)).alias("fingerprint"))
     return (
-        new.join(corpus, "fingerprint", "left_anti")
+        d.join(corpus_fingerprints.toDF("fingerprint"), "fingerprint", "left_anti")
         .groupBy("fingerprint")
         .agg(F.min("doc").alias(id_col))
     )
-
-
-SQL_INCREMENTAL_CORPUS_DEDUP = """
-WITH d AS (SELECT doc_id, md5(text) AS fingerprint FROM documents),
-corpus AS (SELECT DISTINCT fingerprint FROM d WHERE doc_id % 2 = 0),
-new AS (SELECT * FROM d WHERE doc_id % 2 = 1)
-SELECT fingerprint, min(doc_id) AS doc_id
-FROM new
-WHERE NOT EXISTS (SELECT 1 FROM corpus c WHERE c.fingerprint = new.fingerprint)
-GROUP BY fingerprint
-"""
 
 
 def token_budget_sample(
@@ -352,6 +275,12 @@ def strip_boilerplate_lines(
     order.  Unlike the keep/drop operators this REWRITES content from
     corpus-level statistics — the reference's tag-cleaning analog
     (water.lua:84-221) at corpus scope instead of per-record scope.
+
+    Precondition: `id_col` is unique per row.  The doc frequency counts
+    rows and the hot-line sets are grouped by id, so two rows sharing
+    an id count a shared line twice and strip each other's hot lines
+    (dedup or re-key the input first — the pipeline runs this after
+    the re-crawl dedup, which leaves one row per url).
 
     Returns (doc_id, clean_text, n_removed, *carry_cols) for every
     input document (clean_text = '' when every line was boilerplate);

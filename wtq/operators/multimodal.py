@@ -10,7 +10,7 @@ Two tiers:
 * **Real codec path** — binary P6 PPM encode/decode in pure numpy
   (``encode_ppm``/``decode_ppm``): genuine byte-level image decode,
   block-mean resize, per-channel statistics, all oracle-checked
-  against a closed-form SQL derivation (``image_features``).  PNG
+  against a closed-form SQL derivation (``media_features``).  PNG
   encode/decode is also REAL (``encode_png``/``decode_png``): stdlib
   zlib inflate + all five scanline filters (None/Sub/Up/Average/
   Paeth) + CRC verification, gray/RGB/RGBA at bit depth 8 — no
@@ -268,19 +268,6 @@ def synth_image(doc_id: int, w: int = IMG_W, h: int = IMG_H) -> np.ndarray:
     return ((doc_id * 31 + x * 7 + y * 13 + c * 101) % 256).astype(np.uint8)
 
 
-IMAGE_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_r", T.DoubleType()),
-        T.StructField("mean_g", T.DoubleType()),
-        T.StructField("mean_b", T.DoubleType()),
-        T.StructField("small_px0_r", T.DoubleType()),
-    ]
-)
-
-
 # ---------------------------------------------------------------------------
 # Video analog: multi-frame PPM stream + frame sampling
 # ---------------------------------------------------------------------------
@@ -306,36 +293,11 @@ def synth_video(doc_id: int, n_frames: int = VIDEO_FRAMES) -> list[np.ndarray]:
     return [synth_image(doc_id * n_frames + f) for f in range(n_frames)]
 
 
-VIDEO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("sampled_mean_r", T.DoubleType()),
-    ]
-)
-
-
-def video_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Frame-sampling over a multi-frame binary stream: decode ALL
-    frame headers (to count), decode every FRAME_STEP-th raster, mean
-    the R channel across sampled frames — the decode-what-you-sample
-    shape of video training-data prep."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(doc_id),) + _video_feature_row(int(doc_id))
-                for doc_id in pdf[id_col]
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_FEATURES_SCHEMA.fields])
-
-    return df.select(F.col(id_col)).mapInPandas(run, VIDEO_FEATURES_SCHEMA)
-
-
 def _video_feature_row(doc_id: int) -> tuple:
-    """(n_frames, sampled_mean_r) — the ONE definition of the video
-    features, shared by video_features and media_features so the two
-    paths cannot drift."""
+    """(n_frames, sampled_mean_r) — the video features: walk ALL
+    frame headers (to count), decode every FRAME_STEP-th raster and
+    mean the R channel across the sampled frames, the
+    decode-what-you-sample shape of video training-data prep."""
     frames = list(iter_video_frames(encode_video(synth_video(doc_id))))
     sampled = frames[::FRAME_STEP]
     mean_r = float(np.mean([f[:, :, 0].astype(np.float64).mean() for f in sampled]))
@@ -415,38 +377,11 @@ def synth_audio(doc_id: int, n: int = AUDIO_N) -> np.ndarray:
     return ((doc_id * 7919 + i * 2654435761) % 65536 - 32768).astype(np.int16)
 
 
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_samples", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("zero_crossings", T.IntegerType()),
-    ]
-)
-
-
-def audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Encode → DECODE (real RIFF chunk walk) → featurize in one
-    mapInPandas pass.  RMS is derived from the exact INTEGER sum of
-    squares (order-independent, so both engines agree bit-for-bit
-    before the one double sqrt/divide)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(doc_id),) + _audio_feature_row(int(doc_id))
-                for doc_id in pdf[id_col]
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_FEATURES_SCHEMA.fields])
-
-    return df.select(F.col(id_col)).mapInPandas(run, AUDIO_FEATURES_SCHEMA)
-
-
 def _audio_feature_row(doc_id: int) -> tuple:
-    """(n_samples, duration_ms, rms, zero_crossings) — the ONE
-    definition of the audio features, shared by audio_features and
-    media_features."""
+    """(n_samples, duration_ms, rms, zero_crossings) — the audio
+    features after a real RIFF chunk-walk decode.  RMS is derived from
+    the exact INTEGER sum of squares (order-independent, so both
+    engines agree bit-for-bit before the one double sqrt/divide)."""
     s, rate = decode_wav(encode_wav(synth_audio(doc_id)))
     v = s.astype(np.int64)
     sum_sq = int((v * v).sum())
@@ -481,27 +416,11 @@ def sql_audio_features(table: str, id_col: str = "doc_id") -> str:
     """
 
 
-def image_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Encode → DECODE (real PPM parse) → resize → featurize, all
-    inside one mapInPandas pass; binary never touches the driver.
-    Features: dimensions, per-channel means of the decoded raster, and
-    the top-left pixel of the 2× block-mean resize (channel R)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                (int(doc_id),) + _image_feature_row(int(doc_id))
-                for doc_id in pdf[id_col]
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in IMAGE_FEATURES_SCHEMA.fields])
-
-    return df.select(F.col(id_col)).mapInPandas(run, IMAGE_FEATURES_SCHEMA)
-
-
 def _image_feature_row(doc_id: int) -> tuple:
-    """(width, height, mean_r, mean_g, mean_b, small_px0_r) — the ONE
-    definition of the image features, shared by image_features and
-    media_features."""
+    """(width, height, mean_r, mean_g, mean_b, small_px0_r) — the
+    image features after a real PPM decode: dimensions, per-channel
+    means of the raster, and the top-left pixel (channel R) of the
+    2× block-mean resize."""
     img = decode_ppm(encode_ppm(synth_image(doc_id)))
     h, w, _ = img.shape
     means = img.astype(np.float64).mean(axis=(0, 1))
@@ -614,11 +533,10 @@ MEDIA_FEATURES_SCHEMA = T.StructType(
 def media_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """All three real-codec decode paths (P6 PPM image, RIFF/PCM16 WAV
     audio, multi-frame PPM video stream) in ONE mapInPandas pass — one
-    Python worker round-trip per batch instead of three, one wide row
-    per document.  Consolidates the former image_features /
-    audio_features / video_features registry demos (50-entry driver
-    cap); the per-modality operators remain the public API and are
-    pytest-gated against the same closed-form oracles."""
+    Python worker round-trip per batch, one wide row per document;
+    binary never touches the driver.  Each modality's features come
+    from its `_*_feature_row` helper and are checked against its
+    closed-form `sql_*_features` oracle."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -33,8 +33,41 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return _dot(a, b) / (_norm(a) * _norm(b))
+def _side(df: DataFrame, id_col: str, vec_col: str, side: str, **keys: Column) -> DataFrame:
+    """One side of a cosine candidate join: `<side>_id`, `<side>_vec`,
+    the candidate key columns `keys` (name → expression) and
+    `<side>_norm`.
+
+    Norms are precomputed per side (round-6): cos = dot/(q_norm·n_norm)
+    is the same expressions over the same doubles as the inline
+    cosine — bit-identical — but each row's norm folds once instead of
+    once per candidate pair."""
+    return df.select(
+        F.col(id_col).alias(f"{side}_id"),
+        F.col(vec_col).alias(f"{side}_vec"),
+        *[c.alias(name) for name, c in keys.items()],
+        _norm(F.col(vec_col)).alias(f"{side}_norm"),
+    )
+
+
+def _cosine_topk(e: DataFrame, q: DataFrame, on: str | None, k: int) -> DataFrame:
+    """Top-k cosine neighbours per query: `e` (the `n` side) joined to
+    the broadcast query side `q` on the candidate key `on` (None = a
+    cross join), self pairs excluded, ranked by (cos desc, n_id).
+    Returns (q_id, n_id, cos rounded to 5 places, rank)."""
+    if on is None:
+        cand = e.join(F.broadcast(q), F.col("q_id") != F.col("n_id"))
+    else:
+        cand = e.join(F.broadcast(q), on).filter(F.col("q_id") != F.col("n_id"))
+    scored = cand.withColumn(
+        "cos", _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("q_norm") * F.col("n_norm"))
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .select("q_id", "n_id", F.round("cos", 5).alias("cos"), F.col("rn").alias("rank"))
+    )
 
 
 def brute_force_topk(
@@ -42,32 +75,8 @@ def brute_force_topk(
 ) -> DataFrame:
     """Top-k cosine neighbors per query vector (self excluded).
     The small query side is broadcast — no shuffle of the big side."""
-    # norms precomputed per side (round-6): cos = dot/(q_norm·n_norm)
-    # is the same expressions over the same doubles as the inline
-    # cosine — bit-identical — but each row's norm folds once instead
-    # of once per candidate pair
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-    )
-    e = emb.select(
-        F.col(id_col).alias("n_id"),
-        F.col(vec_col).alias("n_vec"),
-        _norm(F.col(vec_col)).alias("n_norm"),
-    )
-    scored = (
-        e.join(F.broadcast(q), F.col("q_id") != F.col("n_id"))
-        .withColumn(
-            "cos",
-            _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("q_norm") * F.col("n_norm")),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "n_id", F.round("cos", 5).alias("cos"), F.col("rn").alias("rank"))
+    return _cosine_topk(
+        _side(emb, id_col, vec_col, "n"), _side(queries, id_col, vec_col, "q"), None, k
     )
 
 
@@ -84,31 +93,13 @@ def lsh_top1(
 ) -> DataFrame:
     """Nearest same-bucket neighbor per query — the J9 lateral-KNN
     pattern: bucket equi-join for candidates, then window top-1."""
-    # per-side norm precompute: see brute_force_topk (round-6)
-    q = queries.select(
-        F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"),
-        srp_bucket(F.col(vec_col)).alias("bucket"),
-        _norm(F.col(vec_col)).alias("q_norm"),
-    )
-    e = emb.select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"),
-        srp_bucket(F.col(vec_col)).alias("bucket"),
-        _norm(F.col(vec_col)).alias("n_norm"),
-    )
-    scored = (
-        e.join(F.broadcast(q), "bucket")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn(
-            "cos",
-            _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("q_norm") * F.col("n_norm")),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("q_id", "n_id", F.round("cos", 5).alias("cos"))
-    )
+    bucket = srp_bucket(F.col(vec_col))
+    return _cosine_topk(
+        _side(emb, id_col, vec_col, "n", bucket=bucket),
+        _side(queries, id_col, vec_col, "q", bucket=bucket),
+        "bucket",
+        1,
+    ).drop("rank")
 
 
 # ---------------------------------------------------------------------------
@@ -218,7 +209,7 @@ def sql_with_planted_dups(table: str) -> str:
 def embedding_dup_pairs(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
     """Embedding-cosine near-duplicate pairs: SRP-bucketed candidate
     join (never a cross join), exact cosine filter, canonical id1<id2."""
-    # per-side norm precompute: see brute_force_topk (round-6)
+    # per-side norm precompute: see _side (round-6)
     e = emb.select(
         F.col(id_col).alias("doc"), F.col(vec_col).alias("v"),
         srp_bucket(F.col(vec_col)).alias("bucket"),
@@ -267,7 +258,7 @@ def _cell_scores(vec: Column) -> Column:
     (highest cosine, then LOWEST centroid index) as pure expressions.
 
     Round-6 hot-path shape: the row's own norm (`__vnorm`, added by
-    the callers) and each centroid's norm (`c_norm`, packed once at
+    _with_cents) and each centroid's norm (`c_norm`, packed once at
     centroid build) replace the per-(row×centroid) norm folds — the
     same sqrt-of-sequential-fold expressions over the same doubles, so
     cosine = dot / (__vnorm · c_norm) is bit-identical to the inline
@@ -281,17 +272,18 @@ def _cell_scores(vec: Column) -> Column:
     )
 
 
-def _with_cents(df: DataFrame, cents: DataFrame) -> DataFrame:
+def _with_cents(df: DataFrame, cents: DataFrame, vec_name: str) -> DataFrame:
     """Attach the whole centroid set to every row as ONE packed
     array column via a single-row broadcast (BroadcastNestedLoopJoin
-    of one row — no corpus×k row explosion, no shuffle).  Each packed
-    entry carries its precomputed norm (see _cell_scores)."""
+    of one row — no corpus×k row explosion, no shuffle), plus the
+    row's own norm `__vnorm`.  Each packed entry carries its
+    precomputed norm (see _cell_scores)."""
     packed = cents.agg(
         F.array_sort(
             F.collect_list(F.struct("c_idx", "c_vec", _norm(F.col("c_vec")).alias("c_norm")))
         ).alias("__cents")
     )
-    return df.join(F.broadcast(packed))
+    return df.join(F.broadcast(packed)).withColumn("__vnorm", _norm(F.col(vec_name)))
 
 
 def _assign_nearest(df: DataFrame, cents: DataFrame, vec_name: str) -> DataFrame:
@@ -300,10 +292,8 @@ def _assign_nearest(df: DataFrame, cents: DataFrame, vec_name: str) -> DataFrame
     (c_idx, c_cos) per row with ZERO exchanges.  The round-3
     Window.partitionBy(id) form shuffled corpus×k rows per call
     (round-3 verdict, "What's wrong" #3)."""
-    scored = (
-        _with_cents(df, cents)
-        .withColumn("__vnorm", _norm(F.col(vec_name)))
-        .withColumn("__best", F.array_max(_cell_scores(F.col(vec_name))))
+    scored = _with_cents(df, cents, vec_name).withColumn(
+        "__best", F.array_max(_cell_scores(F.col(vec_name)))
     )
     return scored.select(
         *df.columns,
@@ -317,8 +307,7 @@ def _assign_probes(df: DataFrame, cents: DataFrame, vec_name: str, n_probe: int)
     cells ordered by descending cosine with ties to the lowest index —
     reverse(array_sort) + slice + explode, still narrow."""
     scored = (
-        _with_cents(df, cents)
-        .withColumn("__vnorm", _norm(F.col(vec_name)))
+        _with_cents(df, cents, vec_name)
         .withColumn(
             "__probe",
             F.explode(
@@ -426,36 +415,17 @@ def ivf_topk(
     # same way.  The centroid set is IVF_CELLS rows, so the checkpoint
     # is trivially small.
     cents = kmeans_centroids(emb, id_col, vec_col).localCheckpoint(eager=True)
-    # per-side norm precompute for the candidate scoring join: see
-    # brute_force_topk (round-6)
-    cells = _assign_nearest(
-        emb.select(F.col(id_col).alias("n_id"), F.col(vec_col).cast("array<double>").alias("n_vec")),
-        cents,
-        "n_vec",
-    ).select(
-        "n_id", "n_vec", F.col("c_idx").alias("cell"), _norm(F.col("n_vec")).alias("n_norm")
-    )
-    q = _assign_probes(
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).cast("array<double>").alias("q_vec")),
-        cents,
-        "q_vec",
-        nprobe,
-    ).select(
-        "q_id", "q_vec", F.col("c_idx").alias("cell"), _norm(F.col("q_vec")).alias("q_norm")
-    )
-    scored = (
-        cells.join(F.broadcast(q), "cell")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn(
-            "cos",
-            _dot(F.col("q_vec"), F.col("n_vec")) / (F.col("q_norm") * F.col("n_norm")),
-        )
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w2))
-        .filter(F.col("rn") <= k)
-        .select("q_id", "n_id", F.round("cos", 5).alias("cos"), F.col("rn").alias("rank"))
+
+    def vecs(df: DataFrame) -> DataFrame:
+        return df.select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col))
+
+    cells = _assign_nearest(vecs(emb), cents, vec_col)
+    q = _assign_probes(vecs(queries), cents, vec_col, nprobe)
+    return _cosine_topk(
+        _side(cells, id_col, vec_col, "n", cell=F.col("c_idx")),
+        _side(q, id_col, vec_col, "q", cell=F.col("c_idx")),
+        "cell",
+        k,
     )
 
 
