@@ -16,9 +16,9 @@ both ends without it:
    reading one chunk touches only that partition's files and the plan
    carries the partition filter.
 
-If the Iceberg classes ever become available (wtq/sources/catalog.py
-probes for them), the third test exercises the real transform instead
-of skipping.
+If the Iceberg classes ever become available (the third test probes
+the JVM classpath for them), that test exercises the real transform
+instead of skipping.
 """
 
 from __future__ import annotations
@@ -88,7 +88,7 @@ def test_chunk_partition_column_prunes(spark, pages_path, tmp_path):
     """The parquet stand-in for bucket(url, N): write partitioned by
     chunk, read one chunk — the scan must carry the partition filter
     and touch only that partition's files."""
-    from wtq.plans.audit import plan_string
+    from plan_audit import plan_string
 
     n = 8
     out = str(tmp_path / "bucketed_pages")
@@ -106,10 +106,12 @@ def test_chunk_partition_column_prunes(spark, pages_path, tmp_path):
 
 
 def test_real_iceberg_bucket_transform_if_available(spark, pages_path):
-    from wtq.sources.catalog import iceberg_available
+    from py4j.protocol import Py4JJavaError
 
-    if not iceberg_available(spark.version):
-        pytest.skip("Iceberg runtime jar not present in this sandbox")
+    try:
+        spark._jvm.java.lang.Class.forName("org.apache.iceberg.spark.SparkCatalog")
+    except Py4JJavaError:  # ClassNotFoundException
+        pytest.skip("Iceberg runtime jar not on the classpath")
     # With the jar present: create an Iceberg table PARTITIONED BY
     # (bucket(8, url)), write pages, and assert a url-equality read
     # plans a single-bucket scan.
@@ -131,7 +133,7 @@ def test_bucketed_pages_pipeline_zero_exchange(spark, pages_path):
     import shutil
 
     from wtq.pipeline import decide
-    from wtq.plans.audit import plan_string
+    from plan_audit import plan_string
 
     spark.sql("DROP TABLE IF EXISTS b_pages")
     shutil.rmtree("spark-warehouse/b_pages", ignore_errors=True)

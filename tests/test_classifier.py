@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wtq.operators.classifier import nb_score, nb_quality_scores, train_nb_weights
-from wtq.plans.audit import plan_string
+from plan_audit import plan_string
 
 CLEAN = [
     "the quick brown fox jumps over the lazy dog near the river bank",

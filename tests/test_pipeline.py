@@ -59,6 +59,39 @@ def test_metrics_conservation(decided, pages_pdf):
     assert len(m) > 1  # actually partitioned
 
 
+_TIE_TEXT = (
+    "the quick brown fox jumps over the lazy dog and then walks along the "
+    "river bank toward a small village market where the people sell bread "
+    "and fish to their neighbours"
+)
+
+
+def test_recrawl_tie_on_null_text_matches_oracle(spark, tmp_path):
+    """Two crawls of one url at the same instant, one without text: the
+    tie-break on text puts NULL last in both engines, so decide() keeps
+    the crawl with text, as oracle_decide's sort does."""
+    from wtq.pipeline import decide
+
+    t0, t1 = pd.Timestamp("2025-01-01"), pd.Timestamp("2025-02-01")
+    path = str(tmp_path / "pages.parquet")
+    pd.DataFrame({
+        "url": ["https://a.example.com/p", "https://a.example.com/p",
+                "https://a.example.com/p", "https://b.example.com/q"],
+        # microseconds: Spark rejects pandas' nanosecond default
+        "warc_ts": pd.Series([t1, t1, t0, t1]).astype("datetime64[us]"),
+        "html": [b""] * 4,
+        "text": pd.Series([None, _TIE_TEXT, "older crawl", _TIE_TEXT], dtype=object),
+        "lang": ["en"] * 4,
+    }).to_parquet(path, index=False)
+    got = decide(spark.read.parquet(path)).select("url", "text", "keep", "fired_rules").toPandas()
+    exp = oracle_decide(pd.read_parquet(path))
+    m = got.merge(exp, on="url", suffixes=("_s", "_o"))
+    assert len(m) == len(exp) == len(got) == 2
+    assert list(m.text_s) == list(m.text_o) == [_TIE_TEXT, _TIE_TEXT]
+    assert [list(f) for f in m.fired_rules_s] == [list(f) for f in m.fired_rules_o]
+    assert (m.keep_s == m.keep_o).all()
+
+
 def test_rule_fire_counts_join(spark, decided, oracle):
     got = rule_fire_counts(decided, registry_df(spark)).toPandas()
     exp = pd.Series([c for lst in oracle.fired_rules for c in lst]).value_counts()

@@ -193,7 +193,7 @@ def test_normalize_urls_composes_with_curation_flags(spark, tmp_path):
     )
     # plan read BEFORE the action: post-collect AQE plan strings print
     # Final AND Initial sections, double-counting every node
-    from wtq.plans.audit import plan_string
+    from plan_audit import plan_string
 
     plan = plan_string(res.decided, mode="simple")
     assert plan.count("ArrowEvalPython") == 1, plan[:2000]

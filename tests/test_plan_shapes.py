@@ -7,7 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from wtq.pipeline import decide
-from wtq.plans.audit import assert_in_plan, count_occurrences, plan_string
+from plan_audit import assert_in_plan, count_occurrences, plan_string
 from wtq.queries import QUERIES
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -1,0 +1,195 @@
+"""Every top-level definition under ``wtq/`` is reached from what the
+system runs, or is on a short list kept with a reason.
+
+A pure ``ast`` walk, no imports of the code under test.  The roots are
+the registry and its oracle (``QUERIES``, ``ORACLE_SQL``), the pipeline
+(``run_pipeline``, ``decide``), the build (``build_training_set``) and
+every definition in ``oracle/``, ``bench*.py``, ``perfbench/`` and
+``__spark_entry__.py``.  A reference is matched by module and name: a
+bare ``name`` resolves through the referring module's own definitions
+and imports, ``alias.attr`` through the module that ``alias`` names, so
+``pd.read_csv`` never counts as a use of some ``wtq`` ``read_csv``.
+Re-exports are followed to the defining module.  Reaching a class
+reaches all of its methods.  Dunder names (``__getattr__``,
+``__version__``) are module protocol, not definitions, and are skipped.
+"""
+
+from __future__ import annotations
+
+import ast
+import importlib
+import pathlib
+
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+
+ROOTS = {
+    ("wtq.queries", "QUERIES"),
+    ("wtq.queries", "ORACLE_SQL"),
+    ("wtq.pipeline", "run_pipeline"),
+    ("wtq.pipeline", "decide"),
+    ("wtq.build", "build_training_set"),
+}
+ROOT_FILES = ("oracle/*.py", "bench*.py", "perfbench/*.py", "__spark_entry__.py")
+
+# (module, name) -> why it stays although no root reaches it
+KEPT = {
+    ("wtq.checkpoint", "MARKER"): "resumable-from-checkpoint run (test_checkpoint.py)",
+    ("wtq.checkpoint", "InjectedFailure"): "resumable-from-checkpoint run (test_checkpoint.py)",
+    ("wtq.checkpoint", "chunk_expr"): "chunk predicate behind test_bucket_contract.py",
+    ("wtq.checkpoint", "committed_chunks"): "resumable-from-checkpoint run (test_checkpoint.py)",
+    ("wtq.checkpoint", "run_checkpointed"): "resumable-from-checkpoint run (test_checkpoint.py)",
+    ("wtq.checkpoint", "read_decided"): "resumable-from-checkpoint run (test_checkpoint.py)",
+    ("wtq.checkpoint", "read_metrics"): "resumable-from-checkpoint run (test_checkpoint.py)",
+    ("wtq.operators.dedup", "lsh_bucket_stats"): "occupancy audit for a caller's own LSH pair run",
+    ("wtq.rules.registry", "registry_df"): "the err_codes dimension table",
+    ("wtq.rules.registry", "rule_rows"): "the err_codes dimension rows",
+    ("wtq.pipeline", "rule_fire_counts"): "the err_codes join",
+}
+
+
+def _module_name(path: pathlib.Path) -> str:
+    parts = path.relative_to(ROOT).with_suffix("").parts
+    return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+
+class _Module:
+    """One parsed file: its top-level definitions, its import table
+    (local name -> dotted target, from any depth, since imports inside
+    functions are common here) and the reference walk."""
+
+    def __init__(self, path: pathlib.Path):
+        self.name = _module_name(path)
+        self.tree = ast.parse(path.read_text(), str(path))
+        self.defs: dict[str, list[ast.AST]] = {}
+        for node in self.tree.body:
+            for name in _defined_names(node):
+                if not (name.startswith("__") and name.endswith("__")):
+                    self.defs.setdefault(name, []).append(node)
+        self.imports: dict[str, set[str]] = {}
+        for node in ast.walk(self.tree):
+            if isinstance(node, ast.Import):
+                for a in node.names:
+                    if a.asname:
+                        self.imports.setdefault(a.asname, set()).add(a.name)
+                    else:  # `import a.b` binds `a`
+                        top = a.name.split(".")[0]
+                        self.imports.setdefault(top, set()).add(top)
+            elif isinstance(node, ast.ImportFrom) and node.level == 0 and node.module:
+                for a in node.names:
+                    self.imports.setdefault(a.asname or a.name, set()).add(f"{node.module}.{a.name}")
+
+    def top_level_code(self) -> list[ast.AST]:
+        return [n for n in self.tree.body if not _defined_names(n)]
+
+
+def _defined_names(node: ast.AST) -> list[str]:
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return [node.name]
+    if isinstance(node, ast.Assign):
+        return [t.id for t in node.targets if isinstance(t, ast.Name)]
+    if isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+        return [node.target.id]
+    return []
+
+
+def _load_modules() -> tuple[dict[str, _Module], list[_Module]]:
+    wtq = {m.name: m for m in map(_Module, sorted((ROOT / "wtq").rglob("*.py")))}
+    roots = [_Module(p) for g in ROOT_FILES for p in sorted(ROOT.glob(g))]
+    return wtq, roots
+
+
+def _resolve(wtq: dict[str, _Module], dotted: str, seen: frozenset = frozenset()):
+    """Dotted target -> ('module', mod) or ('def', (mod, name)), following
+    re-exports; None when it is not under wtq."""
+    if dotted in wtq:
+        return ("module", dotted)
+    mod, _, name = dotted.rpartition(".")
+    if mod not in wtq or dotted in seen:
+        return None
+    m = wtq[mod]
+    if name in m.defs:
+        return ("def", (mod, name))
+    for target in m.imports.get(name, ()):
+        hit = _resolve(wtq, target, seen | {dotted})
+        if hit:
+            return hit
+    return None
+
+
+def _references(wtq: dict[str, _Module], module: _Module, nodes: list[ast.AST]) -> set:
+    """The (module, name) definitions that `nodes` refer to."""
+    out = set()
+
+    def local(name: str) -> list:
+        if name in module.defs and module.name in wtq:
+            return [("def", (module.name, name))]
+        return [h for t in module.imports.get(name, ()) if (h := _resolve(wtq, t))]
+
+    for top in nodes:
+        for node in ast.walk(top):
+            if isinstance(node, ast.Name):
+                out |= {ref for kind, ref in local(node.id) if kind == "def"}
+            elif isinstance(node, ast.Attribute):
+                # alias.attr / pkg.mod.attr: resolve the dotted chain
+                chain, base = [node.attr], node.value
+                while isinstance(base, ast.Attribute):
+                    chain.append(base.attr)
+                    base = base.value
+                if not isinstance(base, ast.Name):
+                    continue
+                for kind, ref in local(base.id):
+                    if kind != "module":
+                        continue
+                    dotted = ".".join([ref, *reversed(chain)])
+                    # the longest prefix that resolves to a definition
+                    parts = dotted.split(".")
+                    for i in range(len(parts), 0, -1):
+                        hit = _resolve(wtq, ".".join(parts[:i]))
+                        if hit and hit[0] == "def":
+                            out.add(hit[1])
+                            break
+    return out
+
+
+def unreached() -> set[tuple[str, str]]:
+    """Top-level wtq definitions that no root reaches."""
+    wtq, root_files = _load_modules()
+    todo = set(ROOTS)
+    for m in root_files:
+        todo |= _references(wtq, m, m.tree.body)
+    reached: set = set()
+    live_modules: set = set()
+    while todo:
+        mod, name = todo.pop()
+        if (mod, name) in reached:
+            continue
+        reached.add((mod, name))
+        m = wtq[mod]
+        todo |= _references(wtq, m, m.defs[name])
+        if mod not in live_modules:  # importing a module runs its top level
+            live_modules.add(mod)
+            todo |= _references(wtq, m, m.top_level_code())
+    every = {(m.name, d) for m in wtq.values() for d in m.defs}
+    return every - reached
+
+
+def test_only_kept_definitions_are_unreached():
+    got = unreached()
+    assert got == set(KEPT), (
+        f"unreached but not kept: {sorted(got - set(KEPT))}; "
+        f"kept but reached or gone: {sorted(set(KEPT) - got)}"
+    )
+
+
+def test_lazy_api_table_resolves():
+    """Every (module, attr) pair in wtq/__init__.py's lazy export table
+    imports and names an attribute."""
+    tree = ast.parse((ROOT / "wtq" / "__init__.py").read_text())
+    table = next(
+        n.value for n in ast.walk(tree)
+        if isinstance(n, ast.Assign) and any(getattr(t, "id", None) == "_API" for t in n.targets)
+    )
+    pairs = [ast.literal_eval(v) for v in table.values]
+    assert pairs
+    missing = [(mod, attr) for mod, attr in pairs if not hasattr(importlib.import_module(mod), attr)]
+    assert not missing, missing

@@ -37,10 +37,7 @@ def __getattr__(name):
         "kmeans_centroids": ("wtq.operators.similarity", "kmeans_centroids"),
         "embedding_dup_pairs": ("wtq.operators.similarity", "embedding_dup_pairs"),
         "grid_radius_join": ("wtq.operators.spatial", "grid_radius_join"),
-        "salted_join": ("wtq.operators.skew", "salted_join"),
         "asof_join_backward": ("wtq.operators.asof", "asof_join_backward"),
-        "streaming_pipeline": ("wtq.streaming.ingest", "streaming_pipeline"),
-        "compact_parquet": ("wtq.sources.files", "compact_parquet"),
         "text_metrics": ("wtq.operators.text", "text_metrics"),
         "decontaminate": ("wtq.operators.curation", "decontaminate"),
         "benchmark_grams": ("wtq.operators.curation", "benchmark_grams"),
@@ -49,8 +46,6 @@ def __getattr__(name):
         "source_quality_gate": ("wtq.operators.curation", "source_quality_gate"),
         "strip_boilerplate_lines": ("wtq.operators.curation", "strip_boilerplate_lines"),
         "media_features": ("wtq.operators.multimodal", "media_features"),
-        "image_features_safe": ("wtq.operators.multimodal", "image_features_safe"),
-        "quarantine_split": ("wtq.operators.multimodal", "quarantine_split"),
     }
     if name in _API:
         import importlib

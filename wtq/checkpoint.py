@@ -49,7 +49,6 @@ def run_checkpointed(
     pages_path: str,
     out_dir: str,
     n_chunks: int = 8,
-    num_partitions: int | None = None,
     fail_after_chunk: int | None = None,
 ) -> list[int]:
     """Run the pipeline chunk-by-chunk with commit markers; returns the
@@ -70,7 +69,7 @@ def run_checkpointed(
         if os.path.exists(marker):
             continue
         chunk = pages.filter(chunk_expr(n_chunks) == k)
-        decided = decide(chunk, num_partitions=num_partitions)
+        decided = decide(chunk)
         decided.write.mode("overwrite").parquet(os.path.join(chunk_dir, "decided"))
         # metrics in the same commit unit as the data (no double count)
         metrics_view(

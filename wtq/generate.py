@@ -226,8 +226,8 @@ GEN_VERSION = 4  # bump to invalidate /tmp caches when generation changes
 def ensure_pages(sf_dir: str, replicate: int = 1, cache_root: str = "/tmp/wtq_pages") -> str:
     """Write (once) and return the parquet path for the pages table
     derived from sf_dir.  In production this is an Iceberg table; here
-    parquet stands in (no Iceberg runtime jars in the sandbox — see
-    wtq/sources/catalog.py)."""
+    parquet stands in (the Iceberg runtime jars are not on the
+    classpath)."""
     tag = (
         os.path.basename(os.path.normpath(sf_dir))
         + (f"_x{replicate}" if replicate > 1 else "")

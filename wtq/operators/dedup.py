@@ -51,16 +51,16 @@ PERM_B = [(i * 40503 + 17) % MINHASH_P for i in range(1, N_PERM + 1)]
 # Spark-side building blocks
 # ---------------------------------------------------------------------------
 
-def shingles_arr(text: Column, k: int = SHINGLE_K) -> Column:
-    """k-word shingles via index-transform over the word array —
+def shingles_arr(text: Column) -> Column:
+    """SHINGLE_K-word shingles via index-transform over the word array —
     no explode needed until hashing."""
     w = X.words(text)
     n = F.size(w)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
+    idx = F.sequence(F.lit(0), F.greatest(n - SHINGLE_K, F.lit(0)))
     mk = F.transform(
-        idx, lambda i: F.concat_ws(" ", *[F.element_at(w, (i + j + 1).cast("int")) for j in range(k)])
+        idx, lambda i: F.concat_ws(" ", *[F.element_at(w, (i + j + 1).cast("int")) for j in range(SHINGLE_K)])
     )
-    return F.when(n >= k, mk).otherwise(F.array())
+    return F.when(n >= SHINGLE_K, mk).otherwise(F.array())
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -134,7 +134,6 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    num_partitions: int | None = None,
     rebalance: bool = True,
 ) -> DataFrame:
     """(id, sig array<long>[N_PERM]): per-permutation min over shingle
@@ -166,9 +165,7 @@ def minhash_signatures(
     # flag).
     base = df.select(F.col(id_col), F.col(text_col))
     if rebalance:
-        base = base.repartition(
-            num_partitions or df.sparkSession.sparkContext.defaultParallelism
-        )
+        base = base.repartition(df.sparkSession.sparkContext.defaultParallelism)
     return base.select(F.col(id_col), _sig_udf(F.col(text_col)).alias("sig"))
 
 
@@ -793,12 +790,12 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 # Oracle SQL builders (DuckDB) — generated from the SAME constants
 # ---------------------------------------------------------------------------
 
-def _sql_shingles(text: str, k: int = SHINGLE_K) -> str:
+def _sql_shingles(text: str) -> str:
     w = X.sql_words(text)
-    parts = " || ' ' || ".join(f"w[i+{j}]" for j in range(k))
+    parts = " || ' ' || ".join(f"w[i+{j}]" for j in range(SHINGLE_K))
     return (
-        f"(SELECT CASE WHEN len(w) >= {k} THEN "
-        f"list_transform(range(1, len(w) - {k} + 2), i -> {parts}) "
+        f"(SELECT CASE WHEN len(w) >= {SHINGLE_K} THEN "
+        f"list_transform(range(1, len(w) - {SHINGLE_K} + 2), i -> {parts}) "
         f"ELSE [] END FROM (SELECT {w} AS w))"
     )
 

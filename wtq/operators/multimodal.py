@@ -5,24 +5,19 @@ metadata struct; decode/feature-extraction runs as Arrow-batched
 ``mapInPandas`` (the pattern a training-data pipeline needs at 100 TB:
 binary stays off the driver, batches stream through Python workers).
 
-Two tiers:
+Two registry operators:
 
-* **Real codec path** — binary P6 PPM encode/decode in pure numpy
-  (``encode_ppm``/``decode_ppm``): genuine byte-level image decode,
-  block-mean resize, per-channel statistics, all oracle-checked
-  against a closed-form SQL derivation (``media_features``).  PNG
-  encode/decode is also REAL (``encode_png``/``decode_png``): stdlib
-  zlib inflate + all five scanline filters (None/Sub/Up/Average/
-  Paeth) + CRC verification, gray/RGB/RGBA at bit depth 8 — no
-  external codec needed.  This is the full decode → transform →
-  featurize shape a training pipeline runs.
-* **Baseline JPEG** (round 5, ``wtq/operators/jpeg.py``) — sequential
-  DCT decode AND encode (Huffman entropy coding, 4:2:0/4:4:4,
-  restart markers, byte stuffing), spec-validated via closed-form
-  known-answer bitstreams + round-trip property tests.  Unsupported
-  processes (progressive/arithmetic/12-bit) raise into the
-  quarantine path.  ``extract_features`` uses a deterministic
-  hash-derived stand-in embedding so the plumbing stays testable
+* ``media_features`` — real byte-level decodes in pure numpy + struct,
+  no external codec: binary P6 PPM images (``encode_ppm`` /
+  ``decode_ppm``, block-mean resize, per-channel statistics),
+  RIFF/PCM16 WAV audio (``encode_wav`` / ``decode_wav``) and
+  multi-frame PPM video streams (frame walk + sampling), all in one
+  ``mapInPandas`` pass.  Every feature is checked against a
+  closed-form SQL derivation from the synthetic pixel / sample
+  formulas, never from the bytes.
+* ``multimodal_features`` — the binary-column plumbing
+  (``with_blob`` → ``extract_features``); the embedding is a
+  deterministic hash-derived stand-in so the plumbing stays testable
   without model weights.
 """
 
@@ -52,154 +47,6 @@ FEATURES_SCHEMA = T.StructType(
         T.StructField("f0", T.DoubleType()),
     ]
 )
-
-
-PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def decode_image(blob: bytes):
-    """Format-dispatching image decode: PNG, binary P6 PPM, and
-    baseline JPEG all decode for REAL (pure stdlib + numpy).  JPEG
-    (wtq/operators/jpeg.py, round 5) is validated against the SPEC —
-    closed-form known-answer bitstreams plus a full-surface round-trip
-    property — rather than a reference codec (none exists in this
-    container); unsupported JPEG processes (progressive, arithmetic,
-    12-bit) raise ValueError into the quarantine path rather than
-    risking silently wrong rasters.  The pipeline takes the decode
-    function as a seam, so swapping in e.g. libjpeg-turbo is one
-    argument."""
-    if blob[:8] == PNG_SIG:
-        return decode_png(blob)
-    if blob[:2] == b"P6":
-        return decode_ppm(blob)
-    if blob[:2] == b"\xff\xd8":
-        from wtq.operators.jpeg import decode_jpeg
-
-        return decode_jpeg(blob)
-    raise ValueError("unrecognized image container")
-
-
-# ---------------------------------------------------------------------------
-# Real codec: PNG (stdlib zlib + numpy; bit depth 8, gray/RGB/RGBA)
-# ---------------------------------------------------------------------------
-
-def _png_chunk(tag: bytes, payload: bytes) -> bytes:
-    import struct
-    import zlib
-
-    return (
-        struct.pack(">I", len(payload))
-        + tag
-        + payload
-        + struct.pack(">I", zlib.crc32(tag + payload) & 0xFFFFFFFF)
-    )
-
-
-def encode_png(arr: np.ndarray) -> bytes:
-    """uint8 (h, w) grayscale, (h, w, 3) RGB, or (h, w, 4) RGBA →
-    PNG bytes (filter 0 per scanline, one zlib-deflated IDAT)."""
-    import struct
-    import zlib
-
-    assert arr.dtype == np.uint8
-    if arr.ndim == 2:
-        color_type, channels = 0, 1
-        h, w = arr.shape
-    else:
-        h, w, channels = arr.shape
-        color_type = {1: 0, 3: 2, 4: 6}[channels]
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    raw = arr.reshape(h, w * channels)
-    scanlines = b"".join(b"\x00" + raw[y].tobytes() for y in range(h))
-    return (
-        PNG_SIG
-        + _png_chunk(b"IHDR", ihdr)
-        + _png_chunk(b"IDAT", zlib.compress(scanlines))
-        + _png_chunk(b"IEND", b"")
-    )
-
-
-def _paeth(a: int, b: int, c: int) -> int:
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    return b if pb <= pc else c
-
-
-def decode_png(blob: bytes) -> np.ndarray:
-    """PNG → uint8 raster ((h, w) for grayscale, (h, w, c) otherwise).
-
-    Real decode, no external codec: chunk walk with CRC verification,
-    stdlib-zlib inflate of the concatenated IDAT stream, then scanline
-    unfiltering for ALL five filter types (0 None, 1 Sub, 2 Up,
-    3 Average, 4 Paeth — the per-row reconstruction loop is the
-    format's inherent sequential dependency).  Supported: bit depth 8,
-    color types 0 (gray), 2 (RGB), 6 (RGBA), no interlace.  Malformed
-    input raises ValueError — the quarantine path's contract."""
-    import struct
-    import zlib
-
-    if blob[:8] != PNG_SIG:
-        raise ValueError("not a PNG (bad signature)")
-    pos, ihdr, idat = 8, None, []
-    while pos + 8 <= len(blob):
-        (length,) = struct.unpack(">I", blob[pos : pos + 4])
-        tag = blob[pos + 4 : pos + 8]
-        payload = blob[pos + 8 : pos + 8 + length]
-        if len(payload) != length or pos + 12 + length > len(blob):
-            raise ValueError("truncated PNG chunk")
-        (crc,) = struct.unpack(">I", blob[pos + 8 + length : pos + 12 + length])
-        if zlib.crc32(tag + payload) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG chunk {tag!r} CRC mismatch")
-        if tag == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", payload)
-        elif tag == b"IDAT":
-            idat.append(payload)
-        elif tag == b"IEND":
-            break
-        pos += 12 + length
-    if ihdr is None or not idat:
-        raise ValueError("PNG missing IHDR/IDAT")
-    w, h, depth, color_type, comp, filt, interlace = ihdr
-    if depth != 8 or comp != 0 or filt != 0 or interlace != 0:
-        raise ValueError("unsupported PNG variant (need depth 8, no interlace)")
-    channels = {0: 1, 2: 3, 6: 4}.get(color_type)
-    if channels is None:
-        raise ValueError(f"unsupported PNG color type {color_type}")
-    raw = zlib.decompress(b"".join(idat))
-    stride = w * channels
-    if len(raw) != h * (stride + 1):
-        raise ValueError("PNG pixel data length mismatch")
-    out = np.zeros((h, stride), dtype=np.uint8)
-    bpp = channels  # bytes per pixel at depth 8
-    for y in range(h):
-        ftype = raw[y * (stride + 1)]
-        line = np.frombuffer(
-            raw, dtype=np.uint8, count=stride, offset=y * (stride + 1) + 1
-        ).astype(np.int32)
-        prev = out[y - 1].astype(np.int32) if y > 0 else np.zeros(stride, np.int32)
-        if ftype == 0:
-            rec = line
-        elif ftype == 2:  # Up — vectorizable, no intra-row dependency
-            rec = (line + prev) & 0xFF
-        elif ftype in (1, 3, 4):  # Sub / Average / Paeth — sequential in x
-            rec = np.zeros(stride, np.int32)
-            for x in range(stride):
-                a = int(rec[x - bpp]) if x >= bpp else 0
-                if ftype == 1:
-                    pred = a
-                elif ftype == 3:
-                    pred = (a + int(prev[x])) >> 1
-                else:
-                    c = int(prev[x - bpp]) if x >= bpp else 0
-                    pred = _paeth(a, int(prev[x]), c)
-                rec[x] = (int(line[x]) + pred) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter type {ftype}")
-        out[y] = rec.astype(np.uint8)
-    arr = out.reshape(h, w, channels)
-    return arr[:, :, 0] if channels == 1 else arr
 
 
 # ---------------------------------------------------------------------------
@@ -459,56 +306,6 @@ def sql_image_features(table: str, id_col: str = "doc_id") -> str:
            mean_r, mean_g, mean_b, small_px0_r
     FROM means
     """
-
-
-SAFE_IMAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("ok", T.BooleanType()),
-        T.StructField("err", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("mean_r", T.DoubleType()),
-    ]
-)
-
-
-def image_features_safe(df: DataFrame, id_col: str = "doc_id", blob_col: str = "blob") -> DataFrame:
-    """Decode with a QUARANTINE path: a malformed blob (truncated
-    raster, garbage magic, corrupt header) produces an (ok=false, err)
-    row instead of failing the task — the err_all pattern applied to
-    decode errors.  At 100 TB a daily run WILL hit corrupt blobs; one
-    bad record must never kill a 10-hour job.  Conservation contract:
-    every input row appears exactly once (good + quarantined = input),
-    pinned by tests/test_rules_unit.py.
-
-    Decode goes through the format-dispatching seam (`decode_image`),
-    so PPM, PNG, and baseline JPEG blobs all extract for real in one
-    pass and anything else (corrupt data, progressive JPEG, unknown
-    containers) quarantines instead of crashing."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, blob in zip(pdf[id_col], pdf[blob_col]):
-                doc_id = int(doc_id)
-                try:
-                    img = decode_image(bytes(blob))
-                    if img.ndim == 2:  # grayscale → single-channel raster
-                        img = img[:, :, None]
-                    h, w, _ = img.shape
-                    mean_r = round(float(img[:, :, 0].astype(np.float64).mean()), 6)
-                    rows.append((doc_id, True, None, w, h, mean_r))
-                except Exception as e:  # noqa: BLE001 — quarantine, never crash the task
-                    rows.append((doc_id, False, f"{type(e).__name__}: {e}"[:200], None, None, None))
-            yield pd.DataFrame(rows, columns=[f.name for f in SAFE_IMAGE_SCHEMA.fields])
-
-    return df.select(F.col(id_col), F.col(blob_col)).mapInPandas(run, SAFE_IMAGE_SCHEMA)
-
-
-def quarantine_split(features: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(good, quarantined) from a *_safe feature frame."""
-    return features.filter(F.col("ok")), features.filter(~F.col("ok"))
 
 
 MEDIA_FEATURES_SCHEMA = T.StructType(

@@ -80,11 +80,11 @@ def brute_force_topk(
     )
 
 
-def srp_bucket(vec: Column, bits: int = SRP_BITS) -> Column:
-    """Sign-random-projection bucket: sign bits of the first `bits`
+def srp_bucket(vec: Column) -> Column:
+    """Sign-random-projection bucket: sign bits of the first SRP_BITS
     dims (deterministic axis-aligned projections)."""
     return F.concat(
-        *[F.when(F.element_at(vec, i + 1) >= 0, F.lit("1")).otherwise(F.lit("0")) for i in range(bits)]
+        *[F.when(F.element_at(vec, i + 1) >= 0, F.lit("1")).otherwise(F.lit("0")) for i in range(SRP_BITS)]
     )
 
 
@@ -139,8 +139,8 @@ def sql_brute_force_topk(table: str, n_queries: int = 5, k: int = 3) -> str:
     """
 
 
-def _sql_bucket(vec: str, bits: int = SRP_BITS) -> str:
-    parts = " || ".join(f"(CASE WHEN {vec}[{i + 1}] >= 0 THEN '1' ELSE '0' END)" for i in range(bits))
+def _sql_bucket(vec: str) -> str:
+    parts = " || ".join(f"(CASE WHEN {vec}[{i + 1}] >= 0 THEN '1' ELSE '0' END)" for i in range(SRP_BITS))
     return f"({parts})"
 
 
@@ -302,16 +302,17 @@ def _assign_nearest(df: DataFrame, cents: DataFrame, vec_name: str) -> DataFrame
     )
 
 
-def _assign_probes(df: DataFrame, cents: DataFrame, vec_name: str, n_probe: int) -> DataFrame:
-    """Multi-probe assignment: one row per (input row, probed cell),
-    cells ordered by descending cosine with ties to the lowest index —
-    reverse(array_sort) + slice + explode, still narrow."""
+def _assign_probes(df: DataFrame, cents: DataFrame, vec_name: str) -> DataFrame:
+    """Multi-probe assignment: one row per (input row, probed cell) for
+    its IVF_NPROBE nearest cells, ordered by descending cosine with ties
+    to the lowest index — reverse(array_sort) + slice + explode, still
+    narrow."""
     scored = (
         _with_cents(df, cents, vec_name)
         .withColumn(
             "__probe",
             F.explode(
-                F.slice(F.reverse(F.array_sort(_cell_scores(F.col(vec_name)))), 1, n_probe)
+                F.slice(F.reverse(F.array_sort(_cell_scores(F.col(vec_name)))), 1, IVF_NPROBE)
             ),
         )
     )
@@ -323,10 +324,10 @@ def _assign_probes(df: DataFrame, cents: DataFrame, vec_name: str, n_probe: int)
 
 
 def kmeans_centroids(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-    k: int = IVF_CELLS, iters: int = IVF_ITERS,
+    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """Deterministic seeded k-means (Lloyd's, `iters` rounds) →
+    """Deterministic seeded k-means (Lloyd's, IVF_ITERS rounds, k =
+    IVF_CELLS) →
     (c_idx, c_vec array<double>).  Replaces round 2's fake quantizer
     (centroids = first k vectors by id — arbitrary cell occupancy,
     flagged in the round-2 verdict).
@@ -359,12 +360,12 @@ def kmeans_centroids(
             F.md5(F.col(id_col).cast("string")).alias("h"),
         )
         .orderBy("h", "sid")
-        .limit(k)
+        .limit(IVF_CELLS)
     )
     wk = Window.orderBy("h", "sid")  # k rows only — tiny
     cents = seed.withColumn("c_idx", F.row_number().over(wk)).select("c_idx", F.col("v").alias("c_vec"))
     base = emb.select(F.col(id_col).alias("n_id"), F.col(vec_col).cast("array<double>").alias("n_vec"))
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         assigned = _assign_nearest(base, cents, "n_vec").select("c_idx", "n_vec")
         # (round-6 note: a 64-column fixed-point sum per cell — one
         # shuffle, no explode — was tried and measured SLOWER: 65
@@ -394,13 +395,12 @@ IVF_NPROBE = 3
 
 
 def ivf_topk(
-    emb: DataFrame, queries: DataFrame, k: int = 3, id_col: str = "vec_id",
-    vec_col: str = "embedding", nprobe: int = IVF_NPROBE,
+    emb: DataFrame, queries: DataFrame, k: int = 3, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
     """IVF-style ANN: coarse quantizer = deterministic seeded k-means
     (kmeans_centroids); every vector is assigned to its nearest
     centroid (argmax cosine, tie-break lowest centroid index); queries
-    probe their `nprobe` nearest cells (multi-probe — single-probe
+    probe their IVF_NPROBE nearest cells (multi-probe — single-probe
     recall on near-uniform vectors is bounded by the cell-share of the
     corpus).  Assignment is a broadcast join against the tiny centroid
     set; the search is an equi-join on cell id — the J9
@@ -420,7 +420,7 @@ def ivf_topk(
         return df.select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col))
 
     cells = _assign_nearest(vecs(emb), cents, vec_col)
-    q = _assign_probes(vecs(queries), cents, vec_col, nprobe)
+    q = _assign_probes(vecs(queries), cents, vec_col)
     return _cosine_topk(
         _side(cells, id_col, vec_col, "n", cell=F.col("c_idx")),
         _side(q, id_col, vec_col, "q", cell=F.col("c_idx")),
@@ -429,9 +429,9 @@ def ivf_topk(
     )
 
 
-def _sql_kmeans_ctes(table: str, k: int = IVF_CELLS, iters: int = IVF_ITERS) -> str:
+def _sql_kmeans_ctes(table: str) -> str:
     """CTE chain computing the same deterministic k-means: hash-ranked
-    init, `iters` unrolled assign/update rounds with the identical
+    init, IVF_ITERS unrolled assign/update rounds with the identical
     fixed-point integer mean.  Final centroids CTE is named `cents`
     with columns (c_idx, c_vec DOUBLE[])."""
     parts = [
@@ -440,11 +440,11 @@ def _sql_kmeans_ctes(table: str, k: int = IVF_CELLS, iters: int = IVF_ITERS) -> 
       SELECT row_number() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS c_idx,
              v AS c_vec
       FROM emb
-      QUALIFY c_idx <= {k}
+      QUALIFY c_idx <= {IVF_CELLS}
     )"""
     ]
     prev = "c0"
-    for i in range(1, iters + 1):
+    for i in range(1, IVF_ITERS + 1):
         cos = _sql_cos("e.v", "c.c_vec")
         parts.append(f"""a{i} AS (
       SELECT c_idx, v FROM (

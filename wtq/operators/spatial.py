@@ -43,11 +43,11 @@ def synth_points(df: DataFrame, key: str, mult_x: int, mult_y: int) -> DataFrame
     )
 
 
-def grid_radius_join(a: DataFrame, b: DataFrame, radius: float = RADIUS) -> DataFrame:
-    """All (a, b) pairs within `radius` (Euclidean).  Columns:
+def grid_radius_join(a: DataFrame, b: DataFrame) -> DataFrame:
+    """All (a, b) pairs within RADIUS (Euclidean).  Columns:
     a_id, b_id, dist (rounded 4).  a is assigned to its own cell;
     b is replicated to its 3×3 cell neighborhood."""
-    cell = lambda c: F.floor(c / radius).cast("long")  # noqa: E731
+    cell = lambda c: F.floor(c / RADIUS).cast("long")  # noqa: E731
     pa = a.select(
         F.col("id").alias("a_id"), F.col("x").alias("ax"), F.col("y").alias("ay"),
         cell(F.col("x")).alias("cx"), cell(F.col("y")).alias("cy"),
@@ -75,7 +75,7 @@ def grid_radius_join(a: DataFrame, b: DataFrame, radius: float = RADIUS) -> Data
     ) * (F.col("ay") - F.col("by"))
     return (
         pa.join(pb, ["cx", "cy"])
-        .filter(d2 <= F.lit(radius * radius))
+        .filter(d2 <= F.lit(RADIUS * RADIUS))
         .select("a_id", "b_id", F.round(F.sqrt(d2), 4).alias("dist"))
     )
 
@@ -83,7 +83,6 @@ def grid_radius_join(a: DataFrame, b: DataFrame, radius: float = RADIUS) -> Data
 def sql_grid_radius_join(
     a_table: str, a_key: str, a_mx: int, a_my: int,
     b_table: str, b_key: str, b_mx: int, b_my: int,
-    radius: float = RADIUS,
 ) -> str:
     """Naive quadratic oracle: distance filter over the cross join —
     independent of the grid trick, so a banding bug cannot self-confirm."""
@@ -99,5 +98,5 @@ def sql_grid_radius_join(
     SELECT a_id, b_id,
            round(sqrt((pa.x - pb.x) * (pa.x - pb.x) + (pa.y - pb.y) * (pa.y - pb.y)), 4) AS dist
     FROM pa CROSS JOIN pb
-    WHERE (pa.x - pb.x) * (pa.x - pb.x) + (pa.y - pb.y) * (pa.y - pb.y) <= {radius * radius}
+    WHERE (pa.x - pb.x) * (pa.x - pb.x) + (pa.y - pb.y) * (pa.y - pb.y) <= {RADIUS * RADIUS}
     """

@@ -14,7 +14,7 @@ Scale design (100 TB / 10^12 docs):
   * re-crawl dedup shuffles by url — at cluster scale the input
     Iceberg table is bucketed by murmur3(url) so this exchange is
     avoided entirely (storage-partitioned join/agg); see
-    wtq/sources/catalog.py.
+    tests/test_bucket_contract.py.
   * per-doc Python work is capped (langid 200 words, ppl 2000 chars) —
     the cost-bounding analog of the reference's st_subdivide
     (SURVEY.md §4).
@@ -69,11 +69,13 @@ def score_udf(texts: pd.Series) -> pd.DataFrame:
 
 
 def dedup_recrawls(pages: DataFrame) -> DataFrame:
-    """Keep the latest crawl per url (deterministic tie-break on text).
+    """Keep the latest crawl per url (deterministic tie-break on text,
+    NULL text last as in the oracle's sort, so a same-instant crawl
+    with text wins over one without).
 
     The reference's DISTINCT ON best-row-per-group pattern
     (proccess_data.sql:372-381) as a window top-1."""
-    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc(), F.col("text").asc())
+    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc(), F.col("text").asc_nulls_last())
     return (
         pages.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)

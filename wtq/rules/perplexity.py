@@ -18,8 +18,6 @@ from functools import lru_cache
 
 from wtq.rules.lexicon import CONTENT_WORDS, LANG_WORDS
 
-_ORDER = 3
-
 
 @lru_cache(maxsize=1)
 def _model() -> tuple[dict[str, int], dict[str, int], int]:
@@ -75,10 +73,10 @@ def _word_ll(w: str) -> tuple[float, int]:
 MAX_WORDS = 400
 
 
-def char_perplexity(text: str, max_words: int = MAX_WORDS) -> float:
+def char_perplexity(text: str) -> float:
     """Per-char perplexity under the trigram LM, computed word-by-word
     (each word scored in a space-padded context, totals pooled); 0.0
-    for empty text.  Work is capped at max_words per document to keep
+    for empty text.  Work is capped at MAX_WORDS per document to keep
     Arrow batches balanced (cost-bounding analog of st_subdivide,
     SURVEY.md §4)."""
     if not text:
@@ -89,7 +87,7 @@ def char_perplexity(text: str, max_words: int = MAX_WORDS) -> float:
     # column-wise sequential sums over the capped word list — sum()
     # adds left-to-right, the identical float chain of the per-word
     # accumulation loop (round-6 hot-path shape)
-    lls, ns = zip(*map(_word_ll, words[:max_words]))
+    lls, ns = zip(*map(_word_ll, words[:MAX_WORDS]))
     n = sum(ns)
     if n == 0:
         return 0.0

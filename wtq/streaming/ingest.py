@@ -6,16 +6,16 @@ it calls out is incremental processing via ``Trigger.AvailableNow``:
 the stream reads whatever is available, processes it with the same
 logic as batch, checkpoints, and stops — giving resumable incremental
 runs without a long-lived cluster.  This module provides that path
-for the events table (windowed rollups) and a custom stateful
-operator (per-user running counters) via ``applyInPandasWithState``.
+for the events table: windowed rollups and a streaming dedup +
+stream-static join.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+import os
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
 EVENTS_SCHEMA = T.StructType(
@@ -30,56 +30,34 @@ EVENTS_SCHEMA = T.StructType(
 )
 
 
-def _run_available_now(
-    stream_df: DataFrame,
-    checkpoint: str,
-    mode: str = "complete",
-    key_cols: list[str] | None = None,
-) -> DataFrame:
+def _run_available_now(stream_df: DataFrame, checkpoint: str) -> DataFrame:
     """Drain the stream with Trigger.AvailableNow through a foreachBatch
-    parquet sink and read the result back.
+    parquet sink (complete mode: each batch overwrites with the latest
+    full result) and read the result back.
 
     The round-1 memory sink stored the result table on the driver — a
     driver-side bottleneck anyone copying the pattern at scale would
-    inherit.  foreachBatch writes are executor-distributed: complete
-    mode overwrites with the latest full result; update mode appends
-    each micro-batch tagged with its batch id, and read-back keeps the
-    last emission per key (`key_cols` required)."""
+    inherit.  foreachBatch writes are executor-distributed."""
     out_dir = checkpoint.rstrip("/") + "_out"
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        if mode == "complete":
-            batch_df.write.mode("overwrite").parquet(out_dir)
-        else:
-            batch_df.withColumn("__batch", F.lit(batch_id)).write.mode("append").parquet(out_dir)
+        batch_df.write.mode("overwrite").parquet(out_dir)
 
     q = (
         stream_df.writeStream.foreachBatch(_sink)
-        .outputMode(mode)
+        .outputMode("complete")
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    import os
-
     if not os.path.exists(out_dir):
         # zero micro-batches fired (empty/missing source): behave like
         # the old memory sink and return an empty result, not a
         # PATH_NOT_FOUND crash
         spark = stream_df.sparkSession
         return spark.createDataFrame([], stream_df.schema)
-    result = stream_df.sparkSession.read.parquet(out_dir)
-    if mode != "complete":
-        if not key_cols:
-            raise ValueError("update-mode read-back needs key_cols to keep the last emission per key")
-        w = Window.partitionBy(*key_cols).orderBy(F.col("__batch").desc())
-        result = (
-            result.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn", "__batch")
-        )
-    return result
+    return stream_df.sparkSession.read.parquet(out_dir)
 
 
 def windowed_event_counts(spark: SparkSession, sf_dir: str, checkpoint: str) -> DataFrame:
@@ -164,101 +142,3 @@ SELECT upper(substr(event_type, 1, 1)) AS tier, count(*) AS n,
        round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4) AS total_value
 FROM events GROUP BY 1
 """
-
-
-PAGES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampNTZType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ]
-)
-
-
-def streaming_pipeline(spark: SparkSession, pages_path: str, checkpoint: str, out_dir: str) -> None:
-    """The quality-filter pipeline as an incremental job: the SAME
-    ``decide`` logic the batch path runs, driven by Structured
-    Streaming with ``Trigger.AvailableNow`` through a foreachBatch
-    parquet sink.  This is the snapshot-reprocess → incremental
-    upgrade path SURVEY.md §2.9 names: new crawl files land in the
-    directory, the next run processes only them, checkpoint state
-    carries forward.
-
-    Re-crawl dedup note: within a micro-batch the batch window dedup
-    applies verbatim; across batches, url-level latest-crawl selection
-    is the checkpoint/Iceberg MERGE concern (wtq/checkpoint.py) — a
-    streaming dropDuplicates would keep the FIRST sighting, which is
-    the wrong row for re-crawls, so it is deliberately not used here.
-    Equality with the batch pipeline on a snapshot is gated in
-    tests/test_streaming.py."""
-    from wtq.pipeline import decide
-
-    import os
-
-    # a file path must not widen into its parent directory's glob —
-    # sibling tables would stream through the pinned schema as
-    # all-null rows; restrict the glob to exactly the named file
-    if os.path.isdir(pages_path):
-        src_dir, pattern = pages_path, "*.parquet"
-    else:
-        src_dir, pattern = os.path.dirname(pages_path), os.path.basename(pages_path)
-    src = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("pathGlobFilter", pattern)
-        .parquet(src_dir)
-    )
-
-    def _process(batch_df, batch_id: int) -> None:
-        # per-batch directory with overwrite = idempotent under batch
-        # REPLAY: a crash between sink write and checkpoint commit
-        # re-runs the batch into the same path instead of appending a
-        # duplicate copy (read-back discovers `batch` as a partition
-        # column)
-        decide(batch_df, num_partitions=batch_df.sparkSession.sparkContext.defaultParallelism).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/batch={batch_id}")
-
-    q = (
-        src.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-_STATE_SCHEMA = "user_id long, n long, total double"
-_OUT_SCHEMA = "user_id long, n long, total double"
-
-
-def _update_user_state(key, pdfs, state: GroupState):
-    (user_id,) = key
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame([{"user_id": user_id, "n": n, "total": total}])
-
-
-def running_user_totals(spark: SparkSession, sf_dir: str, checkpoint: str) -> DataFrame:
-    """Custom stateful operator via applyInPandasWithState: per-user
-    running event count + value total (SURVEY.md §2.9 upgrade path)."""
-    src = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    stateful = (
-        src.groupBy("user_id")
-        .applyInPandasWithState(
-            _update_user_state,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType="n long, total double",
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    return _run_available_now(stateful, checkpoint, mode="update", key_cols=["user_id"])
