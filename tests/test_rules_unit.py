@@ -274,20 +274,6 @@ def test_video_stream_frame_walk():
         assert np.array_equal(a, b)
 
 
-def test_multimodal_stub_and_batching(spark):
-    """mapInPandas plumbing over a binary column: schema honored,
-    batches stream, one feature row per document."""
-    from pyspark.sql import functions as F
-
-    from wtq.operators.multimodal import extract_features, with_blob
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    feats = extract_features(with_blob(docs, "doc_id", "text"))
-    row = feats.filter(F.col("doc_id") == 0).collect()[0]
-    assert row.byte_len > 0 and len(row.embedding) == 4
-    assert feats.count() == docs.count()
-
-
 def test_signature_batches_edge_inputs():
     """Sentinel contracts for degenerate docs: empty/short texts get
     the sentinel minhash signature and a NULL simhash (out-of-band —

@@ -1,84 +1,21 @@
-"""Source parity tests: CSV with declared schema (reference S4), JSONL,
-and table IO roundtrips."""
+"""Binary-payload source plumbing: a documents table carried as a
+``binary`` column with a metadata struct, streamed through
+``mapInPandas`` feature extraction."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from wtq.sources.catalog import read_table, table_format, write_table
-from wtq.sources.files import read_csv, read_jsonl, write_csv, write_jsonl
+from wtq.operators.multimodal import extract_features, with_blob
 
 SF_DIR = "/root/testdata/sf0.001"
 
-NATION_SCHEMA = T.StructType(
-    [
-        T.StructField("n_nationkey", T.IntegerType()),
-        T.StructField("n_name", T.StringType()),
-        T.StructField("n_regionkey", T.IntegerType()),
-    ]
-)
-
-
-def test_csv_roundtrip_with_declared_schema(spark, tmp_path):
-    nation = spark.read.parquet(f"{SF_DIR}/nation.parquet")
-    p = str(tmp_path / "nation_csv")
-    write_csv(nation, p)
-    back = read_csv(spark, p, NATION_SCHEMA)
-    a = nation.orderBy("n_nationkey").collect()
-    b = back.orderBy("n_nationkey").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-def test_jsonl_roundtrip(spark, tmp_path):
-    nation = spark.read.parquet(f"{SF_DIR}/nation.parquet")
-    p = str(tmp_path / "nation_json")
-    write_jsonl(nation, p)
-    back = read_jsonl(spark, p, NATION_SCHEMA)
-    assert back.orderBy("n_nationkey").collect() == nation.orderBy("n_nationkey").collect()
-
-
-def test_table_io_fallback(spark, tmp_path):
-    # no Iceberg jar in the sandbox → parquet fallback, same call sites
-    assert table_format(spark) == "parquet"
-    df = spark.read.parquet(f"{SF_DIR}/region.parquet")
-    p = str(tmp_path / "tbl")
-    write_table(df, p)
-    assert read_table(spark, p).count() == df.count()
-
 
 def test_multimodal_stub_and_batching(spark):
-    """mapInPandas plumbing: schema honored, batches stream; the
-    decode seam dispatches real codecs for PNG/PPM/JPEG (round 5:
-    the JPEG stub became a real baseline decoder)."""
-    import pytest
-
-    from wtq.operators.multimodal import decode_image, extract_features, with_blob
-
+    """mapInPandas plumbing over a binary column: schema honored,
+    batches stream, one feature row per document."""
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     feats = extract_features(with_blob(docs, "doc_id", "text"))
     row = feats.filter(F.col("doc_id") == 0).collect()[0]
     assert row.byte_len > 0 and len(row.embedding) == 4
     assert feats.count() == docs.count()
-    with pytest.raises(ValueError):  # truncated JPEG: malformed, not a stub
-        decode_image(b"\xff\xd8\xff\xe0")
-    with pytest.raises(ValueError):  # truncated PNG signature: malformed, not a stub
-        decode_image(b"\x89PNG")
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    """Fragmented output (64 files) compacts to the target file count
-    with identical rows — the small-files maintenance op."""
-    import glob
-
-    from wtq.sources.files import compact_parquet
-
-    src, dst = str(tmp_path / "frag"), str(tmp_path / "compact")
-    orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
-    orders.repartition(64).write.parquet(src)
-    assert len(glob.glob(src + "/part-*")) == 64
-    n_files = compact_parquet(spark, src, dst, target_rows_per_file=1000)
-    assert len(glob.glob(dst + "/part-*")) == n_files < 64
-    a = sorted(r.o_orderkey for r in spark.read.parquet(dst).collect())
-    b = sorted(r.o_orderkey for r in orders.collect())
-    assert a == b

@@ -1,7 +1,10 @@
 """Structured Streaming tests: an AvailableNow drain equals the batch
-result, and stream-static scoring equals batch scoring."""
+result, a second drain over new files reads only them, and
+stream-static scoring equals batch scoring."""
 
 from __future__ import annotations
+
+import json
 
 from pyspark.sql import functions as F
 
@@ -22,6 +25,61 @@ def test_windowed_counts_equal_batch(spark, tmp_path):
     g = got[["window_ms", "event_type", "n"]].sort_values(["window_ms", "event_type"]).reset_index(drop=True)
     b = batch.sort_values(["window_ms", "event_type"]).reset_index(drop=True)
     assert g.equals(b)
+
+
+def test_streaming_pipeline_is_incremental(spark, tmp_path):
+    """New files landing in the input directory are processed by the
+    next run WITHOUT reprocessing the old ones — the checkpoint carries
+    the file-source state and the window aggregates forward (the
+    incremental property itself, not just batch parity).  A reprocessed
+    first file would double its windows' counts."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    events = pq.read_table(f"{SF_DIR}/events.parquet").sort_by("ts")
+    # split in event time so no row of the second file is late
+    half = events.num_rows // 2
+    first, second = events.slice(0, half), events.slice(half)
+    assert pc.max(first["ts"]).as_py() <= pc.min(second["ts"]).as_py()
+
+    def counts(df):
+        return df.groupBy("window_ms", "event_type").agg(F.sum("n").alias("n")).toPandas()
+
+    def batch(paths):
+        b = (
+            spark.read.parquet(*paths)
+            .groupBy(F.window(F.col("ts").cast("timestamp"), "1 hour").alias("w"), "event_type")
+            .agg(F.count("*").alias("n"))
+            .select(F.unix_millis("w.start").alias("window_ms"), "event_type", "n")
+        )
+        return counts(b)
+
+    def same(got, exp):
+        key = ["window_ms", "event_type"]
+        g = got.sort_values(key).reset_index(drop=True)
+        e = exp.sort_values(key).reset_index(drop=True)
+        return g.equals(e)
+
+    src, ckpt = tmp_path / "incoming", str(tmp_path / "ckpt")
+    (src / "batch=1").mkdir(parents=True)
+    pq.write_table(first, str(src / "batch=1" / "events.parquet"))
+    got1 = counts(windowed_event_counts(spark, str(src), ckpt))
+    assert same(got1, batch([str(src / "batch=1" / "events.parquet")]))
+
+    (src / "batch=2").mkdir()
+    pq.write_table(second, str(src / "batch=2" / "events.parquet"))
+    got2 = counts(windowed_event_counts(spark, str(src), ckpt))
+    assert int(got2.n.sum()) == events.num_rows  # first file NOT reprocessed
+    assert same(got2, batch([f"{SF_DIR}/events.parquet"]))
+
+    # the file-source log: the second run's micro-batch read only the new
+    # file (a run that ignored the checkpoint would re-list both)
+    read = {}
+    for log in sorted((tmp_path / "ckpt" / "sources" / "0").glob("[0-9]*")):
+        for line in log.read_text().splitlines()[1:]:
+            entry = json.loads(line)
+            read.setdefault(entry["batchId"], []).append(entry["path"].rsplit("/", 2)[-2])
+    assert read == {0: ["batch=1"], 1: ["batch=2"]}
 
 
 def test_streaming_classifier_scores_match_batch(spark, tmp_path):
