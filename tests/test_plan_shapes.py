@@ -4,6 +4,7 @@ wide exchange, and no Python UDF appears outside the scoring pass."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from wtq.pipeline import decide
@@ -16,6 +17,13 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_broadcast_dims_in_region_revenue(spark):
     df = QUERIES["region_revenue"](spark, SF_DIR)
     assert count_occurrences(df, "BroadcastHashJoin") >= 2  # nation, region
+
+
+@pytest.mark.parametrize("name", ["region_revenue", "cust_supp_nation_matrix"])
+def test_fact_join_hint_plans_shuffled_hash(spark, name):
+    """lineitem⋈orders carries a SHUFFLE_HASH hint in both queries; the
+    session leaves every other join to the planner's default."""
+    assert_in_plan(QUERIES[name](spark, SF_DIR), "ShuffledHashJoin")
 
 
 def test_filter_pushdown_pricing_summary(spark):

@@ -4,11 +4,13 @@ system runs, or is on a short list kept with a reason.
 A pure ``ast`` walk, no imports of the code under test.  The roots are
 the registry and its oracle (``QUERIES``, ``ORACLE_SQL``), the pipeline
 (``run_pipeline``, ``decide``), the build (``build_training_set``) and
-every definition in ``oracle/``, ``bench*.py``, ``perfbench/`` and
-``__spark_entry__.py``.  A reference is matched by module and name: a
-bare ``name`` resolves through the referring module's own definitions
-and imports, ``alias.attr`` through the module that ``alias`` names, so
-``pd.read_csv`` never counts as a use of some ``wtq`` ``read_csv``.
+every definition in ``oracle/``, ``bench*.py``, ``perfbench/``,
+``__spark_entry__.py`` and ``wtq/daemon.py`` (the Python worker
+daemon, which Spark starts by module name).  A reference is matched by
+module and name: a bare ``name`` resolves through the referring
+module's own definitions and imports, ``alias.attr`` through the
+module that ``alias`` names, so ``pd.read_csv`` never counts as a use
+of some ``wtq`` ``read_csv``.
 Re-exports are followed to the defining module.  Reaching a class
 reaches all of its methods.  Dunder names (``__getattr__``,
 ``__version__``) are module protocol, not definitions, and are skipped.
@@ -29,7 +31,9 @@ ROOTS = {
     ("wtq.pipeline", "decide"),
     ("wtq.build", "build_training_set"),
 }
-ROOT_FILES = ("oracle/*.py", "bench*.py", "perfbench/*.py", "__spark_entry__.py")
+# wtq/daemon.py is started by name (`python -m wtq.daemon`, named in
+# get_spark's config), so no reference leads to it
+ROOT_FILES = ("oracle/*.py", "bench*.py", "perfbench/*.py", "__spark_entry__.py", "wtq/daemon.py")
 
 # (module, name) -> why it stays although no root reaches it
 KEPT = {
@@ -40,7 +44,6 @@ KEPT = {
     ("wtq.checkpoint", "run_checkpointed"): "resumable-from-checkpoint run (test_checkpoint.py)",
     ("wtq.checkpoint", "read_decided"): "resumable-from-checkpoint run (test_checkpoint.py)",
     ("wtq.checkpoint", "read_metrics"): "resumable-from-checkpoint run (test_checkpoint.py)",
-    ("wtq.operators.dedup", "lsh_bucket_stats"): "occupancy audit for a caller's own LSH pair run",
     ("wtq.rules.registry", "registry_df"): "the err_codes dimension table",
     ("wtq.rules.registry", "rule_rows"): "the err_codes dimension rows",
     ("wtq.pipeline", "rule_fire_counts"): "the err_codes join",

@@ -243,7 +243,7 @@ def test_duplicate_flood_bounded_buckets_and_expanded_clusters(spark):
     representative per exact fingerprint before banding (bucket size
     in rep space = 1), then re-expands the members into the cluster.
     Also pins the cap itself and the sentinel-group inclusion."""
-    from wtq.operators.dedup import LSH_BUCKET_CAP, dedup_clusters, lsh_bucket_stats
+    from wtq.operators.dedup import LSH_BUCKET_CAP, dedup_clusters, dedup_resolution
 
     flood = [(i, "the same viral boilerplate page body repeated everywhere") for i in range(1000)]
     near = [
@@ -262,29 +262,37 @@ def test_duplicate_flood_bounded_buckets_and_expanded_clusters(spark):
     # byte-identical sentinel docs (< k words) cluster via fingerprint
     assert clusters[3000].n_docs == 2
 
-    # rep space: one doc per fingerprint -> every bucket has exactly 1
-    # member and the stats audit shows nothing over the cap
-    reps = df.dropDuplicates(["text"])
-    stats = lsh_bucket_stats(reps, "doc_id", "text").collect()
-    assert max(r.bucket_size for r in stats) <= 2  # the near-dup pair shares buckets
+    # rep space: one doc per fingerprint, so the flood is one member of
+    # its buckets and the occupancy audit shows nothing over the cap
+    _, stats = dedup_resolution(df, "doc_id", "text")
+    stats = stats.collect()
+    assert max(r.bucket_size for r in stats) == 2  # the near-dup pair shares buckets
     assert not any(r.over_cap for r in stats)
 
     # the drop contract for buckets exceeding the cap is pinned in
-    # test_lsh_bucket_cap_drops_oversized_bucket below
+    # test_lsh_bucket_cap_degrades_to_star_edges below
     assert LSH_BUCKET_CAP >= 1000
 
 
 def test_lsh_bucket_stats_audits_caller_supplied_cap(spark):
-    """The audit must flag over_cap against the SAME cap the pair
-    generator ran with — with bucket_cap=5, the 50-doc flood bucket
-    reads as over the cap even though the default cap would not."""
+    """The occupancy audit dedup_resolution returns flags over_cap
+    against the SAME cap the pair stage ran with — with bucket_cap=5,
+    the near-duplicate band buckets read as over the cap even though
+    the default cap would not.  Near, not byte-identical, duplicates:
+    exact-duplicate collapse runs first and would leave one member.
+    Each band has one shared bucket; 35–48 of the 50 documents fall in
+    it, and the distinct last words make 62 one-member buckets."""
     import wtq.operators.dedup as D
 
-    flood = [(i, "the same viral boilerplate page body repeated everywhere") for i in range(50)]
+    body = "the same viral boilerplate page body repeated everywhere on every site we crawled"
+    flood = [(i, f"{body} w{i}") for i in range(50)]
     df = spark.createDataFrame(flood, "doc_id long, text string")
-    stats = D.lsh_bucket_stats(df, "doc_id", "text", bucket_cap=5).collect()
-    assert any(r.over_cap for r in stats if r.bucket_size == 50)
-    default_stats = D.lsh_bucket_stats(df, "doc_id", "text").collect()
+    stats = D.dedup_resolution(df, "doc_id", "text", bucket_cap=5)[1].collect()
+    assert max(r.bucket_size for r in stats) == 48
+    assert sum(r.n_buckets for r in stats if r.over_cap) == D.LSH_BANDS
+    assert all(r.over_cap == (r.bucket_size > 5) for r in stats)
+    default_stats = D.dedup_resolution(df, "doc_id", "text")[1].collect()
+    assert {r.bucket_size for r in default_stats} == {r.bucket_size for r in stats}
     assert not any(r.over_cap for r in default_stats)
 
 

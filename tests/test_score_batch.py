@@ -16,6 +16,8 @@ from pyspark.sql import types as T
 import wtq.rules.batch as B
 from wtq.pipeline import SCORE_SCHEMA
 from wtq.rules import heuristics as H
+from wtq.rules import langid as L
+from wtq.rules import perplexity as P
 from wtq.rules.langid import predict_lang
 from wtq.rules.perplexity import char_perplexity
 from wtq.rules.scrub import scrub_text
@@ -80,6 +82,47 @@ def test_sweep_sf01_bitwise_equal_per_document(corpus, size):
         want = exp.iloc[lo : lo + size].reset_index(drop=True)
         bad = mismatches(got, want)
         assert not bad, (size, lo, bad)
+
+
+def _generated_docs(n: int = 300) -> list[str]:
+    """Documents of words the sf0.1 corpus lacks: lone surrogates, NUL,
+    combining marks, long CJK runs, astral and Latin letters."""
+    rng = random.Random(13)
+    pools = [
+        [chr(c) for c in range(0xD800, 0xE000, 97)],
+        ["\x00", "a\x00", "\x00b"],
+        [chr(c) for c in range(0x300, 0x370, 5)],
+        [chr(c) for c in range(0x4E00, 0x9FFF, 211)],
+        [chr(c) for c in range(0x1F300, 0x1F400, 17)] + [chr(0x10FFFF)],
+        list("abcdefghijklmnopqrstuvwxyzéßſİ"),
+    ]
+
+    def word():
+        if rng.random() < 0.05:  # a long CJK run is one word
+            return "".join(rng.choice(pools[3]) for _ in range(rng.randint(400, 3000)))
+        return "".join(
+            rng.choice(rng.choice(pools)) for _ in range(rng.randint(1, 12))
+        )
+
+    return [" ".join(word() for _ in range(rng.randint(1, 120))) for _ in range(n)]
+
+
+def test_cold_sweep_matches_warm_and_reference(corpus):
+    """A worker that has seen none of the words: every memo cleared, the
+    sf0.1 texts plus generated words scored cold, then warm.  Both
+    passes equal the per-document reference bit for bit, and the
+    kernel's miss path leaves the reference's own word memo empty."""
+    texts, exp = corpus
+    extra = _generated_docs()
+    B._FEATURES.clear()
+    P._WORD_LL_MEMO.clear()
+    L._WORD_SCORES_MEMO.clear()
+    cold = B.score_batch(pd.Series(texts + extra))
+    assert not P._WORD_LL_MEMO
+    warm = B.score_batch(pd.Series(texts + extra))
+    want = pd.concat([exp, reference(extra)], ignore_index=True)
+    assert not mismatches(cold, want)
+    assert not mismatches(warm, want)
 
 
 def test_empty_and_all_none_batches():

@@ -30,7 +30,6 @@ def __getattr__(name):
         "connected_components": ("wtq.operators.dedup", "connected_components"),
         "dedup_clusters": ("wtq.operators.dedup", "dedup_clusters"),
         "dedup_resolution": ("wtq.operators.dedup", "dedup_resolution"),
-        "lsh_bucket_stats": ("wtq.operators.dedup", "lsh_bucket_stats"),
         "brute_force_topk": ("wtq.operators.similarity", "brute_force_topk"),
         "lsh_top1": ("wtq.operators.similarity", "lsh_top1"),
         "ivf_topk": ("wtq.operators.similarity", "ivf_topk"),

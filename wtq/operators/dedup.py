@@ -249,8 +249,8 @@ def minhash_lsh_pairs(
     # but-not-exact boilerplate floods) from all-pairs to star edges
     # rather than quadratically exploding — the n-gram path's
     # NGRAM_DF_CAP discipline, minus its recall loss.  Over-cap
-    # buckets are observable via lsh_bucket_stats.  Memory bound of
-    # the one collect_list row for a monster bucket: IDS ONLY (text
+    # buckets are observable in dedup_resolution's stats.  Memory bound
+    # of the one collect_list row for a monster bucket: IDS ONLY (text
     # never enters this operator's shuffle), so a B-member bucket
     # costs ~8·B bytes in one aggregation buffer — a 10⁸-member flood
     # is ~0.8 GB, inside a single task's budget; beyond that, raise
@@ -312,24 +312,11 @@ def _minhash_buckets(
     ).filter(~F.col("bucket").endswith(sentinel_bucket))
 
 
-def lsh_bucket_stats(
-    df: DataFrame, id_col: str, text_col: str, bucket_cap: int = LSH_BUCKET_CAP
-) -> DataFrame:
-    """Bucket-occupancy audit for minhash LSH: one row per bucket size
-    with the number of buckets that size and whether they exceed
-    `bucket_cap` — the observability hook for the cap's drop path.
-    Pass the SAME bucket_cap given to minhash_lsh_pairs /
-    simhash_near_pairs, or the over_cap flag audits a different cap
-    than the one that dropped buckets."""
-    return _bucket_stats_from_buckets(
-        _minhash_buckets(df, id_col, text_col), bucket_cap
-    )
-
-
 def _bucket_stats_from_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
-    """Occupancy histogram over a (doc, bucket) table — shared by the
-    standalone audit above and the single-signature-pass resolution
-    path (round-6)."""
+    """Occupancy histogram over a (doc, bucket) table: one row per
+    bucket size with the number of buckets that size and whether they
+    exceed `bucket_cap` — the observability hook for the cap's star
+    path, returned by dedup_resolution."""
     return (
         buckets.groupBy("bucket")
         .agg(F.count("*").alias("bucket_size"))
@@ -588,10 +575,9 @@ def dedup_resolution(
     stage, so a corpus with 10⁵ identical boilerplate pages puts ONE
     doc — not 10⁵ — into each band bucket (bounded collect_list,
     linear not quadratic).  Exact-dup members are re-attached to their
-    representative's cluster afterwards.  `bucket_cap` rides through to
-    minhash_lsh_pairs (callers auditing occupancy via lsh_bucket_stats
-    must pass the SAME cap, or the audit reports on a cap the pair
-    stage never applied).
+    representative's cluster afterwards.  `bucket_cap` is the pair
+    stage's cap (see minhash_lsh_pairs), and the returned audit flags
+    buckets over that same cap.
 
     Semantics: the same components as running LSH over the full corpus
     PLUS an edge between every exact duplicate and its group minimum —
@@ -603,9 +589,10 @@ def dedup_resolution(
     silently missed them.  Output covers exactly the docs in a cluster
     of ≥ 2 (pair-connected or fingerprint-connected).
 
-    Returns ``(labels, stats)``: ``stats`` is the lsh_bucket_stats
-    occupancy histogram over the SAME representative bucket table the
-    pair stage consumed — the build's audit costs one materialized
+    Returns ``(labels, stats)``: ``stats`` is the bucket-occupancy
+    histogram (``bucket_size``, ``n_buckets``, ``over_cap``) over the
+    SAME representative bucket table the pair stage consumed — the
+    build's audit costs one materialized
     ids-only bucket table instead of a second full signature pass
     (round-6).  `rebalance` rides through to minhash_signatures (the
     build passes False for its already core-wide checkpointed kept

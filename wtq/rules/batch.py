@@ -39,7 +39,8 @@ Bit-identity rules (DEVNOTES, "Batch kernels and bit-identity"):
 from __future__ import annotations
 
 import math
-from itertools import chain, count, repeat
+from functools import lru_cache
+from itertools import chain, count, product, repeat
 
 import numpy as np
 import pandas as pd
@@ -59,7 +60,8 @@ _NL = len(L._LANGS)
 _UND = len(L._LANGS)  # pred_lang code for "und"
 _ZH = L._LANGS.index("zh")
 _LANG_NAMES = np.array(L._LANGS + ["und"], dtype=object)
-_SYMBOL_CPS = np.array([ord(c) for c in R.SYMBOLS], np.uint32)
+_IS_SYMBOL = np.zeros(0x110000, bool)  # indexed by code point
+_IS_SYMBOL[[ord(c) for c in R.SYMBOLS]] = True
 
 
 def _code_points(words: list[str]):
@@ -127,21 +129,22 @@ class _FeatureTable:
             rows[:] = -1
             miss = np.arange(len(words))
         new = words[miss].tolist()
-        lower = [w.lower() for w in new]
+        lower = list(map(str.lower, new))
         lo, hi = self.n, self.n + len(new)
         if hi > len(self.wlen):
             self._grow(hi)
         cp, ends = _code_points(new)
         self.wlen[lo:hi] = np.diff(ends, prepend=0)
-        self.nsym[lo:hi] = _per_word(np.isin(cp, _SYMBOL_CPS), ends)
+        self.nsym[lo:hi] = _per_word(_IS_SYMBOL[cp], ends)
         self.ncjk[lo:hi] = _per_word((cp >= L.CJK_FIRST) & (cp <= L.CJK_LAST), ends)
         cp, ends = _code_points(lower)
         self.llen[lo:hi] = np.diff(ends, prepend=0)
         self.nonlat[lo:hi] = _per_word(cp >= L.NON_LATIN_FIRST, ends)
-        self.stop[lo:hi] = [w in STOPWORDS for w in lower]
+        n = len(new)
+        self.stop[lo:hi] = np.fromiter(map(STOPWORDS.__contains__, lower), bool, n)
         self.lorem[lo:hi] = ["lorem" in w for w in lower]
-        self.alpha[lo:hi] = [w.isalpha() for w in lower]
-        self.lex[lo:hi] = [w in L._LATIN_LEXICON for w in lower]
+        self.alpha[lo:hi] = np.fromiter(map(str.isalpha, lower), bool, n)
+        self.lex[lo:hi] = np.fromiter(map(L._LATIN_LEXICON.__contains__, lower), bool, n)
         self.nbg[lo:hi] = -1
         self.ntri[lo:hi] = -1
         rows[miss] = np.arange(lo, hi)
@@ -161,12 +164,56 @@ class _FeatureTable:
     def fill_perplexity(self, words: np.ndarray, rows: np.ndarray) -> None:
         todo = np.flatnonzero(self.ntri[rows] < 0)
         if todo.size:
-            out = [P._word_ll(w.lower()) for w in words[todo].tolist()]
-            self.ll[rows[todo]] = [ll for ll, _ in out]
-            self.ntri[rows[todo]] = [n for _, n in out]
+            lower = list(map(str.lower, words[todo].tolist()))
+            self.ll[rows[todo]], self.ntri[rows[todo]] = _word_lls(lower)
 
 
 _FEATURES = _FeatureTable()
+
+
+@lru_cache(maxsize=1)
+def _ppl_table():
+    """perplexity._word_ll's log-probability term of every trigram, as
+    a dense table over the model's alphabet: (code point -> alphabet
+    index, flat terms indexed (a·A + b)·A + c, A).  Index 0 stands for
+    every code point outside the alphabet, as the empty string, so the
+    terms come from the reference's own expressions: a trigram or
+    context holding it is never a model key."""
+    tri, bi, vocab = P._model()
+    chars = [""] + sorted({c for t in tri for c in t})
+    index = np.zeros(0x110000, np.min_scalar_type(len(chars)))
+    index[[ord(c) for c in chars[1:]]] = np.arange(1, len(chars))
+    term = [
+        math.log((tri.get(a + b + c, 0) + 1) / (bi.get(a + b, 0) + vocab))
+        for a, b, c in product(chars, repeat=3)
+    ]
+    return index, np.array(term), len(chars)
+
+
+def _word_lls(words: list[str]):
+    """perplexity._word_ll of every word at once, bit for bit: (ll,
+    ntri).  The words are laid out space-padded ("  " + w + " ") in one
+    array of alphabet indices; each word's trigram terms are then
+    contiguous, and the words of one trigram count are summed left to
+    right as one 2-D gather."""
+    index, term, A = _ppl_table()
+    cp, ends = _code_points(words)
+    n = np.diff(ends, prepend=0)
+    pad = np.full(len(cp) + 3 * len(words), index[ord(" ")], np.intp)
+    pad[np.arange(len(cp)) + np.repeat(3 * np.arange(len(words)) + 2, n)] = index[cp]
+    # a trigram starts at every padded position but a word's last two
+    starts = np.ones(len(pad) - 2, bool)
+    pend = ends + 3 * np.arange(1, len(words) + 1)
+    starts[pend[:-1] - 1] = starts[pend[:-1] - 2] = False
+    terms = term[((pad[:-2] * A + pad[1:-1]) * A + pad[2:])[starts]]
+    ntri = n + 1
+    first = np.cumsum(ntri) - ntri  # each word's first term
+    ll = np.empty(len(words))
+    order = np.argsort(ntri, kind="stable")
+    for grp in np.split(order, np.flatnonzero(np.diff(ntri[order])) + 1):
+        cols = first[grp, None] + np.arange(ntri[grp[0]])
+        ll[grp] = np.add.accumulate(terms[cols], axis=1)[:, -1]
+    return ll, ntri
 
 
 def _intern(parts: list[list[str]]):

@@ -8,7 +8,8 @@ rule P-1.
 
 ``char_perplexity`` is the per-document reference: the oracle calls
 it, and the pipeline's batch kernel (wtq/rules/batch.py) reproduces it
-bit for bit from the same per-word log-likelihoods (``_word_ll``).
+bit for bit, computing ``_word_ll`` for all of a batch's new words at
+once from the same model and the same per-trigram expression.
 """
 
 from __future__ import annotations

@@ -40,10 +40,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("WTQ_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # let the planner choose shuffled-hash over sort-merge when its
-        # size conditions hold (guide §3.1/§9, round-6) — strategy
-        # choice only, never results
-        .config("spark.sql.join.preferSortMergeJoin", "false")
+        # Python workers fork from wtq/daemon.py: imports preloaded and
+        # frozen out of the per-task gc, no per-task zip directory re-read
+        .config("spark.python.daemon.module", "wtq.daemon")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
