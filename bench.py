@@ -186,9 +186,6 @@ def main() -> None:
     ]
     q_times: dict[str, float] = {}
     q_samples: dict[str, list[float]] = {}
-    from wtq.queries import EXTRA_QUERIES
-
-    QUERIES = {**QUERIES, **EXTRA_QUERIES}
     for name in headline:
         # best-of-3: the VM throttles under sustained load — the same
         # warm query has measured 2.3s and 9.7s minutes apart, so two

@@ -46,19 +46,18 @@ def main() -> None:
     ap.add_argument("--out", default="")
     args = ap.parse_args()
 
-    from wtq.queries import EXTRA_QUERIES, QUERIES
+    from wtq.queries import QUERIES
     from wtq.session import get_spark
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark("wtq-bench-extra", master=f"local[{cpus}]", shuffle_partitions=cpus)
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
-    all_q = {**QUERIES, **EXTRA_QUERIES}
     names = [n for n in args.queries.split(",") if n] or list(QUERIES)
     results: dict[str, float] = {}
     samples: dict[str, list[float]] = {}
     for name in names:
-        fn = all_q[name]
+        fn = QUERIES[name]
         if args.plans_suffix:
             os.makedirs(args.plans_dir, exist_ok=True)
             with open(os.path.join(args.plans_dir, f"{name}_{args.plans_suffix}.txt"), "w") as f:

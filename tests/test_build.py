@@ -255,3 +255,27 @@ def test_build_one_class_seed_fails_before_pipeline(spark, pages_path, tmp_path,
         build_training_set(spark, pages_path, out, classifier_seed=seed)
     assert calls == []
     assert not os.path.exists(out)
+
+
+def test_build_empty_stage_fails_before_overwrite(spark, tmp_path):
+    """A build whose quality filter keeps nothing raises a ValueError
+    naming that stage, and a corpus already at out_dir stays readable
+    (an overwrite with nothing would leave a bare _SUCCESS)."""
+    from datetime import datetime, timezone
+
+    import pytest
+
+    ts = datetime(2024, 5, 1, tzinfo=timezone.utc)
+    pages = str(tmp_path / "pages")
+    spark.createDataFrame(
+        [(f"https://short.example/{i}", ts, "too short", "en") for i in range(3)],
+        "url string, warc_ts timestamp, text string, lang string",
+    ).write.parquet(pages)
+    out = str(tmp_path / "out")
+    spark.createDataFrame(
+        [("https://old.example/0", "old text", 2)], "url string, text string, n_tokens int"
+    ).write.parquet(f"{out}/split=train")
+
+    with pytest.raises(ValueError, match="10_quality_kept"):
+        build_training_set(spark, pages, out, num_partitions=4)
+    assert [r.url for r in spark.read.parquet(out).collect()] == ["https://old.example/0"]

@@ -138,51 +138,3 @@ def test_end_to_end_wrapper_matches_manual_composition(spark):
     assert auto == manual
     by_id = {t[0]: t for t in auto}
     assert by_id[200][3] and not by_id[201][3]  # keep_pred separates held-out docs
-
-
-def test_threshold_exact_kth_largest(spark):
-    """threshold = k-th largest score exactly, k = max(1, n·num // den),
-    and score >= threshold keeps at least k docs."""
-    import random
-
-    from wtq.operators.classifier import score_threshold_for_keep_rate
-
-    rng = random.Random(3)
-    vals = [rng.randint(-1000, 1000) for _ in range(237)] + [500] * 5  # planted ties
-    scored = spark.createDataFrame([(v,) for v in vals], "score_micro long")
-    for num, den in ((1, 5), (1, 2), (9, 10), (1, 237 + 5), (1, 1)):
-        (row,) = score_threshold_for_keep_rate(scored, num, den).collect()
-        k = max(1, len(vals) * num // den)
-        assert row["k"] == k and row["n"] == len(vals)
-        assert row["threshold_micro"] == sorted(vals, reverse=True)[k - 1], (num, den)
-        kept = [v for v in vals if v >= row["threshold_micro"]]
-        assert len(kept) >= k
-
-
-def test_threshold_partition_invariance(spark):
-    from wtq.operators.classifier import score_threshold_for_keep_rate
-
-    vals = [(i * 37) % 1009 - 500 for i in range(400)]
-    a = spark.createDataFrame([(v,) for v in vals], "score_micro long").repartition(1)
-    b = spark.createDataFrame([(v,) for v in vals], "score_micro long").repartition(17)
-    ra = score_threshold_for_keep_rate(a, 1, 4).collect()
-    rb = score_threshold_for_keep_rate(b, 1, 4).collect()
-    assert ra == rb and len(ra) == 1
-
-
-def test_threshold_rejects_bad_rate(spark):
-    from wtq.operators.classifier import score_threshold_for_keep_rate
-
-    scored = spark.createDataFrame([(1,)], "score_micro long")
-    for num, den in ((0, 5), (6, 5), (-1, 5)):
-        with pytest.raises(ValueError):
-            score_threshold_for_keep_rate(scored, num, den)
-
-
-def test_threshold_empty_input_returns_no_row(spark):
-    """Empty scored input → empty result (no threshold exists), not an
-    error — callers gate on row presence."""
-    from wtq.operators.classifier import score_threshold_for_keep_rate
-
-    empty = spark.createDataFrame([], "score_micro long")
-    assert score_threshold_for_keep_rate(empty, 1, 5).count() == 0

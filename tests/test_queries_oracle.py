@@ -15,17 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from wtq.operators import text as X
-from wtq.queries import (
-    EXTRA_ORACLE_SQL,
-    EXTRA_QUERIES,
-    ORACLE_SQL,
-    QUERIES,
-)
-
-# beyond-cap extras (see wtq/queries.py EXTRA registry note) get the
-# identical differential gate here, since the driver caps at 50
-ALL_QUERIES = {**QUERIES, **EXTRA_QUERIES}
-ALL_ORACLE_SQL = {**ORACLE_SQL, **EXTRA_ORACLE_SQL}
+from wtq.queries import ORACLE_SQL, QUERIES
 
 import os
 
@@ -61,10 +51,10 @@ def _normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
 
 
-@pytest.mark.parametrize("name", sorted(ALL_QUERIES))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(name, spark, duck):
-    got = _normalize(ALL_QUERIES[name](spark, SF_DIR).toPandas())
-    exp = _normalize(duck.execute(ALL_ORACLE_SQL[name]).fetchdf())
+    got = _normalize(QUERIES[name](spark, SF_DIR).toPandas())
+    exp = _normalize(duck.execute(ORACLE_SQL[name]).fetchdf())
     assert list(got.columns) == list(exp.columns), (list(got.columns), list(exp.columns))
     assert len(got) == len(exp), f"row count {len(got)} != {len(exp)}"
     if len(got):
@@ -73,7 +63,6 @@ def test_query_matches_oracle(name, spark, duck):
 
 def test_all_queries_have_oracles():
     assert set(QUERIES) == set(ORACLE_SQL)
-    assert set(EXTRA_QUERIES) == set(EXTRA_ORACLE_SQL)
 
 
 def test_driver_registry_stays_at_cap():
@@ -108,7 +97,7 @@ HOSTILE_TEXTS = [
     "ſo",
 ]
 HOSTILE_QUERIES = [
-    "rule_metrics", "doc_decisions", "source_quality_gate", "lang_markers", "text_metrics",
+    "doc_decisions", "source_quality_gate", "lang_markers", "text_metrics",
 ]
 # text_metrics.fp (md5 of lower(text)) is a known open gap on these
 # inputs — İ, final sigma and word-less text; DEVNOTES "Engine-parity"
@@ -137,8 +126,8 @@ def hostile(tmp_path_factory):
 def test_hostile_text_matches_oracle(name, spark, hostile):
     sf_dir, con = hostile
     skip = HOSTILE_SKIP_COLS.get(name, [])
-    got = _normalize(ALL_QUERIES[name](spark, sf_dir).toPandas().drop(columns=skip))
-    exp = _normalize(con.execute(ALL_ORACLE_SQL[name]).fetchdf().drop(columns=skip))
+    got = _normalize(QUERIES[name](spark, sf_dir).toPandas().drop(columns=skip))
+    exp = _normalize(con.execute(ORACLE_SQL[name]).fetchdf().drop(columns=skip))
     assert len(got) == len(exp) > 0
     pd.testing.assert_frame_equal(got, exp, check_dtype=False, check_exact=True)
 

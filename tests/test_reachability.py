@@ -12,7 +12,9 @@ module's own definitions and imports, ``alias.attr`` through the
 module that ``alias`` names, so ``pd.read_csv`` never counts as a use
 of some ``wtq`` ``read_csv``.
 Re-exports are followed to the defining module.  Reaching a class
-reaches all of its methods.  Dunder names (``__getattr__``,
+reaches all of its methods.  A module-level ``assert`` is a check on
+definitions, not a use of them: a table that only an import-time
+assert reads is unreached.  Dunder names (``__getattr__``,
 ``__version__``) are module protocol, not definitions, and are skipped.
 """
 
@@ -82,7 +84,10 @@ class _Module:
                     self.imports.setdefault(a.asname or a.name, set()).add(f"{node.module}.{a.name}")
 
     def top_level_code(self) -> list[ast.AST]:
-        return [n for n in self.tree.body if not _defined_names(n)]
+        return [
+            n for n in self.tree.body
+            if not _defined_names(n) and not isinstance(n, ast.Assert)
+        ]
 
 
 def _defined_names(node: ast.AST) -> list[str]:

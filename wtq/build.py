@@ -94,7 +94,9 @@ def build_training_set(
     splits are written with (url, text, n_tokens) columns.  Lineage has
     two row families: `NN_*` document counts (monotone non-increasing
     through the stages) and `6N_lsh_*` audit gauges (over-cap bucket
-    count and max bucket size — NOT document counts).
+    count and max bucket size — NOT document counts).  A document
+    stage that keeps nothing raises `ValueError` naming it, before the
+    write, so an existing corpus at `out_dir` is left as it was.
     """
     # 1. quality filter with both curation passes.  Round-6: default
     # the pipeline's partition count to the configured parallelism —
@@ -225,22 +227,29 @@ def build_training_set(
             F.when(bucket < 980, "train").when(bucket < 990, "val").otherwise("test")
         )
         final = final.withColumn("split", split)
-        final.write.mode("overwrite").partitionBy("split").parquet(out_dir)
 
-        # every stage frame is checkpointed/written at this point, so the
-        # five lineage counts are independent tiny jobs — run them
-        # concurrently (guide §2.6: back-fill, don't serialize)
+        # every stage frame is checkpointed at this point, so the four
+        # lineage counts are independent tiny jobs — run them
+        # concurrently (guide §2.6: back-fill, don't serialize).  They
+        # run before the write: an overwrite with nothing would replace
+        # a previous corpus with a bare _SUCCESS
         stage_frames = {
             "10_quality_kept": quality_kept,
             "20_after_dedup": deduped,
             "30_after_decontam": clean,
             "40_after_budget": final,
-            "50_written": spark.read.parquet(out_dir),
         }
         count_futs = {k: _pool.submit(df.count) for k, df in stage_frames.items()}
-        counts = {"00_input": _fut_input.result()}
-        counts.update({k: f.result() for k, f in count_futs.items()})
+        counts = {k: f.result() for k, f in count_futs.items()}
         counts.update(classifier_count)
+        empty = [k for k, n in sorted(counts.items()) if n == 0]
+        if empty:
+            raise ValueError(
+                f"build stage {empty[0]} kept no documents; {out_dir} was not written"
+            )
+        final.write.mode("overwrite").partitionBy("split").parquet(out_dir)
+        counts["50_written"] = spark.read.parquet(out_dir).count()
+        counts["00_input"] = _fut_input.result()
         row = _fut_audit.result()
         counts["60_lsh_over_cap_buckets"] = row.n_over
         counts["61_lsh_max_bucket_size"] = row.max_size

@@ -31,7 +31,7 @@ float-summation nondeterminism at any partitioning or parallelism.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from wtq.operators.text import sql_words, words
@@ -161,62 +161,6 @@ def nb_quality_scores(
     weights, consts = train_nb_weights(labeled, text_col=text_col, label_col="y")
     return nb_score(
         docs.filter(~seed_pred), weights, consts, text_col=text_col, id_cols=id_cols
-    )
-
-
-def score_threshold_for_keep_rate(
-    scored: DataFrame,
-    keep_num: int,
-    keep_den: int,
-    score_col: str = "score_micro",
-) -> DataFrame:
-    """Exact DCLM-style calibration: the threshold that keeps the top
-    ``keep_num/keep_den`` fraction of documents by score.
-
-    Returns a one-row frame (threshold_micro, k, n): ``k = max(1,
-    n·keep_num // keep_den)`` and ``threshold_micro`` is the k-th
-    LARGEST score — ``score >= threshold`` keeps at least k docs (ties
-    at the threshold keep more; integer scores make the frontier
-    exact and rerun-stable).
-
-    Scale shape (the order_value_deciles discipline — no global
-    single-task sort, no whole-column percentile buffer): range
-    repartition on score desc → per-partition local index
-    (monotonically_increasing_id high/low bits) → global rank = local
-    index + broadcast prefix-sum offsets; the only single-partition
-    work is the ≤ parallelism-row offsets aggregate.  Equal scores
-    co-locate under range partitioning and rank contiguously, so the
-    value at rank k is unique regardless of tie order.
-    """
-    if not (0 < keep_num <= keep_den):
-        raise ValueError(f"keep rate must be in (0, 1]: {keep_num}/{keep_den}")
-    base = (
-        scored.select(F.col(score_col).alias("s"))
-        .repartitionByRange(F.col("s").desc())
-        .sortWithinPartitions(F.col("s").desc())
-        .withColumn("mid", F.monotonically_increasing_id())
-        .withColumn("pid", F.shiftrightunsigned("mid", 33).cast("int"))
-        .withColumn("lidx", F.col("mid").bitwiseAND((1 << 33) - 1))
-        .localCheckpoint(eager=True)  # ranks + counts read ONE materialization
-    )
-    counts = base.groupBy("pid").agg(F.count("*").alias("cnt"))
-    w_ofs = Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "pid", F.coalesce(F.sum("cnt").over(w_ofs), F.lit(0)).alias("offset")
-    )
-    total = counts.agg(F.sum("cnt").alias("n"))
-    # integer arithmetic end-to-end: `div` keeps k exact at any n
-    # (a double-division floor loses exactness past 2^53)
-    k = F.greatest(F.lit(1), F.expr(f"(n * {keep_num}) div {keep_den}")).cast("long")
-    return (
-        base.join(F.broadcast(offsets), "pid")
-        .crossJoin(F.broadcast(total))
-        .filter(F.col("offset") + F.col("lidx") + 1 == k)
-        .select(
-            F.col("s").alias("threshold_micro"),
-            k.alias("k"),
-            F.col("n"),
-        )
     )
 
 

@@ -265,32 +265,40 @@ def _pairs_from_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
     minhash_lsh_pairs, factored out (round-6) so a caller that also
     audits occupancy (wtq/build.py) can feed BOTH consumers from one
     materialized bucket table instead of running the signature UDF
-    twice.
-
-    One conditional explode handles both regimes without touching
-    the upstream subtree twice: the LEFT side of the pair is every
-    member for within-cap buckets but only the bucket minimum for
-    over-cap buckets — [min] × members = the star."""
-    grouped = (
-        buckets.groupBy("bucket")
-        .agg(F.collect_list("doc").alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    pairs = (
-        grouped.select(
-            F.explode(
-                F.when(F.size("docs") <= bucket_cap, F.col("docs")).otherwise(
-                    F.array(F.array_min("docs"))
-                )
-            ).alias("doc"),
-            F.col("docs"),
-        )
-        .select("doc", F.explode("docs").alias("doc2"))
-        .filter(F.col("doc") < F.col("doc2"))
-        .groupBy(F.col("doc").alias("doc1"), F.col("doc2"))
+    twice."""
+    return (
+        _star_capped_pairs(buckets, ["bucket"], F.col("doc"), bucket_cap)
+        .groupBy(F.col("a").alias("doc1"), F.col("b").alias("doc2"))
         .agg(F.count("*").alias("n_shared_bands"))
     )
-    return pairs
+
+
+def _star_capped_pairs(
+    rows: DataFrame, keys: list[str], member: Column, bucket_cap: int
+) -> DataFrame:
+    """(a, b) member pairs with a < b within each `keys` bucket of
+    `rows`, via one aggregation + double explode.  One conditional
+    explode handles both regimes without touching the upstream subtree
+    twice: the LEFT side is every member for within-cap buckets but
+    only the bucket minimum for over-cap buckets — [min] × members =
+    the star."""
+    grouped = (
+        rows.groupBy(*keys)
+        .agg(F.collect_list(member).alias("ms"))
+        .filter(F.size("ms") >= 2)
+    )
+    return (
+        grouped.select(
+            F.explode(
+                F.when(F.size("ms") <= bucket_cap, F.col("ms")).otherwise(
+                    F.array(F.array_min("ms"))
+                )
+            ).alias("a"),
+            F.col("ms"),
+        )
+        .select("a", F.explode("ms").alias("b"))
+        .filter(F.col("a") < F.col("b"))
+    )
 
 
 def _minhash_buckets(
@@ -1004,26 +1012,13 @@ def simhash_near_pairs(
     ).select("doc", "simhash", F.col("bc.band").alias("band"), F.col("bc.chunk").alias("chunk"))
     # within-bucket pairs via one aggregation + double explode — a
     # bucket self-join would re-run the signature UDF subtree twice
-    # (see minhash_lsh_pairs for the rationale and reference citation)
-    grouped = (
-        chunks.groupBy("band", "chunk")
-        .agg(F.collect_list(F.struct("doc", "simhash")).alias("ms"))
-        .filter(F.size("ms") >= 2)
-    )
-    # LEFT side: every member within cap, only the bucket minimum
-    # above it ([min] × members = the star rule; min struct = min doc
-    # since doc leads the struct and is unique)
+    # (see minhash_lsh_pairs for the rationale and reference citation).
+    # Members are (doc, simhash) structs: doc leads and is unique in a
+    # bucket, so struct order is doc order (the star's min and a < b)
     return (
-        grouped.select(
-            F.explode(
-                F.when(F.size("ms") <= bucket_cap, F.col("ms")).otherwise(
-                    F.array(F.array_min("ms"))
-                )
-            ).alias("a"),
-            F.col("ms"),
+        _star_capped_pairs(
+            chunks, ["band", "chunk"], F.struct("doc", "simhash"), bucket_cap
         )
-        .select("a", F.explode("ms").alias("b"))
-        .filter(F.col("a.doc") < F.col("b.doc"))
         .select(
             F.col("a.doc").alias("doc1"),
             F.col("b.doc").alias("doc2"),

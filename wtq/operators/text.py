@@ -222,74 +222,3 @@ def sql_html_to_text(table: str, id_col: str, html_col: str) -> str:
     return f"""
     SELECT {id_col}, {s} AS text, CAST({n_tags} AS INT) AS n_tags FROM {table}
     """
-
-
-# ---------------------------------------------------------------------------
-# URL normalization (round 5)
-# ---------------------------------------------------------------------------
-# Pre-dedup canonicalization (the C4/RefinedWeb discipline): without
-# it, re-crawls of one page under 'HTTP://Host.com/p?utm_source=x#f'
-# and 'http://host.com/p' count as distinct urls and slip past the
-# re-crawl window dedup, which keys on exact url equality.  All steps
-# are engine-portable expressions; the canonical form is:
-#   lowercase scheme+authority · default ports stripped · fragment
-#   dropped · tracking params (utm_*, fbclid, gclid, ref) dropped ·
-#   remaining query params sorted · single trailing slash stripped.
-
-_SCHEME_AUTH_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*"
-_TRACKING_RE = "^(utm_[A-Za-z0-9]+|fbclid|gclid|ref)="
-
-
-def normalize_url_col(url: Column) -> Column:
-    """Column-level canonicalization — shared by the `normalize_urls`
-    operator and the pipeline's `normalize_urls` flag (which rewrites
-    the url ahead of the re-crawl dedup window so crawl variants land
-    in one group).  Pure expression: whole-stage codegen, no shuffle."""
-    u = F.regexp_replace(url, "#.*", "")  # fragment
-    head = F.lower(F.regexp_extract(u, _SCHEME_AUTH_RE, 0))
-    tail = F.regexp_replace(u, _SCHEME_AUTH_RE, "")
-    u = F.concat(head, tail)
-    u = F.regexp_replace(u, "^(http://[^/?#:]*):80(/|\\?|$)", "$1$2")
-    u = F.regexp_replace(u, "^(https://[^/?#:]*):443(/|\\?|$)", "$1$2")
-    path = F.regexp_replace(u, "\\?.*", "")
-    path = F.regexp_replace(path, "([^/])/$", "$1")  # trailing slash (root unifies to no-slash)
-    query = F.regexp_extract(u, "\\?(.*)", 1)
-    params = F.array_sort(
-        F.filter(
-            F.split(query, "&"),
-            lambda p: (p != "") & ~p.rlike(_TRACKING_RE),
-        )
-    )
-    qs = F.array_join(params, "&")
-    return F.concat(path, F.when(qs == "", "").otherwise(F.concat(F.lit("?"), qs)))
-
-
-def normalize_urls(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
-    """Canonical url per document: (id_col, url, norm_url)."""
-    return df.select(
-        F.col(id_col),
-        F.col(url_col).alias("url"),
-        normalize_url_col(F.col(url_col)).alias("norm_url"),
-    )
-
-
-def sql_normalize_urls(table: str, id_col: str, url_col: str) -> str:
-    u = f"regexp_replace({url_col}, '#.*', '')"
-    u = (
-        f"(lower(regexp_extract({u}, '{_SCHEME_AUTH_RE}', 0)) || "
-        f"regexp_replace({u}, '{_SCHEME_AUTH_RE}', ''))"
-    )
-    u = f"regexp_replace({u}, '^(http://[^/?#:]*):80(/|\\?|$)', '\\1\\2')"
-    u = f"regexp_replace({u}, '^(https://[^/?#:]*):443(/|\\?|$)', '\\1\\2')"
-    path = f"regexp_replace(regexp_replace({u}, '\\?.*', ''), '([^/])/$', '\\1')"
-    query = f"regexp_extract({u}, '\\?(.*)', 1)"
-    params = (
-        f"list_sort(list_filter(string_split({query}, '&'), "
-        f"p -> p <> '' AND NOT regexp_matches(p, '{_TRACKING_RE}')))"
-    )
-    qs = f"array_to_string({params}, '&')"
-    return f"""
-    SELECT {id_col}, {url_col} AS url,
-           ({path} || CASE WHEN {qs} = '' THEN '' ELSE '?' || {qs} END) AS norm_url
-    FROM {table}
-    """

@@ -225,21 +225,12 @@ def run_pipeline(
     num_partitions: int | None = None,
     strip_boilerplate: bool = False,
     host_gate: bool = False,
-    normalize_urls: bool = False,
 ) -> PipelineResult:
     """The quality-filter pipeline, with the corpus-curation passes as
     optional pre/post stages behind flags (default OFF — the default
     plan and outputs are byte-identical to the flagless pipeline, and
     the north-rule scrub/keep-drop differential gates that path):
 
-    * ``normalize_urls``: canonicalize the url column BEFORE the
-      salted repartition + re-crawl window (round 5,
-      wtq/operators/text.py::normalize_url_col) — crawl variants of
-      one page ('HTTP://Host.com:80/p?utm_source=x#f' vs
-      'http://host.com/p') then land in ONE dedup group and the
-      window keeps the latest crawl across them.  A pure column
-      expression: adds no stage, no shuffle, and the downstream host
-      gate groups by the case-folded authority.
     * ``strip_boilerplate``: corpus-wide C4/CCNet boilerplate-line
       removal BEFORE scoring — re-crawl dedup first (line statistics
       must not double-count re-crawls), then
@@ -256,10 +247,6 @@ def run_pipeline(
       n_input = n_keep + rule-dropped + n_host_gated exactly.
     """
     pages = spark.read.parquet(pages_path)
-    if normalize_urls:
-        from wtq.operators.text import normalize_url_col
-
-        pages = pages.withColumn("url", normalize_url_col(F.col("url")))
     if strip_boilerplate:
         from wtq.operators.curation import strip_boilerplate_lines
 
