@@ -15,7 +15,7 @@ from wtq.build import BENCH_SLICE_MOD, _hash_bucket, build_training_set
 
 def test_build_training_set_end_to_end(spark, pages_path, tmp_path):
     out = str(tmp_path / "corpus")
-    res = build_training_set(spark, pages_path, out, num_partitions=8)
+    res = build_training_set(spark, pages_path, out)
 
     lineage = {r.stage: r.n_docs for r in res.lineage.collect()}
     # two row families: NN_* doc counts (monotone) and 6N_lsh_* audit
@@ -47,13 +47,13 @@ def test_build_training_set_end_to_end(spark, pages_path, tmp_path):
 
     # determinism: a second build yields byte-identical membership
     out2 = str(tmp_path / "corpus2")
-    build_training_set(spark, pages_path, out2, num_partitions=8)
+    build_training_set(spark, pages_path, out2)
     a = {(r.url, r.split) for r in spark.read.parquet(out).select("url", "split").collect()}
     b = {(r.url, r.split) for r in spark.read.parquet(out2).select("url", "split").collect()}
     assert a == b
 
 
-def test_build_lsh_audit_populates_on_planted_flood(spark, pages_path, tmp_path):
+def test_build_lsh_audit_populates_on_planted_flood(spark, pages_path, tmp_path, monkeypatch):
     """A near-but-not-exact duplicate flood bigger than the bucket cap
     must surface in the build lineage as over-cap bucket gauges — the
     observability contract for the star-edge degradation path.
@@ -98,9 +98,8 @@ def test_build_lsh_audit_populates_on_planted_flood(spark, pages_path, tmp_path)
     merged.to_parquet(src, index=False)
 
     out = str(tmp_path / "corpus")
-    res = build_training_set(
-        spark, src, out, num_partitions=8, lsh_bucket_cap=10
-    )
+    monkeypatch.setattr("wtq.operators.dedup.LSH_BUCKET_CAP", 10)
+    res = build_training_set(spark, src, out)
     lineage = {r.stage: r.n_docs for r in res.lineage.collect()}
     assert lineage["60_lsh_over_cap_buckets"] >= 1, lineage
     assert lineage["61_lsh_max_bucket_size"] > 10, lineage
@@ -112,104 +111,8 @@ def test_build_lsh_audit_populates_on_planted_flood(spark, pages_path, tmp_path)
     assert n_flood <= 1, n_flood
 
 
-def test_build_with_explicit_benchmark(spark, pages_path, tmp_path):
-    """Production shape: a real benchmark gram table decontaminates the
-    corpus; docs sharing a 13-gram with it are dropped."""
-    from wtq.operators.curation import benchmark_grams
-
-    pages = spark.read.parquet(pages_path)
-    # use a real page's text as the 'benchmark task' — its 13-grams
-    # must knock out that page (and any near-verbatim re-use of it)
-    donor = pages.orderBy("url").limit(1)
-    bench = benchmark_grams(donor, "text")
-    out = str(tmp_path / "corpus")
-    res = build_training_set(
-        spark, pages_path, out, num_partitions=8, benchmark=bench
-    )
-    donor_url = donor.collect()[0]["url"]
-    written = spark.read.parquet(out)
-    hit = written.filter(F.col("url") == donor_url).count()
-    # the donor is either quality/dedup-dropped upstream or
-    # decontaminated — it must never be in the final corpus (its text
-    # IS benchmark material), provided it was long enough to gram
-    n_words = len([w for w in donor.collect()[0]["text"].split(" ") if w])
-    if n_words >= 13:
-        assert hit == 0
-    assert res.lineage.filter("stage = '50_written'").collect()[0].n_docs > 0
 
 
-def test_build_classifier_gate_drops_negative_family(spark, pages_path, tmp_path):
-    """Model-based gate (classifier_seed): two planted families of
-    rule-passing pages with disjoint content vocabulary; a seed labeled
-    P-positive / N-negative must keep family P and drop family N — and
-    the SAME corpus built WITHOUT the seed must keep both, proving the
-    drop is the classifier's and not the rule battery's."""
-    import random
-
-    import pandas as pd
-
-    from wtq.rules.lexicon import CONTENT_WORDS, LANG_WORDS
-
-    rng = random.Random(11)
-    half = len(CONTENT_WORDS) // 2
-    vocab_p, vocab_n = CONTENT_WORDS[:half], CONTENT_WORDS[half:]
-
-    def page_text(vocab, seed_words=120):
-        # 45% English stopword-ish words keep the rule battery green
-        # (same recipe as the flood test); content words come from ONE
-        # family's vocabulary so the NB scorer can separate them
-        return " ".join(
-            rng.choice(LANG_WORDS["en"]) if rng.random() < 0.45 else rng.choice(vocab)
-            for _ in range(seed_words)
-        )
-
-    rows = []
-    base_ts = pd.Timestamp("2025-01-01")
-    for fam, vocab in (("pfam", vocab_p), ("nfam", vocab_n)):
-        for i in range(4):
-            text = page_text(vocab)
-            rows.append(
-                (
-                    f"https://{fam}.example.com/doc/{i}",
-                    base_ts,
-                    b"<html><body>" + text.encode() + b"</body></html>",
-                    text,
-                    "en",
-                )
-            )
-    planted = pd.DataFrame(rows, columns=["url", "warc_ts", "html", "text", "lang"])
-    fixture = pd.read_parquet(pages_path)
-    merged = pd.concat([fixture, planted], ignore_index=True)
-    merged["warc_ts"] = merged["warc_ts"].astype("datetime64[us]")
-    src = str(tmp_path / "pages_fams.parquet")
-    merged.to_parquet(src, index=False)
-
-    seed = spark.createDataFrame(
-        [(page_text(vocab_p), True) for _ in range(6)]
-        + [(page_text(vocab_n), False) for _ in range(6)],
-        "text string, y boolean",
-    )
-
-    out_b = str(tmp_path / "corpus_nogate")
-    base = build_training_set(spark, src, out_b, num_partitions=8)
-    base_written = spark.read.parquet(out_b)
-    assert base_written.filter(F.col("url").contains("nfam")).count() > 0
-    assert base_written.filter(F.col("url").contains("pfam")).count() > 0
-    assert "15_classifier_kept" not in {r.stage for r in base.lineage.collect()}
-
-    out_g = str(tmp_path / "corpus_gated")
-    gated = build_training_set(
-        spark, src, out_g, num_partitions=8, classifier_seed=seed
-    )
-    lineage = {r.stage: r.n_docs for r in gated.lineage.collect()}
-    assert (
-        lineage["10_quality_kept"]
-        > lineage["15_classifier_kept"]
-        >= lineage["20_after_dedup"]
-    ), lineage
-    written = spark.read.parquet(out_g)
-    assert written.filter(F.col("url").contains("nfam")).count() == 0
-    assert written.filter(F.col("url").contains("pfam")).count() > 0
 
 
 def test_build_raising_stage_leaks_no_threads(spark, pages_path, tmp_path, monkeypatch):
@@ -236,25 +139,6 @@ def test_build_raising_stage_leaks_no_threads(spark, pages_path, tmp_path, monke
     assert not leaked, leaked
 
 
-def test_build_one_class_seed_fails_before_pipeline(spark, pages_path, tmp_path, monkeypatch):
-    """A classifier seed with one class is rejected with a ValueError
-    before the quality filter runs, and the build writes nothing."""
-    import os
-
-    import pytest
-
-    import wtq.build as build
-
-    calls = []
-    monkeypatch.setattr(build, "run_pipeline", lambda *a, **k: calls.append(a))
-    seed = spark.createDataFrame(
-        [("a good page", True), ("another good page", True)], "text string, y boolean"
-    )
-    out = str(tmp_path / "out")
-    with pytest.raises(ValueError, match="no negative documents"):
-        build_training_set(spark, pages_path, out, classifier_seed=seed)
-    assert calls == []
-    assert not os.path.exists(out)
 
 
 def test_build_empty_stage_fails_before_overwrite(spark, tmp_path):
@@ -277,5 +161,5 @@ def test_build_empty_stage_fails_before_overwrite(spark, tmp_path):
     ).write.parquet(f"{out}/split=train")
 
     with pytest.raises(ValueError, match="10_quality_kept"):
-        build_training_set(spark, pages, out, num_partitions=4)
+        build_training_set(spark, pages, out)
     assert [r.url for r in spark.read.parquet(out).collect()] == ["https://old.example/0"]

@@ -137,11 +137,12 @@ class TestIncrementalCorpusDedup:
 
 
 class TestTokenBudgetSample:
-    def test_budget_respected_and_prefix_property(self, spark):
+    def test_budget_respected_and_prefix_property(self, spark, monkeypatch):
         rows = [
             (i, " ".join(["tok"] * 40), f"h{i % 2}") for i in range(20)
         ]
-        out = C.token_budget_sample(_docs(spark, rows), budget=200).collect()
+        monkeypatch.setattr(C, "TOKEN_BUDGET", 200)
+        out = C.token_budget_sample(_docs(spark, rows)).collect()
         by_host: dict[str, list] = {}
         for r in out:
             by_host.setdefault(r["source"], []).append(r)
@@ -154,11 +155,12 @@ class TestTokenBudgetSample:
             # prefix property: cum_tokens are consecutive multiples of 40
             assert sorted(r["cum_tokens"] for r in kept) == [40, 80, 120, 160, 200]
 
-    def test_deterministic_across_runs(self, spark):
+    def test_deterministic_across_runs(self, spark, monkeypatch):
         rows = [(i, " ".join(["w"] * (i + 1)), "h") for i in range(30)]
-        a = sorted(r["doc_id"] for r in C.token_budget_sample(_docs(spark, rows), budget=50).collect())
+        monkeypatch.setattr(C, "TOKEN_BUDGET", 50)
+        a = sorted(r["doc_id"] for r in C.token_budget_sample(_docs(spark, rows)).collect())
         b = sorted(r["doc_id"] for r in C.token_budget_sample(
-            _docs(spark, rows).repartition(7), budget=50).collect())
+            _docs(spark, rows).repartition(7)).collect())
         assert a == b and a  # non-empty and partition-count-invariant
 
 
@@ -166,7 +168,7 @@ class TestStripBoilerplate:
     def test_hot_lines_stripped_order_preserved(self, spark):
         banner = "subscribe to our newsletter today"
         rows = [
-            # 4 docs (> df_cap=3) carry the banner at differing positions
+            # 4 docs (> BOILERPLATE_DF_CAP=3) carry the banner at differing positions
             (0, banner + "\nunique zero content here", "s"),
             (1, "unique one content here\n" + banner, "s"),
             (2, banner + "\nunique two content here\nmore two", "s"),
@@ -207,19 +209,21 @@ class TestStripBoilerplate:
             2: ("a\n\n\nb", 0),
         }
 
-    def test_line_sep_is_literal_not_regex(self, spark):
+    def test_line_sep_is_literal_not_regex(self, spark, monkeypatch):
         # '.' as a separator must split on periods, not on every char
         rows = [(i, "common seg.unique %d" % i, "s") for i in range(5)]
+        monkeypatch.setattr(C, "LINE_SEP", ".")
+        monkeypatch.setattr(C, "BOILERPLATE_DF_CAP", 3)
         out = {r["doc_id"]: (r["clean_text"], r["n_removed"])
-               for r in C.strip_boilerplate_lines(
-                   _docs(spark, rows), line_sep=".", df_cap=3).collect()}
+               for r in C.strip_boilerplate_lines(_docs(spark, rows)).collect()}
         assert out[0] == ("unique 0", 1)  # 'common seg' (df 5 > 3) stripped
 
-    def test_within_doc_repeats_count_once_for_df(self, spark):
+    def test_within_doc_repeats_count_once_for_df(self, spark, monkeypatch):
         # a line repeated INSIDE one doc has doc-frequency 1, not 3
         rows = [(0, "echo\necho\necho\nbody", "s"), (1, "other text", "s")]
+        monkeypatch.setattr(C, "BOILERPLATE_DF_CAP", 1)
         out = {r["doc_id"]: r["n_removed"]
-               for r in C.strip_boilerplate_lines(_docs(spark, rows), df_cap=1).collect()}
+               for r in C.strip_boilerplate_lines(_docs(spark, rows)).collect()}
         assert out == {0: 0, 1: 0}
 
     def test_every_input_doc_gets_a_row(self, spark):

@@ -15,7 +15,7 @@ from wtq.operators.dedup import dedup_resolution
 from wtq.pipeline import decide
 
 
-def test_curation_chain_composes_and_only_removes(spark, pages_path):
+def test_curation_chain_composes_and_only_removes(spark, pages_path, monkeypatch):
     pages = spark.read.parquet(pages_path)
 
     # stage 1: quality filter
@@ -48,7 +48,8 @@ def test_curation_chain_composes_and_only_removes(spark, pages_path):
 
     # stage 4: per-host token budget (host = url's authority component)
     hosted = clean.withColumn("host", F.substring_index(F.col("url"), "/", 3))
-    sampled = C.token_budget_sample(hosted, "url", "text", "host", budget=800)
+    monkeypatch.setattr(C, "TOKEN_BUDGET", 800)
+    sampled = C.token_budget_sample(hosted, "url", "text", "host")
     n_sampled = sampled.count()
     assert 0 < n_sampled <= n_clean
     # budget respected per host

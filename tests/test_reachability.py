@@ -16,6 +16,12 @@ reaches all of its methods.  A module-level ``assert`` is a check on
 definitions, not a use of them: a table that only an import-time
 assert reads is unreached.  Dunder names (``__getattr__``,
 ``__version__``) are module protocol, not definitions, and are skipped.
+
+The same resolution checks options: a defaulted parameter of a
+module-level ``wtq`` function that a test passes must also be passed
+by some call outside ``tests/``, or be on a short list kept with a
+reason.  A test that needs another value patches the module constant
+the function reads.
 """
 
 from __future__ import annotations
@@ -49,6 +55,15 @@ KEPT = {
     ("wtq.rules.registry", "registry_df"): "the err_codes dimension table",
     ("wtq.rules.registry", "rule_rows"): "the err_codes dimension rows",
     ("wtq.pipeline", "rule_fire_counts"): "the err_codes join",
+}
+
+# (module, function, parameter) -> why tests may set it although no
+# call outside tests/ does
+KEPT_PARAMS = {
+    ("wtq.checkpoint", "run_checkpointed", "n_chunks"): "failure injection for the resumable run (test_checkpoint.py)",
+    ("wtq.checkpoint", "run_checkpointed", "fail_after_chunk"): "failure injection for the resumable run (test_checkpoint.py)",
+    ("wtq.operators.curation", "incremental_corpus_dedup", "id_col"): "column name: the operator runs on another schema",
+    ("wtq.operators.curation", "incremental_corpus_dedup", "text_col"): "column name: the operator runs on another schema",
 }
 
 
@@ -181,11 +196,64 @@ def unreached() -> set[tuple[str, str]]:
     return every - reached
 
 
+def _callees(wtq: dict[str, _Module], module: _Module, call: ast.Call) -> list:
+    """(module, name, def) of the module-level wtq functions that `call`
+    names (`f(...)` or `alias.f(...)`)."""
+    func = call.func
+    name = func.id if isinstance(func, ast.Name) else getattr(func, "attr", None)
+    return [
+        (mod, n, d)
+        for mod, n in _references(wtq, module, [func]) if n == name
+        for d in wtq[mod].defs[n] if isinstance(d, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+
+
+def _defaulted(fn: ast.FunctionDef) -> set[str]:
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    return {p.arg for p in pos[len(pos) - len(a.defaults):]} | {
+        k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+    }
+
+
+def _set_params(fn: ast.FunctionDef, call: ast.Call) -> set[str]:
+    """Parameters of `fn` that `call` passes, by position or keyword; a
+    `*` or `**` argument passes them all."""
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args]
+    if any(isinstance(x, ast.Starred) for x in call.args) or any(k.arg is None for k in call.keywords):
+        return {*pos, *(k.arg for k in a.kwonlyargs)}
+    return set(pos[: len(call.args)]) | {k.arg for k in call.keywords}
+
+
+def options_only_tests_set() -> set[tuple[str, str, str]]:
+    """(module, function, parameter) of every defaulted parameter of a
+    module-level wtq function that a call under tests/ passes and no
+    other call does."""
+    wtq, root_files = _load_modules()
+    tests = [_Module(p) for p in sorted((ROOT / "tests").rglob("*.py"))]
+    set_by: dict[str, set] = {"code": set(), "test": set()}
+    for kind, modules in (("code", [*wtq.values(), *root_files]), ("test", tests)):
+        for m in modules:
+            for call in (n for n in ast.walk(m.tree) if isinstance(n, ast.Call)):
+                for mod, name, fn in _callees(wtq, m, call):
+                    set_by[kind] |= {(mod, name, p) for p in _set_params(fn, call) & _defaulted(fn)}
+    return set_by["test"] - set_by["code"]
+
+
 def test_only_kept_definitions_are_unreached():
     got = unreached()
     assert got == set(KEPT), (
         f"unreached but not kept: {sorted(got - set(KEPT))}; "
         f"kept but reached or gone: {sorted(set(KEPT) - got)}"
+    )
+
+
+def test_no_option_only_tests_set():
+    got = options_only_tests_set()
+    assert got == set(KEPT_PARAMS), (
+        f"set only by tests but not kept: {sorted(got - set(KEPT_PARAMS))}; "
+        f"kept but set outside tests or gone: {sorted(set(KEPT_PARAMS) - got)}"
     )
 
 

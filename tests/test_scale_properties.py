@@ -14,6 +14,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from wtq.operators.dedup import CC_SINGLE_TASK_MAX_EDGES
 from wtq.pipeline import metrics_view, run_pipeline
 from wtq.rules.heuristics import py_stats
 from wtq.rules.langid import predict_lang
@@ -70,15 +71,15 @@ def test_approx_count_distinct_tolerance(spark):
 import pytest
 
 
-def test_ngram_df_cap_bounds_boilerplate_blowup(spark):
+def test_ngram_df_cap_bounds_boilerplate_blowup(spark, monkeypatch):
     """One boilerplate shingle shared by all docs must NOT produce a
     quadratic inverted-index join: with the df cap the hot posting list
     is dropped before the self-join; pairs come only from real overlap."""
     import pandas as pd
 
-    from wtq.operators.dedup import NGRAM_DF_CAP, ngram_jaccard_pairs
+    import wtq.operators.dedup as D
 
-    n = NGRAM_DF_CAP * 4  # 4x over the cap
+    n = D.NGRAM_DF_CAP * 4  # 4x over the cap
     boiler = "all rights reserved worldwide"
     docs = pd.DataFrame(
         {
@@ -88,7 +89,8 @@ def test_ngram_df_cap_bounds_boilerplate_blowup(spark):
         }
     )
     df = spark.createDataFrame(docs)
-    pairs = ngram_jaccard_pairs(df, "doc_id", "text", top_n=n * n)
+    monkeypatch.setattr(D, "NGRAM_TOP_N", n * n)
+    pairs = D.ngram_jaccard_pairs(df, "doc_id", "text")
     # without the cap the boilerplate shingles alone join C(n,2) pairs;
     # with it, no pair shares an informative shingle
     assert pairs.count() == 0
@@ -180,14 +182,14 @@ def test_bucketed_join_avoids_exchange(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
-# max_edges=default exercises the single-task union-find fast path;
-# max_edges=0 forces the distributed pointer-jumping loop — both
-# strategies must satisfy every CC contract.
-_CC_PATHS = [("single_task", None), ("distributed", 0)]
+# the shipped edge ceiling exercises the single-task union-find fast
+# path; a ceiling of 0 forces the distributed pointer-jumping loop —
+# both strategies must satisfy every CC contract.
+_CC_PATHS = [("single_task", CC_SINGLE_TASK_MAX_EDGES), ("distributed", 0)]
 
 
 @pytest.mark.parametrize("path,max_edges", _CC_PATHS, ids=[p[0] for p in _CC_PATHS])
-def test_connected_components_deep_chain(spark, path, max_edges):
+def test_connected_components_deep_chain(spark, monkeypatch, path, max_edges):
     """A 200-node chain (diameter 199 >> CC_MAX_ITERS=20) must still
     converge — pointer jumping doubles reach per round, so convergence
     is O(log diameter), and the old one-hop variant would raise here."""
@@ -196,14 +198,14 @@ def test_connected_components_deep_chain(spark, path, max_edges):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(199)], "doc1 long, doc2 long"
     )
-    kw = {} if max_edges is None else {"single_task_max_edges": max_edges}
-    cc = connected_components(pairs, **kw).collect()
+    monkeypatch.setattr("wtq.operators.dedup.CC_SINGLE_TASK_MAX_EDGES", max_edges)
+    cc = connected_components(pairs).collect()
     assert len(cc) == 200
     assert {r.cluster for r in cc} == {0}
 
 
 @pytest.mark.parametrize("path,max_edges", _CC_PATHS, ids=[p[0] for p in _CC_PATHS])
-def test_connected_components_string_ids(spark, path, max_edges):
+def test_connected_components_string_ids(spark, monkeypatch, path, max_edges):
     """Node ids are any orderable type — url-keyed near-dup graphs are
     strings.  (The numeric label-sum convergence check this replaced
     crashed on exactly this input.)"""
@@ -212,12 +214,12 @@ def test_connected_components_string_ids(spark, path, max_edges):
     pairs = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], "doc1 string, doc2 string"
     )
-    kw = {} if max_edges is None else {"single_task_max_edges": max_edges}
-    cc = {r.node: r.cluster for r in connected_components(pairs, **kw).collect()}
+    monkeypatch.setattr("wtq.operators.dedup.CC_SINGLE_TASK_MAX_EDGES", max_edges)
+    cc = {r.node: r.cluster for r in connected_components(pairs).collect()}
     assert cc == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_connected_components_paths_agree_on_random_graph(spark):
+def test_connected_components_paths_agree_on_random_graph(spark, monkeypatch):
     """The single-task union-find and the distributed pointer-jumping
     loop are two physical strategies for ONE logical operator — on a
     seeded random graph (stars, chains, triangles, singleton-free)
@@ -231,9 +233,8 @@ def test_connected_components_paths_agree_on_random_graph(spark):
     edges = [(a, b) for a, b in edges if a != b]
     pairs = spark.createDataFrame(edges, "doc1 long, doc2 long")
     fast = sorted(map(tuple, connected_components(pairs).collect()))
-    dist = sorted(
-        map(tuple, connected_components(pairs, single_task_max_edges=0).collect())
-    )
+    monkeypatch.setattr("wtq.operators.dedup.CC_SINGLE_TASK_MAX_EDGES", 0)
+    dist = sorted(map(tuple, connected_components(pairs).collect()))
     assert fast == dist
 
 
@@ -274,12 +275,13 @@ def test_duplicate_flood_bounded_buckets_and_expanded_clusters(spark):
     assert LSH_BUCKET_CAP >= 1000
 
 
-def test_lsh_bucket_stats_audits_caller_supplied_cap(spark):
+def test_lsh_bucket_stats_audits_the_cap_in_force(spark, monkeypatch):
     """The occupancy audit dedup_resolution returns flags over_cap
-    against the SAME cap the pair stage ran with — with bucket_cap=5,
-    the near-duplicate band buckets read as over the cap even though
-    the default cap would not.  Near, not byte-identical, duplicates:
-    exact-duplicate collapse runs first and would leave one member.
+    against the SAME cap the pair stage ran with — with LSH_BUCKET_CAP
+    patched to 5, the near-duplicate band buckets read as over the cap
+    even though the shipped cap would not.  Near, not byte-identical,
+    duplicates: exact-duplicate collapse runs first and would leave one
+    member.
     Each band has one shared bucket; 35–48 of the 50 documents fall in
     it, and the distinct last words make 62 one-member buckets."""
     import wtq.operators.dedup as D
@@ -287,7 +289,9 @@ def test_lsh_bucket_stats_audits_caller_supplied_cap(spark):
     body = "the same viral boilerplate page body repeated everywhere on every site we crawled"
     flood = [(i, f"{body} w{i}") for i in range(50)]
     df = spark.createDataFrame(flood, "doc_id long, text string")
-    stats = D.dedup_resolution(df, "doc_id", "text", bucket_cap=5)[1].collect()
+    with monkeypatch.context() as m:
+        m.setattr(D, "LSH_BUCKET_CAP", 5)
+        stats = D.dedup_resolution(df, "doc_id", "text")[1].collect()
     assert max(r.bucket_size for r in stats) == 48
     assert sum(r.n_buckets for r in stats if r.over_cap) == D.LSH_BANDS
     assert all(r.over_cap == (r.bucket_size > 5) for r in stats)
@@ -296,7 +300,7 @@ def test_lsh_bucket_stats_audits_caller_supplied_cap(spark):
     assert not any(r.over_cap for r in default_stats)
 
 
-def test_lsh_bucket_cap_degrades_to_star_edges(spark):
+def test_lsh_bucket_cap_degrades_to_star_edges(spark, monkeypatch):
     """With the cap forced tiny, an over-cap bucket emits LINEAR star
     edges (bucket-min ↔ member) instead of C(n,2) all-pairs, while
     normal-sized buckets still pair fully."""
@@ -308,7 +312,9 @@ def test_lsh_bucket_cap_degrades_to_star_edges(spark):
         (2001, "a genuinely different document about distributed query engines and exchanges"),
     ]
     df = spark.createDataFrame(flood + near, "doc_id long, text string")
-    pairs = D.minhash_lsh_pairs(df, "doc_id", "text", bucket_cap=5).collect()
+    with monkeypatch.context() as m:
+        m.setattr(D, "LSH_BUCKET_CAP", 5)
+        pairs = D.minhash_lsh_pairs(df, "doc_id", "text").collect()
     flood_pairs = [r for r in pairs if r.doc1 < 2000]
     # star, not clique: 49 edges (0, i) — never 50·49/2 = 1225
     assert len(flood_pairs) == 49
@@ -321,7 +327,7 @@ def test_lsh_bucket_cap_degrades_to_star_edges(spark):
     assert cc == {0, 2000}
 
 
-def test_simhash_cap_degrades_to_verified_star(spark):
+def test_simhash_cap_degrades_to_verified_star(spark, monkeypatch):
     """Over-cap simhash buckets emit Hamming-VERIFIED star edges
     (bucket-min ↔ member) instead of being dropped: a near-identical
     flood (pairwise distance ~0) keeps its min-rooted edges under a
@@ -336,7 +342,9 @@ def test_simhash_cap_degrades_to_verified_star(spark):
         w[i % len(w)] = f"variant{i}"
         rows.append((i, " ".join(w)))
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    capped = D.simhash_near_pairs(df, "doc_id", "text", bucket_cap=5).collect()
+    with monkeypatch.context() as m:
+        m.setattr(D, "LSH_BUCKET_CAP", 5)
+        capped = D.simhash_near_pairs(df, "doc_id", "text").collect()
     uncapped = {
         (r.doc1, r.doc2) for r in D.simhash_near_pairs(df, "doc_id", "text").collect()
     }
@@ -348,7 +356,7 @@ def test_simhash_cap_degrades_to_verified_star(spark):
     assert len(capped) < len(uncapped)
 
 
-def test_lsh_cap_recall(spark):
+def test_lsh_cap_recall(spark, monkeypatch):
     """Quantifies the cap's recall cost on a NEAR-identical flood (the
     case exact-dedup-first cannot collapse: every doc differs by one
     token, so fingerprints are all distinct).  Round 3 dropped the
@@ -365,10 +373,11 @@ def test_lsh_cap_recall(spark):
     uncapped = {
         (r.doc1, r.doc2) for r in D.minhash_lsh_pairs(df, "doc_id", "text").collect()
     }
-    capped = {
-        (r.doc1, r.doc2)
-        for r in D.minhash_lsh_pairs(df, "doc_id", "text", bucket_cap=20).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(D, "LSH_BUCKET_CAP", 20)
+        capped = {
+            (r.doc1, r.doc2) for r in D.minhash_lsh_pairs(df, "doc_id", "text").collect()
+        }
     # every capped pair is a true candidate (star ⊆ uncapped)
     assert capped <= uncapped
     # pair-level recall is partial — that is the accepted cost...
@@ -390,7 +399,7 @@ def test_lsh_cap_recall(spark):
     assert {c for _, c in comps(capped)} == {0}
 
 
-def test_simhash_cap_recall_measured(spark):
+def test_simhash_cap_recall_measured(spark, monkeypatch):
     """Quantifies the simhash star fallback's recall (round-5 verdict
     item 7).  Unlike the minhash star — whose cluster recall is exactly
     1.0 because every emitted edge is a candidate regardless of
@@ -434,10 +443,11 @@ def test_simhash_cap_recall_measured(spark):
     uncapped = {
         (r.doc1, r.doc2) for r in D.simhash_near_pairs(df, "doc_id", "text").collect()
     }
-    capped = {
-        (r.doc1, r.doc2)
-        for r in D.simhash_near_pairs(df, "doc_id", "text", bucket_cap=10).collect()
-    }
+    with monkeypatch.context() as m:
+        m.setattr(D, "LSH_BUCKET_CAP", 10)
+        capped = {
+            (r.doc1, r.doc2) for r in D.simhash_near_pairs(df, "doc_id", "text").collect()
+        }
     assert capped <= uncapped  # the star never invents pairs
     pair_recall = len(capped) / len(uncapped)
     # deterministic construction → deterministic loss: exactly the
@@ -460,7 +470,7 @@ def test_simhash_cap_recall_measured(spark):
     assert comps(capped) == comps(uncapped)
 
 
-def test_bucket_cap_mirrored_in_oracles(spark):
+def test_bucket_cap_mirrored_in_oracles(spark, monkeypatch):
     """The bucket-cap drop must be part of BOTH engines' semantics:
     on a near-identical flood (distinct fingerprints, shared band
     buckets — the input exact-dedup-first can NOT collapse), Spark and
@@ -489,18 +499,18 @@ def test_bucket_cap_mirrored_in_oracles(spark):
     con.register("documents", pdf)
 
     def spark_pairs(cap):
-        return sorted(
-            (r.doc1, r.doc2, r.n_shared_bands)
-            for r in D.minhash_lsh_pairs(df, "doc_id", "text", bucket_cap=cap).collect()
-        )
+        with monkeypatch.context() as m:
+            m.setattr(D, "LSH_BUCKET_CAP", cap)
+            return sorted(
+                (r.doc1, r.doc2, r.n_shared_bands)
+                for r in D.minhash_lsh_pairs(df, "doc_id", "text").collect()
+            )
 
     def duck_pairs(cap):
-        return sorted(
-            (int(a), int(b), int(n))
-            for a, b, n in con.execute(
-                D.sql_minhash_lsh_pairs("documents", "doc_id", "text", bucket_cap=cap)
-            ).fetchall()
-        )
+        with monkeypatch.context() as m:
+            m.setattr(D, "LSH_BUCKET_CAP", cap)
+            sql = D.sql_minhash_lsh_pairs("documents", "doc_id", "text")
+        return sorted((int(a), int(b), int(n)) for a, b, n in con.execute(sql).fetchall())
 
     capped_s, capped_d = spark_pairs(4), duck_pairs(4)
     uncapped_s, uncapped_d = spark_pairs(D.LSH_BUCKET_CAP), duck_pairs(D.LSH_BUCKET_CAP)
@@ -510,18 +520,18 @@ def test_bucket_cap_mirrored_in_oracles(spark):
 
     # simhash path: identical contract
     def spark_sim(cap):
-        return sorted(
-            (r.doc1, r.doc2, r.hamming)
-            for r in D.simhash_near_pairs(df, "doc_id", "text", bucket_cap=cap).collect()
-        )
+        with monkeypatch.context() as m:
+            m.setattr(D, "LSH_BUCKET_CAP", cap)
+            return sorted(
+                (r.doc1, r.doc2, r.hamming)
+                for r in D.simhash_near_pairs(df, "doc_id", "text").collect()
+            )
 
     def duck_sim(cap):
-        return sorted(
-            (int(a), int(b), int(h))
-            for a, b, h in con.execute(
-                D.sql_simhash_near_pairs("documents", "doc_id", "text", bucket_cap=cap)
-            ).fetchall()
-        )
+        with monkeypatch.context() as m:
+            m.setattr(D, "LSH_BUCKET_CAP", cap)
+            sql = D.sql_simhash_near_pairs("documents", "doc_id", "text")
+        return sorted((int(a), int(b), int(h)) for a, b, h in con.execute(sql).fetchall())
 
     assert spark_sim(4) == duck_sim(4)
     assert spark_sim(D.LSH_BUCKET_CAP) == duck_sim(D.LSH_BUCKET_CAP)
@@ -535,6 +545,7 @@ def test_ivf_kmeans_recall_vs_bruteforce(spark):
     exact brute-force top-3 over the 5 standard queries."""
     from wtq.operators.similarity import (
         IVF_CELLS,
+        IVF_K,
         brute_force_topk,
         ivf_topk,
         kmeans_centroids,
@@ -550,8 +561,8 @@ def test_ivf_kmeans_recall_vs_bruteforce(spark):
     assert all(tuple(round(x, 6) for x in c.c_vec) not in vecs for c in cents)
 
     q = emb.filter(F.col("vec_id") < 5)
-    truth = {(r.q_id, r.n_id) for r in brute_force_topk(emb, q, k=3).collect()}
-    got = {(r.q_id, r.n_id) for r in ivf_topk(emb, q, k=3).collect()}
+    truth = {(r.q_id, r.n_id) for r in brute_force_topk(emb, q, k=IVF_K).collect()}
+    got = {(r.q_id, r.n_id) for r in ivf_topk(emb, q).collect()}
     recall = len(truth & got) / len(truth)
     # single-probe IVF on near-uniform synthetic vectors: recall is
     # limited by cell boundaries; require a floor that a broken
@@ -560,4 +571,4 @@ def test_ivf_kmeans_recall_vs_bruteforce(spark):
     # and every query got a full k result (its own cell is non-trivial)
     from collections import Counter
     per_q = Counter(r[0] for r in got)
-    assert all(per_q[qid] == 3 for qid in range(5)), per_q
+    assert all(per_q[qid] == IVF_K for qid in range(5)), per_q

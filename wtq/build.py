@@ -2,11 +2,8 @@
 curation stack the way a production corpus build runs it.
 
     pages ─ quality filter (+ boilerplate strip, + host gate)
-          ─ optional model-based quality gate (seed-trained NB scorer,
-            zero-shuffle scoring pass — wtq/operators/classifier.py)
           ─ near-dup removal (exact-first LSH clusters, keep min-id rep)
-          ─ benchmark decontamination (held-out hash-slice of the corpus,
-            or an explicit benchmark gram table)
+          ─ benchmark decontamination (held-out hash-slice of the corpus)
           ─ per-host token budget
           ─ train/val/test split (url-hash buckets; leakage bounded by
             the upstream dedup stage — see build_training_set)
@@ -28,20 +25,18 @@ one small aggregation, not a second signature pass."""
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wtq.operators import curation as C
-from wtq.operators.classifier import nb_score, train_nb_weights
-from wtq.operators.dedup import LSH_BUCKET_CAP, dedup_resolution
+from wtq.operators.dedup import dedup_resolution
 from wtq.pipeline import run_pipeline
 
-# one url in BENCH_SLICE_MOD seeds the held-out benchmark slice when no
-# explicit benchmark is given (md5-bucketed — works for string ids,
-# unlike the numeric id-parity split of the standalone query demo)
+# one url in BENCH_SLICE_MOD seeds the held-out benchmark slice
+# (md5-bucketed — works for string ids, unlike the numeric id-parity
+# split of the standalone query demo)
 BENCH_SLICE_MOD = 101
 
 
@@ -56,41 +51,20 @@ class BuildResult:
     out_dir: str
     lineage: DataFrame  # (stage, n_docs) — doc stages monotone non-increasing
 
-    def split_path(self, split: str) -> str:
-        return os.path.join(self.out_dir, f"split={split}")
 
-
-def build_training_set(
-    spark: SparkSession,
-    pages_path: str,
-    out_dir: str,
-    num_partitions: int | None = None,
-    benchmark: DataFrame | None = None,
-    lsh_bucket_cap: int = LSH_BUCKET_CAP,
-    classifier_seed: DataFrame | None = None,
-) -> BuildResult:
+def build_training_set(spark: SparkSession, pages_path: str, out_dir: str) -> BuildResult:
     """Run the full curation stack and write train/val/test parquet.
 
-    `benchmark`: optional 1-column gram-digest table (see
-    `benchmark_grams`).  When None, a deterministic held-out slice of
-    the corpus itself (md5(url) bucket 0 of BENCH_SLICE_MOD) plays the
-    benchmark role and is excluded from every split — the
-    self-contained analog of decontaminating against a real eval
-    suite.
+    A deterministic held-out slice of the corpus itself (md5(url)
+    bucket 0 of BENCH_SLICE_MOD) plays the benchmark role and is
+    excluded from every split — the self-contained analog of
+    decontaminating against a real eval suite.
 
-    `classifier_seed`: optional labeled seed (columns `text`,
-    `y` boolean) enabling the model-based quality gate between the
-    rule battery and the dedup stage; docs scoring ≤ 0 micro-log-odds
-    (negatives at least as likely) are dropped and the lineage gains a
-    `15_classifier_kept` row.  The classifier is fitted before any
-    other stage runs, so a seed missing a class raises `ValueError`
-    before the quality filter starts and nothing is written.
-
-    `lsh_bucket_cap` is applied to the dedup stage's pair expansion AND
-    to the occupancy audit, so the audit always reports on the cap the
+    The dedup stage's pair expansion and its occupancy audit both read
+    `dedup.LSH_BUCKET_CAP`, so the audit always reports on the cap the
     pair stage actually enforced.
 
-    Returns BuildResult with the split paths and the lineage table;
+    Returns BuildResult with the output directory and the lineage table;
     splits are written with (url, text, n_tokens) columns.  Lineage has
     two row families: `NN_*` document counts (monotone non-increasing
     through the stages) and `6N_lsh_*` audit gauges (over-cap bucket
@@ -98,18 +72,13 @@ def build_training_set(
     stage that keeps nothing raises `ValueError` naming it, before the
     write, so an existing corpus at `out_dir` is left as it was.
     """
-    # 1. quality filter with both curation passes.  Round-6: default
-    # the pipeline's partition count to the configured parallelism —
+    # 1. quality filter with both curation passes.  Round-6: the
+    # pipeline's partition count is the configured parallelism —
     # the Arrow score stage is CPU-bound, not byte-bound, so AQE's
     # byte-targeted coalescing of the url exchange under-parallelizes
     # it (measured ~8% on the curated chain at sf1.0); build outputs
     # are partitioning-independent (content-hash membership), so this
     # changes no rows.
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
-    # fit first: a bad seed must fail before any pipeline job runs
-    if classifier_seed is not None:
-        weights, consts = train_nb_weights(classifier_seed, text_col="text", label_col="y")
     # the 00_input lineage count (distinct urls of the raw input) is
     # independent of every stage — run it from a driver thread so its
     # scan back-fills executors behind the pipeline's stragglers
@@ -126,7 +95,7 @@ def build_training_set(
         decided = run_pipeline(
             spark,
             pages_path,
-            num_partitions=num_partitions,
+            num_partitions=spark.sparkContext.defaultParallelism,
             strip_boilerplate=True,
             host_gate=True,
         ).decided
@@ -139,26 +108,6 @@ def build_training_set(
         # time (round-4 advisory — measured as the build's dominant
         # redundant cost at scale).
         kept = kept.localCheckpoint(eager=True)
-        quality_kept = kept  # pre-gate frame: stage-10 lineage counts this
-
-        # 1b. optional model-based gate (the CCNet/GPT-3 classifier layer):
-        # closed-form NB log-odds fitted above on the caller's labeled seed
-        # (columns: text, y boolean — True = quality reference, False =
-        # raw-crawl negatives) and keep docs scoring above the threshold.
-        # Runs BEFORE the near-dup stage on purpose: scoring is a
-        # zero-shuffle broadcast-map pass (a free rider on the kept scan),
-        # while LSH + connected components is the build's most expensive
-        # stage — gating first shrinks its input.  score_micro is an exact
-        # BIGINT, so the kept set is bit-stable at any parallelism.
-        classifier_count: dict[str, int] = {}
-        if classifier_seed is not None:
-            kept = (
-                nb_score(kept, weights, consts, text_col="text", id_cols=("url", "text"))
-                .filter(F.col("score_micro") > 0)
-                .select("url", "text")
-                .localCheckpoint(eager=True)
-            )
-            classifier_count["15_classifier_kept"] = kept.count()
 
         # 2. near-dup removal: keep each cluster's min-id representative.
         # The resolution shares ONE materialized bucket table between
@@ -168,9 +117,7 @@ def build_training_set(
         # the shared table is ids-only, so the checkpoint is cheap and
         # the audited cap is by construction the cap the pair stage
         # enforced).
-        labels, stats = dedup_resolution(
-            kept, "url", "text", bucket_cap=lsh_bucket_cap, rebalance=False
-        )
+        labels, stats = dedup_resolution(kept, "url", "text", rebalance=False)
         non_reps = (
             labels.filter(F.col("node") != F.col("cluster"))
             .select(F.col("node").alias("url"))
@@ -193,12 +140,9 @@ def build_training_set(
         )
 
         # 3. decontamination
-        if benchmark is None:
-            bench_docs = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) == 0)
-            benchmark = C.benchmark_grams(bench_docs, "text")
-            candidates = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) != 0)
-        else:
-            candidates = deduped
+        bench_docs = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) == 0)
+        benchmark = C.benchmark_grams(bench_docs, "text")
+        candidates = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) != 0)
         hits = C.decontaminate(candidates, "url", "text", benchmark=benchmark)
         clean = candidates.join(hits.select("url"), "url", "left_anti").localCheckpoint(
             eager=True
@@ -234,14 +178,13 @@ def build_training_set(
         # run before the write: an overwrite with nothing would replace
         # a previous corpus with a bare _SUCCESS
         stage_frames = {
-            "10_quality_kept": quality_kept,
+            "10_quality_kept": kept,
             "20_after_dedup": deduped,
             "30_after_decontam": clean,
             "40_after_budget": final,
         }
         count_futs = {k: _pool.submit(df.count) for k, df in stage_frames.items()}
         counts = {k: f.result() for k, f in count_futs.items()}
-        counts.update(classifier_count)
         empty = [k for k, n in sorted(counts.items()) if n == 0]
         if empty:
             raise ValueError(

@@ -148,11 +148,10 @@ def token_budget_sample(
     id_col: str = "doc_id",
     text_col: str = "text",
     host_col: str = "source",
-    budget: int = TOKEN_BUDGET,
 ) -> DataFrame:
     """Per-host token-budget sampling: order each host's documents by
     a deterministic content-hash priority and keep documents while the
-    host's running token total stays within budget — the curation step
+    host's running token total stays within TOKEN_BUDGET — the curation step
     that caps how much any one domain contributes to a training mix.
 
     The running sum is a window with an explicit ROWS UNBOUNDED
@@ -178,7 +177,7 @@ def token_budget_sample(
     )
     return (
         d.withColumn("cum_tokens", F.sum("n_tokens").over(w))
-        .filter(F.col("cum_tokens") <= budget)
+        .filter(F.col("cum_tokens") <= TOKEN_BUDGET)
         .select(
             F.col("doc").alias(id_col),
             F.col("host").alias(host_col),
@@ -258,18 +257,18 @@ def source_quality_gate(
 
 
 BOILERPLATE_DF_CAP = 3   # lines appearing in more docs than this are boilerplate
+LINE_SEP = "\n"          # the line separator strip_boilerplate_lines splits on
 
 
 def strip_boilerplate_lines(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    line_sep: str = "\n",
-    df_cap: int = BOILERPLATE_DF_CAP,
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Corpus-wide boilerplate removal (the C4/CCNet line-dedup pass):
-    lines appearing in more than `df_cap` DISTINCT documents
+    LINE_SEP-separated lines appearing in more than BOILERPLATE_DF_CAP
+    DISTINCT documents
     (navigation chrome, cookie banners, legal footers) are stripped
     from every document, and the text is rebuilt in original line
     order.  Unlike the keep/drop operators this REWRITES content from
@@ -295,9 +294,9 @@ def strip_boilerplate_lines(
     shuffles 16-byte md5(line) digests, never line text; the anti join
     against the hot set is left un-hinted — at test scale AQE converts
     it to a broadcast join at runtime, while at corpus scale the hot
-    set grows with the corpus (every line in > df_cap docs) and a
-    forced broadcast would collect an unbounded set to the driver; a
-    production run raises df_cap toward a corpus-share threshold
+    set grows with the corpus (every line in > BOILERPLATE_DF_CAP docs)
+    and a forced broadcast would collect an unbounded set to the driver;
+    a production run raises BOILERPLATE_DF_CAP toward a corpus-share threshold
     and/or lets the join shuffle digests.  All shuffles are keyed on
     digests or doc ids, no self-joins.
 
@@ -306,10 +305,10 @@ def strip_boilerplate_lines(
     per-record streaming pipeline cannot compute it incrementally
     without a stateful doc-frequency store.
     """
-    # line_sep is a LITERAL separator: F.split takes a Java regex, so
+    # LINE_SEP is a LITERAL separator: F.split takes a Java regex, so
     # quote it (\Q…\E) — an unescaped '.' or '|' would split on every
     # character and shred the text
-    split_expr = F.split(F.coalesce(F.col(text_col), F.lit("")), "\\Q" + line_sep + "\\E")
+    split_expr = F.split(F.coalesce(F.col(text_col), F.lit("")), "\\Q" + LINE_SEP + "\\E")
     # Round-6 shape (the guide-§8 discipline — decide on digests, never
     # move the text): line TEXT never enters any shuffle.  The round-4
     # form exploded every line, broadcast-joined the hot set, then
@@ -343,7 +342,7 @@ def strip_boilerplate_lines(
     hot = (
         digests.groupBy("k")
         .agg(F.count("*").alias("doc_df"))
-        .filter(F.col("doc_df") > df_cap)
+        .filter(F.col("doc_df") > BOILERPLATE_DF_CAP)
         .select("k")
     )
     doc_hot = (
@@ -363,7 +362,7 @@ def strip_boilerplate_lines(
     )
     return joined.select(
         F.col("doc").alias(id_col),
-        F.array_join(kept, line_sep).alias("clean_text"),
+        F.array_join(kept, LINE_SEP).alias("clean_text"),
         (F.size(parts) - F.size(kept)).cast("int").alias("n_removed"),
         *carry_cols,
     )

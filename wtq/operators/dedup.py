@@ -207,18 +207,13 @@ def _band_strs() -> Column:
 LSH_BUCKET_CAP = 1000
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bucket_cap: int = LSH_BUCKET_CAP,
-) -> DataFrame:
+def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Candidate near-duplicate pairs via banding: docs sharing ALL row
     minvalues in ≥1 band.  Returns (doc1, doc2, n_shared_bands) with
     doc1 < doc2 (canonical pair ordering, cf. proccess_data.sql:244).
 
-    Buckets with more than `bucket_cap` docs emit STAR edges
-    (bucket-min ↔ member) instead of all-pairs (see LSH_BUCKET_CAP):
+    Buckets with more than LSH_BUCKET_CAP docs emit STAR edges
+    (bucket-min ↔ member) instead of all-pairs (see its comment):
     output stays linear in bucket size, every emitted pair is still a
     genuine shared-band candidate, and cluster connectivity is
     preserved exactly; `sql_minhash_lsh_pairs` mirrors the cap and the
@@ -257,31 +252,29 @@ def minhash_lsh_pairs(
     # the exact-dedup-first net upstream (byte-identical floods never
     # reach here) before raising executor memory.
     #
-    return _pairs_from_buckets(buckets, bucket_cap)
+    return _pairs_from_buckets(buckets)
 
 
-def _pairs_from_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
+def _pairs_from_buckets(buckets: DataFrame) -> DataFrame:
     """Pair generation over a (doc, bucket) table — the back half of
     minhash_lsh_pairs, factored out (round-6) so a caller that also
     audits occupancy (wtq/build.py) can feed BOTH consumers from one
     materialized bucket table instead of running the signature UDF
     twice."""
     return (
-        _star_capped_pairs(buckets, ["bucket"], F.col("doc"), bucket_cap)
+        _star_capped_pairs(buckets, ["bucket"], F.col("doc"))
         .groupBy(F.col("a").alias("doc1"), F.col("b").alias("doc2"))
         .agg(F.count("*").alias("n_shared_bands"))
     )
 
 
-def _star_capped_pairs(
-    rows: DataFrame, keys: list[str], member: Column, bucket_cap: int
-) -> DataFrame:
+def _star_capped_pairs(rows: DataFrame, keys: list[str], member: Column) -> DataFrame:
     """(a, b) member pairs with a < b within each `keys` bucket of
     `rows`, via one aggregation + double explode.  One conditional
     explode handles both regimes without touching the upstream subtree
-    twice: the LEFT side is every member for within-cap buckets but
-    only the bucket minimum for over-cap buckets — [min] × members =
-    the star."""
+    twice: the LEFT side is every member for buckets within
+    LSH_BUCKET_CAP but only the bucket minimum for over-cap buckets —
+    [min] × members = the star."""
     grouped = (
         rows.groupBy(*keys)
         .agg(F.collect_list(member).alias("ms"))
@@ -290,7 +283,7 @@ def _star_capped_pairs(
     return (
         grouped.select(
             F.explode(
-                F.when(F.size("ms") <= bucket_cap, F.col("ms")).otherwise(
+                F.when(F.size("ms") <= LSH_BUCKET_CAP, F.col("ms")).otherwise(
                     F.array(F.array_min("ms"))
                 )
             ).alias("a"),
@@ -320,26 +313,27 @@ def _minhash_buckets(
     ).filter(~F.col("bucket").endswith(sentinel_bucket))
 
 
-def _bucket_stats_from_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
+def _bucket_stats_from_buckets(buckets: DataFrame) -> DataFrame:
     """Occupancy histogram over a (doc, bucket) table: one row per
     bucket size with the number of buckets that size and whether they
-    exceed `bucket_cap` — the observability hook for the cap's star
+    exceed LSH_BUCKET_CAP — the observability hook for the cap's star
     path, returned by dedup_resolution."""
     return (
         buckets.groupBy("bucket")
         .agg(F.count("*").alias("bucket_size"))
         .groupBy("bucket_size")
         .agg(F.count("*").alias("n_buckets"))
-        .withColumn("over_cap", F.col("bucket_size") > bucket_cap)
+        .withColumn("over_cap", F.col("bucket_size") > LSH_BUCKET_CAP)
     )
 
 
 NGRAM_DF_CAP = 50  # shingles in more docs than this are boilerplate
+NGRAM_TOP_N = 20  # pairs ngram_jaccard_pairs returns
 
 
-def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, top_n: int = 20) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Exact shingle-set Jaccard for pairs sharing ≥1 shingle — inverted
-    index join, never a cross join. Returns top_n pairs by similarity
+    index join, never a cross join. Returns NGRAM_TOP_N pairs by similarity
     (deterministic tie-break doc1, doc2).
 
     Document-frequency cutoff: shingles appearing in > NGRAM_DF_CAP
@@ -393,7 +387,7 @@ def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str, top_n: int = 
         .join(s2, "doc2")
         .withColumn("jaccard", F.col("inter") / (F.col("sz1") + F.col("sz2") - F.col("inter")))
         .orderBy(F.col("jaccard").desc(), "doc1", "doc2")
-        .limit(top_n)
+        .limit(NGRAM_TOP_N)
         .select("doc1", "doc2", F.round("jaccard", 6).alias("jaccard"))
     )
 
@@ -461,14 +455,10 @@ def _cc_union_find(edges: DataFrame) -> DataFrame:
     return edges.coalesce(1).mapInPandas(uf, schema)
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc1",
-    b_col: str = "doc2",
-    single_task_max_edges: int = CC_SINGLE_TASK_MAX_EDGES,
-) -> DataFrame:
-    """Resolve near-duplicate PAIRS into CLUSTERS: (node, cluster)
-    where cluster = min node id reachable through the pair graph.
+def connected_components(pairs: DataFrame) -> DataFrame:
+    """Resolve near-duplicate (doc1, doc2) PAIRS into CLUSTERS:
+    (node, cluster) where cluster = min node id reachable through the
+    pair graph.
 
     A dedup pipeline keeps one representative per cluster, not per
     pair — pairs alone under-delete transitive duplicates (A~B, B~C
@@ -480,7 +470,7 @@ def connected_components(
     Two physical strategies behind one contract (the broadcast-join
     pattern applied to graphs — pick the plan by measured size):
 
-    * edge count ≤ `single_task_max_edges` → ONE mapInPandas task runs
+    * edge count ≤ CC_SINGLE_TASK_MAX_EDGES → ONE mapInPandas task runs
       union-find over the coalesced edge list (`_cc_union_find`).  The
       pair graph is duplicate-volume-sized — orders of magnitude
       smaller than the corpus after exact-dedup-first + the LSH bucket
@@ -502,14 +492,14 @@ def connected_components(
     same runtime-statistics discipline AQE uses to pick join
     strategies."""
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .unionByName(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        pairs.select(F.col("doc1").alias("src"), F.col("doc2").alias("dst"))
+        .unionByName(pairs.select(F.col("doc2").alias("src"), F.col("doc1").alias("dst")))
         .distinct()
     )
     edges = edges.localCheckpoint(eager=True)
     # width-aware ceiling: string ids (urls) cost ~10× a numeric id in
     # the single task's Python dicts — see CC_STRING_ID_DIVISOR
-    cap = single_task_max_edges
+    cap = CC_SINGLE_TASK_MAX_EDGES
     if edges.schema["src"].dataType.simpleString() == "string":
         cap //= CC_STRING_ID_DIVISOR
     if edges.count() <= cap:
@@ -574,7 +564,6 @@ def dedup_resolution(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    bucket_cap: int = LSH_BUCKET_CAP,
     rebalance: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Per-document cluster assignment (node, cluster) with
@@ -583,9 +572,9 @@ def dedup_resolution(
     stage, so a corpus with 10⁵ identical boilerplate pages puts ONE
     doc — not 10⁵ — into each band bucket (bounded collect_list,
     linear not quadratic).  Exact-dup members are re-attached to their
-    representative's cluster afterwards.  `bucket_cap` is the pair
-    stage's cap (see minhash_lsh_pairs), and the returned audit flags
-    buckets over that same cap.
+    representative's cluster afterwards.  The pair stage and the
+    returned audit both read LSH_BUCKET_CAP (see minhash_lsh_pairs), so
+    the audit flags buckets over the cap the pairs were built with.
 
     Semantics: the same components as running LSH over the full corpus
     PLUS an edge between every exact duplicate and its group minimum —
@@ -646,8 +635,8 @@ def dedup_resolution(
     buckets = _minhash_buckets(
         reps, id_col, text_col, rebalance=rebalance
     ).localCheckpoint(eager=True)
-    pairs = _pairs_from_buckets(buckets, bucket_cap)
-    stats = _bucket_stats_from_buckets(buckets, bucket_cap)
+    pairs = _pairs_from_buckets(buckets)
+    stats = _bucket_stats_from_buckets(buckets)
     cc = connected_components(pairs).select(
         F.col("node").alias("rep"), F.col("cluster").alias("cc_cluster")
     )
@@ -812,7 +801,6 @@ def sql_minhash_lsh_pairs(
     table: str,
     id_col: str,
     text_col: str,
-    bucket_cap: int = LSH_BUCKET_CAP,
     cap_unit: str = "docs",
 ) -> str:
     """Oracle for minhash_lsh_pairs, INCLUDING the bucket cap — both
@@ -864,11 +852,11 @@ def sql_minhash_lsh_pairs(
     -- the star rule; mirrors minhash_lsh_pairs exactly)
     lefts AS (
       SELECT b.doc, b.bucket FROM buckets b JOIN bsz USING (bucket)
-      WHERE n <= {bucket_cap}
+      WHERE n <= {LSH_BUCKET_CAP}
       UNION ALL
       SELECT min(b.doc) AS doc, b.bucket
       FROM buckets b JOIN bsz USING (bucket)
-      WHERE n > {bucket_cap}
+      WHERE n > {LSH_BUCKET_CAP}
       GROUP BY b.bucket
     ),
     pairs AS (
@@ -881,7 +869,7 @@ def sql_minhash_lsh_pairs(
     """
 
 
-def sql_ngram_jaccard_pairs(table: str, id_col: str, text_col: str, top_n: int = 20) -> str:
+def sql_ngram_jaccard_pairs(table: str, id_col: str, text_col: str) -> str:
     return f"""
     WITH raw AS (
       SELECT {id_col} AS doc, unnest(list_distinct({_sql_shingles(text_col)})) AS shingle
@@ -902,7 +890,7 @@ def sql_ngram_jaccard_pairs(table: str, id_col: str, text_col: str, top_n: int =
     JOIN sizes s1 ON s1.doc = doc1
     JOIN sizes s2 ON s2.doc = doc2
     ORDER BY CAST(inter AS DOUBLE) / (s1.sz + s2.sz - inter) DESC, doc1, doc2
-    LIMIT {top_n}
+    LIMIT {NGRAM_TOP_N}
     """
 
 
@@ -957,12 +945,7 @@ SIMHASH_BANDS = SIMHASH_BITS // SIMHASH_BAND_BITS  # 6
 assert HAMMING_MAX < SIMHASH_BANDS
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bucket_cap: int = LSH_BUCKET_CAP,
-) -> DataFrame:
+def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Near-duplicate pairs by SimHash banding: candidates share one
     SIMHASH_BAND_BITS-bit chunk (6 bands × 10 bits — equi-join, never
     a cross join), then exact Hamming distance via bit_count(xor).
@@ -970,7 +953,7 @@ def simhash_near_pairs(
 
     Recall contract: exact for hamming <= HAMMING_MAX (= SIMHASH_BANDS-1,
     pigeonhole over disjoint bands) — among pairs whose buckets stay
-    within `bucket_cap`.  Like minhash_lsh_pairs, chunk buckets larger
+    within LSH_BUCKET_CAP.  Like minhash_lsh_pairs, chunk buckets larger
     than the cap (duplicate floods sharing a band value) degrade to
     STAR candidates — only (bucket-min, member) pairs are generated,
     then Hamming-verified like any candidate — so output stays linear
@@ -1016,9 +999,7 @@ def simhash_near_pairs(
     # Members are (doc, simhash) structs: doc leads and is unique in a
     # bucket, so struct order is doc order (the star's min and a < b)
     return (
-        _star_capped_pairs(
-            chunks, ["band", "chunk"], F.struct("doc", "simhash"), bucket_cap
-        )
+        _star_capped_pairs(chunks, ["band", "chunk"], F.struct("doc", "simhash"))
         .select(
             F.col("a.doc").alias("doc1"),
             F.col("b.doc").alias("doc2"),
@@ -1029,9 +1010,7 @@ def simhash_near_pairs(
     )
 
 
-def sql_simhash_near_pairs(
-    table: str, id_col: str, text_col: str, bucket_cap: int = LSH_BUCKET_CAP
-) -> str:
+def sql_simhash_near_pairs(table: str, id_col: str, text_col: str) -> str:
     sim = sql_simhash(table, id_col, text_col)
     return f"""
     WITH sig AS ({sim}),
@@ -1048,11 +1027,11 @@ def sql_simhash_near_pairs(
     -- bucket-minimum row above the cap
     lefts AS (
       SELECT c.doc, c.simhash, c.band, c.chunk
-      FROM chunks c JOIN bsz USING (band, chunk) WHERE n <= {bucket_cap}
+      FROM chunks c JOIN bsz USING (band, chunk) WHERE n <= {LSH_BUCKET_CAP}
       UNION ALL
       SELECT arg_min(c.doc, c.doc) AS doc, arg_min(c.simhash, c.doc) AS simhash,
              c.band, c.chunk
-      FROM chunks c JOIN bsz USING (band, chunk) WHERE n > {bucket_cap}
+      FROM chunks c JOIN bsz USING (band, chunk) WHERE n > {LSH_BUCKET_CAP}
       GROUP BY c.band, c.chunk
     )
     SELECT DISTINCT a.doc AS doc1, b.doc AS doc2,

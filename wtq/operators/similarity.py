@@ -392,17 +392,18 @@ def kmeans_centroids(
 
 
 IVF_NPROBE = 3
+IVF_K = 3  # neighbours ivf_topk returns per query
 
 
 def ivf_topk(
-    emb: DataFrame, queries: DataFrame, k: int = 3, id_col: str = "vec_id", vec_col: str = "embedding"
+    emb: DataFrame, queries: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """IVF-style ANN: coarse quantizer = deterministic seeded k-means
-    (kmeans_centroids); every vector is assigned to its nearest
-    centroid (argmax cosine, tie-break lowest centroid index); queries
-    probe their IVF_NPROBE nearest cells (multi-probe — single-probe
-    recall on near-uniform vectors is bounded by the cell-share of the
-    corpus).  Assignment is a broadcast join against the tiny centroid
+    """IVF-style ANN, IVF_K neighbours per query: coarse quantizer =
+    deterministic seeded k-means (kmeans_centroids); every vector is
+    assigned to its nearest centroid (argmax cosine, tie-break lowest
+    centroid index); queries probe their IVF_NPROBE nearest cells
+    (multi-probe — single-probe recall on near-uniform vectors is
+    bounded by the cell-share of the corpus).  Assignment is a broadcast join against the tiny centroid
     set; the search is an equi-join on cell id — the J9
     candidate-generation pattern with a LEARNED coarse key.  Each
     neighbor lives in exactly one cell, so multi-probe candidates never
@@ -425,7 +426,7 @@ def ivf_topk(
         _side(cells, id_col, vec_col, "n", cell=F.col("c_idx")),
         _side(q, id_col, vec_col, "q", cell=F.col("c_idx")),
         "cell",
-        k,
+        IVF_K,
     )
 
 
@@ -466,7 +467,7 @@ def _sql_kmeans_ctes(table: str) -> str:
     return ",\n    ".join(parts)
 
 
-def sql_ivf_topk(table: str, n_queries: int = 5, k: int = 3) -> str:
+def sql_ivf_topk(table: str, n_queries: int = 5) -> str:
     return f"""
     WITH {_sql_kmeans_ctes(table)},
     assigned AS (
@@ -494,5 +495,5 @@ def sql_ivf_topk(table: str, n_queries: int = 5, k: int = 3) -> str:
     SELECT q_id, n_id, round(cos, 5) AS cos, CAST(rank AS INT) AS rank FROM (
       SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
       FROM scored
-    ) WHERE rank <= {k}
+    ) WHERE rank <= {IVF_K}
     """
