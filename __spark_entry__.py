@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from wtq.generate import ensure_pages  # noqa: E402
-from wtq.pipeline import run_pipeline  # noqa: E402
+from wtq.pipeline import decisions_view, run_pipeline  # noqa: E402
 from wtq.queries import ORACLE_SQL, QUERIES  # noqa: E402
 
 
@@ -38,7 +38,7 @@ def entry(spark: SparkSession) -> DataFrame:
     _pin_utc(spark)
     pages_path = ensure_pages("/root/testdata/sf0.001")
     res = run_pipeline(spark, pages_path, num_partitions=16)
-    return res.decisions
+    return decisions_view(res.decided)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

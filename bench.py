@@ -93,12 +93,7 @@ def main() -> None:
         strip_boilerplate=True, host_gate=True,
     ).decided.agg(F.sum(F.size("fired_rules"))).collect()
 
-    # -- headline: full pipeline with real sinks --
-    # Materialize the decided stage ONCE (the reference's CTAS-at-fan-out
-    # pattern, SURVEY.md §3/E1), then derive the three output views from
-    # the materialized parquet — cheaper than recomputing or caching.
-    from wtq.pipeline import decisions_view, metrics_view, scrubbed_view
-
+    # -- headline: full pipeline with real sinks (PipelineResult.write) --
     out = tempfile.mkdtemp(prefix="wtq_bench_")
     cur_out = tempfile.mkdtemp(prefix="wtq_bench_cur_")
 
@@ -110,16 +105,9 @@ def main() -> None:
         # overhead; same economics as minhash_signatures' repartition
         # note).  At cluster scale the partition count follows data
         # size, not this constant.
-        res = run_pipeline(spark, pages_path, num_partitions=cpus)
-        res.decided.write.mode("overwrite").parquet(f"{out}/decided")
-        t1 = time.time()
-        log(f"  decided write: {t1 - t0:.2f}s")
-        decided = spark.read.parquet(f"{out}/decided")
-        n = decided.count()
-        decisions_view(decided).write.mode("overwrite").parquet(f"{out}/decisions")
-        scrubbed_view(decided).write.mode("overwrite").parquet(f"{out}/scrubbed")
-        metrics_view(decided).write.mode("overwrite").parquet(f"{out}/metrics")
-        log(f"  derived views: {time.time() - t1:.2f}s")
+        run_pipeline(spark, pages_path, num_partitions=cpus).write(out)
+        n = spark.read.parquet(f"{out}/decided").count()
+        log(f"  decided + derived views: {time.time() - t0:.2f}s")
         return time.time() - t0, n
 
     def one_curated_run() -> float:

@@ -3,23 +3,29 @@
 
 from __future__ import annotations
 
+import hashlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from oracle.oracle import oracle_decide
-from wtq.pipeline import run_pipeline
+from wtq.pipeline import decisions_view, rule_fire_counts, run_pipeline
 from wtq.rules.registry import registry_df
-from wtq.pipeline import rule_fire_counts
 
 
 @pytest.fixture(scope="module")
-def decided(spark, pages_path):
-    res = run_pipeline(spark, pages_path, num_partitions=8)
-    df = res.decided.cache()
-    df.count()
-    yield df
-    df.unpersist()
+def out(spark, pages_path, tmp_path_factory):
+    """The four outputs of one pipeline run, as PipelineResult.write
+    leaves them."""
+    d = str(tmp_path_factory.mktemp("pipeline_out"))
+    run_pipeline(spark, pages_path, num_partitions=8).write(d)
+    return d
+
+
+@pytest.fixture(scope="module")
+def decided(spark, out):
+    return spark.read.parquet(f"{out}/decided")
 
 
 @pytest.fixture(scope="module")
@@ -31,9 +37,10 @@ def test_recrawl_dedup(decided, pages_pdf):
     assert decided.count() == pages_pdf["url"].nunique()
 
 
-def test_keep_drop_exact_match(decided, oracle):
+def test_keep_drop_exact_match(spark, out, oracle):
     """Target is F1 ≥ 0.99; we assert exact agreement (F1 = 1.0)."""
-    got = decided.select("url", "keep", "fired_rules").toPandas()
+    got = spark.read.parquet(f"{out}/decisions").toPandas()
+    assert list(got.columns) == ["url", "keep", "fired_rules"]
     m = got.merge(oracle, on="url", suffixes=("_s", "_o"))
     assert len(m) == len(oracle) == len(got)
     assert (m.keep_s == m.keep_o).all()
@@ -41,19 +48,27 @@ def test_keep_drop_exact_match(decided, oracle):
     assert mism.empty, mism.head()
 
 
-def test_scrubbed_bytes_identical(decided, oracle):
+def test_scrubbed_bytes_identical(spark, out, decided, oracle):
     got = decided.select("url", "text").toPandas()
     m = got.merge(oracle[["url", "text"]], on="url", suffixes=("_s", "_o"))
     bad = [u for u, a, b in zip(m.url, m.text_s, m.text_o) if a.encode("utf-8") != b.encode("utf-8")]
     assert not bad, bad[:5]
 
+    # the written scrubbed output: exactly the kept urls, the same
+    # bytes, and the sha256 of those bytes
+    kept = oracle[oracle.keep].set_index("url").text
+    sc = spark.read.parquet(f"{out}/scrubbed").toPandas().set_index("url")
+    assert sorted(sc.index) == sorted(kept.index)
+    for url, r in sc.iterrows():
+        b = kept[url].encode("utf-8")
+        assert r.text.encode("utf-8") == b, url
+        assert r.text_sha256 == hashlib.sha256(b).hexdigest(), url
 
-def test_metrics_conservation(decided, pages_pdf):
+
+def test_metrics_conservation(spark, out, pages_pdf):
     """Σ per-partition keep+drop == distinct input count — the err_all
     union-arithmetic invariant (proccess_data.sql:816-839)."""
-    from wtq.pipeline import metrics_view
-
-    m = metrics_view(decided).toPandas()
+    m = spark.read.parquet(f"{out}/metrics").toPandas()
     assert int(m.n_input.sum()) == pages_pdf["url"].nunique()
     assert int(m.n_keep.sum() + m.n_drop.sum()) == int(m.n_input.sum())
     assert len(m) > 1  # actually partitioned
@@ -153,9 +168,7 @@ def test_langid_l1_rule_quality(spark, pages_path):
     classes should essentially never fire it.  (fastText-grade
     real-world accuracy is not measurable offline — this pins the
     rule's behavior on the distribution we can label.)"""
-    from wtq.pipeline import run_pipeline
-
-    decided = run_pipeline(spark, pages_path, num_partitions=8).decisions.toPandas()
+    decided = decisions_view(run_pipeline(spark, pages_path, num_partitions=8).decided).toPandas()
     decided["feat"] = decided.url.map(_feat_of)
     decided["l1"] = decided.fired_rules.map(lambda rs: "L-1" in list(rs))
     wrong = decided[decided.feat == "wrong_lang"]
@@ -169,9 +182,7 @@ def test_langid_l1_rule_quality(spark, pages_path):
 def test_new_rules_fire_on_their_classes(spark, pages_path):
     """Q-11 (code braces) and Q-12 (lorem ipsum) must fire on their
     planted classes and essentially nowhere clean."""
-    from wtq.pipeline import run_pipeline
-
-    d = run_pipeline(spark, pages_path, num_partitions=8).decisions.toPandas()
+    d = decisions_view(run_pipeline(spark, pages_path, num_partitions=8).decided).toPandas()
     d["feat"] = d.url.map(_feat_of)
     for feat, code in (("code_spam", "Q-11"), ("lorem_ipsum", "Q-12")):
         hit = d[d.feat == feat].fired_rules.map(lambda rs, c=code: c in list(rs))

@@ -11,7 +11,7 @@ from datetime import datetime, timezone
 import pytest
 from pyspark.sql import functions as F
 
-from wtq.pipeline import run_pipeline
+from wtq.pipeline import metrics_view, run_pipeline
 from wtq.rules.heuristics import py_stats
 from wtq.rules.langid import predict_lang
 from wtq.rules.perplexity import char_perplexity
@@ -66,8 +66,7 @@ def test_default_flags_add_no_columns(spark, pages_path):
     res = run_pipeline(spark, pages_path, num_partitions=8)
     assert "n_boiler_removed" not in res.decided.columns
     assert "host_gated" not in res.decided.columns
-    assert res.gate_table is None
-    m = res.metrics.columns
+    m = metrics_view(res.decided).columns
     assert "n_boiler_lines_removed" not in m and "n_host_gated" not in m
 
 
@@ -100,16 +99,11 @@ def test_host_gate_conservation_and_metrics(spark, tmp_path):
     assert n == n_keep + n_rule + n_gated == 2 * GATE_MIN_DOCS + 1
 
     # metrics roll the gate into lineage, and n_input = n_keep + n_drop
-    m = res.metrics.agg(
+    m = metrics_view(res.decided).agg(
         F.sum("n_input"), F.sum("n_keep"), F.sum("n_drop"), F.sum("n_host_gated")
     ).first()
     assert m[0] == n and m[1] == n_keep and m[0] == m[1] + m[2]
     assert m[3] == n_gated == GATE_MIN_DOCS
-
-    # the verdict table is exposed for audit
-    gates = {r["host"]: r["gate"] for r in res.gate_table.collect()}
-    assert gates["https://gated.example"] == "drop"
-    assert gates["https://kept.example"] == "keep"
 
 
 def test_strip_boilerplate_rewrites_and_counts(spark, tmp_path):
@@ -137,7 +131,7 @@ def test_strip_boilerplate_rewrites_and_counts(spark, tmp_path):
         assert r.n_boiler_removed == 1
     assert d["https://site.example/solo"].n_boiler_removed == 0
 
-    m = res.metrics.agg(F.sum("n_boiler_lines_removed"), F.sum("n_input")).first()
+    m = metrics_view(res.decided).agg(F.sum("n_boiler_lines_removed"), F.sum("n_input")).first()
     assert m[0] == 5 and m[1] == 6
 
 
@@ -167,7 +161,7 @@ def test_both_flags_compose(spark, tmp_path):
         if r.keep:
             assert not r.host_gated and r.fired_rules == []
     # lineage metrics stay conserved with both flags on
-    m = res.metrics.agg(
+    m = metrics_view(res.decided).agg(
         F.sum("n_input"), F.sum("n_keep"), F.sum("n_drop"),
         F.sum("n_host_gated"), F.sum("n_boiler_lines_removed"),
     ).first()

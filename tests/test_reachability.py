@@ -4,7 +4,7 @@ system runs, or is on a short list kept with a reason.
 A pure ``ast`` walk, no imports of the code under test.  The roots are
 the registry and its oracle (``QUERIES``, ``ORACLE_SQL``), the pipeline
 (``run_pipeline``, ``decide``), the build (``build_training_set``) and
-every definition in ``oracle/``, ``bench*.py``, ``perfbench/``,
+every definition in ``oracle/``, ``bench.py``, ``perfbench/``,
 ``__spark_entry__.py`` and ``wtq/daemon.py`` (the Python worker
 daemon, which Spark starts by module name).  A reference is matched by
 module and name: a bare ``name`` resolves through the referring
@@ -12,9 +12,14 @@ module's own definitions and imports, ``alias.attr`` through the
 module that ``alias`` names, so ``pd.read_csv`` never counts as a use
 of some ``wtq`` ``read_csv``.
 Re-exports are followed to the defining module.  Reaching a class
-reaches all of its methods.  A module-level ``assert`` is a check on
-definitions, not a use of them: a table that only an import-time
-assert reads is unreached.  Dunder names (``__getattr__``,
+reaches its bases, decorators and dunder methods, not its other
+members: a method, property or field (``Class.member``) counts as
+reached only when an attribute of that name (``x.member``) appears in
+reached ``wtq`` code or in a root file.  That is a match by name alone,
+so it errs towards "reached"; it is what keeps a property that only
+tests read from hiding behind its class.  A module-level ``assert`` is
+a check on definitions, not a use of them: a table that only an
+import-time assert reads is unreached.  Dunder names (``__getattr__``,
 ``__version__``) are module protocol, not definitions, and are skipped.
 
 The same resolution checks options: a defaulted parameter of a
@@ -41,19 +46,22 @@ ROOTS = {
 }
 # wtq/daemon.py is started by name (`python -m wtq.daemon`, named in
 # get_spark's config), so no reference leads to it
-ROOT_FILES = ("oracle/*.py", "bench*.py", "perfbench/*.py", "__spark_entry__.py", "wtq/daemon.py")
+ROOT_FILES = ("oracle/*.py", "bench.py", "perfbench/*.py", "__spark_entry__.py", "wtq/daemon.py")
 
-# (module, name) -> why it stays although no root reaches it
+# (module, name or "Class.member") -> why it stays although no root
+# reaches it
 KEPT = {
     ("wtq.checkpoint", "MARKER"): "resumable-from-checkpoint run (test_checkpoint.py)",
     ("wtq.checkpoint", "InjectedFailure"): "resumable-from-checkpoint run (test_checkpoint.py)",
     ("wtq.checkpoint", "chunk_expr"): "chunk predicate behind test_bucket_contract.py",
     ("wtq.checkpoint", "committed_chunks"): "resumable-from-checkpoint run (test_checkpoint.py)",
+    ("wtq.checkpoint", "_marker"): "resumable-from-checkpoint run (test_checkpoint.py)",
     ("wtq.checkpoint", "run_checkpointed"): "resumable-from-checkpoint run (test_checkpoint.py)",
-    ("wtq.checkpoint", "read_decided"): "resumable-from-checkpoint run (test_checkpoint.py)",
-    ("wtq.checkpoint", "read_metrics"): "resumable-from-checkpoint run (test_checkpoint.py)",
+    ("wtq.checkpoint", "read_chunks"): "resumable-from-checkpoint run (test_checkpoint.py)",
     ("wtq.rules.registry", "registry_df"): "the err_codes dimension table",
     ("wtq.rules.registry", "rule_rows"): "the err_codes dimension rows",
+    ("wtq.rules.registry", "Rule.description"): "the err_codes description column (rule_rows)",
+    ("wtq.rules.registry", "Rule.about"): "the err_codes description template (Rule.description)",
     ("wtq.pipeline", "rule_fire_counts"): "the err_codes join",
 }
 
@@ -72,19 +80,30 @@ def _module_name(path: pathlib.Path) -> str:
     return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
 
+def _dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
 class _Module:
-    """One parsed file: its top-level definitions, its import table
-    (local name -> dotted target, from any depth, since imports inside
-    functions are common here) and the reference walk."""
+    """One parsed file: its top-level definitions, the members of its
+    classes, its import table (local name -> dotted target, from any
+    depth, since imports inside functions are common here) and the
+    reference walk."""
 
     def __init__(self, path: pathlib.Path):
         self.name = _module_name(path)
         self.tree = ast.parse(path.read_text(), str(path))
         self.defs: dict[str, list[ast.AST]] = {}
+        # what reaching a definition walks: the whole node, except that
+        # a class's non-dunder members ("Class.member") are walked only
+        # once the member itself is reached
+        self.bodies: dict[str, list[ast.AST]] = {}
+        self.members: dict[str, list[str]] = {}  # class -> "Class.member" keys
         for node in self.tree.body:
             for name in _defined_names(node):
-                if not (name.startswith("__") and name.endswith("__")):
+                if not _dunder(name):
                     self.defs.setdefault(name, []).append(node)
+                    self.bodies.setdefault(name, []).extend(self._own(name, node))
         self.imports: dict[str, set[str]] = {}
         for node in ast.walk(self.tree):
             if isinstance(node, ast.Import):
@@ -97,6 +116,20 @@ class _Module:
             elif isinstance(node, ast.ImportFrom) and node.level == 0 and node.module:
                 for a in node.names:
                     self.imports.setdefault(a.asname or a.name, set()).add(f"{node.module}.{a.name}")
+
+    def _own(self, name: str, node: ast.AST) -> list[ast.AST]:
+        if not isinstance(node, ast.ClassDef):
+            return [node]
+        own = [*node.bases, *node.keywords, *node.decorator_list]
+        for stmt in node.body:
+            names = [n for n in _defined_names(stmt) if not _dunder(n)]
+            if not names:
+                own.append(stmt)
+            for n in names:
+                key = f"{name}.{n}"
+                self.bodies.setdefault(key, []).append(stmt)
+                self.members.setdefault(name, []).append(key)
+        return own
 
     def top_level_code(self) -> list[ast.AST]:
         return [
@@ -174,26 +207,42 @@ def _references(wtq: dict[str, _Module], module: _Module, nodes: list[ast.AST]) 
     return out
 
 
+def _attr_names(nodes: list[ast.AST]) -> set[str]:
+    return {n.attr for top in nodes for n in ast.walk(top) if isinstance(n, ast.Attribute)}
+
+
 def unreached() -> set[tuple[str, str]]:
-    """Top-level wtq definitions that no root reaches."""
+    """Top-level wtq definitions that no root reaches, and the
+    ("Class.member") members of reached classes that no reached code
+    names as an attribute."""
     wtq, root_files = _load_modules()
     todo = set(ROOTS)
+    attrs: set[str] = set()
     for m in root_files:
         todo |= _references(wtq, m, m.tree.body)
+        attrs |= _attr_names(m.tree.body)
     reached: set = set()
     live_modules: set = set()
+    waiting: set = set()  # members of reached classes, not yet reached
     while todo:
-        mod, name = todo.pop()
-        if (mod, name) in reached:
-            continue
-        reached.add((mod, name))
-        m = wtq[mod]
-        todo |= _references(wtq, m, m.defs[name])
-        if mod not in live_modules:  # importing a module runs its top level
-            live_modules.add(mod)
-            todo |= _references(wtq, m, m.top_level_code())
+        while todo:
+            mod, name = todo.pop()
+            if (mod, name) in reached:
+                continue
+            reached.add((mod, name))
+            m = wtq[mod]
+            walked = list(m.bodies[name])
+            waiting |= {(mod, key) for key in m.members.get(name, ())}
+            if mod not in live_modules:  # importing a module runs its top level
+                live_modules.add(mod)
+                walked += m.top_level_code()
+            todo |= _references(wtq, m, walked)
+            attrs |= _attr_names(walked)
+        named = {(mod, key) for mod, key in waiting if key.rpartition(".")[2] in attrs}
+        waiting -= named
+        todo |= named
     every = {(m.name, d) for m in wtq.values() for d in m.defs}
-    return every - reached
+    return (every - reached) | waiting
 
 
 def _callees(wtq: dict[str, _Module], module: _Module, call: ast.Call) -> list:

@@ -541,11 +541,12 @@ def test_bucket_cap_mirrored_in_oracles(spark, monkeypatch):
 def test_ivf_kmeans_recall_vs_bruteforce(spark):
     """The k-means coarse quantizer must be a real quantizer: cells are
     learned (not 'first 8 vectors'), every vector lands in a cell, and
-    probing one cell retains most true neighbors.  Recall@3 vs the
-    exact brute-force top-3 over the 5 standard queries."""
+    probing one cell retains most true neighbors.  Recall@ANN_K vs the
+    exact brute-force top-ANN_K over the ANN_QUERIES registry queries."""
     from wtq.operators.similarity import (
+        ANN_K,
+        ANN_QUERIES,
         IVF_CELLS,
-        IVF_K,
         brute_force_topk,
         ivf_topk,
         kmeans_centroids,
@@ -560,8 +561,8 @@ def test_ivf_kmeans_recall_vs_bruteforce(spark):
     vecs = {tuple(round(x, 6) for x in r.embedding) for r in emb.collect()}
     assert all(tuple(round(x, 6) for x in c.c_vec) not in vecs for c in cents)
 
-    q = emb.filter(F.col("vec_id") < 5)
-    truth = {(r.q_id, r.n_id) for r in brute_force_topk(emb, q, k=IVF_K).collect()}
+    q = emb.filter(F.col("vec_id") < ANN_QUERIES)
+    truth = {(r.q_id, r.n_id) for r in brute_force_topk(emb, q).collect()}
     got = {(r.q_id, r.n_id) for r in ivf_topk(emb, q).collect()}
     recall = len(truth & got) / len(truth)
     # single-probe IVF on near-uniform synthetic vectors: recall is
@@ -571,4 +572,4 @@ def test_ivf_kmeans_recall_vs_bruteforce(spark):
     # and every query got a full k result (its own cell is non-trivial)
     from collections import Counter
     per_q = Counter(r[0] for r in got)
-    assert all(per_q[qid] == IVF_K for qid in range(5)), per_q
+    assert all(per_q[qid] == ANN_K for qid in range(ANN_QUERIES)), per_q

@@ -48,7 +48,6 @@ def _hash_bucket(col: str, mod: int):
 
 @dataclass
 class BuildResult:
-    out_dir: str
     lineage: DataFrame  # (stage, n_docs) — doc stages monotone non-increasing
 
 
@@ -64,7 +63,7 @@ def build_training_set(spark: SparkSession, pages_path: str, out_dir: str) -> Bu
     `dedup.LSH_BUCKET_CAP`, so the audit always reports on the cap the
     pair stage actually enforced.
 
-    Returns BuildResult with the output directory and the lineage table;
+    Returns BuildResult with the lineage table;
     splits are written with (url, text, n_tokens) columns.  Lineage has
     two row families: `NN_*` document counts (monotone non-increasing
     through the stages) and `6N_lsh_*` audit gauges (over-cap bucket
@@ -201,4 +200,4 @@ def build_training_set(spark: SparkSession, pages_path: str, out_dir: str) -> Bu
     lineage = spark.createDataFrame(
         sorted(counts.items()), "stage string, n_docs long"
     )
-    return BuildResult(out_dir=out_dir, lineage=lineage)
+    return BuildResult(lineage=lineage)

@@ -2,29 +2,29 @@
 
 Resumability substitutes for streaming state (SURVEY.md §2.9): the
 url-space is split into N deterministic chunks by murmur3(url) mod N;
-each chunk's decided rows + metrics are written to its own directory
-and sealed with a commit marker, mirroring the reference's
-drop-and-recreate idempotence (``drop table if exists`` before every
-CTAS stage — SURVEY.md §7 hard-part 4).  A re-run skips sealed chunks
-and overwrites unsealed ones, so a kill at any point never double
-counts: metrics live in the same per-chunk commit as the data.
+each chunk's four outputs (``PipelineResult.write``) are written to
+its own directory and sealed with a commit marker, mirroring the
+reference's drop-and-recreate idempotence (``drop table if exists``
+before every CTAS stage — SURVEY.md §7 hard-part 4).  A re-run skips
+sealed chunks and overwrites unsealed ones, so a kill at any point
+never double counts: metrics live in the same per-chunk commit as the
+data.  Paths go through Hadoop's FileSystem API, so a local path and
+any URI the session can write (``file://``, ``s3a://``, …) both work.
 
 Scale notes (10^12 docs): the chunk predicate ``murmur3(url) % N = k``
 maps to Iceberg's ``bucket(url, N)`` partition transform, so each
-chunk read is partition pruning, not a full scan (the parquet filter
-here is the sandbox stand-in).  Chunk count N is the resume
-granularity — pick N ≈ cluster-hours of work / desired checkpoint
-interval.
+chunk read is partition pruning, not a full scan.  On a plain parquet
+input (the only one here) each chunk read is a full scan, N in all.
+Chunk count N is the resume granularity — pick N ≈ cluster-hours of
+work / desired checkpoint interval.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from wtq.pipeline import decide, metrics_view
+from wtq.pipeline import PipelineResult, decide
 
 MARKER = "_WTQ_COMMITTED"
 
@@ -37,11 +37,15 @@ def chunk_expr(n_chunks: int):
     return F.pmod(F.hash(F.col("url")), F.lit(n_chunks))
 
 
-def committed_chunks(out_dir: str, n_chunks: int) -> list[int]:
-    return [
-        k for k in range(n_chunks)
-        if os.path.exists(os.path.join(out_dir, f"chunk={k}", MARKER))
-    ]
+def _marker(spark: SparkSession, out_dir: str, k: int):
+    """(FileSystem, Path) of chunk k's commit marker."""
+    path = spark._jvm.org.apache.hadoop.fs.Path(f"{out_dir}/chunk={k}/{MARKER}")
+    return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
+
+
+def committed_chunks(spark: SparkSession, out_dir: str, n_chunks: int) -> list[int]:
+    markers = (_marker(spark, out_dir, k) for k in range(n_chunks))
+    return [k for k, (fs, path) in enumerate(markers) if fs.exists(path)]
 
 
 def run_checkpointed(
@@ -62,32 +66,23 @@ def run_checkpointed(
     and applies them per chunk — per-chunk recomputation would change
     results with N and break the sealed-chunk determinism contract."""
     pages = spark.read.parquet(pages_path)
+    sealed = set(committed_chunks(spark, out_dir, n_chunks))
     done: list[int] = []
     for k in range(n_chunks):
-        chunk_dir = os.path.join(out_dir, f"chunk={k}")
-        marker = os.path.join(chunk_dir, MARKER)
-        if os.path.exists(marker):
+        if k in sealed:
             continue
         chunk = pages.filter(chunk_expr(n_chunks) == k)
-        decided = decide(chunk)
-        decided.write.mode("overwrite").parquet(os.path.join(chunk_dir, "decided"))
-        # metrics in the same commit unit as the data (no double count)
-        metrics_view(
-            spark.read.parquet(os.path.join(chunk_dir, "decided"))
-        ).withColumn("chunk", F.lit(k)).write.mode("overwrite").parquet(
-            os.path.join(chunk_dir, "metrics")
-        )
-        with open(marker, "w") as f:
-            f.write("ok\n")
+        PipelineResult(decide(chunk)).write(f"{out_dir}/chunk={k}")
+        fs, marker = _marker(spark, out_dir, k)
+        fs.create(marker, True).close()
         done.append(k)
         if fail_after_chunk is not None and k >= fail_after_chunk:
             raise InjectedFailure(f"injected failure after chunk {k}")
     return done
 
 
-def read_decided(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "chunk=*", "decided"))
-
-
-def read_metrics(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "chunk=*", "metrics"))
+def read_chunks(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
+    """Output `name` (decided / decisions / scrubbed / metrics) of the
+    chunks written so far, with `chunk` as an int column read from the
+    directory name."""
+    return spark.read.option("basePath", out_dir).parquet(f"{out_dir}/chunk=*/{name}")

@@ -22,6 +22,10 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 SRP_BITS = 8  # bucket = sign bits of the first 8 dimensions
+# the registry's ANN queries search for vectors vec_id < ANN_QUERIES;
+# the Spark queries and the oracle SQL both read these two constants
+ANN_QUERIES = 5
+ANN_K = 3  # neighbours brute_force_topk and ivf_topk return per query
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -71,12 +75,12 @@ def _cosine_topk(e: DataFrame, q: DataFrame, on: str | None, k: int) -> DataFram
 
 
 def brute_force_topk(
-    emb: DataFrame, queries: DataFrame, k: int = 3, id_col: str = "vec_id", vec_col: str = "embedding"
+    emb: DataFrame, queries: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """Top-k cosine neighbors per query vector (self excluded).
+    """Top-ANN_K cosine neighbors per query vector (self excluded).
     The small query side is broadcast — no shuffle of the big side."""
     return _cosine_topk(
-        _side(emb, id_col, vec_col, "n"), _side(queries, id_col, vec_col, "q"), None, k
+        _side(emb, id_col, vec_col, "n"), _side(queries, id_col, vec_col, "q"), None, ANN_K
     )
 
 
@@ -121,13 +125,13 @@ def _sql_cos(a: str, b: str) -> str:
     return f"({_sql_dot(a, b)} / ({_sql_norm(a)} * {_sql_norm(b)}))"
 
 
-def sql_brute_force_topk(table: str, n_queries: int = 5, k: int = 3) -> str:
+def sql_brute_force_topk(table: str) -> str:
     cos = _sql_cos("q.embedding", "n.embedding")
     return f"""
     WITH scored AS (
       SELECT q.vec_id AS q_id, n.vec_id AS n_id, {cos} AS cos
       FROM {table} q JOIN {table} n ON q.vec_id <> n.vec_id
-      WHERE q.vec_id < {n_queries}
+      WHERE q.vec_id < {ANN_QUERIES}
     ),
     ranked AS (
       SELECT q_id, n_id, cos,
@@ -135,7 +139,7 @@ def sql_brute_force_topk(table: str, n_queries: int = 5, k: int = 3) -> str:
       FROM scored
     )
     SELECT q_id, n_id, round(cos, 5) AS cos, CAST(rank AS INT) AS rank
-    FROM ranked WHERE rank <= {k}
+    FROM ranked WHERE rank <= {ANN_K}
     """
 
 
@@ -144,11 +148,11 @@ def _sql_bucket(vec: str) -> str:
     return f"({parts})"
 
 
-def sql_lsh_top1(table: str, n_queries: int = 5) -> str:
+def sql_lsh_top1(table: str) -> str:
     cos = _sql_cos("q.embedding", "n.embedding")
     return f"""
     WITH q AS (SELECT vec_id AS q_id, embedding, {_sql_bucket('embedding')} AS bucket
-               FROM {table} WHERE vec_id < {n_queries}),
+               FROM {table} WHERE vec_id < {ANN_QUERIES}),
          e AS (SELECT vec_id AS n_id, embedding, {_sql_bucket('embedding')} AS bucket FROM {table}),
     scored AS (
       SELECT q.q_id, e.n_id, {_sql_cos('q.embedding', 'e.embedding')} AS cos
@@ -392,13 +396,12 @@ def kmeans_centroids(
 
 
 IVF_NPROBE = 3
-IVF_K = 3  # neighbours ivf_topk returns per query
 
 
 def ivf_topk(
     emb: DataFrame, queries: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
 ) -> DataFrame:
-    """IVF-style ANN, IVF_K neighbours per query: coarse quantizer =
+    """IVF-style ANN, ANN_K neighbours per query: coarse quantizer =
     deterministic seeded k-means (kmeans_centroids); every vector is
     assigned to its nearest centroid (argmax cosine, tie-break lowest
     centroid index); queries probe their IVF_NPROBE nearest cells
@@ -426,7 +429,7 @@ def ivf_topk(
         _side(cells, id_col, vec_col, "n", cell=F.col("c_idx")),
         _side(q, id_col, vec_col, "q", cell=F.col("c_idx")),
         "cell",
-        IVF_K,
+        ANN_K,
     )
 
 
@@ -467,7 +470,7 @@ def _sql_kmeans_ctes(table: str) -> str:
     return ",\n    ".join(parts)
 
 
-def sql_ivf_topk(table: str, n_queries: int = 5) -> str:
+def sql_ivf_topk(table: str) -> str:
     return f"""
     WITH {_sql_kmeans_ctes(table)},
     assigned AS (
@@ -484,7 +487,7 @@ def sql_ivf_topk(table: str, n_queries: int = 5) -> str:
     q AS (
       SELECT n_id AS q_id, n_vec AS q_vec, c_idx AS cell FROM (
         SELECT a.*, row_number() OVER (PARTITION BY n_id ORDER BY c_cos DESC, c_idx) AS rn
-        FROM assigned a WHERE n_id < {n_queries}
+        FROM assigned a WHERE n_id < {ANN_QUERIES}
       ) WHERE rn <= {IVF_NPROBE}
     ),
     scored AS (
@@ -495,5 +498,5 @@ def sql_ivf_topk(table: str, n_queries: int = 5) -> str:
     SELECT q_id, n_id, round(cos, 5) AS cos, CAST(rank AS INT) AS rank FROM (
       SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, n_id) AS rank
       FROM scored
-    ) WHERE rank <= {IVF_K}
+    ) WHERE rank <= {ANN_K}
     """

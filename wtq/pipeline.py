@@ -196,21 +196,21 @@ def rule_fire_counts(decided: DataFrame, registry: DataFrame) -> DataFrame:
 @dataclass
 class PipelineResult:
     decided: DataFrame
-    # host-gate verdict table (host, n_docs, stopword_frac, gate) —
-    # populated only when run_pipeline(host_gate=True)
-    gate_table: DataFrame | None = None
 
-    @property
-    def decisions(self) -> DataFrame:
-        return decisions_view(self.decided)
-
-    @property
-    def scrubbed(self) -> DataFrame:
-        return scrubbed_view(self.decided)
-
-    @property
-    def metrics(self) -> DataFrame:
-        return metrics_view(self.decided)
+    def write(self, out_dir: str) -> None:
+        """Write the filter's four outputs under `out_dir` (any Hadoop
+        path): `decided` once, then `decisions`, `scrubbed` and
+        `metrics` derived from the written parquet, so the pipeline
+        runs once — the reference's CTAS at the fan-out (SURVEY.md
+        §3/E1)."""
+        self.decided.write.mode("overwrite").parquet(f"{out_dir}/decided")
+        decided = self.decided.sparkSession.read.parquet(f"{out_dir}/decided")
+        for name, view in (
+            ("decisions", decisions_view),
+            ("scrubbed", scrubbed_view),
+            ("metrics", metrics_view),
+        ):
+            view(decided).write.mode("overwrite").parquet(f"{out_dir}/{name}")
 
 
 def _host(col: str = "url") -> Column:
@@ -270,7 +270,6 @@ def run_pipeline(
     else:
         decided = decide(pages, num_partitions=num_partitions)
 
-    gate_table = None
     if host_gate:
         from wtq.operators.curation import source_quality_gate
 
@@ -291,4 +290,4 @@ def run_pipeline(
             .drop("__gated", "host")
             .withColumn("keep", F.col("keep") & ~F.col("host_gated"))
         )
-    return PipelineResult(decided, gate_table=gate_table)
+    return PipelineResult(decided)

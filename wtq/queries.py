@@ -685,12 +685,12 @@ def q_simhash(spark, sf_dir):
 
 def q_ann_bruteforce(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return S.brute_force_topk(emb, emb.filter(F.col("vec_id") < 5), k=3)
+    return S.brute_force_topk(emb, emb.filter(F.col("vec_id") < S.ANN_QUERIES))
 
 
 def q_ann_lsh_top1(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
-    return S.lsh_top1(emb, emb.filter(F.col("vec_id") < 5))
+    return S.lsh_top1(emb, emb.filter(F.col("vec_id") < S.ANN_QUERIES))
 
 
 def q_cust_supp_nation_matrix(spark, sf_dir):
@@ -835,7 +835,7 @@ def q_ann_ivf_topk(spark, sf_dir):
     """IVF-style ANN: coarse-quantizer cell assignment (broadcast) +
     within-cell top-k."""
     emb = _t(spark, sf_dir, "embeddings")
-    return S.ivf_topk(emb, emb.filter(F.col("vec_id") < 5))
+    return S.ivf_topk(emb, emb.filter(F.col("vec_id") < S.ANN_QUERIES))
 
 
 def q_simhash_near_pairs(spark, sf_dir):

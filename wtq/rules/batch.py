@@ -95,6 +95,7 @@ class _FeatureTable:
         self.wlen = np.zeros(cap, np.int64)  # len(word)
         self.nsym = np.zeros(cap, np.int64)  # symbol chars in word
         self.ncjk = np.zeros(cap, np.int64)  # CJK chars in word
+        self.lower = np.empty(cap, object)  # lower(word), lowered once
         self.stop = np.zeros(cap, bool)  # lower(word) ∈ STOPWORDS
         self.lorem = np.zeros(cap, bool)  # "lorem" ⊂ lower(word)
         self.alpha = np.zeros(cap, bool)  # lower(word).isalpha()
@@ -137,6 +138,7 @@ class _FeatureTable:
         self.wlen[lo:hi] = np.diff(ends, prepend=0)
         self.nsym[lo:hi] = _per_word(_IS_SYMBOL[cp], ends)
         self.ncjk[lo:hi] = _per_word((cp >= L.CJK_FIRST) & (cp <= L.CJK_LAST), ends)
+        self.lower[lo:hi] = lower
         cp, ends = _code_points(lower)
         self.llen[lo:hi] = np.diff(ends, prepend=0)
         self.nonlat[lo:hi] = _per_word(cp >= L.NON_LATIN_FIRST, ends)
@@ -152,20 +154,19 @@ class _FeatureTable:
         self.n = hi
         return rows
 
-    def fill_langid(self, words: np.ndarray, rows: np.ndarray) -> None:
-        """Compute the langid columns of `rows` (the table rows of
-        `words`) where they are still missing."""
+    def fill_langid(self, rows: np.ndarray) -> None:
+        """Compute the langid columns of `rows` where they are still
+        missing."""
         todo = np.flatnonzero(self.nbg[rows] < 0)
         if todo.size:
-            out = [L._word_scores(w.lower()) for w in words[todo].tolist()]
+            out = [L._word_scores(w) for w in self.lower[rows[todo]].tolist()]
             self.scores[rows[todo]] = [s for s, _ in out]
             self.nbg[rows[todo]] = [n for _, n in out]
 
-    def fill_perplexity(self, words: np.ndarray, rows: np.ndarray) -> None:
+    def fill_perplexity(self, rows: np.ndarray) -> None:
         todo = np.flatnonzero(self.ntri[rows] < 0)
         if todo.size:
-            lower = list(map(str.lower, words[todo].tolist()))
-            self.ll[rows[todo]], self.ntri[rows[todo]] = _word_lls(lower)
+            self.ll[rows[todo]], self.ntri[rows[todo]] = _word_lls(self.lower[rows[todo]].tolist())
 
 
 _FEATURES = _FeatureTable()
@@ -373,7 +374,7 @@ def _repetition(doc, codes, wlen, n_words, total, out: dict) -> np.ndarray:
     return top_word
 
 
-def _langid(texts, doc, codes, feats, rows, uniq, starts, out) -> None:
+def _langid(texts, doc, codes, feats, rows, starts, out) -> None:
     """predict_lang over the batch: the same gates in the same order —
     empty text, CJK share, empty alpha sample, Latin-letter share,
     lexicon hits, no bigrams — then the ranked per-language totals."""
@@ -398,9 +399,9 @@ def _langid(texts, doc, codes, feats, rows, uniq, starts, out) -> None:
         & (_frac(latin, letters) >= L.LATIN_SHARE_MIN)
         & ~(hits < L.LEX_HIT_MIN * n_sample)
     )
-    needed = np.zeros(len(uniq), bool)
+    needed = np.zeros(len(rows), bool)
     needed[scode[cand[sdoc]]] = True
-    feats.fill_langid(uniq[needed], rows[needed])
+    feats.fill_langid(rows[needed])
     nbg = _count(sdoc, n_docs, feats.nbg[rows][scode])
     cand &= nbg > 0
     keep = cand[sdoc]
@@ -420,13 +421,13 @@ def _langid(texts, doc, codes, feats, rows, uniq, starts, out) -> None:
     out["lang_margin"] = margin
 
 
-def _perplexity(doc, codes, feats, rows, uniq, starts, n_docs, out) -> None:
+def _perplexity(doc, codes, feats, rows, starts, n_docs, out) -> None:
     pos = np.arange(len(codes)) - starts[doc]
     m = pos < P.MAX_WORDS
     pdoc, pcode = doc[m], codes[m]
-    needed = np.zeros(len(uniq), bool)
+    needed = np.zeros(len(rows), bool)
     needed[pcode] = True
-    feats.fill_perplexity(uniq[needed], rows[needed])
+    feats.fill_perplexity(rows[needed])
     n = _count(pdoc, n_docs, feats.ntri[rows][pcode])
     lls = _seq_sum(pdoc, pos[m], feats.ll[rows][pcode], n_docs, P.MAX_WORDS)
     ok = n > 0
@@ -466,8 +467,8 @@ def _score(raw: list) -> pd.DataFrame:
     feats = _FEATURES
     rows = feats.lookup(uniq)
     starts = np.cumsum(n_words) - n_words
-    _langid(s, doc, codes, feats, rows, uniq, starts, out)
-    _perplexity(doc, codes, feats, rows, uniq, starts, n_docs, out)
+    _langid(s, doc, codes, feats, rows, starts, out)
+    _perplexity(doc, codes, feats, rows, starts, n_docs, out)
 
     wlen = feats.wlen[rows]
     total = _count(doc, n_docs, wlen[codes])
