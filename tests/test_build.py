@@ -10,7 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from wtq.build import BENCH_SLICE_MOD, _hash_bucket, build_training_set
+from wtq.build import BENCH_SLICE_MOD, build_training_set
+from wtq.operators.curation import hash_bucket
 
 
 def test_build_training_set_end_to_end(spark, pages_path, tmp_path):
@@ -42,7 +43,7 @@ def test_build_training_set_end_to_end(spark, pages_path, tmp_path):
     splits = {r.split for r in written.select("split").distinct().collect()}
     assert splits <= {"train", "val", "test"} and "train" in splits
     # benchmark-slice urls never leak into any split
-    leaked = written.filter(_hash_bucket("url", BENCH_SLICE_MOD) == 0).count()
+    leaked = written.filter(hash_bucket("url", BENCH_SLICE_MOD) == 0).count()
     assert leaked == 0
 
     # determinism: a second build yields byte-identical membership

@@ -1,6 +1,7 @@
 """Kill-and-resume test (SURVEY.md §5.5): fail mid-run, rerun, assert
 identical final output and conserved metrics with no double counting,
-on a plain local path and on a Hadoop ``file://`` URI."""
+on a plain local path and on a Hadoop ``file://`` URI; a chunk whose
+write was cut off is never read."""
 
 from __future__ import annotations
 
@@ -8,27 +9,39 @@ import os
 
 import pytest
 
-from wtq.checkpoint import (
-    InjectedFailure,
-    committed_chunks,
-    read_chunks,
-    run_checkpointed,
-)
-from wtq.pipeline import run_pipeline
+from wtq.checkpoint import MARKER, committed_chunks, read_chunks, run_checkpointed
+from wtq.pipeline import PipelineResult, run_pipeline
 
 N_CHUNKS = 4
 
 
 @pytest.mark.parametrize("uri", [False, True], ids=["path", "file_uri"])
-def test_kill_and_resume(spark, pages_path, tmp_path, uri):
+def test_kill_and_resume(spark, pages_path, tmp_path, monkeypatch, uri):
     local = str(tmp_path / "ckpt")
     out = f"file://{local}" if uri else local
     pages = f"file://{pages_path}" if uri else pages_path
 
-    # first run dies after chunk 1
-    with pytest.raises(InjectedFailure):
-        run_checkpointed(spark, pages, out, n_chunks=N_CHUNKS, fail_after_chunk=1)
+    # first run dies inside chunk 2's write, after its `decided` landed
+    write = PipelineResult.write
+
+    def killed_in_chunk_2(self, out_dir):
+        if not out_dir.endswith("chunk=2"):
+            return write(self, out_dir)
+        self.decided.write.mode("overwrite").parquet(f"{out_dir}/decided")
+        raise RuntimeError("killed")
+
+    monkeypatch.setattr(PipelineResult, "write", killed_in_chunk_2)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_checkpointed(spark, pages, out, n_chunks=N_CHUNKS)
+    monkeypatch.undo()
     assert committed_chunks(spark, out, N_CHUNKS) == [0, 1]
+    # the unsealed chunk is on disk but not read: decided and metrics
+    # of what was read cover the same chunks
+    assert os.path.isdir(os.path.join(local, "chunk=2", "decided"))
+    decided = read_chunks(spark, out, "decided")
+    assert {r.chunk for r in decided.select("chunk").distinct().collect()} == {0, 1}
+    n_input = read_chunks(spark, out, "metrics").agg({"n_input": "sum"}).first()[0]
+    assert decided.count() == n_input
     mtimes = {
         k: os.path.getmtime(os.path.join(local, f"chunk={k}", "_WTQ_COMMITTED"))
         for k in (0, 1)
@@ -78,3 +91,21 @@ def test_kill_and_resume(spark, pages_path, tmp_path, uri):
 
     # second resume is a no-op
     assert run_checkpointed(spark, pages, out, n_chunks=N_CHUNKS) == []
+
+
+def test_read_chunks_skips_unsealed(spark, tmp_path):
+    """read_chunks reads exactly the chunks that carry a commit marker,
+    and raises when there is none."""
+    out = str(tmp_path / "ckpt")
+    with pytest.raises(FileNotFoundError):
+        read_chunks(spark, out, "decided")
+    for k in range(3):
+        spark.range(10 * k, 10 * k + 10).write.parquet(f"{out}/chunk={k}/decided")
+    for k in (0, 1):
+        open(os.path.join(out, f"chunk={k}", MARKER), "w").close()
+    assert committed_chunks(spark, out, 3) == [0, 1]
+    got = read_chunks(spark, out, "decided")
+    assert dict(got.dtypes)["chunk"] == "int"
+    assert sorted((r.id, r.chunk) for r in got.collect()) == [
+        (i, i // 10) for i in range(20)
+    ]

@@ -4,9 +4,9 @@ system runs, or is on a short list kept with a reason.
 A pure ``ast`` walk, no imports of the code under test.  The roots are
 the registry and its oracle (``QUERIES``, ``ORACLE_SQL``), the pipeline
 (``run_pipeline``, ``decide``), the build (``build_training_set``) and
-every definition in ``oracle/``, ``bench.py``, ``perfbench/``,
-``__spark_entry__.py`` and ``wtq/daemon.py`` (the Python worker
-daemon, which Spark starts by module name).  A reference is matched by
+every definition in ``oracle/``, ``bench.py``, ``bench/scaling.py``,
+``perfbench/``, ``__spark_entry__.py`` and ``wtq/daemon.py`` (the
+Python worker daemon, which Spark starts by module name).  A reference is matched by
 module and name: a bare ``name`` resolves through the referring
 module's own definitions and imports, ``alias.attr`` through the
 module that ``alias`` names, so ``pd.read_csv`` never counts as a use
@@ -45,17 +45,21 @@ ROOTS = {
     ("wtq.build", "build_training_set"),
 }
 # wtq/daemon.py is started by name (`python -m wtq.daemon`, named in
-# get_spark's config), so no reference leads to it
-ROOT_FILES = ("oracle/*.py", "bench.py", "perfbench/*.py", "__spark_entry__.py", "wtq/daemon.py")
+# get_spark's config), so no reference leads to it; bench/scaling.py is
+# the north-rule scaling harness
+ROOT_FILES = (
+    "oracle/*.py", "bench.py", "bench/scaling.py", "perfbench/*.py",
+    "__spark_entry__.py", "wtq/daemon.py",
+)
 
 # (module, name or "Class.member") -> why it stays although no root
 # reaches it
 KEPT = {
     ("wtq.checkpoint", "MARKER"): "resumable-from-checkpoint run (test_checkpoint.py)",
-    ("wtq.checkpoint", "InjectedFailure"): "resumable-from-checkpoint run (test_checkpoint.py)",
     ("wtq.checkpoint", "chunk_expr"): "chunk predicate behind test_bucket_contract.py",
     ("wtq.checkpoint", "committed_chunks"): "resumable-from-checkpoint run (test_checkpoint.py)",
     ("wtq.checkpoint", "_marker"): "resumable-from-checkpoint run (test_checkpoint.py)",
+    ("wtq.checkpoint", "_sealed"): "resumable-from-checkpoint run (test_checkpoint.py)",
     ("wtq.checkpoint", "run_checkpointed"): "resumable-from-checkpoint run (test_checkpoint.py)",
     ("wtq.checkpoint", "read_chunks"): "resumable-from-checkpoint run (test_checkpoint.py)",
     ("wtq.rules.registry", "registry_df"): "the err_codes dimension table",
@@ -68,8 +72,7 @@ KEPT = {
 # (module, function, parameter) -> why tests may set it although no
 # call outside tests/ does
 KEPT_PARAMS = {
-    ("wtq.checkpoint", "run_checkpointed", "n_chunks"): "failure injection for the resumable run (test_checkpoint.py)",
-    ("wtq.checkpoint", "run_checkpointed", "fail_after_chunk"): "failure injection for the resumable run (test_checkpoint.py)",
+    ("wtq.checkpoint", "run_checkpointed", "n_chunks"): "resume granularity: README step 4 sets it (test_checkpoint.py)",
     ("wtq.operators.curation", "incremental_corpus_dedup", "id_col"): "column name: the operator runs on another schema",
     ("wtq.operators.curation", "incremental_corpus_dedup", "text_col"): "column name: the operator runs on another schema",
 }

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from wtq.streaming.ingest import windowed_event_counts
@@ -13,8 +14,12 @@ from wtq.streaming.ingest import windowed_event_counts
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_windowed_counts_equal_batch(spark, tmp_path):
-    got = windowed_event_counts(spark, SF_DIR, str(tmp_path / "ck1")).toPandas()
+@pytest.mark.parametrize("uri", [False, True], ids=["path", "file_uri"])
+def test_windowed_counts_equal_batch(spark, tmp_path, uri):
+    """Equal on a plain path and on a Hadoop ``file://`` URI checkpoint
+    (the sink's output is found through the FileSystem API)."""
+    ckpt = str(tmp_path / "ck1")
+    got = windowed_event_counts(spark, SF_DIR, f"file://{ckpt}" if uri else ckpt).toPandas()
     batch = (
         spark.read.parquet(f"{SF_DIR}/events.parquet")
         .groupBy(F.window(F.col("ts").cast("timestamp"), "1 hour").alias("w"), "event_type")

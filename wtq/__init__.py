@@ -30,6 +30,7 @@ def __getattr__(name):
         "connected_components": ("wtq.operators.dedup", "connected_components"),
         "dedup_clusters": ("wtq.operators.dedup", "dedup_clusters"),
         "dedup_resolution": ("wtq.operators.dedup", "dedup_resolution"),
+        "drop_near_duplicates": ("wtq.operators.dedup", "drop_near_duplicates"),
         "brute_force_topk": ("wtq.operators.similarity", "brute_force_topk"),
         "lsh_top1": ("wtq.operators.similarity", "lsh_top1"),
         "ivf_topk": ("wtq.operators.similarity", "ivf_topk"),

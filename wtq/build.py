@@ -31,19 +31,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from wtq.operators import curation as C
-from wtq.operators.dedup import dedup_resolution
-from wtq.pipeline import run_pipeline
+from wtq.operators.dedup import drop_near_duplicates
+from wtq.pipeline import _host, run_pipeline
 
 # one url in BENCH_SLICE_MOD seeds the held-out benchmark slice
 # (md5-bucketed — works for string ids, unlike the numeric id-parity
 # split of the standalone query demo)
 BENCH_SLICE_MOD = 101
-
-
-def _hash_bucket(col: str, mod: int):
-    return (
-        F.conv(F.substring(F.md5(F.col(col)), 1, 15), 16, 10).cast("long") % mod
-    )
 
 
 @dataclass
@@ -116,12 +110,8 @@ def build_training_set(spark: SparkSession, pages_path: str, out_dir: str) -> Bu
         # the shared table is ids-only, so the checkpoint is cheap and
         # the audited cap is by construction the cap the pair stage
         # enforced).
-        labels, stats = dedup_resolution(kept, "url", "text", rebalance=False)
-        non_reps = (
-            labels.filter(F.col("node") != F.col("cluster"))
-            .select(F.col("node").alias("url"))
-        )
-        deduped = kept.join(non_reps, "url", "left_anti").localCheckpoint(eager=True)
+        deduped, stats = drop_near_duplicates(kept, "url", "text")
+        deduped = deduped.localCheckpoint(eager=True)
 
         # 2b. occupancy audit gauges (see above: measured over the exact-
         # dedup representative set the pair stage consumed).  The bucket
@@ -139,16 +129,16 @@ def build_training_set(spark: SparkSession, pages_path: str, out_dir: str) -> Bu
         )
 
         # 3. decontamination
-        bench_docs = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) == 0)
+        bench_docs = deduped.filter(C.hash_bucket("url", BENCH_SLICE_MOD) == 0)
         benchmark = C.benchmark_grams(bench_docs, "text")
-        candidates = deduped.filter(_hash_bucket("url", BENCH_SLICE_MOD) != 0)
+        candidates = deduped.filter(C.hash_bucket("url", BENCH_SLICE_MOD) != 0)
         hits = C.decontaminate(candidates, "url", "text", benchmark=benchmark)
         clean = candidates.join(hits.select("url"), "url", "left_anti").localCheckpoint(
             eager=True
         )
 
         # 4. per-host token budget (host = authority component of the url)
-        hosted = clean.withColumn("host", F.substring_index("url", "/", 3))
+        hosted = clean.withColumn("host", _host())
         sampled = C.token_budget_sample(hosted, "url", "text", "host").select(
             "url", "n_tokens"
         )
@@ -165,11 +155,7 @@ def build_training_set(spark: SparkSession, pages_path: str, out_dir: str) -> Bu
         # urls — straddles with probability proportional to the bucket
         # split, and no split key fixes that (a content hash differs on
         # near-identical text too); only a tighter dedup threshold does.
-        bucket = _hash_bucket("url", 1000)
-        split = (
-            F.when(bucket < 980, "train").when(bucket < 990, "val").otherwise("test")
-        )
-        final = final.withColumn("split", split)
+        final = final.withColumn("split", C.split_of("url"))
 
         # every stage frame is checkpointed at this point, so the four
         # lineage counts are independent tiny jobs — run them

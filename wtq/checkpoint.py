@@ -29,10 +29,6 @@ from wtq.pipeline import PipelineResult, decide
 MARKER = "_WTQ_COMMITTED"
 
 
-class InjectedFailure(RuntimeError):
-    """Raised by the test harness to simulate a mid-run crash."""
-
-
 def chunk_expr(n_chunks: int):
     return F.pmod(F.hash(F.col("url")), F.lit(n_chunks))
 
@@ -43,9 +39,18 @@ def _marker(spark: SparkSession, out_dir: str, k: int):
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
 
+def _sealed(spark: SparkSession, out_dir: str) -> list[int]:
+    """The chunks under `out_dir` that carry a commit marker, in order:
+    one FileSystem listing of ``chunk=*/MARKER`` (empty when nothing
+    matches)."""
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(f"{out_dir}/chunk=*/{MARKER}")
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    found = fs.globStatus(pattern) or []
+    return sorted(int(st.getPath().getParent().getName().split("=", 1)[1]) for st in found)
+
+
 def committed_chunks(spark: SparkSession, out_dir: str, n_chunks: int) -> list[int]:
-    markers = (_marker(spark, out_dir, k) for k in range(n_chunks))
-    return [k for k, (fs, path) in enumerate(markers) if fs.exists(path)]
+    return [k for k in _sealed(spark, out_dir) if k < n_chunks]
 
 
 def run_checkpointed(
@@ -53,7 +58,6 @@ def run_checkpointed(
     pages_path: str,
     out_dir: str,
     n_chunks: int = 8,
-    fail_after_chunk: int | None = None,
 ) -> list[int]:
     """Run the pipeline chunk-by-chunk with commit markers; returns the
     list of chunks computed in THIS invocation (sealed ones skipped).
@@ -76,13 +80,17 @@ def run_checkpointed(
         fs, marker = _marker(spark, out_dir, k)
         fs.create(marker, True).close()
         done.append(k)
-        if fail_after_chunk is not None and k >= fail_after_chunk:
-            raise InjectedFailure(f"injected failure after chunk {k}")
     return done
 
 
 def read_chunks(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
     """Output `name` (decided / decisions / scrubbed / metrics) of the
-    chunks written so far, with `chunk` as an int column read from the
-    directory name."""
-    return spark.read.option("basePath", out_dir).parquet(f"{out_dir}/chunk=*/{name}")
+    sealed chunks, with `chunk` as an int column read from the
+    directory name.  A chunk whose write was cut off has no marker and
+    is not read, so `decided` and `metrics` always cover the same
+    chunks; raises FileNotFoundError when no chunk is sealed."""
+    sealed = _sealed(spark, out_dir)
+    if not sealed:
+        raise FileNotFoundError(f"no sealed chunk under {out_dir}")
+    paths = [f"{out_dir}/chunk={k}/{name}" for k in sealed]
+    return spark.read.option("basePath", out_dir).parquet(*paths)

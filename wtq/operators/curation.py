@@ -51,6 +51,30 @@ GATE_STOPWORD_MIN = 0.0575  # host-level stopword fraction below this → drop
                             # is bit-identical across engines, partition
                             # orders, and cluster sizes (a mean of per-doc
                             # doubles would depend on reduction order)
+# train/val/test split (98/1/1): buckets of SPLIT_MOD below TRAIN_BELOW
+# are train, below VAL_BELOW val, the rest test
+SPLIT_MOD = 1000
+TRAIN_BELOW = 980
+VAL_BELOW = 990
+
+
+def hash_bucket(col: str, mod: int) -> Column:
+    """The first 60 bits of md5(`col` as a string), mod `mod` — DuckDB's
+    ``CAST(('0x' || substr(md5(CAST(col AS VARCHAR)), 1, 15)) AS BIGINT)
+    % mod``, bit for bit."""
+    digest = F.md5(F.col(col).cast("string"))
+    return F.conv(F.substring(digest, 1, 15), 16, 10).cast("long") % mod
+
+
+def split_of(col: str) -> Column:
+    """'train' / 'val' / 'test' by `hash_bucket(col, SPLIT_MOD)`: stable
+    across reruns, engines and cluster sizes, unlike a rand() split."""
+    bucket = hash_bucket(col, SPLIT_MOD)
+    return (
+        F.when(bucket < TRAIN_BELOW, "train")
+        .when(bucket < VAL_BELOW, "val")
+        .otherwise("test")
+    )
 
 
 def _gram_digests(ws: Column) -> Column:

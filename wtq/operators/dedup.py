@@ -130,12 +130,7 @@ def _sig_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(_sig_batch(texts))
 
 
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    rebalance: bool = True,
-) -> DataFrame:
+def minhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, sig array<long>[N_PERM]): per-permutation min over shingle
     hashes of (a·h+b) mod P.
 
@@ -148,25 +143,16 @@ def minhash_signatures(
     batch.  The DuckDB oracle (sql_minhash_lsh_pairs) reproduces the
     arithmetic bit-for-bit from the SQL-visible md5.  Docs with no
     shingle get sentinel MINHASH_P (real minvals are always < P).
+
+    A narrow map over `df` as it is partitioned: the signature pass is
+    the heavy stage, so its parallelism is decided where the data is
+    read — the registry's `_t` splits single-row-group files one
+    partition per core, the build passes its checkpointed
+    pipeline output.  One split per core is the measured optimum;
+    over-splitting (4×) doubled wall time at this batch size from
+    per-task Arrow/scheduling overhead.
     """
-    # rebalance: signature compute is the heavy narrow stage, and a
-    # single giant input split would serialize it.  Exactly one split
-    # per core — over-splitting (4× was measured) doubles wall time at
-    # this batch size from per-task Arrow/scheduling overhead.
-    # Round-6: a caller whose input is ALREADY split at least core-wide
-    # and materialized (the build's checkpointed kept set) passes
-    # rebalance=False and skips the exchange — it only re-moved every
-    # text.  (Directly above another repartition, as in the registry's
-    # rebalanced reads, Catalyst collapses the two into one exchange.)
-    # The skip is a caller-declared flag, NOT runtime introspection:
-    # df.rdd.getNumPartitions() on an AQE plan that contains an
-    # exchange EXECUTES that exchange stage to finalize the plan,
-    # paying the shuffle twice (measured as a regression before this
-    # flag).
-    base = df.select(F.col(id_col), F.col(text_col))
-    if rebalance:
-        base = base.repartition(df.sparkSession.sparkContext.defaultParallelism)
-    return base.select(F.col(id_col), _sig_udf(F.col(text_col)).alias("sig"))
+    return df.select(F.col(id_col), _sig_udf(F.col(text_col)).alias("sig"))
 
 
 def _band_strs() -> Column:
@@ -219,9 +205,10 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     preserved exactly; `sql_minhash_lsh_pairs` mirrors the cap and the
     star rule so both engines emit exactly the same pairs."""
     # NOTE: do NOT filter on the signature column here — a filter
-    # referencing the UDF output gets pushed below the repartition and
-    # Catalyst materializes a SECOND ArrowEvalPython over the unsplit
-    # scan (measured: the whole signature pass re-ran serially).
+    # referencing the UDF output gets pushed below the input's
+    # repartition and Catalyst materializes a SECOND ArrowEvalPython
+    # over the unsplit scan (measured: the whole signature pass re-ran
+    # serially).
     # Shingle-less docs are dropped at the bucket level instead, where
     # the Generate node blocks pushdown.
     buckets = _minhash_buckets(df, id_col, text_col)
@@ -294,9 +281,7 @@ def _star_capped_pairs(rows: DataFrame, keys: list[str], member: Column) -> Data
     )
 
 
-def _minhash_buckets(
-    df: DataFrame, id_col: str, text_col: str, rebalance: bool = True
-) -> DataFrame:
+def _minhash_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc, bucket) band-bucket rows — the shared derivation behind
     pair generation AND the occupancy audit (one definition, so the
     audit always reports on exactly the buckets pairing builds).
@@ -306,7 +291,7 @@ def _minhash_buckets(
     dropping those buckets removes them from pairing entirely (the
     explode-form oracle simply emits no rows for such docs).  Still
     narrow: the ONLY shuffle in the operator is downstream of this."""
-    sig = minhash_signatures(df, id_col, text_col, rebalance=rebalance)
+    sig = minhash_signatures(df, id_col, text_col)
     sentinel_bucket = ":" + ",".join([str(MINHASH_P)] * LSH_ROWS)
     return sig.select(
         F.col(id_col).alias("doc"), F.explode(_band_strs()).alias("bucket")
@@ -561,10 +546,7 @@ def connected_components(pairs: DataFrame) -> DataFrame:
 
 
 def dedup_resolution(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    rebalance: bool = True,
+    df: DataFrame, id_col: str, text_col: str
 ) -> tuple[DataFrame, DataFrame]:
     """Per-document cluster assignment (node, cluster) with
     EXACT-DEDUP-FIRST discipline: byte-identical documents are
@@ -591,9 +573,7 @@ def dedup_resolution(
     SAME representative bucket table the pair stage consumed — the
     build's audit costs one materialized
     ids-only bucket table instead of a second full signature pass
-    (round-6).  `rebalance` rides through to minhash_signatures (the
-    build passes False for its already core-wide checkpointed kept
-    set)."""
+    (round-6)."""
     docs = df.select(
         F.col(id_col).alias("node"),
         F.col(text_col).alias("__text"),
@@ -631,10 +611,10 @@ def dedup_resolution(
     )
     # ONE signature pass feeds pairing AND the occupancy audit: the
     # (doc, bucket) table is ids-only (~8 short rows per rep), so the
-    # checkpoint is cheap and both consumers read it
-    buckets = _minhash_buckets(
-        reps, id_col, text_col, rebalance=rebalance
-    ).localCheckpoint(eager=True)
+    # checkpoint is cheap and both consumers read it.  The signature
+    # pass runs on `df`'s partitions when `multi` broadcasts (the
+    # unique-heavy case), on the sort-merge join's otherwise
+    buckets = _minhash_buckets(reps, id_col, text_col).localCheckpoint(eager=True)
     pairs = _pairs_from_buckets(buckets)
     stats = _bucket_stats_from_buckets(buckets)
     cc = connected_components(pairs).select(
@@ -658,6 +638,21 @@ def dedup_resolution(
         .select("node", F.coalesce("cc_cluster", "rep").alias("cluster"))
     )
     return labels, stats
+
+
+def drop_near_duplicates(
+    df: DataFrame, id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """`df` without the non-representative members of each near-dup
+    cluster: a cluster keeps its min-id member (its label), so the
+    reference's duplicate groups (proccess_data.sql:204-213) resolve to
+    one survivor each.  Returns ``(survivors, stats)``, ``stats`` being
+    dedup_resolution's bucket-occupancy histogram."""
+    labels, stats = dedup_resolution(df, id_col, text_col)
+    dropped = labels.filter(F.col("node") != F.col("cluster")).select(
+        F.col("node").alias(id_col)
+    )
+    return df.join(dropped, id_col, "left_anti"), stats
 
 
 def dedup_clusters(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -762,12 +757,9 @@ def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     positions → two wide aggregations) shuffles 60×|corpus shingles|
     rows and was retired from the execution path in round 2; it
     survives verbatim as the DuckDB oracle (sql_simhash), which checks
-    this implementation bit-for-bit."""
-    # one split per core, as in minhash_signatures
-    base = df.select(F.col(id_col), F.col(text_col)).repartition(
-        df.sparkSession.sparkContext.defaultParallelism
-    )
-    return base.select(F.col(id_col), _simhash_udf(F.col(text_col)).alias("simhash"))
+    this implementation bit-for-bit.  Runs on `df` as it is
+    partitioned, like minhash_signatures."""
+    return df.select(F.col(id_col), _simhash_udf(F.col(text_col)).alias("simhash"))
 
 
 # ---------------------------------------------------------------------------
@@ -979,8 +971,8 @@ def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # turning it into a corpus-sized collect_list.  The exclusion
     # lives INSIDE the generator expression (explode(NULL) emits no
     # rows): a plain filter on the UDF column would be pushed below
-    # the repartition and duplicate the whole Arrow pass (plan-shape
-    # test gates this).
+    # the input's repartition and duplicate the whole Arrow pass
+    # (plan-shape test gates this).
     band_array = F.array(*[
         F.struct(
             F.lit(j).alias("band"),

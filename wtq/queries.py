@@ -883,15 +883,9 @@ def q_dedup_apply(spark, sf_dir):
     """The deletion step that closes the dedup loop: resolve near-dup
     clusters (MinHash-LSH pairs → connected components), keep ONE
     representative per cluster (the min id), drop the rest, and report
-    the corpus accounting.  Left-anti join against the non-
-    representative member set — the keep-one contract a training-data
-    pipeline actually executes."""
-    d = _t(spark, sf_dir, "documents")
-    cc, _ = D.dedup_resolution(d, "doc_id", "text")
-    drop = cc.filter(F.col("node") != F.col("cluster")).select(
-        F.col("node").alias("doc_id")
-    )
-    kept = d.join(drop, "doc_id", "left_anti")
+    the corpus accounting — D.drop_near_duplicates, the keep-one step
+    the training-set build runs."""
+    kept, _ = D.drop_near_duplicates(_t(spark, sf_dir, "documents"), "doc_id", "text")
     return kept.agg(
         F.count("*").alias("n_kept"),
         F.countDistinct("lang").alias("n_langs"),
@@ -912,33 +906,23 @@ def sql_dedup_apply(table: str, id_col: str, text_col: str) -> str:
 
 def q_dataset_split_counts(spark, sf_dir):
     """Deterministic train/val/test assignment (98/1/1) by content
-    hash — the standard leakage-safe split: a document's split is a
-    pure function of its id, stable across reruns, engines, and
-    cluster sizes (rand()-based splits are none of those).  Bucket =
-    md5-derived 60-bit int mod 1000, reproducible bit-for-bit in the
-    oracle."""
+    hash: C.split_of, the split the training-set build writes, on
+    doc_id.  The oracle reproduces its md5 bucket bit-for-bit."""
     d = _t(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10).cast("long")
-        % 1000
-    )
-    split = (
-        F.when(bucket < 980, "train").when(bucket < 990, "val").otherwise("test")
-    )
-    return d.groupBy(split.alias("split")).agg(
+    return d.groupBy(C.split_of("doc_id").alias("split")).agg(
         F.count("*").alias("n"),
         F.countDistinct("lang").alias("n_langs"),
     )
 
 
-SQL_DATASET_SPLIT_COUNTS = """
+SQL_DATASET_SPLIT_COUNTS = f"""
 WITH b AS (
   SELECT lang,
-         (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 1000) AS bucket
+         (CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % {C.SPLIT_MOD}) AS bucket
   FROM documents
 )
-SELECT CASE WHEN bucket < 980 THEN 'train'
-            WHEN bucket < 990 THEN 'val'
+SELECT CASE WHEN bucket < {C.TRAIN_BELOW} THEN 'train'
+            WHEN bucket < {C.VAL_BELOW} THEN 'val'
             ELSE 'test' END AS split,
        count(*) AS n, count(DISTINCT lang) AS n_langs
 FROM b GROUP BY 1

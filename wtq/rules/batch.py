@@ -79,10 +79,13 @@ def _per_word(mask: np.ndarray, ends: np.ndarray) -> np.ndarray:
 class _FeatureTable:
     """Per-word features, one row per distinct word this worker has
     seen, in flat numpy columns grown in amortized chunks (a miss
-    appends rows; it never rebuilds the table).  The langid and
-    perplexity columns are filled lazily, only for words that occur
-    inside those caps; -1 in ``nbg`` / ``ntri`` marks "not computed".
-    Cleared wholesale at the bound, like langid's _WORD_SCORES_MEMO."""
+    appends rows; it never rebuilds the table).  A new word's row is
+    filled at once, perplexity columns included (one vectorized
+    ``_word_lls`` call per miss batch).  Only the langid columns are
+    filled lazily, for words inside langid's sample that reach its
+    scoring (per-word scoring is Python-level and few words need it);
+    -1 in ``nbg`` marks "not computed".  Cleared wholesale at the
+    bound, like langid's _WORD_SCORES_MEMO."""
 
     MAX_WORDS = 1 << 18
 
@@ -105,7 +108,7 @@ class _FeatureTable:
         self.scores = np.zeros((cap, _NL))  # langid per-language log-lik
         self.nbg = np.full(cap, -1, np.int64)  # langid bigram count
         self.ll = np.zeros(cap)  # perplexity log-lik
-        self.ntri = np.full(cap, -1, np.int64)  # perplexity trigram count
+        self.ntri = np.zeros(cap, np.int64)  # perplexity trigram count
 
     def _grow(self, need: int) -> None:
         old = {k: v for k, v in vars(self).items() if isinstance(v, np.ndarray)}
@@ -148,7 +151,7 @@ class _FeatureTable:
         self.alpha[lo:hi] = np.fromiter(map(str.isalpha, lower), bool, n)
         self.lex[lo:hi] = np.fromiter(map(L._LATIN_LEXICON.__contains__, lower), bool, n)
         self.nbg[lo:hi] = -1
-        self.ntri[lo:hi] = -1
+        self.ll[lo:hi], self.ntri[lo:hi] = _word_lls(lower)
         rows[miss] = np.arange(lo, hi)
         self.rows.update(zip(new, range(lo, hi)))
         self.n = hi
@@ -162,11 +165,6 @@ class _FeatureTable:
             out = [L._word_scores(w) for w in self.lower[rows[todo]].tolist()]
             self.scores[rows[todo]] = [s for s, _ in out]
             self.nbg[rows[todo]] = [n for _, n in out]
-
-    def fill_perplexity(self, rows: np.ndarray) -> None:
-        todo = np.flatnonzero(self.ntri[rows] < 0)
-        if todo.size:
-            self.ll[rows[todo]], self.ntri[rows[todo]] = _word_lls(self.lower[rows[todo]].tolist())
 
 
 _FEATURES = _FeatureTable()
@@ -425,9 +423,6 @@ def _perplexity(doc, codes, feats, rows, starts, n_docs, out) -> None:
     pos = np.arange(len(codes)) - starts[doc]
     m = pos < P.MAX_WORDS
     pdoc, pcode = doc[m], codes[m]
-    needed = np.zeros(len(rows), bool)
-    needed[pcode] = True
-    feats.fill_perplexity(rows[needed])
     n = _count(pdoc, n_docs, feats.ntri[rows][pcode])
     lls = _seq_sum(pdoc, pos[m], feats.ll[rows][pcode], n_docs, P.MAX_WORDS)
     ok = n > 0

@@ -12,8 +12,6 @@ stream-static join.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -51,13 +49,16 @@ def _run_available_now(stream_df: DataFrame, checkpoint: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    if not os.path.exists(out_dir):
+    spark = stream_df.sparkSession
+    # through Hadoop's FileSystem, so any URI the sink wrote works
+    # (`file://`, `s3a://`, …), not only a local path
+    path = spark._jvm.org.apache.hadoop.fs.Path(out_dir)
+    if not path.getFileSystem(spark._jsc.hadoopConfiguration()).exists(path):
         # zero micro-batches fired (empty/missing source): behave like
         # the old memory sink and return an empty result, not a
         # PATH_NOT_FOUND crash
-        spark = stream_df.sparkSession
         return spark.createDataFrame([], stream_df.schema)
-    return stream_df.sparkSession.read.parquet(out_dir)
+    return spark.read.parquet(out_dir)
 
 
 def windowed_event_counts(spark: SparkSession, sf_dir: str, checkpoint: str) -> DataFrame:
