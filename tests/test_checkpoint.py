@@ -1,7 +1,8 @@
 """Kill-and-resume test (SURVEY.md §5.5): fail mid-run, rerun, assert
 identical final output and conserved metrics with no double counting,
 on a plain local path and on a Hadoop ``file://`` URI; a chunk whose
-write was cut off is never read."""
+write was cut off is never read, and a resume with another chunk
+count is refused."""
 
 from __future__ import annotations
 
@@ -102,10 +103,44 @@ def test_read_chunks_skips_unsealed(spark, tmp_path):
     for k in range(3):
         spark.range(10 * k, 10 * k + 10).write.parquet(f"{out}/chunk={k}/decided")
     for k in (0, 1):
-        open(os.path.join(out, f"chunk={k}", MARKER), "w").close()
+        with open(os.path.join(out, f"chunk={k}", MARKER), "w") as f:
+            f.write("3")  # a seal records the chunk count
     assert committed_chunks(spark, out, 3) == [0, 1]
     got = read_chunks(spark, out, "decided")
     assert dict(got.dtypes)["chunk"] == "int"
     assert sorted((r.id, r.chunk) for r in got.collect()) == [
         (i, i // 10) for i in range(20)
     ]
+
+
+def test_resume_with_another_chunk_count_raises(spark, pages_path, tmp_path, monkeypatch):
+    """Chunk k of a 4-chunk run is not chunk k of a 2-chunk run: a
+    resume with another n_chunks raises instead of skipping chunks
+    sealed under the old count, and read_chunks refuses chunks sealed
+    under two counts."""
+    out = str(tmp_path / "ckpt")
+    write = PipelineResult.write
+
+    def killed_in_chunk_2(self, out_dir):
+        if out_dir.endswith("chunk=2"):
+            raise RuntimeError("killed")
+        return write(self, out_dir)
+
+    monkeypatch.setattr(PipelineResult, "write", killed_in_chunk_2)
+    with pytest.raises(RuntimeError, match="killed"):
+        run_checkpointed(spark, pages_path, out, n_chunks=N_CHUNKS)
+    monkeypatch.undo()
+    assert committed_chunks(spark, out, N_CHUNKS) == [0, 1]
+
+    with pytest.raises(ValueError, match=f"{N_CHUNKS} chunks, not 2"):
+        run_checkpointed(spark, pages_path, out, n_chunks=2)
+    with pytest.raises(ValueError, match=f"{N_CHUNKS} chunks, not 2"):
+        committed_chunks(spark, out, 2)
+
+    # reseal chunk 1 as if by a 2-chunk run (dropping the local
+    # filesystem's checksum of the old marker)
+    os.remove(os.path.join(out, "chunk=1", f".{MARKER}.crc"))
+    with open(os.path.join(out, "chunk=1", MARKER), "w") as f:
+        f.write("2")
+    with pytest.raises(ValueError, match=f"sealed with 2 and with {N_CHUNKS} chunks"):
+        read_chunks(spark, out, "decided")

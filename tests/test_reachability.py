@@ -22,11 +22,13 @@ a check on definitions, not a use of them: a table that only an
 import-time assert reads is unreached.  Dunder names (``__getattr__``,
 ``__version__``) are module protocol, not definitions, and are skipped.
 
-The same resolution checks options: a defaulted parameter of a
-module-level ``wtq`` function that a test passes must also be passed
-by some call outside ``tests/``, or be on a short list kept with a
-reason.  A test that needs another value patches the module constant
-the function reads.
+The same resolution checks options: every defaulted parameter of a
+module-level ``wtq`` function must be passed by some call outside
+``tests/``, or be on a short list kept with a reason.  An option that
+no workload sets is a constant, and a test that needs another value
+patches the module constant the function reads.  It also checks the
+root files' calls against the signatures they resolve to, so a
+signature change that breaks only a benchmark call fails here.
 """
 
 from __future__ import annotations
@@ -69,8 +71,8 @@ KEPT = {
     ("wtq.pipeline", "rule_fire_counts"): "the err_codes join",
 }
 
-# (module, function, parameter) -> why tests may set it although no
-# call outside tests/ does
+# (module, function, parameter) -> why it stays although no call
+# outside tests/ sets it
 KEPT_PARAMS = {
     ("wtq.checkpoint", "run_checkpointed", "n_chunks"): "resume granularity: README step 4 sets it (test_checkpoint.py)",
     ("wtq.operators.curation", "incremental_corpus_dedup", "id_col"): "column name: the operator runs on another schema",
@@ -278,19 +280,69 @@ def _set_params(fn: ast.FunctionDef, call: ast.Call) -> set[str]:
     return set(pos[: len(call.args)]) | {k.arg for k in call.keywords}
 
 
-def options_only_tests_set() -> set[tuple[str, str, str]]:
+def _calls(m: _Module):
+    return (n for n in ast.walk(m.tree) if isinstance(n, ast.Call))
+
+
+def unset_options() -> set[tuple[str, str, str]]:
     """(module, function, parameter) of every defaulted parameter of a
-    module-level wtq function that a call under tests/ passes and no
-    other call does."""
+    module-level wtq function that no call outside tests/ passes."""
     wtq, root_files = _load_modules()
-    tests = [_Module(p) for p in sorted((ROOT / "tests").rglob("*.py"))]
-    set_by: dict[str, set] = {"code": set(), "test": set()}
-    for kind, modules in (("code", [*wtq.values(), *root_files]), ("test", tests)):
-        for m in modules:
-            for call in (n for n in ast.walk(m.tree) if isinstance(n, ast.Call)):
-                for mod, name, fn in _callees(wtq, m, call):
-                    set_by[kind] |= {(mod, name, p) for p in _set_params(fn, call) & _defaulted(fn)}
-    return set_by["test"] - set_by["code"]
+    every = {
+        (m.name, name, p)
+        for m in wtq.values()
+        for name, nodes in m.defs.items()
+        for fn in nodes if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+        for p in _defaulted(fn)
+    }
+    set_by_code = {
+        (mod, name, p)
+        for m in [*wtq.values(), *root_files]
+        for call in _calls(m)
+        for mod, name, fn in _callees(wtq, m, call)
+        for p in _set_params(fn, call)
+    }
+    return every - set_by_code
+
+
+def _signature_errors(fn: ast.FunctionDef, call: ast.Call) -> list[str]:
+    """How `call` fails to bind to `fn`'s parameters: too many
+    positional arguments, an unknown or repeated keyword, a required
+    parameter left out.  A call with a `*` or `**` argument is not
+    checked."""
+    if any(isinstance(x, ast.Starred) for x in call.args) or any(k.arg is None for k in call.keywords):
+        return []
+    a = fn.args
+    pos = [p.arg for p in a.posonlyargs + a.args]
+    named = [k.arg for k in call.keywords]
+    errors = []
+    if len(call.args) > len(pos) and a.vararg is None:
+        errors.append(f"{len(call.args)} positional arguments, takes {len(pos)}")
+    by_keyword = set(pos[len(a.posonlyargs):]) | {k.arg for k in a.kwonlyargs}
+    if a.kwarg is None and set(named) - by_keyword:
+        errors.append(f"unknown keywords {sorted(set(named) - by_keyword)}")
+    if twice := set(pos[: len(call.args)]) & set(named):
+        errors.append(f"passed twice {sorted(twice)}")
+    required = set(pos[: len(pos) - len(a.defaults)]) | {
+        k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is None
+    }
+    if missing := required - set(pos[: len(call.args)]) - set(named):
+        errors.append(f"missing {sorted(missing)}")
+    return errors
+
+
+def root_call_errors() -> list[str]:
+    """`file:line callee: errors` for every call in a root file that
+    resolves to a module-level wtq function and does not fit its
+    signature."""
+    wtq, root_files = _load_modules()
+    return [
+        f"{m.name}:{call.lineno} {mod}.{name}: {', '.join(errors)}"
+        for m in root_files
+        for call in _calls(m)
+        for mod, name, fn in _callees(wtq, m, call)
+        if (errors := _signature_errors(fn, call))
+    ]
 
 
 def test_only_kept_definitions_are_unreached():
@@ -301,12 +353,19 @@ def test_only_kept_definitions_are_unreached():
     )
 
 
-def test_no_option_only_tests_set():
-    got = options_only_tests_set()
+def test_every_option_has_a_caller():
+    got = unset_options()
     assert got == set(KEPT_PARAMS), (
-        f"set only by tests but not kept: {sorted(got - set(KEPT_PARAMS))}; "
+        f"set by no call outside tests but not kept: {sorted(got - set(KEPT_PARAMS))}; "
         f"kept but set outside tests or gone: {sorted(set(KEPT_PARAMS) - got)}"
     )
+
+
+def test_root_calls_match_signatures():
+    """perfbench/, bench.py and the other root files are not run by the
+    tests, so a wtq signature change that breaks only their calls is
+    caught here, without running them."""
+    assert root_call_errors() == []
 
 
 def test_lazy_api_table_resolves():

@@ -3,12 +3,14 @@
 Resumability substitutes for streaming state (SURVEY.md §2.9): the
 url-space is split into N deterministic chunks by murmur3(url) mod N;
 each chunk's four outputs (``PipelineResult.write``) are written to
-its own directory and sealed with a commit marker, mirroring the
-reference's drop-and-recreate idempotence (``drop table if exists``
+its own directory and sealed with a commit marker that records the
+chunk count N, mirroring the reference's drop-and-recreate idempotence (``drop table if exists``
 before every CTAS stage — SURVEY.md §7 hard-part 4).  A re-run skips
 sealed chunks and overwrites unsealed ones, so a kill at any point
 never double counts: metrics live in the same per-chunk commit as the
-data.  Paths go through Hadoop's FileSystem API, so a local path and
+data.  Chunk k of one N is not chunk k of another, so a re-run with a
+different N, or a read of chunks sealed under two counts, raises
+``ValueError`` instead of mixing them.  Paths go through Hadoop's FileSystem API, so a local path and
 any URI the session can write (``file://``, ``s3a://``, …) both work.
 
 Scale notes (10^12 docs): the chunk predicate ``murmur3(url) % N = k``
@@ -39,18 +41,43 @@ def _marker(spark: SparkSession, out_dir: str, k: int):
     return path.getFileSystem(spark._jsc.hadoopConfiguration()), path
 
 
-def _sealed(spark: SparkSession, out_dir: str) -> list[int]:
-    """The chunks under `out_dir` that carry a commit marker, in order:
-    one FileSystem listing of ``chunk=*/MARKER`` (empty when nothing
-    matches)."""
+def _sealed(spark: SparkSession, out_dir: str) -> dict[int, int]:
+    """chunk -> the chunk count its commit marker records, for the
+    chunks under `out_dir` that carry one: one FileSystem listing of
+    ``chunk=*/MARKER`` (empty when nothing matches), then one read per
+    marker.  Raises ValueError when the sealed chunks record more than
+    one count."""
     pattern = spark._jvm.org.apache.hadoop.fs.Path(f"{out_dir}/chunk=*/{MARKER}")
     fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
-    found = fs.globStatus(pattern) or []
-    return sorted(int(st.getPath().getParent().getName().split("=", 1)[1]) for st in found)
+    sealed = {}
+    for st in fs.globStatus(pattern) or []:
+        stream = fs.open(st.getPath())
+        try:
+            recorded = bytes(stream.readAllBytes()).decode()
+        finally:
+            stream.close()
+        k = int(st.getPath().getParent().getName().split("=", 1)[1])
+        if not recorded.strip().isdigit():
+            raise ValueError(f"chunk {k} under {out_dir} is sealed without a chunk count")
+        sealed[k] = int(recorded)
+    counts = sorted(set(sealed.values()))
+    if len(counts) > 1:
+        raise ValueError(
+            f"{out_dir} holds chunks sealed with {counts[0]} and with {counts[1]} chunks"
+        )
+    return dict(sorted(sealed.items()))
 
 
 def committed_chunks(spark: SparkSession, out_dir: str, n_chunks: int) -> list[int]:
-    return [k for k in _sealed(spark, out_dir) if k < n_chunks]
+    """The sealed chunks of an `n_chunks`-chunk run under `out_dir`;
+    raises ValueError when they were sealed with another chunk count."""
+    sealed = _sealed(spark, out_dir)
+    other = set(sealed.values()) - {n_chunks}
+    if other:
+        raise ValueError(
+            f"{out_dir} holds chunks sealed with {other.pop()} chunks, not {n_chunks}"
+        )
+    return list(sealed)
 
 
 def run_checkpointed(
@@ -61,6 +88,8 @@ def run_checkpointed(
 ) -> list[int]:
     """Run the pipeline chunk-by-chunk with commit markers; returns the
     list of chunks computed in THIS invocation (sealed ones skipped).
+    Raises ValueError when `out_dir` holds chunks sealed with another
+    `n_chunks`.
 
     Corpus-scope curation passes (strip_boilerplate / host_gate in
     run_pipeline) are deliberately NOT chunked here: their statistics
@@ -78,7 +107,9 @@ def run_checkpointed(
         chunk = pages.filter(chunk_expr(n_chunks) == k)
         PipelineResult(decide(chunk)).write(f"{out_dir}/chunk={k}")
         fs, marker = _marker(spark, out_dir, k)
-        fs.create(marker, True).close()
+        stream = fs.create(marker, True)
+        stream.write(str(n_chunks).encode())
+        stream.close()
         done.append(k)
     return done
 
@@ -88,7 +119,8 @@ def read_chunks(spark: SparkSession, out_dir: str, name: str) -> DataFrame:
     sealed chunks, with `chunk` as an int column read from the
     directory name.  A chunk whose write was cut off has no marker and
     is not read, so `decided` and `metrics` always cover the same
-    chunks; raises FileNotFoundError when no chunk is sealed."""
+    chunks; raises FileNotFoundError when no chunk is sealed and
+    ValueError when the sealed chunks record different chunk counts."""
     sealed = _sealed(spark, out_dir)
     if not sealed:
         raise FileNotFoundError(f"no sealed chunk under {out_dir}")

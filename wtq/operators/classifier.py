@@ -39,14 +39,12 @@ from wtq.operators.text import sql_words, words
 MICRO = 1_000_000
 
 
-def train_nb_weights(
-    labeled: DataFrame, text_col: str = "text", label_col: str = "y"
-) -> tuple[DataFrame, DataFrame]:
+def train_nb_weights(labeled: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Fit NB log-odds weights on a labeled seed.
 
-    ``labeled`` needs a boolean ``label_col`` (True = quality seed,
-    e.g. a curated reference corpus; False = raw-crawl negatives) and a
-    ``text_col``.  Returns ``(weights, consts)``:
+    ``labeled`` needs a boolean ``y`` (True = quality seed, e.g. a
+    curated reference corpus; False = raw-crawl negatives) and a
+    ``text``.  Returns ``(weights, consts)``:
 
     * ``weights``: (t, w_micro) — one row per seed-vocabulary token,
       w_micro = round(1e6 · [ln((c_pos+1)/(T_pos+V)) −
@@ -60,7 +58,7 @@ def train_nb_weights(
     counts are read with one aggregate before anything else is built,
     and a seed missing a class raises ``ValueError`` naming it.
     """
-    label = F.col(label_col).cast("boolean")
+    label = F.col("y").cast("boolean")
     n_pos, n_neg = labeled.agg(
         F.count(F.when(label, True)), F.count(F.when(~label, True))
     ).first()
@@ -68,13 +66,13 @@ def train_nb_weights(
         if n == 0:
             raise ValueError(
                 f"train_nb_weights: the seed has no {cls} documents "
-                f"({label_col} = {value}); both classes are required "
+                f"(y = {value}); both classes are required "
                 f"(got {n_pos} positive, {n_neg} negative)"
             )
     y = F.col("y")
     tok = labeled.select(
         label.alias("y"),
-        F.explode(words(F.coalesce(F.col(text_col), F.lit("")))).alias("t"),
+        F.explode(words(F.coalesce(F.col("text"), F.lit("")))).alias("t"),
     )
     counts = tok.groupBy("t").agg(
         F.count(F.when(y, True)).alias("c_pos"),
@@ -107,14 +105,9 @@ def train_nb_weights(
     return weights, consts
 
 
-def nb_score(
-    docs: DataFrame,
-    weights: DataFrame,
-    consts: DataFrame,
-    text_col: str = "text",
-    id_cols: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
-    """Score documents under trained weights: zero-shuffle map-side pass.
+def nb_score(docs: DataFrame, weights: DataFrame, consts: DataFrame) -> DataFrame:
+    """Score (doc_id, text) documents under trained weights: zero-shuffle
+    map-side pass.
 
     The weight table folds to a single map value (seed-vocab-sized —
     broadcastable at any corpus scale, the scored side never
@@ -128,7 +121,7 @@ def nb_score(
             F.array_sort(F.collect_list(F.struct("t", "w_micro")))
         ).alias("wmap")
     )
-    toks = words(F.coalesce(F.col(text_col), F.lit("")))
+    toks = words(F.coalesce(F.col("text"), F.lit("")))
     score = F.col("prior_micro") + F.aggregate(
         toks,
         F.lit(0).cast("long"),
@@ -139,7 +132,7 @@ def nb_score(
         docs.join(F.broadcast(wmap_row))
         .join(F.broadcast(consts))
         .select(
-            *id_cols,
+            "doc_id",
             F.size(toks).alias("n_toks"),
             score.alias("score_micro"),
             (score > 0).alias("keep_pred"),
@@ -147,21 +140,13 @@ def nb_score(
     )
 
 
-def nb_quality_scores(
-    docs: DataFrame,
-    seed_pred,
-    pos_pred,
-    text_col: str = "text",
-    id_cols: tuple[str, ...] = ("doc_id",),
-) -> DataFrame:
+def nb_quality_scores(docs: DataFrame, seed_pred, pos_pred) -> DataFrame:
     """End-to-end convenience: train on ``docs[seed_pred]`` labeled by
     ``pos_pred``, score the held-out complement (train/apply split —
     the scorer is never graded on its own seed)."""
     labeled = docs.filter(seed_pred).withColumn("y", pos_pred)
-    weights, consts = train_nb_weights(labeled, text_col=text_col, label_col="y")
-    return nb_score(
-        docs.filter(~seed_pred), weights, consts, text_col=text_col, id_cols=id_cols
-    )
+    weights, consts = train_nb_weights(labeled)
+    return nb_score(docs.filter(~seed_pred), weights, consts)
 
 
 def sql_nb_quality_scores(

@@ -1,9 +1,10 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: opaque binary payloads.
 
-Images/audio/video are carried as ``binary`` columns with a typed
-metadata struct; decode/feature-extraction runs as Arrow-batched
-``mapInPandas`` (the pattern a training-data pipeline needs at 100 TB:
-binary stays off the driver, batches stream through Python workers).
+Images/audio/video are carried as ``binary`` columns; decode/feature
+extraction runs as Arrow-batched ``mapInPandas`` (the pattern a
+training-data pipeline needs at 100 TB: binary stays off the driver,
+batches stream through Python workers).  Both operators read the
+``documents`` columns their oracle SQL reads (``doc_id``, ``text``).
 
 Two registry operators:
 
@@ -15,10 +16,10 @@ Two registry operators:
   ``mapInPandas`` pass.  Every feature is checked against a
   closed-form SQL derivation from the synthetic pixel / sample
   formulas, never from the bytes.
-* ``multimodal_features`` — the binary-column plumbing
-  (``with_blob`` → ``extract_features``); the embedding is a
-  deterministic hash-derived stand-in so the plumbing stays testable
-  without model weights.
+* ``multimodal_features`` — the binary-column plumbing: each text
+  payload as bytes through one ``mapInPandas`` pass, one sha256 per
+  payload, giving its length, digest and a digest-derived feature
+  ``f0`` — checkable in SQL without model weights.
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-FEATURE_DIM = 4
 IMG_W = 16
 IMG_H = 16
 
@@ -41,9 +41,6 @@ FEATURES_SCHEMA = T.StructType(
         T.StructField("doc_id", T.LongType()),
         T.StructField("byte_len", T.IntegerType()),
         T.StructField("content_sha256", T.StringType()),
-        T.StructField("embedding", T.ArrayType(T.FloatType())),
-        # first feature kept at full double precision for the oracle
-        # check (the float32 embedding would lose digits vs SQL)
         T.StructField("f0", T.DoubleType()),
     ]
 )
@@ -95,22 +92,18 @@ def decode_ppm(blob: bytes) -> np.ndarray:
     return arr
 
 
-def block_mean_resize(arr: np.ndarray, factor: int = 2) -> np.ndarray:
-    """Downsample by integer factor via exact block means (float64)."""
+def block_mean_resize(arr: np.ndarray) -> np.ndarray:
+    """Downsample 2× via exact 2×2 block means (float64)."""
     h, w, c = arr.shape
-    return (
-        arr.astype(np.float64)
-        .reshape(h // factor, factor, w // factor, factor, c)
-        .mean(axis=(1, 3))
-    )
+    return arr.astype(np.float64).reshape(h // 2, 2, w // 2, 2, c).mean(axis=(1, 3))
 
 
-def synth_image(doc_id: int, w: int = IMG_W, h: int = IMG_H) -> np.ndarray:
-    """Deterministic test image: pixel value at (x, y, c) =
+def synth_image(doc_id: int) -> np.ndarray:
+    """Deterministic IMG_W × IMG_H test image: pixel value at (x, y, c) =
     (doc_id·31 + x·7 + y·13 + c·101) mod 256 — closed-form, so the SQL
     oracle can derive every feature from integer arithmetic alone."""
-    x = np.arange(w)[None, :, None]
-    y = np.arange(h)[:, None, None]
+    x = np.arange(IMG_W)[None, :, None]
+    y = np.arange(IMG_H)[:, None, None]
     c = np.arange(3)[None, None, :]
     return ((doc_id * 31 + x * 7 + y * 13 + c * 101) % 256).astype(np.uint8)
 
@@ -136,8 +129,8 @@ def iter_video_frames(blob: bytes):
         yield frame
 
 
-def synth_video(doc_id: int, n_frames: int = VIDEO_FRAMES) -> list[np.ndarray]:
-    return [synth_image(doc_id * n_frames + f) for f in range(n_frames)]
+def synth_video(doc_id: int) -> list[np.ndarray]:
+    return [synth_image(doc_id * VIDEO_FRAMES + f) for f in range(VIDEO_FRAMES)]
 
 
 def _video_feature_row(doc_id: int) -> tuple:
@@ -151,15 +144,15 @@ def _video_feature_row(doc_id: int) -> tuple:
     return (len(frames), round(mean_r, 6))
 
 
-def sql_video_features(table: str, id_col: str = "doc_id") -> str:
+def sql_video_features(table: str) -> str:
     """Closed-form oracle: mean of per-frame means over sampled frames
     f ∈ {0, 3, 6}; all sums integral until the final divisions."""
     sampled = list(range(0, VIDEO_FRAMES, FRAME_STEP))
-    px = f"(({id_col} * {VIDEO_FRAMES} + f) * 31 + x * 7 + y * 13) % 256"
+    px = f"((doc_id * {VIDEO_FRAMES} + f) * 31 + x * 7 + y * 13) % 256"
     frames = ", ".join(str(f) for f in sampled)
     return f"""
     WITH px AS (
-      SELECT {id_col} AS doc_id, {px} AS v
+      SELECT doc_id, {px} AS v
       FROM {table}
       CROSS JOIN (SELECT unnest([{frames}]) AS f)
       CROSS JOIN (SELECT unnest(range(0, {IMG_W})) AS x)
@@ -179,13 +172,13 @@ AUDIO_N = 256
 AUDIO_RATE = 8000
 
 
-def encode_wav(samples: np.ndarray, rate: int = AUDIO_RATE) -> bytes:
-    """int16 mono samples → RIFF/WAVE PCM bytes."""
+def encode_wav(samples: np.ndarray) -> bytes:
+    """int16 mono samples → RIFF/WAVE PCM bytes at AUDIO_RATE."""
     import struct
 
     assert samples.dtype == np.int16
     data = samples.tobytes()
-    fmt = struct.pack("<HHIIHH", 1, 1, rate, rate * 2, 2, 16)
+    fmt = struct.pack("<HHIIHH", 1, 1, AUDIO_RATE, AUDIO_RATE * 2, 2, 16)
     chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
     chunks += b"data" + struct.pack("<I", len(data)) + data
     return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
@@ -217,10 +210,10 @@ def decode_wav(blob: bytes) -> tuple[np.ndarray, int]:
     return samples, rate
 
 
-def synth_audio(doc_id: int, n: int = AUDIO_N) -> np.ndarray:
-    """Deterministic test signal: s[i] = (doc_id·7919 + i·2654435761)
-    mod 65536 − 32768 — closed-form for the SQL oracle."""
-    i = np.arange(n, dtype=np.int64)
+def synth_audio(doc_id: int) -> np.ndarray:
+    """Deterministic AUDIO_N-sample test signal: s[i] = (doc_id·7919 +
+    i·2654435761) mod 65536 − 32768 — closed-form for the SQL oracle."""
+    i = np.arange(AUDIO_N, dtype=np.int64)
     return ((doc_id * 7919 + i * 2654435761) % 65536 - 32768).astype(np.int16)
 
 
@@ -241,13 +234,13 @@ def _audio_feature_row(doc_id: int) -> tuple:
     )
 
 
-def sql_audio_features(table: str, id_col: str = "doc_id") -> str:
+def sql_audio_features(table: str) -> str:
     """Closed-form oracle over the signal formula — integer sums only,
     then one double sqrt, so no float-order divergence is possible."""
-    v = f"(({id_col} * 7919 + i * 2654435761) % 65536 - 32768)"
+    v = "((doc_id * 7919 + i * 2654435761) % 65536 - 32768)"
     return f"""
     WITH s AS (
-      SELECT {id_col} AS doc_id, i, {v} AS v
+      SELECT doc_id, i, {v} AS v
       FROM {table}
       CROSS JOIN (SELECT unnest(range(0, {AUDIO_N})) AS i)
     ),
@@ -281,14 +274,14 @@ def _image_feature_row(doc_id: int) -> tuple:
     )
 
 
-def sql_image_features(table: str, id_col: str = "doc_id") -> str:
+def sql_image_features(table: str) -> str:
     """Closed-form oracle: re-derives every feature from the pixel
     formula with integer arithmetic over unnested coordinate ranges —
     no image bytes involved, so a decoder bug cannot self-confirm."""
-    px = f"(({id_col} * 31 + x * 7 + y * 13 + c * 101) % 256)"
+    px = "((doc_id * 31 + x * 7 + y * 13 + c * 101) % 256)"
     return f"""
     WITH px AS (
-      SELECT {id_col} AS doc_id, x, y, c, {px} AS v
+      SELECT doc_id, x, y, c, {px} AS v
       FROM {table}
       CROSS JOIN (SELECT unnest(range(0, {IMG_W})) AS x)
       CROSS JOIN (SELECT unnest(range(0, {IMG_H})) AS y)
@@ -327,7 +320,7 @@ MEDIA_FEATURES_SCHEMA = T.StructType(
 )
 
 
-def media_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def media_features(df: DataFrame) -> DataFrame:
     """All three real-codec decode paths (P6 PPM image, RIFF/PCM16 WAV
     audio, multi-frame PPM video stream) in ONE mapInPandas pass — one
     Python worker round-trip per batch, one wide row per document;
@@ -342,21 +335,21 @@ def media_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                 + _image_feature_row(int(doc_id))
                 + _audio_feature_row(int(doc_id))
                 + _video_feature_row(int(doc_id))
-                for doc_id in pdf[id_col]
+                for doc_id in pdf["doc_id"]
             ]
             yield pd.DataFrame(rows, columns=[f.name for f in MEDIA_FEATURES_SCHEMA.fields])
 
-    return df.select(F.col(id_col)).mapInPandas(run, MEDIA_FEATURES_SCHEMA)
+    return df.select("doc_id").mapInPandas(run, MEDIA_FEATURES_SCHEMA)
 
 
-def sql_media_features(table: str, id_col: str = "doc_id") -> str:
+def sql_media_features(table: str) -> str:
     """Joined closed-form oracle: each modality's features re-derived
     independently from the synthetic formulas (never from the bytes),
     joined on doc_id — a decoder bug in ANY path cannot self-confirm."""
     return f"""
-    WITH img AS ({sql_image_features(table, id_col)}),
-         aud AS ({sql_audio_features(table, id_col)}),
-         vid AS ({sql_video_features(table, id_col)})
+    WITH img AS ({sql_image_features(table)}),
+         aud AS ({sql_audio_features(table)}),
+         vid AS ({sql_video_features(table)})
     SELECT img.doc_id, img.width, img.height, img.mean_r, img.mean_g, img.mean_b,
            img.small_px0_r, aud.n_samples, aud.duration_ms, aud.rms,
            aud.zero_crossings, vid.n_frames, vid.sampled_mean_r
@@ -364,57 +357,32 @@ def sql_media_features(table: str, id_col: str = "doc_id") -> str:
     """
 
 
-def _fake_embed(blob: bytes) -> list[float]:
-    """Deterministic stand-in for a decoded-content feature vector."""
-    h = hashlib.sha256(blob).digest()
-    return [int.from_bytes(h[i * 4 : i * 4 + 4], "big") / 2**32 for i in range(FEATURE_DIM)]
-
-
-def with_blob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Stand-in 'media' table: payload bytes + metadata struct."""
-    return df.select(
-        F.col(id_col),
-        F.encode(F.col(text_col), "UTF-8").alias("blob"),
-        F.struct(
-            F.lit("text/plain").alias("mime"),
-            F.length(F.col(text_col)).alias("n_chars"),
-        ).alias("meta"),
-    )
-
-
-def extract_features(media: DataFrame) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads."""
+def multimodal_features(df: DataFrame) -> DataFrame:
+    """(doc_id, byte_len, content_sha256, f0) per document: the UTF-8
+    bytes of `text` cross the Arrow boundary as a binary column, and
+    each payload is hashed once in ``mapInPandas``.  f0 is the digest's
+    first 4 bytes as a fraction of 2^32 (full double precision in the
+    worker, rounded to 6 places in Spark)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            blobs = pdf["blob"]
+            digests = [hashlib.sha256(b).digest() for b in pdf["blob"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
-                    "byte_len": blobs.map(len).astype("int32"),
-                    "content_sha256": blobs.map(lambda b: hashlib.sha256(bytes(b)).hexdigest()),
-                    "embedding": blobs.map(_fake_embed),
-                    "f0": blobs.map(lambda b: _fake_embed(bytes(b))[0]),
+                    "byte_len": pdf["blob"].map(len).astype("int32"),
+                    "content_sha256": [d.hex() for d in digests],
+                    "f0": [int.from_bytes(d[:4], "big") / 2**32 for d in digests],
                 }
             )
 
-    return media.mapInPandas(run, FEATURES_SCHEMA)
-
-
-def multimodal_features(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    feats = extract_features(with_blob(df, id_col, text_col))
-    return feats.select(
-        "doc_id",
-        "byte_len",
-        "content_sha256",
-        F.round("f0", 6).alias("f0"),
-    )
+    blobs = df.select("doc_id", F.encode(F.col("text"), "UTF-8").alias("blob"))
+    return blobs.mapInPandas(run, FEATURES_SCHEMA).withColumn("f0", F.round("f0", 6))
 
 
 def sql_multimodal_features(table: str, id_col: str, text_col: str) -> str:
-    """Oracle for the SQL-expressible part (byte length + sha256 of
-    the payload); the fake embedding's first component is
-    sha256-derived so it is oracle-checkable too."""
+    """Oracle: byte length, sha256 of the payload, and f0 from the
+    digest's first 8 hex digits."""
     return f"""
     SELECT {id_col} AS doc_id,
            CAST(octet_length(encode({text_col})) AS INT) AS byte_len,

@@ -1,4 +1,5 @@
-"""Similarity search over an embedding column (array<float>).
+"""Similarity search over an embeddings table: (vec_id, embedding
+array<float>).
 
 Brute-force cosine top-k is the correctness baseline; the
 sign-projection (SRP-LSH / IVF-style) bucketed variant is the scale
@@ -37,20 +38,20 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")))
 
 
-def _side(df: DataFrame, id_col: str, vec_col: str, side: str, **keys: Column) -> DataFrame:
-    """One side of a cosine candidate join: `<side>_id`, `<side>_vec`,
-    the candidate key columns `keys` (name → expression) and
-    `<side>_norm`.
+def _side(df: DataFrame, side: str, **keys: Column) -> DataFrame:
+    """One side of a cosine candidate join over (vec_id, embedding):
+    `<side>_id`, `<side>_vec`, the candidate key columns `keys` (name →
+    expression) and `<side>_norm`.
 
     Norms are precomputed per side (round-6): cos = dot/(q_norm·n_norm)
     is the same expressions over the same doubles as the inline
     cosine — bit-identical — but each row's norm folds once instead of
     once per candidate pair."""
     return df.select(
-        F.col(id_col).alias(f"{side}_id"),
-        F.col(vec_col).alias(f"{side}_vec"),
+        F.col("vec_id").alias(f"{side}_id"),
+        F.col("embedding").alias(f"{side}_vec"),
         *[c.alias(name) for name, c in keys.items()],
-        _norm(F.col(vec_col)).alias(f"{side}_norm"),
+        _norm(F.col("embedding")).alias(f"{side}_norm"),
     )
 
 
@@ -74,14 +75,10 @@ def _cosine_topk(e: DataFrame, q: DataFrame, on: str | None, k: int) -> DataFram
     )
 
 
-def brute_force_topk(
-    emb: DataFrame, queries: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def brute_force_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Top-ANN_K cosine neighbors per query vector (self excluded).
     The small query side is broadcast — no shuffle of the big side."""
-    return _cosine_topk(
-        _side(emb, id_col, vec_col, "n"), _side(queries, id_col, vec_col, "q"), None, ANN_K
-    )
+    return _cosine_topk(_side(emb, "n"), _side(queries, "q"), None, ANN_K)
 
 
 def srp_bucket(vec: Column) -> Column:
@@ -92,17 +89,12 @@ def srp_bucket(vec: Column) -> Column:
     )
 
 
-def lsh_top1(
-    emb: DataFrame, queries: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def lsh_top1(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """Nearest same-bucket neighbor per query — the J9 lateral-KNN
     pattern: bucket equi-join for candidates, then window top-1."""
-    bucket = srp_bucket(F.col(vec_col))
+    bucket = srp_bucket(F.col("embedding"))
     return _cosine_topk(
-        _side(emb, id_col, vec_col, "n", bucket=bucket),
-        _side(queries, id_col, vec_col, "q", bucket=bucket),
-        "bucket",
-        1,
+        _side(emb, "n", bucket=bucket), _side(queries, "q", bucket=bucket), "bucket", 1
     ).drop("rank")
 
 
@@ -173,7 +165,7 @@ PLANT_N = 8
 PLANT_OFFSET = 1_000_000
 
 
-def with_planted_dups(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def with_planted_dups(emb: DataFrame) -> DataFrame:
     """Union the embeddings with deterministic near-duplicate clones.
 
     The driver's embeddings fixture contains no cosine ≥ 0.8 pair, so
@@ -184,16 +176,14 @@ def with_planted_dups(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "em
     ×0.8 — cosine ≈ 0.98 to its source, and scaling never flips a
     sign, so the clone lands in the same SRP bucket.  The oracle SQL
     applies the identical planting (sql_with_planted_dups)."""
-    base = emb.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias(vec_col)
-    )
-    clones = emb.filter(F.col(id_col) < PLANT_N).select(
-        (F.col(id_col) + PLANT_OFFSET).alias(id_col),
+    base = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
+    clones = emb.filter(F.col("vec_id") < PLANT_N).select(
+        (F.col("vec_id") + PLANT_OFFSET).alias("vec_id"),
         F.transform(
-            F.col(vec_col),
+            F.col("embedding"),
             lambda x, i: x.cast("double")
             * F.when(i % 2 == 0, F.lit(1.2)).otherwise(F.lit(0.8)),
-        ).alias(vec_col),
+        ).alias("embedding"),
     )
     return base.unionByName(clones)
 
@@ -210,14 +200,14 @@ def sql_with_planted_dups(table: str) -> str:
     """
 
 
-def embedding_dup_pairs(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def embedding_dup_pairs(emb: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: SRP-bucketed candidate
     join (never a cross join), exact cosine filter, canonical id1<id2."""
     # per-side norm precompute: see _side (round-6)
     e = emb.select(
-        F.col(id_col).alias("doc"), F.col(vec_col).alias("v"),
-        srp_bucket(F.col(vec_col)).alias("bucket"),
-        _norm(F.col(vec_col)).alias("nrm"),
+        F.col("vec_id").alias("doc"), F.col("embedding").alias("v"),
+        srp_bucket(F.col("embedding")).alias("bucket"),
+        _norm(F.col("embedding")).alias("nrm"),
     )
     o = e.select(
         F.col("doc").alias("doc2"), F.col("v").alias("v2"), "bucket",
@@ -327,9 +317,7 @@ def _assign_probes(df: DataFrame, cents: DataFrame, vec_name: str) -> DataFrame:
     )
 
 
-def kmeans_centroids(
-    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def kmeans_centroids(emb: DataFrame) -> DataFrame:
     """Deterministic seeded k-means (Lloyd's, IVF_ITERS rounds, k =
     IVF_CELLS) →
     (c_idx, c_vec array<double>).  Replaces round 2's fake quantizer
@@ -359,16 +347,16 @@ def kmeans_centroids(
     and the only per-round exchange is the k·dim centroid update.)"""
     seed = (
         emb.select(
-            F.col(id_col).alias("sid"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-            F.md5(F.col(id_col).cast("string")).alias("h"),
+            F.col("vec_id").alias("sid"),
+            F.col("embedding").cast("array<double>").alias("v"),
+            F.md5(F.col("vec_id").cast("string")).alias("h"),
         )
         .orderBy("h", "sid")
         .limit(IVF_CELLS)
     )
     wk = Window.orderBy("h", "sid")  # k rows only — tiny
     cents = seed.withColumn("c_idx", F.row_number().over(wk)).select("c_idx", F.col("v").alias("c_vec"))
-    base = emb.select(F.col(id_col).alias("n_id"), F.col(vec_col).cast("array<double>").alias("n_vec"))
+    base = emb.select(F.col("vec_id").alias("n_id"), F.col("embedding").cast("array<double>").alias("n_vec"))
     for _ in range(IVF_ITERS):
         assigned = _assign_nearest(base, cents, "n_vec").select("c_idx", "n_vec")
         # (round-6 note: a 64-column fixed-point sum per cell — one
@@ -398,9 +386,7 @@ def kmeans_centroids(
 IVF_NPROBE = 3
 
 
-def ivf_topk(
-    emb: DataFrame, queries: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def ivf_topk(emb: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF-style ANN, ANN_K neighbours per query: coarse quantizer =
     deterministic seeded k-means (kmeans_centroids); every vector is
     assigned to its nearest centroid (argmax cosine, tie-break lowest
@@ -418,18 +404,15 @@ def ivf_topk(
     # subtree cost connected_components/dedup_resolution eliminate the
     # same way.  The centroid set is IVF_CELLS rows, so the checkpoint
     # is trivially small.
-    cents = kmeans_centroids(emb, id_col, vec_col).localCheckpoint(eager=True)
+    cents = kmeans_centroids(emb).localCheckpoint(eager=True)
 
     def vecs(df: DataFrame) -> DataFrame:
-        return df.select(id_col, F.col(vec_col).cast("array<double>").alias(vec_col))
+        return df.select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
 
-    cells = _assign_nearest(vecs(emb), cents, vec_col)
-    q = _assign_probes(vecs(queries), cents, vec_col)
+    cells = _assign_nearest(vecs(emb), cents, "embedding")
+    q = _assign_probes(vecs(queries), cents, "embedding")
     return _cosine_topk(
-        _side(cells, id_col, vec_col, "n", cell=F.col("c_idx")),
-        _side(q, id_col, vec_col, "q", cell=F.col("c_idx")),
-        "cell",
-        ANN_K,
+        _side(cells, "n", cell=F.col("c_idx")), _side(q, "q", cell=F.col("c_idx")), "cell", ANN_K
     )
 
 

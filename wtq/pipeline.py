@@ -213,10 +213,10 @@ class PipelineResult:
             view(decided).write.mode("overwrite").parquet(f"{out_dir}/{name}")
 
 
-def _host(col: str = "url") -> Column:
+def _host() -> Column:
     """The url's authority component (scheme://host) — the curation
     grouping key for domain-level passes."""
-    return F.substring_index(F.col(col), "/", 3)
+    return F.substring_index(F.col("url"), "/", 3)
 
 
 def run_pipeline(

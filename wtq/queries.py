@@ -1031,20 +1031,29 @@ SQL_NB_QUALITY_SCORES = CL.sql_nb_quality_scores(
 )
 
 
+# (table, key, x multiplier, y multiplier) of the two point sets
+# spatial_radius_join pairs; the Spark query and its oracle read both
+RADIUS_SIDES = (("customer", "c_custkey", 37, 91), ("supplier", "s_suppkey", 53, 17))
+
+
 def q_spatial_radius_join(spark, sf_dir):
     """Spatial-predicate join (st_dwithin/st_intersects analog,
     proccess_data.sql:148-172, KNN `<->` :424-436): grid-cell bucketed
     candidate equi-join + exact distance filter.  The oracle is the
     NAIVE quadratic distance join, so the differential gate proves the
     grid join's recall is exact — not merely mirrored."""
-    a = G.synth_points(_t(spark, sf_dir, "customer"), "c_custkey", 37, 91)
-    b = G.synth_points(_t(spark, sf_dir, "supplier"), "s_suppkey", 53, 17)
+    a, b = (
+        G.synth_points(_t(spark, sf_dir, table), key, mx, my)
+        for table, key, mx, my in RADIUS_SIDES
+    )
     return G.grid_radius_join(a, b)
 
 
 def q_multimodal_features(spark, sf_dir):
-    """Binary-payload plumbing: mapInPandas feature extraction over an
-    opaque blob column (decode stubbed — wtq/operators/multimodal.py)."""
+    """Binary-payload plumbing: each document's text crosses the Arrow
+    boundary as a binary column and is hashed once in mapInPandas —
+    byte length, sha256 and a digest-derived feature, no decode
+    (wtq/operators/multimodal.py)."""
     return MM.multimodal_features(_t(spark, sf_dir, "documents"))
 
 
@@ -1323,9 +1332,7 @@ ORACLE_SQL: dict[str, str] = {
     "simhash_near_pairs": D.sql_simhash_near_pairs("documents", "doc_id", "text"),
     "embedding_dup_pairs": S.sql_embedding_dup_pairs("embeddings"),
     "ann_ivf_topk": S.sql_ivf_topk("embeddings"),
-    "spatial_radius_join": G.sql_grid_radius_join(
-        "customer", "c_custkey", 37, 91, "supplier", "s_suppkey", 53, 17
-    ),
+    "spatial_radius_join": G.sql_grid_radius_join(*RADIUS_SIDES[0], *RADIUS_SIDES[1]),
     "dedup_clusters": D.sql_dedup_clusters("documents", "doc_id", "text"),
     "dedup_apply": sql_dedup_apply("documents", "doc_id", "text"),
     "stratified_sample": SQL_STRATIFIED_SAMPLE,
